@@ -25,6 +25,13 @@ import graft.sources.{GeoJson, Kml}
   *    acquirers, gated on expected KML version)
   *  - publish: 500-529,559 (final schema + sync status + GeoJSON sink)
   *
+  * [[run]] reads the KMLs once per publish: the descriptions and the
+  * geometry derive from one features frame. It persists three frames
+  * for the run — the features, the raw per-cert geometry and the
+  * published layer before the int downcast — so the raw write, the
+  * merge gate, the downcast check and the published write do not
+  * re-scan and re-parse, and unpersists them before it returns.
+  *
   * All dimension joins broadcast (≤ hundreds of rows of metadata at
   * reference scale; at engine scale the fact side — KML features — is
   * the only large input and is never collected).
@@ -134,7 +141,11 @@ object ServiceAreas {
     * the first feature — here min-by within-file explode order).
     */
   def kmlDescriptions(spark: SparkSession, kmlGlob: String): DataFrame =
-    Kml.read(spark, kmlGlob)
+    kmlDescriptions(Kml.read(spark, kmlGlob))
+
+  /** [[kmlDescriptions]] over features already read by [[Kml.read]]. */
+  def kmlDescriptions(kml: DataFrame): DataFrame =
+    kml
       .filter(col("path").rlike("""-servicearea\.kml$"""))
       .withColumn("certificate_number",
         regexp_extract(col("path"), """([\d]+(\.[\d]+)?)-servicearea""", 1)
@@ -187,9 +198,13 @@ object ServiceAreas {
     * (R/functions.R:446-476): cert number from the file name, make-valid
     * per feature, collect (NOT dissolve) per cert.
     */
-  def buildGeometry(spark: SparkSession, kmlGlob: String): DataFrame = {
-    GeoFunctions.registerAll(spark)
-    Kml.read(spark, kmlGlob)
+  def buildGeometry(spark: SparkSession, kmlGlob: String): DataFrame =
+    buildGeometry(Kml.read(spark, kmlGlob))
+
+  /** [[buildGeometry]] over features already read by [[Kml.read]]. */
+  def buildGeometry(kml: DataFrame): DataFrame = {
+    GeoFunctions.registerAll(kml.sparkSession)
+    kml
       .withColumn("certificate_number",
         regexp_extract(col("path"), """([\d]+(\.[\d]+)?)-servicearea""", 1)
           .cast("double"))
@@ -317,7 +332,8 @@ object ServiceAreas {
   }
 
   /** End-to-end run under StageCache memoization; writes raw + cleaned
-    * GeoJSON layers and returns the cleaned DataFrame.
+    * GeoJSON layers, each in ascending `certificate_number`, and returns
+    * the cleaned DataFrame (no longer persisted).
     */
   def run(spark: SparkSession, certsCsv: String, chronCsv: String,
       kmlGlob: String, cfg: Config, outDir: String,
@@ -350,30 +366,44 @@ object ServiceAreas {
       Seq(certsCsv, chronCsv)) {
       enrichCertificates(cleaned, chron)
     }
-    // description-derived kml_* columns ride the certificates frame as
-    // in the reference (build_certificates_df); the published select
-    // drops them, matching R/functions.R:505-518
-    val enriched = splitKmlDescription(
-      enriched0.join(broadcast(kmlDescriptions(spark, kmlGlob)),
-        Seq("certificate_number"), "left"))
-    val geoRaw = buildGeometry(spark, kmlGlob)
+    // every frame below is read by more than one action; the most
+    // recently persisted is released first
+    var persisted = List.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = {
+      persisted ::= df.persist(); df
+    }
+    // one file per layer, in certificate order: the aggregates' output
+    // order depends on the shuffle partitioning and on the caching
+    def writeLayer(df: DataFrame, path: String, name: String): Unit =
+      GeoJson.write(
+        df.coalesce(1).sortWithinPartitions("certificate_number"),
+        "geometry", path, name)
+    try {
+      val features = persist(Kml.read(spark, kmlGlob))
+      // description-derived kml_* columns ride the certificates frame as
+      // in the reference (build_certificates_df); the published select
+      // drops them, matching R/functions.R:505-518
+      val enriched = splitKmlDescription(
+        enriched0.join(broadcast(kmlDescriptions(features)),
+          Seq("certificate_number"), "left"))
+      val geoRaw = persist(buildGeometry(features))
 
-    // raw layer: original CSV columns + geometry (R/functions.R:173-192)
-    val raw = geoRaw.join(broadcast(csv(certsCsv)
-        .filter(col("certificate_number").isNotNull)),
-      Seq("certificate_number"), "inner")
-    GeoJson.write(raw.drop("geometry_last_update"), "geometry",
-      s"$outDir/service-areas-raw.geojson", "service-areas-raw")
+      // raw layer: original CSV columns + geometry (R/functions.R:173-192)
+      val raw = geoRaw.join(broadcast(csv(certsCsv)
+          .filter(col("certificate_number").isNotNull)),
+        Seq("certificate_number"), "inner")
+      writeLayer(raw.drop("geometry_last_update"),
+        s"$outDir/service-areas-raw.geojson", "service-areas-raw")
 
-    val patched = applyMergePatches(spark, geoRaw, cfg)
-    val published =
-      maybeDowncastToInt(publishLayer(enriched, patched),
-        "certificate_number")
-    // sync_warning mirrors the reference's CONSOLE warnings — it is not
-    // a property of its GeoJSON output, so drop it for byte parity; the
-    // returned frame keeps it as the structured surface of those states
-    GeoJson.write(published.drop("sync_warning"), "geometry",
-      s"$outDir/service-areas.geojson", "service-areas")
-    published
+      val patched = applyMergePatches(spark, geoRaw, cfg)
+      val published = maybeDowncastToInt(
+        persist(publishLayer(enriched, patched)), "certificate_number")
+      // sync_warning mirrors the reference's CONSOLE warnings — it is not
+      // a property of its GeoJSON output, so drop it for byte parity; the
+      // returned frame keeps it as the structured surface of those states
+      writeLayer(published.drop("sync_warning"),
+        s"$outDir/service-areas.geojson", "service-areas")
+      published
+    } finally persisted.foreach(_.unpersist())
   }
 }

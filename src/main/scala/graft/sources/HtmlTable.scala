@@ -10,10 +10,11 @@ import org.apache.spark.sql.types._
   * regex-based extractor handles the constrained, machine-generated
   * table HTML the reference consumes (ASP.NET grids).
   *
-  * Distributed shape mirrors the KML source: Spark's wholetext reader
-  * lists and reads files (one partition per file), the parser explodes
-  * rows map-side. Header normalization (lowercase, spaces→underscores)
-  * matches R/functions.R:52-54.
+  * Distributed shape mirrors the KML source: [[WholeText]] reads the
+  * files whole (driver-side listing, about `defaultParallelism`
+  * partitions), the parser explodes rows map-side. Header
+  * normalization (lowercase, spaces→underscores) matches
+  * R/functions.R:52-54.
   */
 object HtmlTable {
 
@@ -87,8 +88,7 @@ object HtmlTable {
   def read(spark: SparkSession, glob: String,
       tableClass: Option[String] = None, headerRow: Int = 0,
       dropTrailing: Int = 0): DataFrame = {
-    val files = spark.read.option("wholetext", "true").text(glob)
-      .select(input_file_name().as("path"), col("value"))
+    val files = WholeText.read(spark, Seq(glob))
     val parse = udf { (html: String) => parseTable(html, tableClass) }
     val rows = files
       .select(col("path"), parse(col("value")).as("rows"))

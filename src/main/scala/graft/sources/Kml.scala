@@ -11,26 +11,30 @@ import graft.geo.Geo
   * R/functions.R:177,460) — no KML reader exists in Spark, so this is a
   * custom source (SURVEY §7.1 module 4).
   *
-  * Architecture: files are listed and read by Spark's own distributed
-  * `text` source in `wholetext` mode (one partition per file — same
-  * parallelism a DataSourceV2 would give, with zero-copy of Spark's
-  * file-listing, locality, and task-retry machinery), then a StAX pull
-  * parser explodes `<Placemark>` elements into (file, name, description,
-  * WKB geometry) rows map-side. Z/M ordinates are dropped on ingest
-  * (reference comment R/functions.R:429).
+  * Architecture: the driver expands the paths and the files are read
+  * whole in about `defaultParallelism` partitions ([[WholeText]]: no
+  * listing job, unlike Spark's `text` source past 32 paths), then a
+  * StAX pull parser explodes `<Placemark>` elements into (file, name,
+  * description, WKB geometry) rows map-side. Z/M ordinates are dropped
+  * on ingest (reference comment R/functions.R:429).
   */
 object Kml {
 
   case class Feature(name: String, description: String,
       geometry: Array[Byte])
 
+  /** Documents [[parseFeatures]] has parsed in this JVM — observable for
+    * tests in local mode, like `StageCache.computeCount`.
+    */
+  val parsedDocuments = new java.util.concurrent.atomic.AtomicLong
+
   /** Read one or many KML files into (path, name, description, geometry).
-    * `paths` may contain globs — anything Spark's file index accepts.
+    * `paths` are files or globs over files; `path` holds the file's URI
+    * in `input_file_name()`'s form.
     */
   def read(spark: SparkSession, paths: String*): DataFrame = {
     val parse = udf { (xml: String) => parseFeatures(xml) }
-    spark.read.option("wholetext", "true").text(paths: _*)
-      .select(input_file_name().as("path"), col("value"))
+    WholeText.read(spark, paths)
       .select(col("path"), explode(parse(col("value"))).as("f"))
       .select(col("path"), col("f.name").as("name"),
         col("f.description").as("description"),
@@ -43,6 +47,7 @@ object Kml {
     * "lon,lat[,z]" whitespace-separated tuples with Z dropped.
     */
   def parseFeatures(xml: String): Seq[Feature] = {
+    parsedDocuments.incrementAndGet()
     val f = XMLInputFactory.newInstance()
     f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
     f.setProperty(XMLInputFactory.SUPPORT_DTD, false)

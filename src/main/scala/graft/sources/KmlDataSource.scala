@@ -16,10 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One InputPartition per KML file; each partition's reader StAX-parses
   * its file into (path, name, description, geometry WKB) rows. File
-  * listing happens at planning time on the driver (small file counts —
-  * the reference's corpus is ~130 files; for huge file sets the
-  * wholetext-based [[Kml.read]] path reuses Spark's distributed file
-  * index instead, same schema).
+  * listing happens at planning time on the driver, as in [[Kml.read]],
+  * which has the same schema but packs the files into about
+  * `defaultParallelism` partitions instead of one per file.
   */
 class KmlDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "kml"

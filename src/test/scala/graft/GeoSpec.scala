@@ -269,6 +269,23 @@ class GeoSpec extends SparkSpec {
       Seq("path", "name", "description", "geometry"))
   }
 
+  test("Kml.read glob matches top-level files only, paths as " +
+      "input_file_name() gives them") {
+    val dir = java.nio.file.Files.createTempDirectory("kmlglob")
+    for (f <- Seq("a.kml", "b.txt", "sub/c.kml", "k=1/e.kml")) {
+      java.nio.file.Files.createDirectories(dir.resolve(f).getParent)
+      java.nio.file.Files.writeString(dir.resolve(f), kmlDoc)
+    }
+    val glob = dir.toString + "/*.kml"
+    val paths = Kml.read(spark, glob).select("path").collect()
+      .map(_.getString(0))
+    assert(paths.length === 3)
+    val textPaths = spark.read.option("wholetext", "true").text(glob)
+      .select(input_file_name()).collect().map(_.getString(0))
+    assert(textPaths.length === 1 && textPaths.head.endsWith("/a.kml"))
+    assert(paths.distinct.toSeq === textPaths.toSeq)
+  }
+
   test("DataSourceV2: spark.read.format(kml) matches Kml.read") {
     val dir = java.nio.file.Files.createTempDirectory("kmlv2")
     java.nio.file.Files.writeString(dir.resolve("a.kml"), kmlDoc)

@@ -1,12 +1,17 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{DateFunctions, GeoFunctions}
 import graft.functions.GeoFunctions._
 import graft.geo.Geo
 import graft.pipeline.{ServiceAreas, StageCache}
-import graft.sources.GeoJson
+import graft.sources.{GeoJson, Kml}
 
 /** End-to-end reference-parity pipeline test (SURVEY §3 E2, §5 golden
   * plan): fixtures cover every KML quirk the reference hand-patches —
@@ -23,15 +28,17 @@ class PipelineSpec extends SparkSpec {
     mergePatches = Seq(ServiceAreas.MergePatch(169.0, 61.0)),
     expectedKmlDates = Map(61.0 -> "3/15/2010"))
 
-  private lazy val outDir =
-    Files.createTempDirectory("svc-areas").toString
-  private lazy val published = {
-    DateFunctions.registerAll(spark)
-    GeoFunctions.registerAll(spark)
-    ServiceAreas.run(spark, s"$res/certificates.csv", s"$res/chronology.csv",
-      s"$res/kml/*.kml", cfg, outDir,
-      Files.createTempDirectory("stage-cache").toString)
+  /** One publish into a fresh directory: (directory, published frame). */
+  private def publish(session: SparkSession,
+      kmlGlob: String = s"$res/kml/*.kml",
+      certsCsv: String = s"$res/certificates.csv"): (String, DataFrame) = {
+    val dir = Files.createTempDirectory("svc-areas").toString
+    DateFunctions.registerAll(session)
+    GeoFunctions.registerAll(session)
+    (dir, ServiceAreas.run(session, certsCsv, s"$res/chronology.csv",
+      kmlGlob, cfg, dir, Files.createTempDirectory("stage-cache").toString))
   }
+  private lazy val (outDir, published) = publish(spark)
 
   test("cleaned layer: expected certificate set after filters + merge") {
     val certs = published.select("certificate_number")
@@ -203,6 +210,91 @@ class PipelineSpec extends SparkSpec {
     val raw = GeoJson.read(spark, s"$outDir/service-areas-raw.geojson")
     // raw keeps operator 785 + unmerged 61 (6 KML certs inner-join CSV)
     assert(raw.count() === 6)
+  }
+
+  test("published layers are in certificate order at any shuffle " +
+      "partition count") {
+    def text(dir: String, f: String) =
+      new String(Files.readAllBytes(Paths.get(dir, f)), "UTF-8")
+    def md5(dir: String, f: String) = java.security.MessageDigest
+      .getInstance("MD5").digest(Files.readAllBytes(Paths.get(dir, f)))
+      .map("%02x".format(_)).mkString
+    val dirs = Seq("1", "7").map { n =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", n)
+      publish(s)._1
+    } :+ outDir
+    for (f <- Seq("service-areas.geojson", "service-areas-raw.geojson")) {
+      dirs.tail.foreach(d => assert(md5(d, f) === md5(dirs.head, f), f))
+      val certs = "\"certificate_number\":([0-9.]+)".r
+        .findAllMatchIn(text(dirs.head, f)).map(_.group(1).toDouble).toSeq
+      assert(certs.nonEmpty && certs === certs.sorted, f)
+    }
+  }
+
+  test("a publish lists the KMLs on the driver and parses each once") {
+    // more files than parallelPartitionDiscovery.threshold (32) and than
+    // the session's cores: copies of the utility fixtures under new
+    // numbers (the operator's description fails the strict split)
+    val dir = Files.createTempDirectory("kml-copies")
+    val fixtures = new java.io.File(s"$res/kml").list().toSeq.sorted
+    val utilities = fixtures.filterNot(_.startsWith("785-"))
+    val csvLines = Files.readAllLines(Paths.get(s"$res/certificates.csv"))
+      .asScala.toSeq
+    val copies = (0 until 40).map { i =>
+      val from = utilities(i % utilities.size)
+      val cert = 1000 + i
+      Files.copy(Paths.get(s"$res/kml/$from"),
+        dir.resolve(s"$cert-servicearea.kml"))
+      val src = from.stripSuffix("-servicearea.kml")
+      csvLines.filter(_.startsWith(s"$src,"))
+        .map(l => s"$cert${l.drop(src.length)}")
+    }
+    fixtures.foreach(f => Files.copy(Paths.get(s"$res/kml/$f"), dir.resolve(f)))
+    val files = fixtures.size + copies.size
+    assert(files > 32 && files > spark.sparkContext.defaultParallelism)
+    val certsCsv = dir.resolve("certificates.csv")
+    Files.write(certsCsv, (csvLines ++ copies.flatten).asJava)
+
+    // tasks per publish job (every stage the job lists, run or skipped)
+    val jobTasks = new ConcurrentHashMap[Int, Int]()
+    val drained = new CountDownLatch(1)
+    def group(props: java.util.Properties) =
+      Option(props).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      private var sentinel = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        group(e.properties) match {
+          case "publish" =>
+            jobTasks.put(e.jobId, e.stageInfos.map(_.numTasks).sum)
+          case "sentinel" => sentinel = e.jobId
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinel) drained.countDown()
+    }
+    val sc = spark.sparkContext
+    def inGroup[T](g: String)(f: => T): T = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val parsed0 = Kml.parsedDocuments.get
+      val (out, _) = inGroup("publish")(
+        publish(spark, s"$dir/*.kml", certsCsv.toString))
+      assert(Kml.parsedDocuments.get - parsed0 === files,
+        "every KML parsed exactly once per publish")
+      // the listener bus delivers in order: once a later job has ended,
+      // every publish job has been recorded
+      inGroup("sentinel")(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, TimeUnit.SECONDS))
+      assert(!jobTasks.isEmpty)
+      val widest = jobTasks.asScala.values.max
+      assert(widest < files, s"a publish job ran $widest tasks for $files files")
+      assert(GeoJson.read(spark, s"$out/service-areas-raw.geojson").count()
+        === files)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("stage cache memoizes: second run recomputes nothing cached") {
