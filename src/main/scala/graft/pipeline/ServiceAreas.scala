@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{DateFunctions, GeoFunctions}
 import graft.functions.GeoFunctions._
@@ -13,12 +12,20 @@ import graft.sources.{GeoJson, Kml}
   * certificate metadata + chronology events → validated, patched,
   * published GeoJSON layers.
   *
-  * Stage map (reference file:line in /root/reference/R/functions.R):
-  *  - cleanCertificates: 194-228 (classify + filter active utilities)
-  *  - processChronology: 251-277 (sentinel dates, sort)
+  * Stage map (reference R/functions.R file:line):
+  *  - certificates: the typed certificates CSV, read once per input
+  *    version (a StageCache stage keyed on the CSV alone); the raw layer
+  *    and cleanCertificates both start from it
+  *  - cleanCertificates: 194-228 (classify + filter active utilities; a
+  *    plain filter over the cached certificates)
+  *  - processChronology: 251-277 (sentinel dates). Not sorted: its only
+  *    consumer groups by certificate and the checkpoint's row order is
+  *    read by nothing, so the reference's sort would only cost a
+  *    sampling job and a sort exchange per chronology miss
   *  - enrichCertificates: 306-380 (first/latest event per cert — the
-  *    J5 correlated lookup decorrelated into one window pass;
-  *    KML-description regex split 337-349; freshness flag 287-304)
+  *    J5 correlated lookup decorrelated into one aggregate and one
+  *    broadcast join; KML-description regex split 337-349; freshness
+  *    flag 287-304)
   *  - buildLayer: 173-192,446-476 (KML scan → make-valid → per-cert
   *    st_collect → broadcast join metadata)
   *  - applyMergePatches: 421-444 (acquired utilities unioned into
@@ -62,47 +69,37 @@ object ServiceAreas {
         !col("certificate_number").isin(cfg.inactiveExtraIds: _*))
 
   /** Chronology events: blank dates → 1900-01-01 sentinel, two-digit
-    * year pivot, stable sort (R/functions.R:251-277).
+    * year pivot (R/functions.R:251-277). The reference's sort is left
+    * out: [[enrichCertificates]] groups by certificate, so no reader
+    * depends on the row order.
     */
   def processChronology(chron: DataFrame): DataFrame =
-    chron
-      .withColumn("order_date",
-        convert_two_digit_years(coalesce(col("order_date"), lit(""))))
-      .orderBy(col("certificate"), col("order_date"))
+    chron.withColumn("order_date",
+      convert_two_digit_years(coalesce(col("order_date"), lit(""))))
 
   /** Enrich certificates with first/latest chronology events — the
     * decorrelated rewrite of the reference's per-row lookups (J5):
-    * one window pass, one broadcast join.
+    * one aggregate per certificate, one broadcast join.
     */
   def enrichCertificates(cleaned: DataFrame, chron: DataFrame): DataFrame = {
-    val w = Window.partitionBy("certificate")
     // order_number tiebreak: tied dates are common (all blank dates
-    // collapse to the 1900-01-01 sentinel) and row_number over an
-    // ambiguous order would make last/first event nondeterministic
-    val events = chron
-      .withColumn("is_area_change",
-        !col("type").isin("Deregulated", "Controlling Interest"))
-      .withColumn("rk_last", row_number().over(
-        w.orderBy(col("order_date").desc, col("order_number").desc)))
-      .withColumn("rk_first", row_number().over(
-        w.orderBy(col("order_date").asc, col("order_number").asc)))
-      .withColumn("last_area_change_date",
-        max(when(col("is_area_change"), col("order_date"))).over(w))
-    val latest = events.filter(col("rk_last") === 1).select(
-      col("certificate"),
-      col("order_date").as("certificate_last_update_date"),
-      col("order_number").as("certificate_last_update_order"),
-      col("type").as("certificate_last_update_type"),
-      col("last_area_change_date"))
-    val first = events.filter(col("rk_first") === 1).select(
-      col("certificate"),
-      year(col("order_date")).as("certificate_granted_year"))
+    // collapse to the 1900-01-01 sentinel). A struct orders a null
+    // field first, so max_by takes the latest event with null order
+    // numbers last and min_by the first with them first — the
+    // reference's desc and asc event ranks
+    val key = struct(col("order_date"), col("order_number"))
+    val latest = max_by(
+      struct(col("order_date"), col("order_number"), col("type")), key)
+    val events = chron.groupBy("certificate").agg(
+      latest.getField("order_date").as("certificate_last_update_date"),
+      latest.getField("order_number").as("certificate_last_update_order"),
+      latest.getField("type").as("certificate_last_update_type"),
+      max(when(!col("type").isin("Deregulated", "Controlling Interest"),
+        col("order_date"))).as("last_area_change_date"),
+      year(min_by(col("order_date"), key)).as("certificate_granted_year"))
     cleaned
-      .join(broadcast(latest),
-        cleaned("certificate_number") === latest("certificate"), "left")
-      .drop("certificate")
-      .join(broadcast(first),
-        cleaned("certificate_number") === first("certificate"), "left")
+      .join(broadcast(events),
+        cleaned("certificate_number") === events("certificate"), "left")
       .drop("certificate")
   }
 
@@ -356,9 +353,10 @@ object ServiceAreas {
       "expectedKml=" + cfg.expectedKmlDates.toSeq.sortBy(_._1)
         .map { case (k, v) => s"$k:$v" }.mkString(",")))
 
-    val cleaned = cache.stage("clean_certificates", cfgVer, Seq(certsCsv)) {
-      cleanCertificates(csv(certsCsv), cfg)
+    val certs = cache.stage("certificates", "v1", Seq(certsCsv)) {
+      csv(certsCsv)
     }
+    val cleaned = cleanCertificates(certs, cfg)
     val chron = cache.stage("chronology", "v1", Seq(chronCsv)) {
       processChronology(csv(chronCsv))
     }
@@ -389,8 +387,8 @@ object ServiceAreas {
       val geoRaw = persist(buildGeometry(features))
 
       // raw layer: original CSV columns + geometry (R/functions.R:173-192)
-      val raw = geoRaw.join(broadcast(csv(certsCsv)
-          .filter(col("certificate_number").isNotNull)),
+      val raw = geoRaw.join(broadcast(
+          certs.filter(col("certificate_number").isNotNull)),
         Seq("certificate_number"), "inner")
       writeLayer(raw.drop("geometry_last_update"),
         s"$outDir/service-areas-raw.geojson", "service-areas-raw")

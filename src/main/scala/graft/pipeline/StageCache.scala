@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Targets-style cross-run memoization (SURVEY §4: the reference's
   * signature execution feature — content-hash skip in `_targets/meta`).
@@ -13,6 +14,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and is checkpointed. Checkpoints double as shuffle-barrier lineage
   * cuts for long pipelines (at 100 TB a checkpoint is also what makes
   * retry-from-midpoint possible).
+  *
+  * A miss writes the checkpoint, reads it back (parquet schema
+  * inference, one footer job) and records that read's schema in a
+  * sidecar `_graft_schema.json` inside the checkpoint — written to a
+  * temp file and moved into place atomically; Spark's file index skips
+  * `_` files, so the sidecar is never read as data. A hit needs both
+  * `_SUCCESS` and the sidecar and reads with the recorded schema, so
+  * it runs no Spark job: like `targets`, an up-to-date stage is served
+  * from its metadata without touching its data. The recorded schema
+  * is the inferred one, partition columns' types and positions
+  * included, so a hit equals a fresh inferred read. A checkpoint
+  * without the sidecar is a miss and is rebuilt once.
   */
 class StageCache(spark: SparkSession, dir: String) {
 
@@ -40,20 +53,30 @@ class StageCache(spark: SparkSession, dir: String) {
     val key =
       s"$name-$codeVersion-${StageCache.fingerprint(inputs)}$layout"
     val path = s"$dir/$key"
-    if (Files.exists(Paths.get(path, "_SUCCESS"))) {
-      spark.read.parquet(path)
+    val sidecar = Paths.get(path, StageCache.SchemaFile)
+    if (Files.exists(Paths.get(path, "_SUCCESS")) && Files.exists(sidecar)) {
+      val recorded = DataType.fromJson(Files.readString(sidecar))
+        .asInstanceOf[StructType]
+      spark.read.schema(recorded).parquet(path)
     } else {
       computeCount += 1
       val df = compute
       val w = df.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
        else w).parquet(path)
-      spark.read.parquet(path)
+      val written = spark.read.parquet(path)
+      val tmp = Files.createTempFile(Paths.get(path), "_graft_schema", ".tmp")
+      Files.writeString(tmp, written.schema.json)
+      Files.move(tmp, sidecar, StandardCopyOption.ATOMIC_MOVE)
+      written
     }
   }
 }
 
 object StageCache {
+
+  /** The checkpoint's recorded schema (see the class doc). */
+  val SchemaFile = "_graft_schema.json"
 
   /** Shared root for every persisted index/stage artifact (band index,
     * IVF+PQ model+codes, z-ordered layout). Override with

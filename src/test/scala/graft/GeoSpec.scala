@@ -260,7 +260,7 @@ class GeoSpec extends SparkSpec {
     assert(pt.getCoordinate.getZ.isNaN) // Z dropped
   }
 
-  test("kml distributed read via spark text wholetext") {
+  test("kml glob read through WholeText") {
     val dir = java.nio.file.Files.createTempDirectory("kmltest")
     java.nio.file.Files.writeString(dir.resolve("a.kml"), kmlDoc)
     val df = Kml.read(spark, dir.toString + "/*.kml")

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
@@ -31,14 +31,55 @@ class PipelineSpec extends SparkSpec {
   /** One publish into a fresh directory: (directory, published frame). */
   private def publish(session: SparkSession,
       kmlGlob: String = s"$res/kml/*.kml",
-      certsCsv: String = s"$res/certificates.csv"): (String, DataFrame) = {
+      certsCsv: String = s"$res/certificates.csv",
+      chronCsv: String = s"$res/chronology.csv",
+      cacheDir: String = Files.createTempDirectory("stage-cache").toString)
+      : (String, DataFrame) = {
     val dir = Files.createTempDirectory("svc-areas").toString
     DateFunctions.registerAll(session)
     GeoFunctions.registerAll(session)
-    (dir, ServiceAreas.run(session, certsCsv, s"$res/chronology.csv",
-      kmlGlob, cfg, dir, Files.createTempDirectory("stage-cache").toString))
+    (dir, ServiceAreas.run(session, certsCsv, chronCsv,
+      kmlGlob, cfg, dir, cacheDir))
   }
   private lazy val (outDir, published) = publish(spark)
+
+  /** `f`'s result and the starts of the Spark jobs it ran. The listener
+    * bus delivers in order, so once a later sentinel job has ended,
+    * every job of `f` has been recorded.
+    */
+  private def withJobs[T](f: => T): (T, Seq[SparkListenerJobStart]) = {
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val drained = new CountDownLatch(1)
+    def group(props: java.util.Properties) =
+      Option(props).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      private var sentinel = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        group(e.properties) match {
+          case "probe" => jobs.add(e)
+          case "sentinel" => sentinel = e.jobId
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinel) drained.countDown()
+    }
+    val sc = spark.sparkContext
+    def inGroup[A](g: String)(a: => A): A = {
+      sc.setJobGroup(g, g)
+      try a finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = inGroup("probe")(f)
+      inGroup("sentinel")(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, TimeUnit.SECONDS))
+      (out, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def md5(dir: String, f: String) = java.security.MessageDigest
+    .getInstance("MD5").digest(Files.readAllBytes(Paths.get(dir, f)))
+    .map("%02x".format(_)).mkString
 
   test("cleaned layer: expected certificate set after filters + merge") {
     val certs = published.select("certificate_number")
@@ -216,9 +257,6 @@ class PipelineSpec extends SparkSpec {
       "partition count") {
     def text(dir: String, f: String) =
       new String(Files.readAllBytes(Paths.get(dir, f)), "UTF-8")
-    def md5(dir: String, f: String) = java.security.MessageDigest
-      .getInstance("MD5").digest(Files.readAllBytes(Paths.get(dir, f)))
-      .map("%02x".format(_)).mkString
     val dirs = Seq("1", "7").map { n =>
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", n)
@@ -256,45 +294,52 @@ class PipelineSpec extends SparkSpec {
     val certsCsv = dir.resolve("certificates.csv")
     Files.write(certsCsv, (csvLines ++ copies.flatten).asJava)
 
+    val parsed0 = Kml.parsedDocuments.get
+    val ((out, _), jobs) =
+      withJobs(publish(spark, s"$dir/*.kml", certsCsv.toString))
+    assert(Kml.parsedDocuments.get - parsed0 === files,
+      "every KML parsed exactly once per publish")
+    assert(jobs.nonEmpty)
     // tasks per publish job (every stage the job lists, run or skipped)
-    val jobTasks = new ConcurrentHashMap[Int, Int]()
-    val drained = new CountDownLatch(1)
-    def group(props: java.util.Properties) =
-      Option(props).map(_.getProperty("spark.jobGroup.id")).orNull
-    val listener = new SparkListener {
-      private var sentinel = -1
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        group(e.properties) match {
-          case "publish" =>
-            jobTasks.put(e.jobId, e.stageInfos.map(_.numTasks).sum)
-          case "sentinel" => sentinel = e.jobId
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinel) drained.countDown()
-    }
-    val sc = spark.sparkContext
-    def inGroup[T](g: String)(f: => T): T = {
-      sc.setJobGroup(g, g)
-      try f finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val parsed0 = Kml.parsedDocuments.get
-      val (out, _) = inGroup("publish")(
-        publish(spark, s"$dir/*.kml", certsCsv.toString))
-      assert(Kml.parsedDocuments.get - parsed0 === files,
-        "every KML parsed exactly once per publish")
-      // the listener bus delivers in order: once a later job has ended,
-      // every publish job has been recorded
-      inGroup("sentinel")(sc.parallelize(Seq(1), 1).count())
-      assert(drained.await(60, TimeUnit.SECONDS))
-      assert(!jobTasks.isEmpty)
-      val widest = jobTasks.asScala.values.max
-      assert(widest < files, s"a publish job ran $widest tasks for $files files")
-      assert(GeoJson.read(spark, s"$out/service-areas-raw.geojson").count()
-        === files)
-    } finally sc.removeSparkListener(listener)
+    val widest = jobs.map(_.stageInfos.map(_.numTasks).sum).max
+    assert(widest < files, s"a publish job ran $widest tasks for $files files")
+    assert(GeoJson.read(spark, s"$out/service-areas-raw.geojson").count()
+      === files)
+  }
+
+  test("an all-hit republish reads no CSV and no checkpoint schema; a " +
+      "chronology swap rebuilds two stages") {
+    val inputs = Files.createTempDirectory("publish-inputs")
+    for (f <- Seq("certificates.csv", "chronology.csv"))
+      Files.copy(Paths.get(s"$res/$f"), inputs.resolve(f))
+    val certsCsv = inputs.resolve("certificates.csv").toString
+    val chronCsv = inputs.resolve("chronology.csv")
+    val cacheDir = Files.createTempDirectory("republish-cache").toString
+    def stages = new java.io.File(cacheDir).list().toSet
+    def republish =
+      withJobs(publish(spark, certsCsv = certsCsv,
+        chronCsv = chronCsv.toString, cacheDir = cacheDir)._1)
+    val unwanted = Seq("csv at ServiceAreas", "parquet at StageCache")
+    // a stage is named after the short call site of the job creating it
+    def sites(jobs: Seq[SparkListenerJobStart]) =
+      jobs.flatMap(_.stageInfos.map(_.name))
+        .filter(site => unwanted.exists(site.startsWith))
+
+    val (cold, coldJobs) = republish
+    assert(sites(coldJobs).nonEmpty, "the cold publish reads and infers")
+    val built = stages
+    assert(built.size === 3)
+    val (warm, warmJobs) = republish
+    assert(sites(warmJobs).isEmpty)
+    assert(stages === built)
+    for (f <- Seq("service-areas.geojson", "service-areas-raw.geojson"))
+      assert(md5(warm, f) === md5(cold, f), f)
+
+    Files.write(chronCsv, "100,U-22-07,11,9/9/2022,Amendment,\n".getBytes,
+      java.nio.file.StandardOpenOption.APPEND)
+    republish
+    assert((stages -- built).map(_.takeWhile(_ != '-')) ===
+      Set("chronology", "enriched"))
   }
 
   test("stage cache memoizes: second run recomputes nothing cached") {
@@ -312,5 +357,127 @@ class PipelineSpec extends SparkSpec {
       spark.read.option("header", "true").csv(s"$res/certificates.csv")
     }.count()
     assert(cache.computeCount === 2)
+  }
+
+  test("a stage cache hit runs no job and equals an inferred read") {
+    // a digit-string partition column comes back typed int by inference
+    val rows = spark.range(12).select(col("id"),
+      (col("id") % 3).cast("string").as("cell"),
+      concat(lit("r"), col("id")).as("name"),
+      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
+        .as("day"))
+    for (parts <- Seq(Nil, Seq("cell"))) {
+      val cacheDir = Files.createTempDirectory("hit-cache")
+      val cache = new StageCache(spark, cacheDir.toString)
+      def stage = cache.stage("rows", "v1", Nil, partitionCols = parts)(rows)
+      val miss = stage
+      val (hit, jobs) = withJobs(stage)
+      assert(cache.computeCount === 1)
+      assert(jobs.isEmpty, s"partitionCols $parts: a hit ran ${jobs.size} jobs")
+      val inferred = spark.read.parquet(
+        Files.list(cacheDir).iterator().asScala.toSeq.head.toString)
+      assert(hit.schema === inferred.schema, s"partitionCols $parts")
+      assert(miss.schema === inferred.schema, s"partitionCols $parts")
+      if (parts.nonEmpty) {
+        assert(hit.schema.fieldNames.last === "cell")
+        assert(hit.schema("cell").dataType.typeName === "integer")
+      }
+      assert(hit.orderBy("id").collect().toSeq ===
+        inferred.orderBy("id").collect().toSeq)
+    }
+  }
+
+  test("a checkpoint without the schema sidecar is recomputed") {
+    val cacheDir = Files.createTempDirectory("sidecar-cache")
+    val cache = new StageCache(spark, cacheDir.toString)
+    def stage = cache.stage("s", "v1", Nil)(spark.range(5).toDF("id"))
+    stage
+    val checkpoint = Files.list(cacheDir).iterator().asScala.toSeq.head
+    val sidecar = checkpoint.resolve(StageCache.SchemaFile)
+    assert(Files.exists(checkpoint.resolve("_SUCCESS")))
+    Files.delete(sidecar)
+    assert(stage.count() === 5)
+    assert(cache.computeCount === 2)
+    assert(Files.exists(sidecar))
+    stage
+    assert(cache.computeCount === 2)
+  }
+
+  test("the one-aggregate enrichment equals the window form") {
+    import spark.implicits._
+    def d(s: String): java.sql.Date = java.sql.Date.valueOf(s)
+    val sentinel = d("1900-01-01")
+    // chronology as processChronology leaves it (order_date never null)
+    val chron = Seq[(Double, String, java.sql.Date, String)](
+      // several events on the sentinel, some with null order numbers
+      (1.0, "1", sentinel, "Original Certificate"),
+      (1.0, "4", sentinel, "Amendment"),
+      (1.0, null, sentinel, "Service Area Change"),
+      (1.0, "2", sentinel, "Deregulated"),
+      // tied real dates: null order number next to non-null ones
+      (2.0, "3", d("2001-01-15"), "Original Certificate"),
+      (2.0, null, d("2010-05-20"), "Service Area Change"),
+      (2.0, "7", d("2010-05-20"), "Amendment"),
+      (2.0, "10", d("2010-05-20"), "Deregulated"),
+      // only null order numbers on the first date
+      (3.0, null, d("1999-06-30"), "Original Certificate"),
+      (3.0, null, d("2005-02-10"), "Amendment"),
+      // only non-area-changing events
+      (4.0, "1", d("2012-03-03"), "Deregulated"),
+      (4.0, "2", d("2012-03-03"), "Controlling Interest"),
+      (4.0, "3", d("2015-09-09"), "Controlling Interest"),
+      // events for a certificate the cleaned set does not hold
+      (9.0, "1", d("2020-01-01"), "Original Certificate"))
+      .toDF("certificate", "order_number", "order_date", "type")
+      .repartition(3)
+    // 5 has no events at all
+    val cleaned = Seq((1.0, "a"), (2.0, "b"), (3.0, "c"), (4.0, "d"),
+      (5.0, "e")).toDF("certificate_number", "entity")
+
+    def windowForm(cleaned: DataFrame, chron: DataFrame): DataFrame = {
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("certificate")
+      val events = chron
+        .withColumn("is_area_change",
+          !col("type").isin("Deregulated", "Controlling Interest"))
+        .withColumn("rk_last", row_number().over(
+          w.orderBy(col("order_date").desc, col("order_number").desc)))
+        .withColumn("rk_first", row_number().over(
+          w.orderBy(col("order_date").asc, col("order_number").asc)))
+        .withColumn("last_area_change_date",
+          max(when(col("is_area_change"), col("order_date"))).over(w))
+      val latest = events.filter(col("rk_last") === 1).select(
+        col("certificate"),
+        col("order_date").as("certificate_last_update_date"),
+        col("order_number").as("certificate_last_update_order"),
+        col("type").as("certificate_last_update_type"),
+        col("last_area_change_date"))
+      val first = events.filter(col("rk_first") === 1).select(
+        col("certificate"),
+        year(col("order_date")).as("certificate_granted_year"))
+      cleaned
+        .join(broadcast(latest),
+          cleaned("certificate_number") === latest("certificate"), "left")
+        .drop("certificate")
+        .join(broadcast(first),
+          cleaned("certificate_number") === first("certificate"), "left")
+        .drop("certificate")
+    }
+    def rows(df: DataFrame) = df.orderBy("certificate_number")
+      .select("certificate_number", "certificate_last_update_date",
+        "certificate_last_update_order", "certificate_last_update_type",
+        "last_area_change_date", "certificate_granted_year")
+      .collect().toSeq
+    val got = ServiceAreas.enrichCertificates(cleaned, chron)
+    val want = windowForm(cleaned, chron)
+    assert(got.schema === want.schema)
+    assert(rows(got) === rows(want))
+    // the adversarial cases do take the tie-breaking paths
+    val byCert = rows(got).map(r => r.getDouble(0) -> r).toMap
+    assert(byCert(1.0).getString(2) === "4")
+    assert(byCert(1.0).getInt(5) === 1900)
+    assert(byCert(2.0).getString(2) === "7")
+    assert(byCert(4.0).isNullAt(4))
+    assert((1 to 5).forall(i => byCert(5.0).isNullAt(i)))
   }
 }
