@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -362,21 +363,27 @@ object EventStreams {
   /** Bytes of the parquet source files `prefix*.parquet` under `dir`
     * (driver-side listing only) — the input-size signal
     * [[withStreamShuffle]] derives the stream's shuffle width from.
-    * A directory-style table (`events.parquet/` holding part files)
-    * is summed one level deep (ADVICE r20: a flat-only sum returned
-    * 0 for that layout and the derived width silently collapsed to
-    * the floor — a perf cliff with no signal).
+    * A directory-style table is summed at any depth, so a hive layout
+    * (`events.parquet/dt=…/part-….parquet`) counts. No matching entry
+    * is an empty source and sums to 0; matching entries that sum to
+    * 0 bytes throw, since a 0 would silently collapse the derived
+    * width to the floor.
     */
-  private[graft] def sourceBytes(dir: String, prefix: String): Long =
-    Option(new java.io.File(dir).listFiles())
+  private[graft] def sourceBytes(dir: String, prefix: String): Long = {
+    def files(f: java.io.File): Iterator[java.io.File] =
+      if (f.isFile) Iterator(f)
+      else Option(f.listFiles()).iterator.flatten.flatMap(files)
+    val entries = Option(new java.io.File(dir).listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.getName.startsWith(prefix) &&
         f.getName.endsWith(".parquet"))
-      .map { f =>
-        if (f.isFile) f.length
-        else Option(f.listFiles()).getOrElse(Array.empty)
-          .filter(_.isFile).map(_.length).sum
-      }.sum
+    val bytes = entries.iterator.flatMap(files).map(_.length).sum
+    if (entries.nonEmpty && bytes == 0L)
+      throw new IllegalStateException(
+        s"$dir: the sources matching $prefix*.parquet hold 0 bytes — " +
+          "refusing to derive a stream width from them")
+    bytes
+  }
 
   /** Total bytes of a staged batch dir (flat single-file batches). */
   private[graft] def stagedBytes(srcDir: String): Long =
@@ -467,6 +474,26 @@ object EventStreams {
     * engine state (foreachBatch, the artifact is the state), so the
     * state-commit penalty that makes narrow width right for stateful
     * streams does not apply.
+    *
+    * Every stream also runs with
+    * `spark.sql.streaming.checkpointFileManagerClass` =
+    * [[LocalCheckpointFileManager]]: on a `file:` checkpoint, Spark's
+    * `FileSystemBasedCheckpointFileManager` instead of its default
+    * `FileContextBasedCheckpointFileManager`. A JFR census of warm
+    * s15 + s22 replays counted ~777 forked processes per pass of 12
+    * micro-batches, 520 of them `readlink`: without Hadoop's native
+    * library, `FileContext.rename` resolves symlinks through
+    * `FileUtil.readLink`, which shells out, so every atomic write of
+    * an offset, commit, file-source/sink log or state-store delta file
+    * forked several times. The offset/commit logs and the sinks'
+    * logs are built inside `start()`, the state store from the cloned
+    * session's `newHadoopConf()`; a file source builds its log from
+    * this session on the stream thread, so the block waits for the
+    * stream's initialization before it restores the conf. Local
+    * semantics are unchanged: both managers check that the
+    * destination is absent and then rename, and both write and verify
+    * a `.crc` per file. A non-`file:` checkpoint keeps Spark's default
+    * manager.
     */
   private[graft] def withStreamShuffle[T](spark: SparkSession,
       bytes: Long, udfHeavy: Boolean = false,
@@ -475,23 +502,16 @@ object EventStreams {
       : T = {
     val key = "spark.sql.shuffle.partitions"
     val aqeKey = "spark.sql.adaptive.enabled"
-    // staging writes commit with FileOutputCommitter v2 (task output
-    // renamed straight into the job dir): the loops' own manifest-
-    // journaled swap is the real commit protocol — a torn staging
-    // write is discarded by recoverTornSwap either way — so v1's
-    // driver-side per-partition commitJob renames are pure per-batch
-    // overhead (r21, guide §6 tiny-file I/O)
-    val cmtKey =
-      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version"
     // scan-split floor 1 for the micro-batch jobs: the local default
     // (leaf parallelism = cores) splits a KB-sized artifact read into
     // one task per core — pure task-scheduling overhead per batch; at
     // scale `maxPartitionBytes` (128 MB) still bounds splits, so this
     // only stops the TINY-scan oversplit (guide §6 input split size)
     val minPartKey = "spark.sql.files.minPartitionNum"
+    val ckptKey = LocalCheckpointFileManager.confKey
     val prev = spark.conf.getOption(key)
     val prevAqe = spark.conf.getOption(aqeKey)
-    val prevCmt = spark.conf.getOption(cmtKey)
+    val prevCkpt = spark.conf.getOption(ckptKey)
     val prevMinPart = spark.conf.getOption(minPartKey)
     val flagFloor =
       if (udfHeavy) spark.sparkContext.defaultParallelism
@@ -502,21 +522,28 @@ object EventStreams {
       math.min(spark.sparkContext.defaultParallelism, fanout))
     spark.conf.set(key,
       streamShufflePartitions(bytes, floor).toString)
+    spark.conf.set(ckptKey, classOf[LocalCheckpointFileManager].getName)
     if (aqeOff) {
       spark.conf.set(aqeKey, "false")
-      spark.conf.set(cmtKey, "2")
       spark.conf.set(minPartKey, "1")
     }
     def restore(k: String, v: Option[String]): Unit = v match {
       case Some(x) => spark.conf.set(k, x)
       case None => spark.conf.unset(k)
     }
-    try f
-    finally {
+    try {
+      val r = f
+      r match {
+        case q: StreamingQueryWrapper =>
+          q.streamingQuery.awaitInitialization(60000L)
+        case _ =>
+      }
+      r
+    } finally {
       restore(key, prev)
+      restore(ckptKey, prevCkpt)
       if (aqeOff) {
         restore(aqeKey, prevAqe)
-        restore(cmtKey, prevCmt)
         restore(minPartKey, prevMinPart)
       }
     }

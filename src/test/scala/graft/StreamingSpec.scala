@@ -665,6 +665,128 @@ class StreamingSpec extends SparkSpec {
     } finally EventStreams.deleteRecursively(work)
   }
 
+  test("stream checkpoints fork no readlink: the offset/commit logs, " +
+      "the state store and the file-source/sink logs all write " +
+      "through LocalCheckpointFileManager") {
+    import scala.jdk.CollectionConverters._
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val out = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try {
+      // control: the recording sees a fork made on this thread
+      new ProcessBuilder("true").start().waitFor()
+      // s15: offset/commit logs + the state store on executor threads
+      assert(EventStreams.replaySessionWindows(spark, sf).count() > 0)
+      // s22: file-source and file-sink metadata logs
+      assert(EventStreams.replayPartitionedIngest(spark, sf).count() > 0)
+    } finally {
+      rec.stop()
+      rec.dump(out)
+      rec.close()
+    }
+    try {
+      val forks = RecordingFile.readAllEvents(out).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map { e =>
+          val frames = Option(e.getStackTrace).toSeq
+            .flatMap(_.getFrames.asScala)
+            .map(f => f.getMethod.getType.getName)
+          (e.getString("command"), frames)
+        }
+      assert(forks.exists(_._1.split(' ').head == "true"),
+        "the recording missed the control fork")
+      val readlinks = forks.filter(_._1.split(' ').head.endsWith("readlink"))
+      assert(readlinks.isEmpty,
+        s"${readlinks.size} readlink forks, e.g. ${readlinks.take(2)}")
+      val viaFileContext = forks.filter(
+        _._2.exists(_.endsWith("FileContextBasedCheckpointFileManager")))
+      assert(viaFileContext.isEmpty,
+        s"${viaFileContext.size} forks under Spark's FileContext " +
+          s"checkpoint manager, e.g. ${viaFileContext.take(2)}")
+    } finally java.nio.file.Files.deleteIfExists(out)
+  }
+
+  test("LocalCheckpointFileManager keeps local checkpoint semantics: " +
+      "no-overwrite commits fail and keep the old bytes, overwrite " +
+      "replaces, cancel leaves nothing, and the .crc check holds") {
+    import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
+    import graft.streaming.LocalCheckpointFileManager
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-ckpt-fm").toFile
+    try {
+      val root = new Path(dir.toURI)
+      val fm = new LocalCheckpointFileManager(root,
+        spark.sessionState.newHadoopConf())
+      def write(p: Path, text: String, overwrite: Boolean): Unit = {
+        val o = fm.createAtomic(p, overwrite)
+        o.write(text.getBytes("UTF-8"))
+        o.close()
+      }
+      def read(p: Path): String = {
+        val in = fm.open(p)
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }
+      val p = new Path(root, "offset")
+      write(p, "old", overwrite = false)
+      intercept[FileAlreadyExistsException](
+        write(p, "new", overwrite = false))
+      assert(read(p) === "old")
+      write(p, "new", overwrite = true)
+      assert(read(p) === "new")
+      val o = fm.createAtomic(new Path(root, "cancelled"), false)
+      o.write(Array[Byte](1, 2, 3))
+      o.cancel()
+      assert(!fm.exists(new Path(root, "cancelled")))
+      assert(!dir.list().exists(_.contains("cancelled")),
+        s"cancel left files behind: ${dir.list().toSeq}")
+      // a metadata log on a session configured like a graft stream
+      val s = spark.newSession()
+      s.conf.set(LocalCheckpointFileManager.confKey,
+        classOf[LocalCheckpointFileManager].getName)
+      val logDir = new java.io.File(dir, "log").getAbsolutePath
+      assert(new HDFSMetadataLog[String](s, logDir).add(0, "batch-zero"))
+      assert(new HDFSMetadataLog[String](s, logDir).get(0) ===
+        Some("batch-zero"))
+      assert(new java.io.File(logDir, ".0.crc").isFile)
+      val batch = new java.io.File(logDir, "0").toPath
+      val bytes = java.nio.file.Files.readAllBytes(batch)
+      bytes(bytes.length - 3) = (bytes(bytes.length - 3) ^ 1).toByte
+      java.nio.file.Files.write(batch, bytes)
+      intercept[ChecksumException](
+        new HDFSMetadataLog[String](s, logDir).get(0))
+    } finally EventStreams.deleteRecursively(dir)
+  }
+
+  test("sourceBytes sums a hive-partitioned source at any depth and " +
+      "refuses matching entries that hold 0 bytes") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-src-bytes").toFile
+    def put(rel: String, n: Int): Unit = {
+      val f = new java.io.File(dir, rel)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, new Array[Byte](n))
+      ()
+    }
+    try {
+      val d = dir.getAbsolutePath
+      put("other.parquet", 5)
+      assert(EventStreams.sourceBytes(d, "events") === 0L,
+        "no matching entry is an empty source")
+      put("events.parquet/dt=2024-01-01/part-0.parquet", 100)
+      put("events.parquet/dt=2024-01-02/part-0.parquet", 20)
+      put("events_x.parquet", 3)
+      assert(EventStreams.sourceBytes(d, "events") === 123L)
+      put("documents.parquet/lang=en/_SUCCESS", 0)
+      val e = intercept[IllegalStateException](
+        EventStreams.sourceBytes(d, "documents"))
+      assert(e.getMessage.contains("0 bytes"))
+    } finally EventStreams.deleteRecursively(dir)
+  }
+
   test("gate and merge-loop replays return empty frames (not " +
       "crashes) on an empty source") {
     val dir = java.nio.file.Files
