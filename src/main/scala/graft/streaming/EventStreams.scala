@@ -494,25 +494,25 @@ object EventStreams {
     * destination is absent and then rename, and both write and verify
     * a `.crc` per file. A non-`file:` checkpoint keeps Spark's default
     * manager.
+    *
+    * Every stream's `file:` paths also resolve to
+    * [[ForkFreeLocalFileSystem]] (the unprefixed `fs.file.impl`, FS
+    * cache off). Without the native library, each local `create` and
+    * `mkdirs` forks a `chmod` for the file and again for its `.crc`:
+    * with Hadoop's class a census counts ~22 per micro-batch, from the
+    * checkpoint temp files, the file sink's parquet writers, `mkdirs`
+    * and the commit protocol. The session conf reaches the file sink's
+    * write tasks because `newHadoopConf()` copies session entries
+    * verbatim and the stream clones the session at `start()`; a
+    * `spark.hadoop.` prefix would not. The modes are unchanged: Hadoop
+    * applies the umask before it sets the permission, and only the way
+    * it is set differs.
     */
   private[graft] def withStreamShuffle[T](spark: SparkSession,
       bytes: Long, udfHeavy: Boolean = false,
       sortHeavy: Boolean = false, aqeOff: Boolean = false,
       fanout: Int = 1)(f: => T)
       : T = {
-    val key = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    // scan-split floor 1 for the micro-batch jobs: the local default
-    // (leaf parallelism = cores) splits a KB-sized artifact read into
-    // one task per core — pure task-scheduling overhead per batch; at
-    // scale `maxPartitionBytes` (128 MB) still bounds splits, so this
-    // only stops the TINY-scan oversplit (guide §6 input split size)
-    val minPartKey = "spark.sql.files.minPartitionNum"
-    val ckptKey = LocalCheckpointFileManager.confKey
-    val prev = spark.conf.getOption(key)
-    val prevAqe = spark.conf.getOption(aqeKey)
-    val prevCkpt = spark.conf.getOption(ckptKey)
-    val prevMinPart = spark.conf.getOption(minPartKey)
     val flagFloor =
       if (udfHeavy) spark.sparkContext.defaultParallelism
       else if (sortHeavy)
@@ -520,17 +520,21 @@ object EventStreams {
       else 1
     val floor = math.max(flagFloor,
       math.min(spark.sparkContext.defaultParallelism, fanout))
-    spark.conf.set(key,
-      streamShufflePartitions(bytes, floor).toString)
-    spark.conf.set(ckptKey, classOf[LocalCheckpointFileManager].getName)
-    if (aqeOff) {
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(minPartKey, "1")
-    }
-    def restore(k: String, v: Option[String]): Unit = v match {
-      case Some(x) => spark.conf.set(k, x)
-      case None => spark.conf.unset(k)
-    }
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" ->
+        streamShufflePartitions(bytes, floor).toString,
+      LocalCheckpointFileManager.confKey ->
+        classOf[LocalCheckpointFileManager].getName) ++
+      ForkFreeLocalFileSystem.confs ++
+      // scan-split floor 1 for the micro-batch jobs: the local default
+      // (leaf parallelism = cores) splits a KB-sized artifact read into
+      // one task per core — pure task-scheduling overhead per batch; at
+      // scale `maxPartitionBytes` (128 MB) still bounds splits, so this
+      // only stops the TINY-scan oversplit (guide §6 input split size)
+      (if (aqeOff) Seq("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.files.minPartitionNum" -> "1") else Nil)
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val r = f
       r match {
@@ -539,13 +543,9 @@ object EventStreams {
         case _ =>
       }
       r
-    } finally {
-      restore(key, prev)
-      restore(ckptKey, prevCkpt)
-      if (aqeOff) {
-        restore(aqeKey, prevAqe)
-        restore(minPartKey, prevMinPart)
-      }
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, PathFilter}
+import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 /** The checkpoint file manager every graft stream runs with (set by
@@ -15,6 +15,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   * verify a `.crc` per file, so local semantics are unchanged. Any
   * other scheme keeps Spark's default choice (on HDFS, FileContext's
   * atomic no-overwrite rename).
+  *
+  * The `file:` delegate writes through [[ForkFreeLocalFileSystem]]:
+  * Hadoop's `LocalFileSystem` would fork a `chmod` for every temp file
+  * and its `.crc` (about 11 per micro-batch). The modes it applies are
+  * Hadoop's: the umask is applied before the permission is set.
   */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {
@@ -24,13 +29,12 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
       .getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme)
     val conf = new Configuration(hadoopConf)
     if (scheme == "file") {
-      // pinned to Hadoop's LocalFileSystem, uncached: the `file:`
+      // pinned to a LocalFileSystem subclass, uncached: the `file:`
       // FileSystem found on the classpath may be another jar's
       // (hive-exec's ProxyLocalFileSystem), whose rename refuses an
       // existing target — an overwriting commit (state-store delta
       // and snapshot files) would silently keep the old file
-      conf.set("fs.file.impl", classOf[LocalFileSystem].getName)
-      conf.setBoolean("fs.file.impl.disable.cache", true)
+      ForkFreeLocalFileSystem.confs.foreach { case (k, v) => conf.set(k, v) }
       new FileSystemBasedCheckpointFileManager(path, conf)
     } else {
       conf.unset(LocalCheckpointFileManager.confKey)

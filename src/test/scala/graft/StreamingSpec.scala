@@ -665,12 +665,17 @@ class StreamingSpec extends SparkSpec {
     } finally EventStreams.deleteRecursively(work)
   }
 
-  test("stream checkpoints fork no readlink: the offset/commit logs, " +
-      "the state store and the file-source/sink logs all write " +
-      "through LocalCheckpointFileManager") {
+  test("streams fork no readlink and no chmod: the offset/commit logs, " +
+      "the state store and the file-source/sink logs write through " +
+      "LocalCheckpointFileManager, the file sink through " +
+      "ForkFreeLocalFileSystem") {
     import scala.jdk.CollectionConverters._
     import jdk.jfr.Recording
     import jdk.jfr.consumer.RecordingFile
+    // the event slices are staged once per JVM by a batch write, which
+    // forks its chmods outside any stream: stage them before recording
+    assert(EventStreams.replaySessionWindows(spark, sf).count() > 0)
+    assert(EventStreams.replayPartitionedIngest(spark, sf).count() > 0)
     val out = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
@@ -701,6 +706,9 @@ class StreamingSpec extends SparkSpec {
       val readlinks = forks.filter(_._1.split(' ').head.endsWith("readlink"))
       assert(readlinks.isEmpty,
         s"${readlinks.size} readlink forks, e.g. ${readlinks.take(2)}")
+      val chmods = forks.filter(_._1.split(' ').head.endsWith("chmod"))
+      assert(chmods.isEmpty,
+        s"${chmods.size} chmod forks, e.g. ${chmods.take(2)}")
       val viaFileContext = forks.filter(
         _._2.exists(_.endsWith("FileContextBasedCheckpointFileManager")))
       assert(viaFileContext.isEmpty,
@@ -758,6 +766,49 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.write(batch, bytes)
       intercept[ChecksumException](
         new HDFSMetadataLog[String](s, logDir).get(0))
+    } finally EventStreams.deleteRecursively(dir)
+  }
+
+  test("ForkFreeLocalFileSystem sets the same modes as Hadoop's " +
+      "LocalFileSystem: create (file and .crc), mkdirs, an explicit " +
+      "0640, a 077 umask and a sticky 01777 directory") {
+    import java.nio.file.{Files, Path => JPath}
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import graft.streaming.ForkFreeLocalFileSystem
+    val dir = Files.createTempDirectory("graft-fs-modes").toFile
+    // posix permissions plus the full mode, which carries the sticky bit
+    def mode(p: JPath) = (Files.getPosixFilePermissions(p),
+      Files.getAttribute(p, "unix:mode"))
+    def modes(fs: FileSystem, root: java.io.File): Seq[(String, Any)] = {
+      val base = new Path(root.toURI)
+      fs.create(new Path(base, "f")).close()
+      fs.mkdirs(new Path(base, "d/e"))
+      fs.create(new Path(base, "g")).close()
+      fs.setPermission(new Path(base, "g"),
+        new FsPermission(Integer.parseInt("640", 8).toShort))
+      fs.mkdirs(new Path(base, "t"))
+      fs.setPermission(new Path(base, "t"),
+        new FsPermission(Integer.parseInt("1777", 8).toShort))
+      Seq("f", ".f.crc", "d", "d/e", "g", "t").map(rel =>
+        rel -> mode(new java.io.File(root, rel).toPath))
+    }
+    try {
+      for (umask <- Seq(None, Some("077"))) {
+        val conf = new Configuration()
+        umask.foreach(conf.set("fs.permissions.umask-mode", _))
+        def run(fs: FileSystem, name: String) = {
+          val root = new java.io.File(dir,
+            s"$name-${umask.getOrElse("default")}")
+          root.mkdirs()
+          fs.initialize(java.net.URI.create("file:///"), conf)
+          try modes(fs, root) finally fs.close()
+        }
+        val hadoop = run(new LocalFileSystem(), "hadoop")
+        val forkFree = run(new ForkFreeLocalFileSystem(), "forkfree")
+        assert(forkFree === hadoop, s"umask $umask")
+      }
     } finally EventStreams.deleteRecursively(dir)
   }
 
