@@ -211,11 +211,9 @@ object ScaleCheck {
           col("event_type"), col("value"))).as("last"),
           count(lit(1)).as("n_events"),
           sum(round(col("value") * 100).cast("long")).as("cents"))
-      val mergeAgg = (prev: DataFrame, agg: DataFrame) =>
-        prev.unionByName(agg).groupBy(col("user_id"))
-          .agg(max(col("last")).as("last"),
-            sum(col("n_events")).as("n_events"),
-            sum(col("cents")).as("cents"))
+      val mergeAgg = EventStreams.ArtifactMerge("user_id",
+        max(col("last")).as("last"), sum(col("n_events")).as("n_events"),
+        sum(col("cents")).as("cents"))
       val work = java.nio.file.Files
         .createTempDirectory(s"graft-cfanin$n").toFile
       try {
@@ -223,7 +221,7 @@ object ScaleCheck {
         EventStreams.runArtifactMergeLoop(spark,
           work.getAbsolutePath, srcDir,
           EventStreams.stagedEventSchema,
-          bucketKey = Some("user_id"), nBuckets = 8)(preAgg, mergeAgg)
+          nBuckets = Some(8))(preAgg, mergeAgg)
         val live = s"${work.getAbsolutePath}/state"
         def genDirs(): Int =
           Option(new java.io.File(live).listFiles())
@@ -760,14 +758,12 @@ object ScaleCheck {
                   .Trigger.AvailableNow())
                 .format("noop").queryName(qn).start()
             }
-            try {
-              q.awaitTermination()
-              q.recentProgress.foreach { p =>
-                p.stateOperators.foreach { s =>
-                  commits += s.commitTimeMs; rows += s.numRowsTotal
-                }
+            EventStreams.drain(q)
+            q.recentProgress.foreach { p =>
+              p.stateOperators.foreach { s =>
+                commits += s.commitTimeMs; rows += s.numRowsTotal
               }
-            } finally q.stop()
+            }
           }
           println(f"""{"probe":"stream_width","k":$k,"cpus":$cpus,"bytes":$bytes,"derived_width":$width,"state_rows":${rows.lastOption.getOrElse(0L)},"commit_ms_sum":${commits.sum},"batches":${commits.size},"sec":$t%.2f}""")
         } finally {

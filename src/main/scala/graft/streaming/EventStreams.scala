@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming path over the `events` table (SURVEY §2.9: the
@@ -93,7 +94,7 @@ object EventStreams {
       .writeStream.outputMode(OutputMode.Complete())
       .format("memory").queryName(qn).start()
     }
-    try { q.processAllAvailable() } finally { q.stop() }
+    drain(q)
     finalSlice(spark.table(qn))
   }
 
@@ -123,12 +124,7 @@ object EventStreams {
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName(qn).start()
     }
-    val stateRows =
-      try {
-        q.processAllAvailable()
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally { q.stop() }
+    val stateRows = drain(q)
     (finalSlice(spark.table(qn)), stateRows)
   }
 
@@ -156,7 +152,7 @@ object EventStreams {
       .writeStream.outputMode(OutputMode.Complete())
       .format("memory").queryName(qn).start()
     }
-    try q.processAllAvailable() finally q.stop()
+    drain(q)
     val observed = graft.Tables.events(spark, dir)
       .select(date_format(col("ts"), "yyyy-MM-dd").as("day")).distinct()
     spark.table(qn)
@@ -206,12 +202,7 @@ object EventStreams {
       regs.writeStream.outputMode(OutputMode.Append())
         .format("memory").queryName(qn).start()
     }
-    val stateRows =
-      try {
-        q.processAllAvailable()
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally q.stop()
+    val stateRows = drain(q)
     val exact = graft.queries.Relational
       .q45RollingActives(spark, dir)
       .withColumnRenamed("active_users", "exact_actives")
@@ -260,7 +251,7 @@ object EventStreams {
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName(qn).start()
     }
-    try q.processAllAvailable() finally q.stop()
+    drain(q)
     spark.table(qn).orderBy("conv_id", "touch_type", "touch_s")
   }
 
@@ -428,12 +419,8 @@ object EventStreams {
     * streaming query CLONES the session conf at `start()`, so the
     * override pins the stream's shuffle AND state-store partition
     * count (and every job its foreachBatch body runs) without
-    * touching the batch queries around it. Single-threaded-driver
-    * assumption (ADVICE r20): the set→start→restore window mutates
-    * the SHARED session conf, so a batch query or second stream
-    * started CONCURRENTLY on the same session would inherit the
-    * stream-derived width — the bench/verify drivers run strictly
-    * sequentially, which is what makes the scoping sound.
+    * touching the batch queries around it (see the concurrency note
+    * at the end).
     *
     * `udfHeavy = true` floors the width at the session's core count:
     * streams whose per-row work dominates (the near-dup band kernel +
@@ -507,12 +494,19 @@ object EventStreams {
     * `spark.hadoop.` prefix would not. The modes are unchanged: Hadoop
     * applies the umask before it sets the permission, and only the way
     * it is set differs.
+    *
+    * The set → start → initialization → restore window holds
+    * [[streamConfLock]], so two streams started at once on one session
+    * each clone their own confs. The window still mutates the SHARED
+    * session conf: a batch query planned on another thread while a
+    * stream starts sees the stream's width, checkpoint manager,
+    * FileSystem and AQE setting.
     */
   private[graft] def withStreamShuffle[T](spark: SparkSession,
       bytes: Long, udfHeavy: Boolean = false,
       sortHeavy: Boolean = false, aqeOff: Boolean = false,
       fanout: Int = 1)(f: => T)
-      : T = {
+      : T = streamConfLock.synchronized {
     val flagFloor =
       if (udfHeavy) spark.sparkContext.defaultParallelism
       else if (sortHeavy)
@@ -549,6 +543,25 @@ object EventStreams {
     }
   }
 
+  /** Held across each [[withStreamShuffle]] conf window. */
+  private val streamConfLock = new Object
+
+  /** Run a started stream to the end of its input and stop it. An
+    * `AvailableNow` query terminates by itself (`awaitTermination`);
+    * any other trigger is drained with `processAllAvailable`. Returns
+    * the state-store rows after the final micro-batch (0 for a
+    * stateless stream).
+    */
+  private[graft] def drain(q: StreamingQuery): Long =
+    try {
+      val trigger = q.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.trigger
+      if (trigger == Trigger.AvailableNow()) q.awaitTermination()
+      else q.processAllAvailable()
+      Option(q.lastProgress).toSeq
+        .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
+    } finally q.stop()
+
   /** Distinct int values of a tiny batch column in ONE job: per-
     * partition sets, unioned on the driver (r20). The
     * `distinct().collect()` shape this replaces ran 2–3 AQE stage
@@ -572,7 +585,10 @@ object EventStreams {
     * a multi-hour watermark (span ≫ disorder) and the watermark
     * advances monotonically through a file-source replay — the
     * arrival shape a deployed ingest provides. Memoized; returns the
-    * directory containing `b00.parquet … b{n-1}.parquet`.
+    * directory containing `b00.parquet … b{n-1}.parquet`. The slice
+    * writes pass [[ForkFreeLocalFileSystem.confs]] as write options,
+    * which reach only their own job's Hadoop conf: the session's
+    * default `file:` FileSystem forks ~9 `chmod`s per slice write.
     */
   private[graft] def stagedEventBatches(spark: SparkSession,
       dir: String, nBatches: Int): String =
@@ -594,7 +610,8 @@ object EventStreams {
         val stage = s"${work.getAbsolutePath}/stage$i"
         ev.filter(unix_timestamp(col("ts")) >= lo + i * span &&
             unix_timestamp(col("ts")) < lo + (i + 1) * span)
-          .coalesce(1).write.parquet(stage)
+          .coalesce(1).write.options(ForkFreeLocalFileSystem.confs.toMap)
+          .parquet(stage)
         // the slice ↔ streaming-batch-id identity is load-bearing:
         // s24/s26's as-of oracles equate "batch b" with "event-time
         // slice b", which holds because Spark writes a schema-only
@@ -720,15 +737,10 @@ object EventStreams {
       // AvailableNow (the s05 rule): same batch sequence — one staged
       // file per micro-batch — but the engine drains the backlog and
       // terminates instead of idling between ProcessingTime(0) polls
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .format("memory").queryName(qn).start()
     }
-    val stateRows =
-      try {
-        q.awaitTermination()
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally q.stop()
+    val stateRows = drain(q)
     (spark.table(qn).orderBy("conv_id", "touch_type", "touch_s"),
       stateRows)
   }
@@ -780,12 +792,7 @@ object EventStreams {
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName(qn).start()
     }
-    val stateRows =
-      try {
-        q.processAllAvailable()
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally q.stop()
+    val stateRows = drain(q)
     (spark.table(qn)
       .filter(col("session_end") < "2024-01-03 00:00:00")
       .orderBy("user_id", "session_start"), stateRows)
@@ -801,7 +808,7 @@ object EventStreams {
     * aggregation, and the result replaces the TOUCHED user-bucket
     * partitions of the artifact (staged write + manifest-journaled
     * partition swap over a bucket-partitioned state — see
-    * runArtifactMergeLoop's bucketKey path).
+    * runArtifactMergeLoop's bucketed mode).
     * This is the lakehouse `MERGE INTO` maintenance shape:
     * per-batch cost is O(|batch| + state[touched buckets]) with a
     * keyed shuffle only — the log is never re-read, no window sort
@@ -817,38 +824,38 @@ object EventStreams {
   def replayChangelogCompact(spark: SparkSession, dir: String)
       : DataFrame = replayChangelogCompactWithStats(spark, dir)._1
 
-  /** s16 plus the engine state-store row total (must be 0 — the
-    * artifact, not the state store, carries the state) for the
-    * StreamingSpec assertion.
-    */
-  /** The s16/s24 per-slice compaction aggregate — applied to each
-    * batch AND to (state ∪ batch-agg), which is what makes the merge
-    * exact. The value sum rides through the loop as exact BIGINT
+  /** The s16/s24 compaction merge, folding (state ∪ batch-agg) per
+    * user. The value sum rides through the loop as exact BIGINT
     * cents (value is 2-decimal by construction): integer addition is
     * associative, so the artifact equals batch q46 EXACTLY under any
     * batch slicing — not merely to within double-rounding (ADVICE
     * r11: a double carried here could flip round(...,2) at a .005
     * boundary because the merge re-associates the sum).
     */
-  private def compactUserState(df: DataFrame): DataFrame =
-    df.groupBy(col("user_id"))
-      .agg(max(col("last")).as("last"),
-        sum(col("n_events")).as("n_events"),
-        sum(col("cents")).as("cents"))
+  private val userStateMerge = ArtifactMerge("user_id",
+    max(col("last")).as("last"), sum(col("n_events")).as("n_events"),
+    sum(col("cents")).as("cents"))
 
-  /** [[compactUserState]] in the loop's KEYED-merge shape (r21,
-    * guide §2.4 reuse the exchange): grouping carries `bkt` so the
-    * pre-union `repartition(bkt)` Exchange already satisfies the
-    * aggregation's required clustering (bkt ⊆ group keys — same
-    * groups, since bkt is a function of user_id) and the staged
-    * write follows in the SAME stage. Identical results: max/sum
-    * over the same per-user groups.
+  /** The s16 user-state loop over staged event slices in `src`, shared
+    * by s16 and the s24/s26/s29/s31/s32/s33 lifecycle replays.
     */
-  private def compactUserStateKeyed(df: DataFrame): DataFrame =
-    df.groupBy(col("user_id"), col("bkt"))
-      .agg(max(col("last")).as("last"),
-        sum(col("n_events")).as("n_events"),
-        sum(col("cents")).as("cents"))
+  private def runUserStateLoop(spark: SparkSession, base: String,
+      src: String, nBuckets: Int = 8): (Option[DataFrame], Long) =
+    runArtifactMergeLoop(spark, base, src, stagedEventSchema,
+      nBuckets = Some(nBuckets))(preAggUserState, userStateMerge)
+
+  /** Copy the staged slices `r` of `all` into `src`, keeping their
+    * mtimes (slice order) — how the redeploy replays (s30/s31/s32)
+    * feed two deployments from one incoming dir.
+    */
+  private def copySlices(all: String, src: String, r: Range): Unit =
+    r.foreach { i =>
+      val s0 = new java.io.File(all, f"b$i%02d.parquet")
+      val d0 = new java.io.File(src, s0.getName)
+      java.nio.file.Files.copy(s0.toPath, d0.toPath)
+      d0.setLastModified(s0.lastModified)
+      ()
+    }
 
   private def preAggUserState(df: DataFrame): DataFrame =
     df.groupBy(col("user_id"))
@@ -894,13 +901,8 @@ object EventStreams {
       // per-batch cost tracking touched buckets, which is the shape
       // that survives key cardinality growing with the corpus. Do not
       // "optimize" this back to the full rewrite on bench numbers.
-      val (artifact, stateRows) = runArtifactMergeLoop(spark,
-        work.getAbsolutePath, srcDir, stagedEventSchema,
-        bucketKey = Some("user_id"), nBuckets = 8,
-        mergeKeyed = Some(compactUserStateKeyed))(
-        preAggUserState,
-        (prev, batchAgg) =>
-          compactUserState(prev.unionByName(batchAgg)))
+      val (artifact, stateRows) =
+        runUserStateLoop(spark, work.getAbsolutePath, srcDir)
       // empty-source fallback: the compaction of zero batches is the
       // compaction of an empty log
       val fin = compactReadout(artifact
@@ -949,11 +951,7 @@ object EventStreams {
       .toFile
     try {
       val srcDir = stagedEventBatches(spark, dir, nBatches)
-      runArtifactMergeLoop(spark, work.getAbsolutePath, srcDir,
-        stagedEventSchema, bucketKey = Some("user_id"), nBuckets = 8,
-        mergeKeyed = Some(compactUserStateKeyed))(
-        preAggUserState,
-        (prev, batchAgg) => compactUserState(prev.unionByName(batchAgg)))
+      runUserStateLoop(spark, work.getAbsolutePath, srcDir)
       val stateDir = s"${work.getAbsolutePath}/state"
       // the as-of target is the FIXED batch nBatches−2, not
       // lastCommitted−1 (review r17): the oracle recomputes the
@@ -1019,11 +1017,7 @@ object EventStreams {
       .toFile
     try {
       val srcDir = stagedEventBatches(spark, dir, nBatches)
-      runArtifactMergeLoop(spark, work.getAbsolutePath, srcDir,
-        stagedEventSchema, bucketKey = Some("user_id"), nBuckets = 8,
-        mergeKeyed = Some(compactUserStateKeyed))(
-        preAggUserState,
-        (prev, batchAgg) => compactUserState(prev.unionByName(batchAgg)))
+      runUserStateLoop(spark, work.getAbsolutePath, srcDir)
       val stateDir = s"${work.getAbsolutePath}/state"
       val diffSchema = StructType(Seq(
         StructField("user_id", LongType),
@@ -1109,11 +1103,7 @@ object EventStreams {
       .toFile
     try {
       val srcDir = stagedEventBatches(spark, dir, nBatches)
-      runArtifactMergeLoop(spark, work.getAbsolutePath, srcDir,
-        stagedEventSchema, bucketKey = Some("user_id"), nBuckets = 8,
-        mergeKeyed = Some(compactUserStateKeyed))(
-        preAggUserState,
-        (prev, batchAgg) => compactUserState(prev.unionByName(batchAgg)))
+      runUserStateLoop(spark, work.getAbsolutePath, srcDir)
       val stateDir = s"${work.getAbsolutePath}/state"
       val head = lastCommittedBatch(stateDir)
       val (fin, stats) =
@@ -1200,9 +1190,8 @@ object EventStreams {
     df.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(eventCents).as("cents"))
 
-  private def mergeEvoOld(prev: DataFrame, agg: DataFrame): DataFrame =
-    prev.unionByName(agg).groupBy("user_id")
-      .agg(sum("n_events").as("n_events"), sum("cents").as("cents"))
+  private val evoOldMerge = ArtifactMerge("user_id",
+    sum("n_events").as("n_events"), sum("cents").as("cents"))
 
   private def preAggEvoNew(df: DataFrame): DataFrame =
     df.groupBy(col("user_id"))
@@ -1210,32 +1199,13 @@ object EventStreams {
         max(eventCents).as("max_cents"))
 
   /** The evolved merge: a pre-deploy `prev` (old stamp, no
-    * max_cents) enters with the column null-filled — null is the
-    * identity of max, so old users pick up a max the first time a
-    * post-deploy event arrives and stay null otherwise.
+    * max_cents) enters the loop's union with the column null-filled
+    * — null is the identity of max, so old users pick up a max the
+    * first time a post-deploy event arrives and stay null otherwise.
     */
-  private def mergeEvoNew(prev: DataFrame, agg: DataFrame)
-      : DataFrame = {
-    val p = if (prev.columns.contains("max_cents")) prev
-      else prev.withColumn("max_cents", lit(null).cast("long"))
-    p.unionByName(agg).groupBy("user_id")
-      .agg(sum("n_events").as("n_events"), sum("cents").as("cents"),
-        max("max_cents").as("max_cents"))
-  }
-
-  /** The s30 merges in the loop's KEYED shape (see
-    * [[compactUserStateKeyed]]); the evolved one's null-fill of a
-    * pre-deploy prev happens in the loop's allowMissingColumns
-    * union — null stays the identity of max.
-    */
-  private def mergeEvoOldKeyed(df: DataFrame): DataFrame =
-    df.groupBy(col("user_id"), col("bkt"))
-      .agg(sum("n_events").as("n_events"), sum("cents").as("cents"))
-
-  private def mergeEvoNewKeyed(df: DataFrame): DataFrame =
-    df.groupBy(col("user_id"), col("bkt"))
-      .agg(sum("n_events").as("n_events"), sum("cents").as("cents"),
-        max("max_cents").as("max_cents"))
+  private val evoNewMerge = ArtifactMerge("user_id",
+    sum("n_events").as("n_events"), sum("cents").as("cents"),
+    max("max_cents").as("max_cents"))
 
   /** s30 plus (head artifact columns, as-of-pre-deploy columns) for
     * the StreamingSpec schema assertions.
@@ -1253,24 +1223,15 @@ object EventStreams {
       // slices, deploy 2's AvailableNow picks up only the new ones
       val src = s"${work.getAbsolutePath}/incoming"
       new java.io.File(src).mkdirs()
-      def stage(r: Range): Unit = r.foreach { i =>
-        val s0 = new java.io.File(all, f"b$i%02d.parquet")
-        val d0 = new java.io.File(src, s0.getName)
-        java.nio.file.Files.copy(s0.toPath, d0.toPath)
-        d0.setLastModified(s0.lastModified) // keep slice order
-        ()
-      }
-      stage(0 until evoAt)
+      copySlices(all, src, 0 until evoAt)
       runArtifactMergeLoop(spark, work.getAbsolutePath, src,
-        stagedEventSchema, bucketKey = Some("user_id"), nBuckets = 8,
-        stampSchema = true,
-        mergeKeyed = Some(mergeEvoOldKeyed))(preAggEvoOld, mergeEvoOld)
-      stage(evoAt until nBatches)
+        stagedEventSchema, nBuckets = Some(8),
+        stampSchema = true)(preAggEvoOld, evoOldMerge)
+      copySlices(all, src, evoAt until nBatches)
       val (artifact, _) = runArtifactMergeLoop(spark,
         work.getAbsolutePath, src, stagedEventSchema,
-        bucketKey = Some("user_id"), nBuckets = 8,
-        stampSchema = true,
-        mergeKeyed = Some(mergeEvoNewKeyed))(preAggEvoNew, mergeEvoNew)
+        nBuckets = Some(8), stampSchema = true)(
+        preAggEvoNew, evoNewMerge)
       val stateDir = s"${work.getAbsolutePath}/state"
       val asOfCols: Seq[String] =
         if (lastCommittedBatch(stateDir) < evoAt) Seq.empty
@@ -1335,19 +1296,8 @@ object EventStreams {
       // AvailableNow picks up only the post-compaction slices
       val src = s"${work.getAbsolutePath}/incoming"
       new java.io.File(src).mkdirs()
-      def stage(r: Range): Unit = r.foreach { i =>
-        val s0 = new java.io.File(all, f"b$i%02d.parquet")
-        val d0 = new java.io.File(src, s0.getName)
-        java.nio.file.Files.copy(s0.toPath, d0.toPath)
-        d0.setLastModified(s0.lastModified) // keep slice order
-        ()
-      }
-      stage(0 until compactAt)
-      runArtifactMergeLoop(spark, work.getAbsolutePath, src,
-        stagedEventSchema, bucketKey = Some("user_id"), nBuckets = 8,
-        mergeKeyed = Some(compactUserStateKeyed))(
-        preAggUserState,
-        (prev, batchAgg) => compactUserState(prev.unionByName(batchAgg)))
+      copySlices(all, src, 0 until compactAt)
+      runUserStateLoop(spark, work.getAbsolutePath, src)
       val stateDir = s"${work.getAbsolutePath}/state"
       val headBefore = lastCommittedBatch(stateDir)
       compactArtifact(spark, stateDir,
@@ -1355,13 +1305,9 @@ object EventStreams {
       val gensAfter = readSnapshot(stateDir)
         .map(_._2.values.toSeq.distinct.sorted)
         .getOrElse(Seq.empty)
-      stage(compactAt until nBatches)
-      val (artifact, _) = runArtifactMergeLoop(spark,
-        work.getAbsolutePath, src, stagedEventSchema,
-        bucketKey = Some("user_id"), nBuckets = 8,
-        mergeKeyed = Some(compactUserStateKeyed))(
-        preAggUserState,
-        (prev, batchAgg) => compactUserState(prev.unionByName(batchAgg)))
+      copySlices(all, src, compactAt until nBatches)
+      val (artifact, _) =
+        runUserStateLoop(spark, work.getAbsolutePath, src)
       val headAfter = lastCommittedBatch(stateDir)
       val fin = compactReadout(artifact
         .getOrElse(preAggUserState(emptyStagedFrame(spark))))
@@ -1407,19 +1353,8 @@ object EventStreams {
       val respecAt = nBatches * CompactSliceOfTen / 10
       val src = s"${work.getAbsolutePath}/incoming"
       new java.io.File(src).mkdirs()
-      def stage(r: Range): Unit = r.foreach { i =>
-        val s0 = new java.io.File(all, f"b$i%02d.parquet")
-        val d0 = new java.io.File(src, s0.getName)
-        java.nio.file.Files.copy(s0.toPath, d0.toPath)
-        d0.setLastModified(s0.lastModified) // keep slice order
-        ()
-      }
-      stage(0 until respecAt)
-      runArtifactMergeLoop(spark, work.getAbsolutePath, src,
-        stagedEventSchema, bucketKey = Some("user_id"), nBuckets = 8,
-        mergeKeyed = Some(compactUserStateKeyed))(
-        preAggUserState,
-        (prev, batchAgg) => compactUserState(prev.unionByName(batchAgg)))
+      copySlices(all, src, 0 until respecAt)
+      runUserStateLoop(spark, work.getAbsolutePath, src)
       val stateDir = s"${work.getAbsolutePath}/state"
       def specAndParts(): (Option[Int], Int) =
         (readSnapshotSpec(stateDir),
@@ -1428,13 +1363,9 @@ object EventStreams {
       rebucketArtifact(spark, stateDir, "user_id", 16,
         lockBase = Some(work.getAbsolutePath))
       val after = specAndParts()
-      stage(respecAt until nBatches)
-      val (artifact, _) = runArtifactMergeLoop(spark,
-        work.getAbsolutePath, src, stagedEventSchema,
-        bucketKey = Some("user_id"), nBuckets = 16,
-        mergeKeyed = Some(compactUserStateKeyed))(
-        preAggUserState,
-        (prev, batchAgg) => compactUserState(prev.unionByName(batchAgg)))
+      copySlices(all, src, respecAt until nBatches)
+      val (artifact, _) = runUserStateLoop(spark,
+        work.getAbsolutePath, src, nBuckets = 16)
       val fin = compactReadout(artifact
         .getOrElse(preAggUserState(emptyStagedFrame(spark))))
       // HARNESS-bounded materialization before the temp dir dies
@@ -1484,11 +1415,7 @@ object EventStreams {
       .toFile
     try {
       val srcDir = stagedEventBatches(spark, dir, nBatches)
-      runArtifactMergeLoop(spark, work.getAbsolutePath, srcDir,
-        stagedEventSchema, bucketKey = Some("user_id"), nBuckets = 8,
-        mergeKeyed = Some(compactUserStateKeyed))(
-        preAggUserState,
-        (prev, batchAgg) => compactUserState(prev.unionByName(batchAgg)))
+      runUserStateLoop(spark, work.getAbsolutePath, srcDir)
       val stateDir = s"${work.getAbsolutePath}/state"
       // no materialization dance here (review r20): the manifest
       // frame is a driver-local relation of already-collected footer
@@ -1795,10 +1722,8 @@ object EventStreams {
         // slice (per-batch counts sum exactly — each doc lives in
         // one batch)
         b => TextOps.vocabCountsOf(b.sparkSession, b, rules),
-        (prev, batchAgg) => prev.unionByName(batchAgg)
-          .groupBy("token")
-          .agg(sum("n_occurrences").as("n_occurrences"),
-            sum("n_docs").as("n_docs")))
+        ArtifactMerge("token", sum("n_occurrences").as("n_occurrences"),
+          sum("n_docs").as("n_docs")))
       // t42's OWN rank/cap/id read-out over the artifact — s21 ≡ t42
       // by shared code; an empty source yields the empty vocabulary
       val fin = TextOps.vocabRankOf(artifact
@@ -1859,15 +1784,10 @@ object EventStreams {
         .option("path", outDir)
         .option("checkpointLocation", s"$base/ckpt")
         .partitionBy("dt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       }
-      val stateRows =
-        try {
-          q.awaitTermination()
-          Option(q.lastProgress).toSeq
-            .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-        } finally q.stop()
+      val stateRows = drain(q)
       // q51's OWN window aggregate over the streamed layout — the
       // pair shares one oracle, so it shares one definition. The
       // explicit schema (staged columns + the dt partition column)
@@ -1894,14 +1814,26 @@ object EventStreams {
     } finally deleteRecursively(work)
   }
 
+  /** One merge declaration for [[runArtifactMergeLoop]]: the
+    * artifact's key column and the aggregate columns that fold every
+    * row of one key, prior artifact rows and the batch aggregate
+    * alike, into one. The aggregates must be associative and
+    * key-local (sums, max), which is what makes the artifact equal
+    * its batch twin under any batch slicing.
+    */
+  private[graft] final case class ArtifactMerge(key: String,
+      aggs: Column*) {
+    def of(df: DataFrame, keys: Column*): DataFrame =
+      df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
+
   /** The shared incremental-MERGE replay scaffold (s16's changelog
     * compaction and s21's vocab maintenance): drive the staged files
     * through a stateless AvailableNow file stream, aggregate each
     * non-empty micro-batch with `batchAgg`, fold it into the parquet
-    * artifact with `merge`, and return (artifact if any batch
-    * arrived, engine state-store rows — always 0, the artifact IS
-    * the state). One copy of the drain/stateRows boilerplate to keep
-    * in sync instead of one per loop (review r12).
+    * artifact with the one `merge` declaration, and return (artifact
+    * if any batch arrived, engine state-store rows — always 0, the
+    * artifact IS the state).
     *
     * CONTRACT: the returned DataFrame is a LAZY read over parquet
     * files living under the caller's `base` temp dir — callers MUST
@@ -1917,20 +1849,27 @@ object EventStreams {
     * each CALL is a fresh deployment; that is the harness's
     * lifecycle choice, not the loop's.
     *
-    * `bucketKey = Some(col)` turns on the CELL-PARTITIONED merge
+    * `nBuckets = Some(n)` turns on the CELL-PARTITIONED merge
     * (s17's treatment, for artifacts whose key cardinality grows
     * with the corpus — s16's per-user state): the artifact is
-    * partitioned by `bkt = pmod(xxhash64(key), nBuckets)`; each
-    * batch collects its TOUCHED bucket set (≤ nBuckets, a bounded
+    * partitioned by `bkt = pmod(xxhash64(merge.key), n)`; each
+    * batch collects its TOUCHED bucket set (≤ n, a bounded
     * driver value), reads ONLY those partitions of the prior
     * artifact via a static `bkt IN (...)` partition filter
-    * ([[pruneToPartitions]] — plan-gated in PlanSpec), merges them
-    * with the batch aggregate — valid because every `merge` in this
-    * family is KEY-LOCAL (latest-per-key, per-key sums), so rows in
-    * untouched buckets cannot change — writes the merged touched
-    * buckets to a sibling staging dir in ONE job (the stage reads
-    * the prior slice from the LIVE path, so there is no
-    * read-overwrite hazard and no extra materialization), and
+    * ([[pruneToPartitions]] — plan-gated in PlanSpec), and merges
+    * them with the batch aggregate — valid because the merge is
+    * KEY-LOCAL, so rows in untouched buckets cannot change. The
+    * merge is derived from the declaration as
+    * `groupBy(key, bkt).agg(aggs)` over `(prev ∪ batch-agg)
+    * .repartition(bkt)`: the one Exchange already clusters by bkt
+    * (bkt ⊆ group keys, and bkt is a function of the key, so the
+    * groups are the per-key ones), and the staged write follows the
+    * aggregate in the same stage (r21, guide §2.4). The union allows
+    * missing columns, so a pre-evolution prev enters an evolved
+    * merge with its added columns null-filled (s30). The loop writes
+    * the merged touched buckets to a sibling staging dir in ONE job
+    * (the stage reads the prior slice from the LIVE path, so there
+    * is no read-overwrite hazard and no extra materialization), and
     * commits them with [[swapPartitionDirs]]'s manifest-journaled
     * partition swap. The swap journals its batchId, and a batch
     * at-or-below the artifact's committed mark is SKIPPED: Structured
@@ -1940,8 +1879,9 @@ object EventStreams {
     * exactly-once across restarts is the marker + skip, proven
     * end-to-end by StreamingSpec's crash-replay case. Per-batch cost
     * is O(|batch| + artifact[touched
-    * buckets]), never O(|artifact|). `bucketKey = None` keeps the
-    * full chained rewrite for artifacts that are BOUNDED by
+    * buckets]), never O(|artifact|). `nBuckets = None` keeps the
+    * full chained rewrite, `prev.unionByName(agg).groupBy(key)
+    * .agg(aggs)`, for artifacts that are BOUNDED by
     * construction and touched almost entirely by every batch (s21's
     * vocabulary: zipfian tokens mean every batch carries most of the
     * vocab, so pruning buys nothing and the artifact is vocab-sized
@@ -1969,20 +1909,10 @@ object EventStreams {
     */
   private[graft] def runArtifactMergeLoop(spark: SparkSession,
       base: String, srcDir: String, schema: StructType,
-      bucketKey: Option[String] = None, nBuckets: Int = 32,
+      nBuckets: Option[Int] = None,
       onSwapApply: (Long, String) => Unit = (_, _) => (),
-      stampSchema: Boolean = false,
-      // KEYED merge (r21, guide §2.4): an aggregation over the
-      // pre-unioned (prev ∪ batch-agg) frame that groups by
-      // (key, "bkt") — the loop repartitions the union by bkt ONCE
-      // and the grouping's required clustering is already satisfied
-      // (bkt ⊆ group keys), so the staged write follows the merge
-      // aggregate in the same stage instead of paying a second
-      // merge-keyed Exchange plus a repartition Exchange. When None,
-      // the classic (prev, agg) => merged path runs unchanged.
-      mergeKeyed: Option[DataFrame => DataFrame] = None)(
-      batchAgg: DataFrame => DataFrame,
-      merge: (DataFrame, DataFrame) => DataFrame)
+      stampSchema: Boolean = false)(
+      batchAgg: DataFrame => DataFrame, merge: ArtifactMerge)
       : (Option[DataFrame], Long) = {
     val states = scala.collection.mutable.ListBuffer[String]()
     val stateDir = s"$base/state"
@@ -2008,7 +1938,7 @@ object EventStreams {
     // The sentinel beside the checkpoint records what state must
     // hold; recovery above has already rolled any torn commit
     // forward, so expected > committed can only mean state loss.
-    def committedMark(): Long = bucketKey match {
+    def committedMark(): Long = nBuckets match {
       case Some(_) => lastCommittedBatch(stateDir)
       case None => completeChainVersions(stateDir)
         .lastOption.map(_.getName.stripPrefix("b").toLong)
@@ -2032,12 +1962,12 @@ object EventStreams {
     // [[rebucketArtifact]] is the sanctioned way to change layouts.
     // Pre-s32 artifacts carry no stamp (cannot validate — the first
     // commit of this run stamps them going forward).
-    bucketKey.foreach { _ =>
-      readSnapshotSpec(stateDir).filter(_ != nBuckets).foreach { n =>
+    nBuckets.foreach { want =>
+      readSnapshotSpec(stateDir).filter(_ != want).foreach { n =>
         throw new IllegalStateException(
           s"artifact $stateDir is laid out under partition spec " +
             s"bkt:$n but this deployment is configured with " +
-            s"nBuckets=$nBuckets — a mismatched spec would prune " +
+            s"nBuckets=$want — a mismatched spec would prune " +
             "merges to the wrong buckets and silently double-count " +
             s"keys; redeploy with nBuckets=$n, or migrate the " +
             "layout first (EventStreams.rebucketArtifact)")
@@ -2046,7 +1976,7 @@ object EventStreams {
     // chained-mode resume: seed the version chain with the latest
     // COMPLETE prior artifact (a b<N> dir with _SUCCESS — a torn
     // write has none and is redone by the replay)
-    if (bucketKey.isEmpty)
+    if (nBuckets.isEmpty)
       completeChainVersions(stateDir)
         .lastOption.foreach(d => states += d.getAbsolutePath)
     // stream width derived from the staged input, not the session's
@@ -2059,7 +1989,7 @@ object EventStreams {
     // go out in parallel tasks instead of one serial write task
     val q = withStreamShuffle(spark, stagedBytes(srcDir),
       aqeOff = true,
-      fanout = bucketKey.map(_ => nBuckets).getOrElse(1)) {
+      fanout = nBuckets.getOrElse(1)) {
       spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       // plain dir, not a b*.parquet glob (r21): the staged incoming
@@ -2069,7 +1999,7 @@ object EventStreams {
       .parquet(srcDir)
       .writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
           // lifecycle guard (review r14): the replay-skip marks
@@ -2093,12 +2023,7 @@ object EventStreams {
           // passes as a replay — detection starts once any later
           // batch has committed.
           if (batchId == 0L) {
-            val mark = bucketKey match {
-              case Some(_) => lastCommittedBatch(stateDir)
-              case None => completeChainVersions(stateDir)
-                .lastOption.map(_.getName.stripPrefix("b").toLong)
-                .getOrElse(-1L)
-            }
+            val mark = committedMark()
             if (mark > 0L) throw new IllegalStateException(
               s"artifact base $stateDir has committed through " +
                 s"batch $mark but the stream restarted at batch 0: " +
@@ -2106,7 +2031,7 @@ object EventStreams {
                 "base — delete the base and checkpoint together, " +
                 "or point the loop at a fresh base")
           }
-        bucketKey match {
+        nBuckets match {
             case Some(_)
                 if batchId <= lastCommittedBatch(stateDir) =>
               // REPLAY of a batch whose swap already committed (a
@@ -2114,9 +2039,9 @@ object EventStreams {
               // engine checkpointed the batch): the merge is already
               // in the artifact — merging again would double-count
               if (states.isEmpty) states += stateDir
-            case Some(key) =>
+            case Some(n) =>
               val s = batch.sparkSession
-              def bktOf(c: Column) = bucketOf(c, nBuckets)
+              val bkt = bucketOf(col(merge.key), n)
               // the batch's TOUCHED bucket set, collected to the
               // driver — BOUNDED by nBuckets (a config constant),
               // never corpus-sized. The bounded collect is what buys
@@ -2134,8 +2059,7 @@ object EventStreams {
               // separate `batch.isEmpty` job is gone; distinctInts
               // keeps it ONE job where distinct().collect() ran 2–3
               // AQE stage jobs).
-              val touched =
-                distinctInts(batch.toDF(), bktOf(col(key)))
+              val touched = distinctInts(batch.toDF(), bkt)
               if (touched.nonEmpty) {
               val agg = batchAgg(batch.toDF())
               // snapshot-resolved read (review r15): the committed
@@ -2150,27 +2074,14 @@ object EventStreams {
               // different path, so no read-overwrite hazard and no
               // extra checkpoint materialization), then commit with
               // the manifest-journaled partition swap. Exactly one
-              // file per touched bucket either way: the keyed path
-              // clusters by bkt before the merge aggregate, the
-              // classic path repartitions the merged result.
-              val merged = mergeKeyed match {
-                case Some(mk) =>
-                  // allowMissingColumns: a pre-evolution prev enters
-                  // the evolved union with its added columns
-                  // null-filled (mergeEvoNew's explicit null-fill,
-                  // now at the union seam)
-                  val aggB = agg.withColumn("bkt", bktOf(col(key)))
-                  mk(prevB
-                    .map(_.unionByName(aggB,
-                      allowMissingColumns = true))
-                    .getOrElse(aggB)
-                    .repartition(col("bkt")))
-                case None =>
-                  prevB.map(p => merge(p.drop("bkt"), agg))
-                    .getOrElse(agg)
-                    .withColumn("bkt", bktOf(col(key)))
-                    .repartition(col("bkt"))
-              }
+              // file per touched bucket: the union is clustered by
+              // bkt before the merge aggregate.
+              val aggB = agg.withColumn("bkt", bkt)
+              val merged = merge.of(prevB
+                  .map(_.unionByName(aggB, allowMissingColumns = true))
+                  .getOrElse(aggB)
+                  .repartition(col("bkt")),
+                col(merge.key), col("bkt"))
               artifactSchemaHint = Some(merged.schema)
               merged
                 .write.partitionBy("bkt")
@@ -2186,7 +2097,7 @@ object EventStreams {
                   if (stampSchema) Some(merged.schema.toDDL) else None,
                 // s32: every bucketed commit declares its layout so
                 // a later mismatched deployment refuses loudly
-                specBuckets = Some(nBuckets))
+                specBuckets = nBuckets)
               writeExpectedCommit(base, batchId)
               if (states.isEmpty) states += stateDir
               }
@@ -2205,7 +2116,9 @@ object EventStreams {
                 // a dir without _SUCCESS is a torn write — redo it
                 if (pf.isDirectory) deleteRecursively(pf)
                 val merged = states.lastOption match {
-                  case Some(prev) => merge(s.read.parquet(prev), agg)
+                  case Some(prev) => merge.of(
+                    s.read.parquet(prev).unionByName(agg),
+                    col(merge.key))
                   case None => agg
                 }
                 merged.write.parquet(path)
@@ -2232,12 +2145,7 @@ object EventStreams {
       }
       .start()
     }
-    val stateRows =
-      try {
-        q.awaitTermination()
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally q.stop()
+    val stateRows = drain(q)
     // the final artifact read resolves through the committed
     // snapshot too (chained-mode version dirs have none and fall
     // back to the plain read — they are immutable once complete)
@@ -2430,7 +2338,7 @@ object EventStreams {
         .parquet(s"$srcDir/b*.parquet")
         .writeStream.outputMode(OutputMode.Append())
         .option("checkpointLocation", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
             batchId: Long) =>
           // no separate emptiness probe (r20): the gate is per-row
@@ -2443,12 +2351,7 @@ object EventStreams {
         }
         .start()
       }
-      val stateRows =
-        try {
-          q.awaitTermination()
-          Option(q.lastProgress).toSeq
-            .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-        } finally q.stop()
+      val stateRows = drain(q)
       // empty-source fallback: the gate over an empty typed frame
       // carries the correct output schema with zero rows
       val fin = (if (verdicts.isEmpty)
@@ -2507,12 +2410,7 @@ object EventStreams {
       deduped.writeStream.outputMode(OutputMode.Append())
         .format("memory").queryName(qn).start()
     }
-    val stateRows =
-      try {
-        q.processAllAvailable()
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally { q.stop() }
+    val stateRows = drain(q)
     (spark.table(qn)
       .filter(col("minute_start") < "2024-01-03 00:00:00")
       .orderBy("event_type", "minute_start"), stateRows)
@@ -2636,12 +2534,7 @@ object EventStreams {
         .writeStream.outputMode(OutputMode.Append())
         .format("memory").queryName(qn).start()
     }
-    val stateRows =
-      try {
-        q.processAllAvailable()
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally { q.stop() }
+    val stateRows = drain(q)
     (spark.table(qn).distinct().orderBy("d1", "d2"), stateRows)
   }
 
@@ -3807,7 +3700,8 @@ object EventStreams {
   }
 
   /** Count DATA micro-batches (numInputRows > 0) that `q` processes
-    * while the blocking `drain` runs. recentProgress is a BOUNDED
+    * while the blocking `body` (a [[drain]]) runs, returned beside
+    * the body's result. recentProgress is a BOUNDED
     * buffer (default 100 entries — the [[drainTimerStream]] lesson):
     * one post-hoc count of the buffer undercounts as soon as staging
     * exceeds it, so batch ids are accumulated by a concurrent poller
@@ -3815,9 +3709,8 @@ object EventStreams {
     * (the poll interval is far inside the ~100-entry eviction window,
     * so no id can be evicted unseen).
     */
-  private def countDataBatches(
-      q: org.apache.spark.sql.streaming.StreamingQuery)(
-      drain: => Unit): Long = {
+  private def countDataBatches[T](q: StreamingQuery)(body: => T)
+      : (T, Long) = {
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
     def sweep(): Unit =
       q.recentProgress.filter(_.numInputRows > 0)
@@ -3828,9 +3721,9 @@ object EventStreams {
     })
     poller.setDaemon(true)
     poller.start()
-    try drain finally { running = false; poller.join() }
+    val r = try body finally { running = false; poller.join() }
     sweep()
-    seen.size.toLong
+    (r, seen.size.toLong)
   }
 
   /** Wait until a stream with ARMED processing-time timers has
@@ -3894,7 +3787,7 @@ object EventStreams {
         .writeStream.outputMode(OutputMode.Append())
         .format("memory").queryName(qn).start()
     }
-    try { q.processAllAvailable() } finally { q.stop() }
+    drain(q)
     spark.table(qn).distinct().orderBy("d1", "d2")
   }
 
@@ -4017,7 +3910,7 @@ object EventStreams {
       // honored — one file per micro-batch, so the fixed-depth oracle
       // semantics are untouched) but the engine drains the backlog and
       // terminates instead of idling between ProcessingTime(0) polls
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         val tEnter = System.nanoTime()
@@ -4071,12 +3964,7 @@ object EventStreams {
     }
     if (timing) System.err.println(
       s"[s05-timing] start-to-launch=${secs(tStart, System.nanoTime())}")
-    val stateRows =
-      try {
-        q.awaitTermination() // AvailableNow self-terminates when drained
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally { q.stop() }
+    val stateRows = drain(q)
     val dropDirs = Option(new java.io.File(dropsDir).listFiles())
       .getOrElse(Array.empty).map(_.getAbsolutePath).sorted
     val drops =
@@ -4150,13 +4038,8 @@ object EventStreams {
       .format("memory").queryName(qn).start()
     }
     val (stateRows, nBatches) =
-      try {
-        val n = countDataBatches(q)(q.processAllAvailable())
-        (Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum,
-          n)
-      } finally {
-        q.stop()
+      try countDataBatches(q)(drain(q))
+      finally {
         // the sketch lives in the memory sink — the staged lineitem
         // copy and checkpoint/state dirs are dead weight once the
         // query stops (the s03b lesson: deleteOnExit on a non-empty
@@ -4221,15 +4104,8 @@ object EventStreams {
       .format("memory").queryName(qn).start()
     }
     val (stateRows, nBatches) =
-      try {
-        val n = countDataBatches(q)(q.processAllAvailable())
-        (Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum,
-          n)
-      } finally {
-        q.stop()
-        deleteRecursively(work) // sketch lives in the memory sink
-      }
+      try countDataBatches(q)(drain(q))
+      finally deleteRecursively(work) // sketch lives in the memory sink
     (graft.queries.Relational.hllFinalize(spark.table(qn),
       graft.queries.Relational.hllExactCounts(
         graft.Tables.lineitem(spark, dir))),
@@ -4292,7 +4168,7 @@ object EventStreams {
       .parquet(srcDir)
       .writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation", s"${work.getAbsolutePath}/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         if (!batch.isEmpty) {
@@ -4318,12 +4194,7 @@ object EventStreams {
       }
       .start()
     }
-    val stateRows =
-      try {
-        q.awaitTermination()
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally { q.stop() }
+    val stateRows = drain(q)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("bucket"), col("doc_id"))
     val result = samplePath match {
@@ -4397,7 +4268,7 @@ object EventStreams {
       .parquet(srcDir)
       .writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation", s"${work.getAbsolutePath}/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         // per-row pure gate: an empty batch writes a schema-only
@@ -4409,12 +4280,7 @@ object EventStreams {
       }
       .start()
     }
-    val stateRows =
-      try {
-        q.awaitTermination() // AvailableNow self-terminates when drained
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally { q.stop() }
+    val stateRows = drain(q)
     val flagDirs = Option(new java.io.File(flagsDir).listFiles())
       .getOrElse(Array.empty).map(_.getAbsolutePath).sorted
     val result =
@@ -4485,7 +4351,7 @@ object EventStreams {
       .parquet(srcDir)
       .writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation", s"${work.getAbsolutePath}/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         // per-row pure classification: an empty batch writes a
@@ -4504,12 +4370,7 @@ object EventStreams {
       }
       .start()
     }
-    val stateRows =
-      try {
-        q.awaitTermination() // AvailableNow self-terminates when drained
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally { q.stop() }
+    val stateRows = drain(q)
     val statusDirs = Option(new java.io.File(statusDir).listFiles())
       .getOrElse(Array.empty).map(_.getAbsolutePath).sorted
     if (statusDirs.isEmpty)
@@ -4606,7 +4467,7 @@ object EventStreams {
       .parquet(s"$srcDir/b*.parquet")
       .writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation", s"${work.getAbsolutePath}/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         if (!batch.isEmpty) {
@@ -4633,12 +4494,7 @@ object EventStreams {
       }
       .start()
     }
-    val stateRows =
-      try {
-        q.awaitTermination() // AvailableNow self-terminates when drained
-        Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      } finally { q.stop() }
+    val stateRows = drain(q)
     val contribDirs = Option(new java.io.File(contribDir).listFiles())
       .getOrElse(Array.empty).map(_.getAbsolutePath).sorted
     if (contribDirs.isEmpty)

@@ -76,8 +76,7 @@ object VectorStreams {
       coded.writeStream.outputMode(OutputMode.Append())
         .format("memory").queryName(qn).start()
     }
-    try q.processAllAvailable()
-    finally q.stop()
+    EventStreams.drain(q)
     spark.table(qn).orderBy("vec_id")
   }
 
@@ -554,12 +553,7 @@ object VectorStreams {
         }
         .start()
       }
-      val stateRows =
-        try {
-          q.awaitTermination()
-          Option(q.lastProgress).toSeq
-            .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-        } finally q.stop()
+      val stateRows = EventStreams.drain(q)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("vec_id").orderBy(col("d2"), col("neighbor_id"))
       val (fin, diffStats) = diffFromBatch match {

@@ -1158,7 +1158,7 @@ class PlanSpec extends SparkSpec {
   test("incremental-merge read-side pruning: pruneToPartitions " +
       "lands as a static IN PartitionFilter and the scan reads " +
       "ONLY the touched partition dirs (r13 VERDICT item 2)") {
-    // the exact read shape of runArtifactMergeLoop's bucketKey path
+    // the exact read shape of runArtifactMergeLoop's bucketed mode
     // and s17's graph/assignment slices: a bkt/cell-partitioned
     // parquet artifact pruned to the batch's bounded touched set.
     // The previous broadcast-left-semi shape passed row-level tests

@@ -672,10 +672,6 @@ class StreamingSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     import jdk.jfr.Recording
     import jdk.jfr.consumer.RecordingFile
-    // the event slices are staged once per JVM by a batch write, which
-    // forks its chmods outside any stream: stage them before recording
-    assert(EventStreams.replaySessionWindows(spark, sf).count() > 0)
-    assert(EventStreams.replayPartitionedIngest(spark, sf).count() > 0)
     val out = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
@@ -683,6 +679,11 @@ class StreamingSpec extends SparkSpec {
     try {
       // control: the recording sees a fork made on this thread
       new ProcessBuilder("true").start().waitFor()
+      // the event-slice staging's batch writes: 9 slices is a count no
+      // other caller stages, so this JVM writes them here
+      val fresh = EventStreams.stagedEventBatches(spark, sf, 9)
+      assert(new java.io.File(fresh).list().count(_.endsWith(".parquet"))
+        === 9)
       // s15: offset/commit logs + the state store on executor threads
       assert(EventStreams.replaySessionWindows(spark, sf).count() > 0)
       // s22: file-source and file-sink metadata logs
@@ -715,6 +716,67 @@ class StreamingSpec extends SparkSpec {
         s"${viaFileContext.size} forks under Spark's FileContext " +
           s"checkpoint manager, e.g. ${viaFileContext.take(2)}")
     } finally java.nio.file.Files.deleteIfExists(out)
+  }
+
+  test("withStreamShuffle: two streams started at once on one session " +
+      "each clone their own derived width, and the session conf is " +
+      "restored after both") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    // 1 byte derives width 1, 96 MB width 3 (32 MB per partition)
+    val (bytesA, bytesB) = (1L, 96L << 20)
+    val aIn, bIn, aStarted = new CountDownLatch(1)
+    val started = new ConcurrentHashMap[String, StreamingQuery]()
+    val failures = new ConcurrentHashMap[String, Throwable]()
+    // `inside` runs in the conf window, before the stream starts;
+    // `after` right after start(), still inside the window
+    def starter(name: String, bytes: Long)(inside: => Unit)(
+        after: => Unit): Thread = new Thread(() =>
+      try {
+        EventStreams.withStreamShuffle(spark, bytes) {
+          inside
+          val q = spark.readStream.format("rate").load()
+            .writeStream.format("noop").start()
+          started.put(name, q)
+          after
+          q
+        }
+        ()
+      } catch { case t: Throwable => failures.put(name, t); () })
+    // A waits (at most 2 s) inside its window for B to enter its own;
+    // B then waits (at most 2 s) for A's start. Without a lock over
+    // the window B's width is on the session when A starts; with it,
+    // B cannot enter until A has started and restored.
+    val a = starter("a", bytesA) {
+      aIn.countDown(); bIn.await(2, TimeUnit.SECONDS); ()
+    } { aStarted.countDown() }
+    val b = starter("b", bytesB) {
+      bIn.countDown(); aStarted.await(2, TimeUnit.SECONDS); ()
+    } { () }
+    try {
+      a.start()
+      assert(aIn.await(30, TimeUnit.SECONDS), "A never entered its window")
+      b.start()
+      a.join(60000L); b.join(60000L)
+      assert(!a.isAlive && !b.isAlive, "a starter thread hung")
+      assert(failures.isEmpty, s"starter failures: $failures")
+      // the stream's cloned session (`sparkSessionForStream` is
+      // protected[sql] in Scala, a public method in bytecode)
+      def width(n: String): Int = {
+        val se = started.get(n).asInstanceOf[StreamingQueryWrapper]
+          .streamingQuery
+        se.getClass.getMethod("sparkSessionForStream").invoke(se)
+          .asInstanceOf[org.apache.spark.sql.SparkSession]
+          .conf.get(key).toInt
+      }
+      assert(width("a") === EventStreams.streamShufflePartitions(bytesA))
+      assert(width("b") === EventStreams.streamShufflePartitions(bytesB))
+      assert(width("a") != width("b"))
+      assert(spark.conf.get(key) === before)
+    } finally started.values.forEach(q => q.stop())
   }
 
   test("LocalCheckpointFileManager keeps local checkpoint semantics: " +
@@ -1279,15 +1341,14 @@ class StreamingSpec extends SparkSpec {
       }
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def merge(p: DataFrame, a: DataFrame): DataFrame =
-        agg(p.unionByName(a))
+      val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       // run 1: crash inside batch 2's swap AFTER one partition has
       // been applied — a mixed-version artifact with the journal and
       // batch 2's offsets on disk, but no checkpoint commit for it
       val applied = new java.util.concurrent.atomic.AtomicInteger(0)
       val boom = intercept[Exception] {
         EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-          bucketKey = Some("k"), nBuckets = 4,
+          nBuckets = Some(4),
           onSwapApply = (bid, _) =>
             if (bid == 2L && applied.incrementAndGet() == 2)
               throw new RuntimeException("crash mid-swap"))(agg, merge)
@@ -1306,7 +1367,7 @@ class StreamingSpec extends SparkSpec {
       // the batch marker the replay re-merges batch 2 and every key
       // doubles its batch-2 contribution.
       val (artifact, _) = EventStreams.runArtifactMergeLoop(spark,
-        base, srcDir, schema, bucketKey = Some("k"), nBuckets = 4)(
+        base, srcDir, schema, nBuckets = Some(4))(
         agg, merge)
       val got = artifact.get.orderBy("k")
         .as[(Long, Long)].collect().toSeq
@@ -1316,61 +1377,43 @@ class StreamingSpec extends SparkSpec {
     } finally EventStreams.deleteRecursively(dir)
   }
 
-  test("keyed merge (r21): the single-Exchange mergeKeyed path " +
-      "produces the SAME artifact as the classic merge-then-" +
-      "repartition path — grouping by (key, bkt) with bkt a function " +
-      "of the key changes plan shape, never groups") {
+  test("keyed merge: the (key, bkt) merge the loop derives from one " +
+      "declaration equals the direct per-key sums — batch 0 " +
+      "included, where it folds the batch aggregate alone") {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.{col, sum}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val dir = java.nio.file.Files
       .createTempDirectory("graft-keyed-merge").toFile
     try {
+      val base = dir.getAbsolutePath
+      val srcDir = s"$base/incoming"
+      new java.io.File(srcDir).mkdirs()
       val schema = StructType(Seq(StructField("k", LongType),
         StructField("v", LongType)))
-      def stage(base: String): String = {
-        val srcDir = s"$base/incoming"
-        new java.io.File(srcDir).mkdirs()
-        val t0 = System.currentTimeMillis() - 3600L * 1000
-        (0 until 4).foreach { i =>
-          val st = s"$base/in$i"
-          (0L until 8L).map(k => (k, k * 10 + i + 1)).toDF("k", "v")
-            .coalesce(1).write.parquet(st)
-          new java.io.File(st).listFiles()
-            .filter(_.getName.endsWith(".parquet")).headOption
-            .foreach { f =>
-              val dst = new java.io.File(srcDir, f"b$i%02d.parquet")
-              java.nio.file.Files.move(f.toPath, dst.toPath)
-              dst.setLastModified(t0 + i * 60000L)
-              ()
-            }
-        }
-        srcDir
+      val t0 = System.currentTimeMillis() - 3600L * 1000
+      (0 until 4).foreach { i =>
+        val st = s"$base/in$i"
+        (0L until 8L).map(k => (k, k * 10 + i + 1)).toDF("k", "v")
+          .coalesce(1).write.parquet(st)
+        new java.io.File(st).listFiles()
+          .filter(_.getName.endsWith(".parquet")).headOption
+          .foreach { f =>
+            val dst = new java.io.File(srcDir, f"b$i%02d.parquet")
+            java.nio.file.Files.move(f.toPath, dst.toPath)
+            dst.setLastModified(t0 + i * 60000L)
+            ()
+          }
       }
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def merge(p: DataFrame, a: DataFrame): DataFrame =
-        agg(p.unionByName(a))
-      def keyed(df: DataFrame): DataFrame =
-        df.groupBy(col("k"), col("bkt")).agg(sum("v").as("v"))
-      val baseA = s"${dir.getAbsolutePath}/classic"
-      val baseB = s"${dir.getAbsolutePath}/keyed"
-      val (artA, _) = EventStreams.runArtifactMergeLoop(spark, baseA,
-        stage(baseA), schema, bucketKey = Some("k"), nBuckets = 4)(
-        agg, merge)
-      val (artB, _) = EventStreams.runArtifactMergeLoop(spark, baseB,
-        stage(baseB), schema, bucketKey = Some("k"), nBuckets = 4,
-        mergeKeyed = Some(keyed))(agg, merge)
-      val a = artA.get.select("k", "v").orderBy("k")
-        .as[(Long, Long)].collect().toSeq
-      val b = artB.get.select("k", "v").orderBy("k")
+      val (artifact, _) = EventStreams.runArtifactMergeLoop(spark, base,
+        srcDir, schema, nBuckets = Some(4))(
+        agg, EventStreams.ArtifactMerge("k", sum("v").as("v")))
+      val got = artifact.get.select("k", "v").orderBy("k")
         .as[(Long, Long)].collect().toSeq
       val want = (0L until 8L).map(k => (k, 40 * k + 10))
-      assert(a === want, "classic path must equal the direct sums")
-      assert(b === want, "keyed path must equal the direct sums — " +
-        "including batch 0, where the keyed aggregate runs over the " +
-        "batch aggregate alone and must be an identity")
+      assert(got === want, "the keyed merge must equal the direct sums")
     } finally EventStreams.deleteRecursively(dir)
   }
 
@@ -1408,8 +1451,7 @@ class StreamingSpec extends SparkSpec {
       }
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def merge(p: DataFrame, a: DataFrame): DataFrame =
-        agg(p.unionByName(a))
+      val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       // cumulative per-key sum through batch j: (j+1)*10k + Σ(1..j+1)
       def through(j: Int): Seq[(Long, Long)] =
         (0L until 8L).map(k =>
@@ -1417,7 +1459,7 @@ class StreamingSpec extends SparkSpec {
       val midReads =
         scala.collection.mutable.ListBuffer[(Long, Seq[(Long, Long)])]()
       val (artifact, _) = EventStreams.runArtifactMergeLoop(spark,
-        base, srcDir, schema, bucketKey = Some("k"), nBuckets = 4,
+        base, srcDir, schema, nBuckets = Some(4),
         // the hook runs BETWEEN partition applies — the live tree is
         // half old, half new at this instant, exactly the state a
         // listing-based reader would see torn
@@ -1473,13 +1515,12 @@ class StreamingSpec extends SparkSpec {
       }
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def merge(p: DataFrame, a: DataFrame): DataFrame =
-        agg(p.unionByName(a))
+      val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       def through(j: Int): Seq[(Long, Long)] =
         (0L until 8L).map(k =>
           (k, (j + 1) * 10 * k + (j + 1).toLong * (j + 2) / 2))
       EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-        bucketKey = Some("k"), nBuckets = 4)(agg, merge)
+        nBuckets = Some(4))(agg, merge)
       val state = s"$base/state"
       def asOf(b: Long): Seq[(Long, Long)] =
         EventStreams.readCommittedAsOf(spark, state, b).get
@@ -1646,23 +1687,20 @@ class StreamingSpec extends SparkSpec {
       }
       def aggOld(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def mergeOld(p: DataFrame, a: DataFrame): DataFrame =
-        aggOld(p.unionByName(a))
+      val mergeOld = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       def aggNew(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"), max("v").as("vmax"))
-      def mergeNew(p: DataFrame, a: DataFrame): DataFrame = {
-        val p2 = if (p.columns.contains("vmax")) p
-          else p.withColumn("vmax", lit(null).cast("long"))
-        p2.unionByName(a).groupBy("k")
-          .agg(sum("v").as("v"), max("vmax").as("vmax"))
-      }
+      // a pre-deploy prev enters the loop's union with vmax
+      // null-filled — null is the identity of max
+      val mergeNew = EventStreams.ArtifactMerge("k", sum("v").as("v"),
+        max("vmax").as("vmax"))
       stage(0, 0 until 8); stage(1, 0 until 8)
       EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-        bucketKey = Some("k"), nBuckets = 4, stampSchema = true)(
+        nBuckets = Some(4), stampSchema = true)(
         aggOld, mergeOld)
       stage(2, 0 until 4); stage(3, 0 until 4)
       val (artifact, _) = EventStreams.runArtifactMergeLoop(spark,
-        base, srcDir, schema, bucketKey = Some("k"), nBuckets = 4,
+        base, srcDir, schema, nBuckets = Some(4),
         stampSchema = true)(aggNew, mergeNew)
       val stateDir = s"$base/state"
       // head: evolved schema, values exact, null-fill for keys with
@@ -2006,11 +2044,10 @@ class StreamingSpec extends SparkSpec {
       (0 until 3).foreach(stageBatch)
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def merge(p: DataFrame, a: DataFrame): DataFrame =
-        agg(p.unionByName(a))
+      val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       def run(n: Int): Unit = {
         EventStreams.runArtifactMergeLoop(spark, base, srcDir,
-          schema, bucketKey = Some("k"), nBuckets = n)(agg, merge)
+          schema, nBuckets = Some(n))(agg, merge)
         ()
       }
       run(4)
@@ -2193,8 +2230,8 @@ class StreamingSpec extends SparkSpec {
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
       EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-        bucketKey = Some("k"), nBuckets = 4)(
-        agg, (p, a) => agg(p.unionByName(a)))
+        nBuckets = Some(4))(
+        agg, EventStreams.ArtifactMerge("k", sum("v").as("v")))
       val state = s"$base/state"
       assert(EventStreams.lastCommittedBatch(state) === 3L)
       val (oldSide, newSide, changed) =
@@ -2285,8 +2322,7 @@ class StreamingSpec extends SparkSpec {
       }
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def merge(p: DataFrame, a: DataFrame): DataFrame =
-        agg(p.unionByName(a))
+      val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       def through(j: Int): Seq[(Long, Long)] =
         (0L until 8L).map(k =>
           (k, (j + 1) * 10 * k + (j + 1).toLong * (j + 2) / 2))
@@ -2317,7 +2353,7 @@ class StreamingSpec extends SparkSpec {
       reader.start()
       try
         EventStreams.runArtifactMergeLoop(spark, base, srcDir,
-          schema, bucketKey = Some("k"), nBuckets = 4)(agg, merge)
+          schema, nBuckets = Some(4))(agg, merge)
       finally { running = false; reader.join() }
       readFailure.foreach(t => fail(
         s"concurrent reader failed: ${t.getMessage}", t))
@@ -2359,8 +2395,7 @@ class StreamingSpec extends SparkSpec {
       }
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def merge(p: DataFrame, a: DataFrame): DataFrame =
-        agg(p.unionByName(a))
+      val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       (0 until 2).foreach(stageBatch)
       val (a1, _) = EventStreams.runArtifactMergeLoop(spark, base,
         srcDir, schema)(agg, merge)
@@ -2419,8 +2454,7 @@ class StreamingSpec extends SparkSpec {
         }
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def merge(p: DataFrame, a: DataFrame): DataFrame =
-        agg(p.unionByName(a))
+      val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       // another loop owns the base: this one must fail FAST (before
       // recovery, staging, or any stream start) with a message that
       // names the conflict
@@ -2475,11 +2509,10 @@ class StreamingSpec extends SparkSpec {
       }
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
-      def merge(p: DataFrame, a: DataFrame): DataFrame =
-        agg(p.unionByName(a))
+      val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       // a clean 2-batch run commits the artifact through batch 1
       EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-        bucketKey = Some("k"), nBuckets = 4)(agg, merge)
+        nBuckets = Some(4))(agg, merge)
       assert(EventStreams.lastCommittedBatch(s"$base/state") === 1L)
       // the ckpt dir ALONE is deleted — batch ids restart at 0
       // against a marker that says batch 1 committed. Every replayed
@@ -2488,7 +2521,7 @@ class StreamingSpec extends SparkSpec {
       EventStreams.deleteRecursively(new java.io.File(s"$base/ckpt"))
       val boom = intercept[Exception] {
         EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-          bucketKey = Some("k"), nBuckets = 4)(agg, merge)
+          nBuckets = Some(4))(agg, merge)
       }
       val chain = Iterator.iterate(boom: Throwable)(_.getCause)
         .takeWhile(_ != null)
@@ -2540,12 +2573,12 @@ class StreamingSpec extends SparkSpec {
             }
         }
       EventStreams.runArtifactMergeLoop(spark, base3, src3, schema,
-        bucketKey = Some("k"), nBuckets = 4)(agg, merge)
+        nBuckets = Some(4))(agg, merge)
       assert(EventStreams.lastCommittedBatch(s"$base3/state") === 1L)
       EventStreams.deleteRecursively(new java.io.File(s"$base3/ckpt"))
       val boom3 = intercept[Exception] {
         EventStreams.runArtifactMergeLoop(spark, base3, src3, schema,
-          bucketKey = Some("k"), nBuckets = 4)(agg, merge)
+          nBuckets = Some(4))(agg, merge)
       }
       val chain3 = Iterator.iterate(boom3: Throwable)(_.getCause)
         .takeWhile(_ != null)
@@ -2569,13 +2602,13 @@ class StreamingSpec extends SparkSpec {
         ()
       }
       EventStreams.runArtifactMergeLoop(spark, base4, src4, schema,
-        bucketKey = Some("k"), nBuckets = 4)(agg, merge)
+        nBuckets = Some(4))(agg, merge)
       assert(EventStreams.expectedCommit(base4) === 1L,
         "every commit must advance the sentinel")
       EventStreams.deleteRecursively(new java.io.File(s"$base4/state"))
       val boom4 = intercept[IllegalStateException] {
         EventStreams.runArtifactMergeLoop(spark, base4, src4, schema,
-          bucketKey = Some("k"), nBuckets = 4)(agg, merge)
+          nBuckets = Some(4))(agg, merge)
       }
       assert(boom4.getMessage.contains("reset against a live"),
         s"expected the state-loss failure, got: ${boom4.getMessage}")
