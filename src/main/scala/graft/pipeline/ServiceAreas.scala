@@ -1,11 +1,14 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{DateFunctions, GeoFunctions}
 import graft.functions.GeoFunctions._
 import graft.functions.DateFunctions.convert_two_digit_years
-import graft.sources.{GeoJson, Kml}
+import graft.sources.{GeoJson, Kml, WholeText}
+import graft.streaming.EventStreams
 
 /** The reference's flagship pipeline (SURVEY §3 E2) rebuilt as one
   * declarative Spark plan per stage: KML service-area geometries +
@@ -31,13 +34,17 @@ import graft.sources.{GeoJson, Kml}
   *  - applyMergePatches: 421-444 (acquired utilities unioned into
   *    acquirers, gated on expected KML version)
   *  - publish: 500-529,559 (final schema + sync status + GeoJSON sink)
+  *  - publish memo: the reference's up-to-date skip (`_targets/meta`)
+  *    for the whole publish — unchanged CSVs, KMLs and config copy the
+  *    last full run's layers and run no Spark job (see [[run]])
   *
-  * [[run]] reads the KMLs once per publish: the descriptions and the
-  * geometry derive from one features frame. It persists three frames
-  * for the run — the features, the raw per-cert geometry and the
-  * published layer before the int downcast — so the raw write, the
-  * merge gate, the downcast check and the published write do not
-  * re-scan and re-parse, and unpersists them before it returns.
+  * [[run]] lists the KMLs once on the driver and reads them once per
+  * full publish: the descriptions and the geometry derive from one
+  * features frame. It persists three frames for the run — the features,
+  * the raw per-cert geometry and the published layer before the int
+  * downcast — so the raw write, the merge gate, the downcast check and
+  * the published write do not re-scan and re-parse, and unpersists them
+  * before it returns.
   *
   * All dimension joins broadcast (≤ hundreds of rows of metadata at
   * reference scale; at engine scale the fact side — KML features — is
@@ -226,27 +233,16 @@ object ServiceAreas {
     * Distributed form: map cert → target cert, group-union by target.
     */
   def applyMergePatches(spark: SparkSession, geo: DataFrame,
-      cfg: Config): DataFrame = {
+      cfg: Config): DataFrame =
+    applyMergePatches(spark, geo, cfg, mergeGate(geo, cfg))
+
+  /** [[applyMergePatches]] with the gate's outcome given: `applied` are
+    * the patches [[mergeGate]] passes.
+    */
+  def applyMergePatches(spark: SparkSession, geo: DataFrame, cfg: Config,
+      applied: Seq[MergePatch]): DataFrame = {
     import spark.implicits._
     if (cfg.mergePatches.isEmpty) return geo
-    // one pass collects every gated cert's KML date (collecting inside
-    // a per-patch closure would re-execute the whole upstream KML plan
-    // once per patch)
-    val gatedCerts = cfg.mergePatches.map(_.certFrom)
-      .filter(cfg.expectedKmlDates.contains)
-    val actualDates: Map[Double, String] =
-      if (gatedCerts.isEmpty) Map.empty
-      else geo
-        .filter(col("certificate_number").isin(gatedCerts: _*))
-        .select(col("certificate_number"),
-          date_format(col("geometry_last_update"), "M/d/yyyy"))
-        .collect()
-        .flatMap(r => Option(r.getString(1)).map(r.getDouble(0) -> _))
-        .toMap
-    val gateOk: MergePatch => Boolean = p =>
-      cfg.expectedKmlDates.get(p.certFrom).forall(expected =>
-        actualDates.get(p.certFrom).contains(expected))
-    val applied = cfg.mergePatches.filter(gateOk)
     val mapping = applied.map(p => (p.certFrom, p.certTo))
       .toDF("from_cert", "to_cert")
     geo
@@ -258,6 +254,28 @@ object ServiceAreas {
       .agg(
         st_union_agg(col("geometry")).as("geometry"),
         max(col("geometry_last_update")).as("geometry_last_update"))
+  }
+
+  /** The merge patches whose version gate passes. One action collects
+    * every gated cert's KML date (collecting inside a per-patch closure
+    * would re-execute the whole upstream KML plan once per patch); no
+    * action when no patch is gated.
+    */
+  def mergeGate(geo: DataFrame, cfg: Config): Seq[MergePatch] = {
+    val gatedCerts = cfg.mergePatches.map(_.certFrom)
+      .filter(cfg.expectedKmlDates.contains)
+    val actualDates: Map[Double, String] =
+      if (gatedCerts.isEmpty) Map.empty
+      else geo
+        .filter(col("certificate_number").isin(gatedCerts: _*))
+        .select(col("certificate_number"),
+          date_format(col("geometry_last_update"), "M/d/yyyy"))
+        .collect()
+        .flatMap(r => Option(r.getString(1)).map(r.getDouble(0) -> _))
+        .toMap
+    cfg.mergePatches.filter(p =>
+      cfg.expectedKmlDates.get(p.certFrom).forall(expected =>
+        actualDates.get(p.certFrom).contains(expected)))
   }
 
   /** Final published schema + sync status (R/functions.R:490-529,
@@ -317,20 +335,49 @@ object ServiceAreas {
 
   /** Conditional whole-column int downcast (reference A5,
     * R/functions.R:220-224,524-528): cast to int iff every value is
-    * integral — a plan-dependent schema, so necessarily a two-pass
-    * action (SURVEY §7.4).
+    * integral ([[allIntegral]]) — a plan-dependent schema, so
+    * necessarily a two-pass action (SURVEY §7.4).
     */
-  def maybeDowncastToInt(df: DataFrame, colName: String): DataFrame = {
-    val allInt = df
-      .agg(every(col(colName) === floor(col(colName)) ||
+  def downcastToInt(df: DataFrame, colName: String,
+      allInt: Boolean): DataFrame =
+    if (allInt) df.withColumn(colName, col(colName).cast("int")) else df
+
+  /** Whether every value of `colName` is integral (or null): one action. */
+  def allIntegral(df: DataFrame, colName: String): Boolean =
+    df.agg(every(col(colName) === floor(col(colName)) ||
         col(colName).isNull))
       .head().getBoolean(0)
-    if (allInt) df.withColumn(colName, col(colName).cast("int")) else df
-  }
+
+  /** Bump when a code change alters the layers' bytes for the same
+    * inputs and [[Config]]: it keys the publish memo.
+    */
+  private val LayerVersion = "v1"
+  private val RawLayer = "service-areas-raw"
+  private val PublishedLayer = "service-areas"
+  private val LayerFiles = Seq(RawLayer, PublishedLayer).map(_ + ".geojson")
+
+  /** The plan-shaping decisions of a full run, which the memo records so
+    * that an up-to-date publish rebuilds the same plan with no action.
+    */
+  private case class Decisions(applied: Seq[MergePatch], downcast: Boolean)
 
   /** End-to-end run under StageCache memoization; writes raw + cleaned
     * GeoJSON layers, each in ascending `certificate_number`, and returns
     * the cleaned DataFrame (no longer persisted).
+    *
+    * Like `targets`, an up-to-date publish does no work: a full run
+    * leaves a memo of its layers and [[Decisions]], keyed on
+    * `LayerVersion`, `cfgVer` and the fingerprint of both CSVs and every
+    * KML file, and a run that finds that key's memo complete copies the
+    * layers into `outDir` and runs no Spark job. It still returns the
+    * frame a full run returns, as a lazy plan over the stage hits and
+    * the KML read. The memo lives in the `_publish` subdirectory of the
+    * `enriched` checkpoint, which a CSV or config change replaces and
+    * Spark's file index skips, so it adds no entry to the cache dir. It
+    * is written to a temp directory, renamed into place, and marked
+    * complete by a `_SUCCESS` written last; a memo without one, or with
+    * another key, is ignored and rebuilt. The KML fingerprint stats
+    * local files, so KMLs on another file system are never memoized.
     */
   def run(spark: SparkSession, certsCsv: String, chronCsv: String,
       kmlGlob: String, cfg: Config, outDir: String,
@@ -352,6 +399,9 @@ object ServiceAreas {
         .map(p => s"${p.certFrom}->${p.certTo}").sorted.mkString(","),
       "expectedKml=" + cfg.expectedKmlDates.toSeq.sortBy(_._1)
         .map { case (k, v) => s"$k:$v" }.mkString(",")))
+    // one listing keys the memo and feeds the read, so a KML added in
+    // between is neither published nor keyed
+    val kmlFiles = WholeText.files(spark, Seq(kmlGlob))
 
     val certs = cache.stage("certificates", "v1", Seq(certsCsv)) {
       csv(certsCsv)
@@ -360,24 +410,31 @@ object ServiceAreas {
     val chron = cache.stage("chronology", "v1", Seq(chronCsv)) {
       processChronology(csv(chronCsv))
     }
-    val enriched0 = cache.stage("enriched", cfgVer,
-      Seq(certsCsv, chronCsv)) {
+    val enrichedInputs = Seq(certsCsv, chronCsv)
+    val enriched0 = cache.stage("enriched", cfgVer, enrichedInputs) {
       enrichCertificates(cleaned, chron)
     }
-    // every frame below is read by more than one action; the most
-    // recently persisted is released first
+    val memo = Paths.get(cache.path("enriched", cfgVer, enrichedInputs),
+      "_publish")
+    val memoKey = Option.when(kmlFiles.forall(_.startsWith("file:")))(
+      cache.versionHash(Seq(LayerVersion, cfgVer,
+        StageCache.fingerprint(certsCsv +: chronCsv +: kmlFiles))))
+    val recorded = memoKey.flatMap(readMemo(memo, _))
+
+    // every frame below is read by more than one action of a full run;
+    // the most recently persisted is released first. An up-to-date run
+    // runs no action, so it persists nothing
     var persisted = List.empty[DataFrame]
-    def persist(df: DataFrame): DataFrame = {
-      persisted ::= df.persist(); df
-    }
+    def persist(df: DataFrame): DataFrame =
+      if (recorded.isDefined) df else { persisted ::= df.persist(); df }
     // one file per layer, in certificate order: the aggregates' output
     // order depends on the shuffle partitioning and on the caching
-    def writeLayer(df: DataFrame, path: String, name: String): Unit =
+    def writeLayer(df: DataFrame, name: String): Unit =
       GeoJson.write(
         df.coalesce(1).sortWithinPartitions("certificate_number"),
-        "geometry", path, name)
+        "geometry", s"$outDir/$name.geojson", name)
     try {
-      val features = persist(Kml.read(spark, kmlGlob))
+      val features = persist(Kml.readFiles(spark, kmlFiles))
       // description-derived kml_* columns ride the certificates frame as
       // in the reference (build_certificates_df); the published select
       // drops them, matching R/functions.R:505-518
@@ -385,23 +442,60 @@ object ServiceAreas {
         enriched0.join(broadcast(kmlDescriptions(features)),
           Seq("certificate_number"), "left"))
       val geoRaw = persist(buildGeometry(features))
+      def published(applied: Seq[MergePatch]) =
+        publishLayer(enriched, applyMergePatches(spark, geoRaw, cfg, applied))
 
-      // raw layer: original CSV columns + geometry (R/functions.R:173-192)
-      val raw = geoRaw.join(broadcast(
-          certs.filter(col("certificate_number").isNotNull)),
-        Seq("certificate_number"), "inner")
-      writeLayer(raw.drop("geometry_last_update"),
-        s"$outDir/service-areas-raw.geojson", "service-areas-raw")
+      recorded match {
+        case Some(d) =>
+          LayerFiles.foreach(f => GeoJson.replaceAtomically(
+            Paths.get(outDir, f))(tmp => Files.copy(memo.resolve(f), tmp)))
+          downcastToInt(published(d.applied), "certificate_number", d.downcast)
+        case None =>
+          // raw layer: original CSV columns + geometry (R/functions.R:173-192)
+          val raw = geoRaw.join(broadcast(
+              certs.filter(col("certificate_number").isNotNull)),
+            Seq("certificate_number"), "inner")
+          writeLayer(raw.drop("geometry_last_update"), RawLayer)
 
-      val patched = applyMergePatches(spark, geoRaw, cfg)
-      val published = maybeDowncastToInt(
-        persist(publishLayer(enriched, patched)), "certificate_number")
-      // sync_warning mirrors the reference's CONSOLE warnings — it is not
-      // a property of its GeoJSON output, so drop it for byte parity; the
-      // returned frame keeps it as the structured surface of those states
-      writeLayer(published.drop("sync_warning"),
-        s"$outDir/service-areas.geojson", "service-areas")
-      published
+          val applied = mergeGate(geoRaw, cfg)
+          val undowncast = persist(published(applied))
+          val downcast = allIntegral(undowncast, "certificate_number")
+          val out = downcastToInt(undowncast, "certificate_number", downcast)
+          // sync_warning mirrors the reference's CONSOLE warnings — it is
+          // not a property of its GeoJSON output, so drop it for byte
+          // parity; the returned frame keeps it as the structured surface
+          // of those states
+          writeLayer(out.drop("sync_warning"), PublishedLayer)
+          memoKey.foreach(writeMemo(memo, _, outDir, Decisions(applied, downcast)))
+          out
+      }
     } finally persisted.foreach(_.unpersist())
+  }
+
+  /** The memo file: the key, the downcast decision, then one applied
+    * merge patch per line.
+    */
+  private val MemoFile = "memo.txt"
+
+  private def readMemo(memo: Path, key: String): Option[Decisions] =
+    if (!Files.exists(memo.resolve("_SUCCESS"))) None
+    else Files.readAllLines(memo.resolve(MemoFile)).asScala.toList match {
+      case `key` :: downcast :: applied =>
+        Some(Decisions(applied.map { l =>
+          val Array(from, to) = l.split(" ")
+          MergePatch(to.toDouble, from.toDouble)
+        }, downcast.toBoolean))
+      case _ => None
+    }
+
+  private def writeMemo(memo: Path, key: String, outDir: String,
+      d: Decisions): Unit = {
+    val tmp = Files.createTempDirectory(memo.getParent, "_publish")
+    LayerFiles.foreach(f => Files.copy(Paths.get(outDir, f), tmp.resolve(f)))
+    Files.write(tmp.resolve(MemoFile), (Seq(key, d.downcast.toString) ++
+      d.applied.map(p => s"${p.certFrom} ${p.certTo}")).asJava)
+    EventStreams.deleteRecursively(memo.toFile)
+    Files.move(tmp, memo, StandardCopyOption.ATOMIC_MOVE)
+    Files.createFile(memo.resolve("_SUCCESS"))
   }
 }

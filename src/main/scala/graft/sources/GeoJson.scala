@@ -1,7 +1,9 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption,
+  StandardOpenOption}
+import java.util.UUID
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -219,10 +221,22 @@ object GeoJson {
     sb.append("\"features\": [\n")
     sb.append(lines.mkString(",\n"))
     sb.append("\n]\n}\n")
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    Files.write(p, sb.toString.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    replaceAtomically(Paths.get(path))(tmp => Files.write(tmp,
+      sb.toString.getBytes(StandardCharsets.UTF_8), StandardOpenOption.CREATE_NEW))
+  }
+
+  /** Replaces `target` with the file `fill` writes to a fresh hidden
+    * sibling, by an atomic rename: a reader, or a crash mid-write, sees
+    * the old file or the whole new one, never a truncated layer.
+    */
+  def replaceAtomically(target: Path)(fill: Path => Unit): Unit = {
+    val dir = target.toAbsolutePath.getParent
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".${target.getFileName}.${UUID.randomUUID}.tmp")
+    try {
+      fill(tmp)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Driver-side single-file sinks refuse frames larger than this.

@@ -32,9 +32,16 @@ object Kml {
     * `paths` are files or globs over files; `path` holds the file's URI
     * in `input_file_name()`'s form.
     */
-  def read(spark: SparkSession, paths: String*): DataFrame = {
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    features(WholeText.read(spark, paths))
+
+  /** [[read]] over the files [[WholeText.files]] listed, each read as is. */
+  def readFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    features(WholeText.readFiles(spark, files))
+
+  private def features(docs: DataFrame): DataFrame = {
     val parse = udf { (xml: String) => parseFeatures(xml) }
-    WholeText.read(spark, paths)
+    docs
       .select(col("path"), explode(parse(col("value"))).as("f"))
       .select(col("path"), col("f.name").as("name"),
         col("f.description").as("description"),

@@ -286,6 +286,22 @@ class GeoSpec extends SparkSpec {
     assert(paths.distinct.toSeq === textPaths.toSeq)
   }
 
+  test("WholeText.files lists a glob once and readFiles reads a listed " +
+      "name with glob metacharacters as itself") {
+    val dir = java.nio.file.Files.createTempDirectory("kmlnames")
+    for (f <- Seq("a[1].kml", "a1.kml", "_hidden.kml", ".dot.kml"))
+      java.nio.file.Files.writeString(dir.resolve(f), f)
+    val files = graft.sources.WholeText.files(spark, Seq(s"$dir/*.kml"))
+    assert(files.map(f => new org.apache.hadoop.fs.Path(f).getName).sorted
+      === Seq("a1.kml", "a[1].kml"))
+    val bracketed = files.filter(_.contains("["))
+    val read = graft.sources.WholeText.readFiles(spark, bracketed)
+      .select("value").collect().map(_.getString(0))
+    assert(read.toSeq === Seq("a[1].kml"))
+    intercept[java.io.FileNotFoundException](
+      graft.sources.WholeText.files(spark, Seq(s"$dir/*.none")))
+  }
+
   test("DataSourceV2: spark.read.format(kml) matches Kml.read") {
     val dir = java.nio.file.Files.createTempDirectory("kmlv2")
     java.nio.file.Files.writeString(dir.resolve("a.kml"), kmlDoc)

@@ -33,14 +33,31 @@ class PipelineSpec extends SparkSpec {
       kmlGlob: String = s"$res/kml/*.kml",
       certsCsv: String = s"$res/certificates.csv",
       chronCsv: String = s"$res/chronology.csv",
-      cacheDir: String = Files.createTempDirectory("stage-cache").toString)
+      cacheDir: String = Files.createTempDirectory("stage-cache").toString,
+      config: ServiceAreas.Config = cfg)
       : (String, DataFrame) = {
     val dir = Files.createTempDirectory("svc-areas").toString
     DateFunctions.registerAll(session)
     GeoFunctions.registerAll(session)
     (dir, ServiceAreas.run(session, certsCsv, chronCsv,
-      kmlGlob, cfg, dir, cacheDir))
+      kmlGlob, config, dir, cacheDir))
   }
+
+  /** A copy of the fixture inputs a test may rewrite: (dir, certificates
+    * CSV, chronology CSV, KML glob).
+    */
+  private def inputCopy(): (java.nio.file.Path, String, String, String) = {
+    val dir = Files.createTempDirectory("publish-inputs")
+    Files.createDirectory(dir.resolve("kml"))
+    for (f <- new java.io.File(s"$res/kml").list())
+      Files.copy(Paths.get(s"$res/kml/$f"), dir.resolve(s"kml/$f"))
+    for (f <- Seq("certificates.csv", "chronology.csv"))
+      Files.copy(Paths.get(s"$res/$f"), dir.resolve(f))
+    (dir, dir.resolve("certificates.csv").toString,
+      dir.resolve("chronology.csv").toString, s"$dir/kml/*.kml")
+  }
+  private val layerFiles =
+    Seq("service-areas.geojson", "service-areas-raw.geojson")
   private lazy val (outDir, published) = publish(spark)
 
   /** `f`'s result and the starts of the Spark jobs it ran. The listener
@@ -340,6 +357,120 @@ class PipelineSpec extends SparkSpec {
     republish
     assert((stages -- built).map(_.takeWhile(_ != '-')) ===
       Set("chronology", "enriched"))
+  }
+
+  test("an all-hit full republish reads no CSV and no checkpoint schema") {
+    // a touched KML with the same bytes defeats the publish memo but no
+    // stage: the whole plan recomputes over three stage hits
+    val (inputs, certsCsv, chronCsv, kmlGlob) = inputCopy()
+    val cacheDir = Files.createTempDirectory("touch-cache").toString
+    def stages = new java.io.File(cacheDir).list().toSet
+    def republish = withJobs(publish(spark, kmlGlob, certsCsv, chronCsv,
+      cacheDir)._1)
+    val (cold, _) = republish
+    val built = stages
+    assert(built.size === 3)
+    val kml = inputs.resolve("kml/10-servicearea.kml")
+    Files.setLastModifiedTime(kml, java.nio.file.attribute.FileTime
+      .fromMillis(Files.getLastModifiedTime(kml).toMillis - 60000))
+    val parsed0 = Kml.parsedDocuments.get
+    val (warm, warmJobs) = republish
+    assert(Kml.parsedDocuments.get - parsed0 === 6, "a full recompute")
+    assert(warmJobs.nonEmpty)
+    val unwanted = Seq("csv at ServiceAreas", "parquet at StageCache")
+    assert(!warmJobs.flatMap(_.stageInfos.map(_.name))
+      .exists(site => unwanted.exists(site.startsWith)))
+    assert(stages === built)
+    for (f <- layerFiles) assert(md5(warm, f) === md5(cold, f), f)
+  }
+
+  test("an unchanged republish runs no Spark job and returns the full " +
+      "run's frame") {
+    val cacheDir = Files.createTempDirectory("memo-cache").toString
+    val (full, fullFrame) = publish(spark, cacheDir = cacheDir)
+    val parsed0 = Kml.parsedDocuments.get
+    val ((skipped, frame), jobs) = withJobs(publish(spark, cacheDir = cacheDir))
+    assert(jobs.isEmpty, s"an up-to-date publish ran ${jobs.size} jobs")
+    assert(Kml.parsedDocuments.get === parsed0)
+    for (f <- layerFiles) assert(md5(skipped, f) === md5(full, f), f)
+    assert(frame.schema === fullFrame.schema)
+    assert(frame.schema("certificate_number").dataType.typeName === "integer")
+    def rows(df: DataFrame) = df.orderBy("certificate_number").collect().toSeq
+    assert(frame.columns.contains("sync_warning"))
+    assert(rows(frame) === rows(fullFrame))
+  }
+
+  test("a changed KML, KML set, chronology or config defeats the skip") {
+    val (inputs, certsCsv, chronCsv, kmlGlob) = inputCopy()
+    val cacheDir = Files.createTempDirectory("memo-inputs").toString
+    var config = cfg
+    /** Jobs of a publish of the current inputs, then of a second. */
+    def twice = Seq.fill(2)(withJobs(publish(spark, kmlGlob, certsCsv,
+      chronCsv, cacheDir, config))._2.size)
+    val kml = inputs.resolve("kml/10-servicearea.kml")
+    val added = inputs.resolve("kml/1000-servicearea.kml")
+    val changes = Seq[(String, () => Unit)](
+      "no change" -> (() => ()),
+      "one KML byte" -> (() => Files.writeString(kml,
+        Files.readString(kml).replaceFirst("UTF-8", "utf-8"))),
+      "a KML added" -> (() => Files.copy(kml, added)),
+      "a KML removed" -> (() => Files.delete(added)),
+      "a chronology line" -> (() => Files.write(Paths.get(chronCsv),
+        "100,U-22-07,11,9/9/2022,Amendment,\n".getBytes,
+        java.nio.file.StandardOpenOption.APPEND)),
+      "a config change" -> (() =>
+        config = cfg.copy(inactiveExtraIds = Seq(121.0, 99.0))))
+    for ((what, change) <- changes) {
+      change()
+      val Seq(first, second) = twice
+      assert(first > 0, s"$what: the first publish must run")
+      assert(second === 0, s"$what: the second publish must skip")
+    }
+  }
+
+  test("a publish memo without _SUCCESS is ignored and rebuilt") {
+    val cacheDir = Files.createTempDirectory("memo-partial").toString
+    def jobs = withJobs(publish(spark, cacheDir = cacheDir))._2.size
+    val (full, _) = publish(spark, cacheDir = cacheDir)
+    val success = Files.list(Paths.get(cacheDir)).iterator().asScala
+      .map(_.resolve("_publish/_SUCCESS")).filter(Files.exists(_)).toSeq
+    assert(success.size === 1)
+    Files.delete(success.head)
+    assert(jobs > 0)
+    assert(Files.exists(success.head))
+    val (skipped, _) = publish(spark, cacheDir = cacheDir)
+    for (f <- layerFiles) assert(md5(skipped, f) === md5(full, f), f)
+    assert(jobs === 0)
+  }
+
+  test("an unpartitioned miss records the schema a parquet read infers") {
+    val meta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString("comment", "kept").build()
+    val rows = spark.range(4).select(
+      col("id"),
+      struct(col("id").as("a"), array(col("id")).as("b")).as("s"),
+      array(struct(col("id").as("x"))).as("arr"),
+      map(col("id"), struct(lit("v").as("y"))).as("m"),
+      (col("id") / 3).cast("decimal(12,4)").as("dec"),
+      lit(java.sql.Date.valueOf("2020-01-01")).as("day"),
+      to_timestamp(lit("2020-01-01 10:00:00")).as("ts"),
+      to_timestamp_ntz(lit("2020-01-01 10:00:00")).as("ntz"),
+      col("id").cast("string").cast("binary").as("bin"),
+      col("id").as("tagged", meta))
+    assert(rows.schema.exists(!_.nullable))
+    val cacheDir = Files.createTempDirectory("sidecar-types")
+    val cache = new StageCache(spark, cacheDir.toString)
+    val (miss, jobs) = withJobs(cache.stage("types", "v1", Nil)(rows))
+    val path = Files.list(cacheDir).iterator().asScala.toSeq.head
+    val recorded = org.apache.spark.sql.types.DataType.fromJson(
+      Files.readString(path.resolve(StageCache.SchemaFile)))
+    val inferred = spark.read.parquet(path.toString).schema
+    assert(recorded === inferred)
+    assert(recorded.json === inferred.json)
+    assert(miss.schema === inferred)
+    assert(jobs.size === 1, "the write alone: no footer read-back")
+    assert(miss.orderBy("id").collect().toSeq ===
+      spark.read.parquet(path.toString).orderBy("id").collect().toSeq)
   }
 
   test("stage cache memoizes: second run recomputes nothing cached") {
