@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
@@ -8,6 +10,11 @@ import org.apache.spark.sql.SparkSession
   * Results are materialized through the noop sink — unlike count(),
   * noop cannot let Catalyst prune projections or skip result
   * construction, so timings reflect the full plan.
+  *
+  * The record reads nothing but this run and the prior round's record:
+  * host load and per-layer work are perfbench's job (`perfbench/run.py
+  * --trace 1` records jobs, stages, tasks, shuffle, spill and a
+  * calibration scalar per workload; `perfbench/diff.py` compares them).
   */
 object Bench {
   /** Entries whose intra-run max/min exceeds `ratio` — the
@@ -28,449 +35,170 @@ object Bench {
       .filter(_._3 > ratio)
       .sortBy(-_._3)
 
-  /** Point-in-time JVM/runtime counters for the per-entry suite-state
-    * diagnostics (review r16: t08 ran a STABLE ~3 s in-suite vs
-    * 0.47 s isolated in the driver record — the ask was to NAME the
-    * mechanism). Captured once per entry (not per iteration — the
-    * local-dir walk is not free), diffed into the file-only `diag`
-    * map: cumulative GC millis, heap in use, JIT code-cache +
-    * metaspace occupancy and loaded-class count (the candidates for
-    * a stable JIT-side slowdown), the Spark local-dir footprint (the
-    * IO-side candidate), plus the wall-clock offset since bench
-    * start and the OS 1-min load average (the EXTERNAL-load
-    * candidate). The r17 instrumented replication of the full
-    * driver-shape suite RULED OUT every in-JVM mechanism — see
-    * README "naming the in-suite t-family slowdown" — so the two
-    * trailing columns are what turns the next driver-record gap
-    * into a one-look diagnosis: a time-window correlation with
-    * load ≫ our own concurrency is co-located box load, not code.
+  /** Previous-round mins (key as recorded → seconds) from the raw text
+    * of a prior record, for the >2× regression flag. A round record wraps
+    * the compact line as an escaped JSON string, so `\"` is unescaped
+    * before the scan. None when the record is for another SF: a
+    * baseline from a different scale would flood (or mask) the flags
+    * with pure scale deltas. The `"sf":"<dir>"` field sits at the END
+    * of the compact line, so it survives the tail truncation.
+    *
+    * A round record keeps only the LAST ~2000 stdout chars, so the head
+    * of the line — and any alphabetically-early keys — may be cut
+    * away: rather than anchor on a map, scan every `"key":number`
+    * pair up to the first section whose values are not seconds
+    * (`spread` iterations; `regressed`, `suite_context` and `wide`
+    * ratios, the last two from older records) and drop the scalar
+    * metadata keys.
     */
-  private[graft] final case class JvmSnap(gcMs: Long, heapMb: Long,
-    codeCacheMb: Long, metaMb: Long, classes: Long, localMb: Long,
-    localFiles: Long, wallMs: Long, load100: Long,
-    // cumulative CPU jiffies at snapshot time: system-wide busy
-    // (/proc/stat) and this process (/proc/self/stat); −1 when the
-    // proc interface is unreadable (non-Linux). Deltas between a
-    // window's two snapshots separate OUR cpu from EVERYONE ELSE'S
-    // — the signal the load average cannot give (see
-    // [[otherCores100]]).
-    sysBusyJf: Long = -1L, selfBusyJf: Long = -1L)
-
-  /** Average OTHER-PROCESS cpu over the window (a, b), in
-    * centi-cores — the contamination signal that is immune to both
-    * failure modes of the 1-min load average (r19): SELF-load (a
-    * back-to-back streaming family saturates the box alone and
-    * pushes load past any bar that still catches real contention —
-    * the isolated s-family take read load 47 on 32 cpus with an
-    * IDLE box) and runnable-queue inflation (our own
-    * oversubscribed task/netty/GC threads count as load without
-    * burning anyone's cpu). Busy jiffies burned by everyone minus
-    * jiffies burned by us, over wall time: with USER_HZ = 100,
-    * jiffies/second IS centi-cores. None when either snapshot
-    * lacks counters or the window is degenerate — callers fall
-    * back to the load rule.
-    */
-  private[graft] def otherCores100(a: JvmSnap, b: JvmSnap)
-      : Option[Long] = {
-    val wallMs = b.wallMs - a.wallMs
-    if (a.sysBusyJf < 0 || b.sysBusyJf < 0 || a.selfBusyJf < 0 ||
-        b.selfBusyJf < 0 || wallMs <= 0) None
+  private[graft] def prevMins(raw0: String, sfDir: String)
+      : Option[Map[String, Double]] = {
+    val raw = raw0.replace("\\\"", "\"")
+    val sf = """"sf":"([^"]+)"""".r.findFirstMatchIn(raw).map(_.group(1))
+    if (sf.exists(_ != sfDir)) None
     else {
-      val other = (b.sysBusyJf - a.sysBusyJf) -
-        (b.selfBusyJf - a.selfBusyJf)
-      Some(math.max(0L, other) * 1000L / wallMs)
+      val cut = Seq("spread", "regressed", "suite_context", "wide")
+        .map(k => raw.indexOf("\"" + k + "\":"))
+        .filter(_ >= 0).sorted.headOption.getOrElse(raw.length)
+      val meta = Set("n", "rc", "cpus", "sf", "value", "n_ok",
+        "index_warm", "p50", "max")
+      Some(""""([A-Za-z0-9_]+)":([0-9.]+)""".r
+        .findAllMatchIn(raw.substring(0, cut))
+        .map(m => m.group(1) -> m.group(2).toDouble)
+        .filterNot(kv => meta.contains(kv._1)).toMap)
     }
   }
 
-  /** Other-process cpu threshold for the retake trigger: sustained
-    * co-located work above a quarter of the box is contamination
-    * (r18's real contention ran a neighbor JVM at well over this);
-    * below it, the isolated-divergence trigger still catches any
-    * entry the residue visibly inflated.
-    */
-  private[graft] def retakeOtherLimit100(cpus: Int): Long =
-    cpus * 25L
+  private def fmt(v: Double, digits: Int): String =
+    if (v.isInfinite) "null" else s"%.${digits}f".format(v)
 
-  /** FALLBACK load threshold for the self-healing retake (VERDICT
-    * r17 item 4, demoted r19): a window whose OS 1-min load average
-    * exceeded 0.75× the worker count was contended by co-located
-    * box work. Used only where [[otherCores100]] has no counters
-    * (non-Linux): the load average cannot separate our cpu from a
-    * neighbor's — an isolated back-to-back streaming family pushes
-    * it to 47 on an IDLE 32-cpu box (self-load + our own
-    * runnable-queue inflation), which under this bar alone would
-    * permanently dirty the heaviest honest entries. The primary
-    * trigger is other-process cpu ([[retakeOtherLimit100]]).
-    * Returned on the ×100 scale the snapshots carry.
-    */
-  private[graft] def retakeLimit100(cpus: Int): Long = cpus * 75L
+  /** `,"key":["a","b"]` for a non-empty list, "" otherwise. */
+  private def listJson(key: String, xs: Seq[String]): String =
+    if (xs.isEmpty) ""
+    else xs.map("\"" + _ + "\"").mkString(s""","$key":[""", ",", "]")
 
-  /** Parse the full-resolution `"queries":{...}` map of a committed
-    * bench record (the isolated family records are written in this
-    * format): full query names → min seconds.
+  /** `"k":v,...` pairs wrapped in `open` … `}`, "" when empty. */
+  private def mapJson(open: String, kvs: Seq[(String, String)]): String =
+    if (kvs.isEmpty) ""
+    else kvs.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString(open, ",", "}")
+
+  /** The failed entries and the `only` filter, shared by both lines:
+    * a filtered run is self-identifying — its total/n_ok cover only
+    * the listed prefixes, so downstream drift tooling can never
+    * mistake a left-behind filtered bench_out.json for a full-suite
+    * record.
     */
-  private[graft] def parseQueriesMap(raw: String): Map[String, Double] = {
-    val start = raw.indexOf("\"queries\":{")
-    if (start < 0) Map.empty
-    else {
-      val body = raw.substring(start + "\"queries\":{".length)
-      val end = body.indexOf('}')
-      if (end < 0) Map.empty
-      else """"([A-Za-z0-9_]+)":([0-9.]+)""".r
-        .findAllMatchIn(body.substring(0, end))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
+  private def tagsJson(mins: Seq[(String, Double)],
+      only: Seq[String]): String =
+    listJson("failed", mins.collect { case (k, v) if v.isInfinite => k }) +
+      listJson("only", only)
+
+  /** Full-resolution record (long query names, 3 decimals) for
+    * `bench_out.json`: the launcher keeps just the LAST 2000 chars of
+    * stdout, and this line is several thousand chars, so it is the
+    * file-only record for humans. `iters` carries the per-iteration
+    * times, so bench drift is self-diagnosing — a noisy min shows up as
+    * a wide spread, a real regression as a uniformly shifted one.
+    */
+  private[graft] def fullLine(results: Seq[(String, Seq[Double])],
+      warmSec: Double, only: Seq[String], sfDir: String): String = {
+    val mins = results.map { case (k, ts) => k -> ts.min }
+    val ok = mins.filter(!_._2.isInfinite)
+    val qs = mins.map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
+      .mkString("{", ",", "}")
+    val iters = results.map { case (k, ts) =>
+      "\"" + k + "\":" + ts.map(fmt(_, 3)).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val total = ok.map(_._2).sum
+    val tags = tagsJson(mins, only)
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_ok":${ok.size},"queries":$qs,"iters":$iters,"index_warm":$warmSec%.3f$tags,"sf":"$sfDir"}"""
   }
 
-  /** One committed isolated measurement: the entry's min seconds and
-    * the source-tree hash of the code it was taken on (None on
-    * pre-r20 records, which carried no stamp).
+  /** The compact stdout line, printed LAST so it lands inside the
+    * launcher's 2000-char tail window. The per-query map does NOT ride
+    * here (193 entries are ~2.4k chars alone); the line carries
+    * per-FAMILY totals, the flagship seconds, the slowest-10 entries,
+    * and the flag maps. Keys are the unique id prefix of each
+    * query name ("t08_winnow_fingerprint" → "t08").
+    *
+    * Two flags: `regressed` — min >2× the prior record's min for the
+    * same entry, a sub-second 4× outlier made self-evident regardless
+    * of rank — and `wide` ([[wideSpreadEntries]] over this run's own
+    * iterations). Each is capped at its 8 worst ratios. `spread` holds
+    * the iterations of the slowest 4 plus every flagged entry.
+    *
+    * The WHOLE line must stay ≤ 1900 chars (the 2000-char window minus
+    * sbt's ~80-char `[success]` trailer) or the round record's `parsed`
+    * field is null, as it was for 19 straight rounds under the old
+    * full-map format. In the worst all-flagged case the loop at the end
+    * sheds spread entries — never the scalars or the flag ratios.
     */
-  private[graft] final case class IsoRecord(min: Double,
-    tree: Option[String])
-
-  /** Parse a record's `"tree":"<hash>"` stamp, None when absent. */
-  private[graft] def parseTree(raw: String): Option[String] =
-    """"tree":"([0-9a-f]+)"""".r.findFirstMatchIn(raw)
-      .map(_.group(1))
-
-  /** Per-query isolated records from the committed
-    * `bench_isolated_r*.json` family records in `dirs` (first dir
-    * with any record wins, like the prev-record search): later
-    * rounds override earlier ones, records for a different SF are
-    * skipped, and — VERDICT r19 item 2b — entries the record itself
-    * marked `dirty` are refused (their numbers stayed contaminated
-    * after the isolated run's own retake and cannot anchor
-    * anything). These are the CLEANEST committed numbers per entry —
-    * each was re-taken alone on the final tree of its round — so
-    * they anchor the two self-healing checks below (VERDICT r18
-    * item 1): the divergence retake trigger and the baseline floor
-    * for regression flags. Each entry carries its record's
-    * source-tree stamp so [[contextRefuted]] can demand the record
-    * actually measured the benched code (ADVICE r19).
-    */
-  private[graft] def isolatedRecords(dirs: Seq[String], sfDir: String)
-      : Map[String, IsoRecord] = {
-    val files = dirs.iterator.map { d =>
-      Option(new java.io.File(d).listFiles())
-        .getOrElse(Array.empty).toSeq
-        .filter(_.getName.matches("bench_isolated_r\\d+.*\\.json"))
-    }.find(_.nonEmpty).getOrElse(Seq.empty)
-    files
-      .sortBy(f => ("""r(\d+)""".r.findFirstMatchIn(f.getName)
-        .map(_.group(1).toInt).getOrElse(0), f.getName))
-      .foldLeft(Map.empty[String, IsoRecord]) { (acc, f) =>
-        val raw =
-          try new String(java.nio.file.Files.readAllBytes(f.toPath),
-            java.nio.charset.StandardCharsets.UTF_8)
-          catch { case _: Throwable => "" }
-        val recSf = """"sf":"([^"]+)"""".r
-          .findFirstMatchIn(raw).map(_.group(1))
-        if (recSf.exists(_ != sfDir)) acc
-        else {
-          val tree = parseTree(raw)
-          val dirty = parseDirty(raw)
-          acc ++ parseQueriesMap(raw)
-            .filterNot(kv => dirty.contains(kv._1))
-            .map { case (k, v) => k -> IsoRecord(v, tree) }
+  private[graft] def compactLine(results: Seq[(String, Seq[Double])],
+      prev: Map[String, Double], warmSec: Double, only: Seq[String],
+      sfDir: String): String = {
+    val mins = results.map { case (k, ts) => k -> ts.min }
+    val ok = mins.filter(!_._2.isInfinite)
+    val finite = results.filter { case (_, ts) => !ts.min.isInfinite }
+    val prefixCounts = mins.groupBy(_._1.takeWhile(_ != '_'))
+      .map { case (p, g) => p -> g.size }
+    def shortKey(k: String): String = {
+      val p = k.takeWhile(_ != '_')
+      if (prefixCounts.getOrElse(p, 2) == 1) p else k
+    }
+    // per-family (first letter: g/m/q/s/t/v) second totals
+    val famJson = ok.groupBy(_._1.take(1)).toSeq.sortBy(_._1)
+      .map { case (f, g) => "\"" + f + "\":" + fmt(g.map(_._2).sum, 1) }
+      .mkString("{", ",", "}")
+    // the flagship rows, compared against BASELINE.md's reference
+    val minsMap = mins.toMap
+    val flagshipJson = mapJson(""","flagship":{""",
+      Seq("g06_alaska_cleaned_replay" -> "g06",
+        "g06b_cleaned_geometry" -> "g06b")
+        .flatMap { case (full, short) => minsMap.get(full)
+          .filter(!_.isInfinite).map(v => short -> fmt(v, 3)) })
+    val topJson = ok.sortBy(-_._2).take(10)
+      .map { case (k, v) => "\"" + shortKey(k) + "\":" + fmt(v, 2) }
+      .mkString(""","top":{""", ",", "}")
+    // shortKey collisions flip between prefix and full name as the
+    // query set changes across rounds: look the prev min
+    // up under both names this query can have been recorded as — but
+    // never a bare-prefix fallback when the prefix collides NOW, which
+    // would pin one query's baseline on its siblings
+    val regressed = finite
+      .flatMap { case (k, ts) =>
+        prev.get(shortKey(k)).orElse(prev.get(k)).collect {
+          case p if p > 0 && ts.min > 2 * p => (k, ts, ts.min / p)
         }
       }
-  }
-
-  /** The mins-only view of [[isolatedRecords]] (the divergence
-    * trigger and the baseline floor need no tree identity — both
-    * only get MORE conservative under a stale-but-fast record).
-    */
-  private[graft] def isolatedMins(dirs: Seq[String], sfDir: String)
-      : Map[String, Double] =
-    isolatedRecords(dirs, sfDir)
-      .map { case (k, r) => k -> r.min }
-
-  /** Content hash of the Scala source tree under `root` — the
-    * identity that ties a committed bench record to the CODE it
-    * measured (ADVICE r19: a suite_context demotion against an
-    * isolated record from a different tree silently reclassifies a
-    * genuine code regression). MD5 over the sorted relative paths
-    * and bytes of src/main/scala/&#42;&#42;/&#42;.scala; None when the tree is
-    * absent (bench run outside a checkout).
-    */
-  private[graft] def sourceTreeHash(
-      root: String = System.getProperty("user.dir", "."))
-      : Option[String] = {
-    val base = new java.io.File(root, "src/main/scala")
-    if (!base.isDirectory) return None
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isFile) Seq(f)
-      else Option(f.listFiles()).getOrElse(Array.empty)
-        .toSeq.flatMap(walk)
-    val files = walk(base)
-      .filter(_.getName.endsWith(".scala"))
-      .sortBy(_.getAbsolutePath)
-    if (files.isEmpty) return None
-    try {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      files.foreach { f =>
-        md.update(base.toPath.relativize(f.toPath).toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        md.update(java.nio.file.Files.readAllBytes(f.toPath))
-      }
-      Some(md.digest().map("%02x".format(_)).mkString)
-    } catch { case _: Throwable => None }
-  }
-
-  /** Entries whose first-pass min exceeds `factor`× their committed
-    * isolated record — the load-immune retake trigger (VERDICT r18
-    * item 1): r18's eight phantom flags were all entries inflated
-    * 2.5–6.6× vs their isolated records by contention the load bar
-    * never saw. Worst divergence first. A retake that still
-    * diverges on a quiet window is then a REPRODUCED slowdown and
-    * may flag; one on a loaded window goes dirty via the load rule.
-    */
-  private[graft] def isolatedDivergent(
-      firstPass: Seq[(String, Seq[Double])],
-      iso: Map[String, Double], factor: Double = 2.0)
-      : Seq[String] =
-    firstPass
-      .filter { case (k, ts) =>
-        ts.nonEmpty && !ts.min.isInfinite &&
-          iso.get(k).exists(i => i > 0 && ts.min > factor * i) }
-      .map { case (k, ts) => k -> ts.min / iso(k) }
-      .sortBy(-_._2).map(_._1)
-
-  /** Entries whose measurement window saw load beyond `limit100`,
-    * worst-first. Either end snapshot counts: the 1-min average
-    * lags, so a spike inside the window surfaces at its end, and a
-    * spike just before it still poisons the start.
-    */
-  private[graft] def loadContaminated(
-      entries: Seq[(String, (JvmSnap, JvmSnap))], limit100: Long)
-      : Seq[String] =
-    entries
-      .map { case (k, (a, b)) =>
-        k -> math.max(a.load100, b.load100) }
-      .filter(_._2 > limit100)
-      .sortBy(-_._2).map(_._1)
-
-  /** The primary contamination trigger (r19): an entry is
-    * contaminated when OTHER processes burned more than
-    * `otherLimit100` centi-cores over its window — the direct
-    * measurement of what the load bar only proxies. Entries whose
-    * snapshots carry no cpu counters (non-Linux) fall back to the
-    * window-load rule. One signal per entry, worst-first.
-    */
-  private[graft] def cpuContaminated(
-      entries: Seq[(String, (JvmSnap, JvmSnap))],
-      otherLimit100: Long, loadLimit100: Long): Seq[String] =
-    entries
-      .flatMap { case (k, (a, b)) =>
-        otherCores100(a, b) match {
-          case Some(oc) => if (oc > otherLimit100) Some(k -> oc)
-            else None
-          case None =>
-            val l = math.max(a.load100, b.load100)
-            if (l > loadLimit100) Some(k -> l) else None
-        }
-      }
-      .sortBy(-_._2).map(_._1)
-
-  /** Does the committed isolated record REFUTE a >2× suite delta?
-    * True when an isolated record exists, sits within 1.5× of the
-    * baseline, AND was taken on the SAME source tree as this bench
-    * run (ADVICE r19): the refutation's whole argument is "the
-    * code's own price did not move", which a record from a
-    * different tree cannot witness — an entry missing from the
-    * latest isolated refresh inherits a stale older-round value,
-    * and a mid-round bench runs against code the prior-tree record
-    * never measured; in both cases a genuine code regression would
-    * be silently reclassified as suite_context. Tree unknown on
-    * either side → cannot refute → the flag stands (the
-    * conservative direction: a real context delta then ships as
-    * `regressed` and the next isolated refresh clears it).
-    */
-  private[graft] def contextRefuted(iso: Option[IsoRecord],
-      baseline: Double, benchTree: Option[String]): Boolean =
-    iso.exists(r => r.min > 0 && r.min <= 1.5 * baseline &&
-      benchTree.isDefined && r.tree == benchTree)
-
-  /** Contamination verdict for ONE window — the retake's own
-    * cleanliness check, same signal preference as
-    * [[cpuContaminated]].
-    */
-  private[graft] def windowContaminated(a: JvmSnap, b: JvmSnap,
-      otherLimit100: Long, loadLimit100: Long): Boolean =
-    otherCores100(a, b) match {
-      case Some(oc) => oc > otherLimit100
-      case None => math.max(a.load100, b.load100) > loadLimit100
+      .sortBy(-_._3).take(8)
+    val wide = wideSpreadEntries(results).take(8)
+    def ratios(open: String, es: Seq[(String, Seq[Double], Double)]) =
+      mapJson(open, es.map { case (k, _, r) => shortKey(k) -> fmt(r, 1) })
+    val flagsJson = ratios(""","regressed":{""", regressed) +
+      ratios(""","wide":{""", wide)
+    val total = ok.map(_._2).sum
+    val tags = tagsJson(mins, only)
+    val spreadEntries = (finite.sortBy { case (_, ts) => -ts.min }.take(4) ++
+      (regressed ++ wide).map(r => (r._1, r._2))).distinctBy(_._1)
+    def mkLine(sp: Seq[(String, Seq[Double])]): String = {
+      val spread = sp.map { case (k, ts) =>
+        "\"" + shortKey(k) + "\":" + ts.map(fmt(_, 1)).mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
+      f"""{"metric":"total","fam":$famJson$flagshipJson$topJson,"spread":$spread$flagsJson,"index_warm":$warmSec%.2f$tags,"value":$total%.3f,"unit":"sec","n_ok":${ok.size},"sf":"$sfDir"}"""
     }
-
-  /** A retaken entry stays dirty if its retake window was loaded
-    * again OR the retake measured nothing at all (every iteration
-    * failed): a clean-window retake that produced no numbers cannot
-    * certify the contaminated first pass, whose inflated min would
-    * otherwise ship flag-eligible and poison the next round's
-    * baseline (review r18, second pass).
-    */
-  private[graft] def retakeDirty(loadExceeded: Boolean,
-      ts: Seq[Double]): Boolean =
-    loadExceeded || ts.forall(_.isInfinite)
-
-  /** Merge a first pass with its load-retake (the r18 review
-    * policy, factored out so BenchFlagSpec can pin it): `results`
-    * (mins/totals basis) concatenates first pass ++ retake
-    * UNCONDITIONALLY — contention only inflates, so min over every
-    * iteration is the best estimate, and an all-failed retake
-    * degrades to the measured first-pass min instead of nulling the
-    * entry. `wideBasis` (the max/min spread flag) must not price
-    * the cross-regime seam of a merged list: it reads the clean
-    * retake ALONE where one exists, the first pass otherwise, and
-    * drops still-dirty entries the way the regression flags do.
-    */
-  private[graft] def mergeRetakes(
-      firstPass: Seq[(String, Seq[Double])],
-      retakeTimes: Map[String, Seq[Double]],
-      stillDirty: Set[String])
-      : (Seq[(String, Seq[Double])], Seq[(String, Seq[Double])]) = {
-    val results = firstPass.map { case (k, ts) =>
-      k -> (ts ++ retakeTimes.getOrElse(k, Seq.empty))
+    var kept = spreadEntries
+    var line = mkLine(kept)
+    while (line.length > 1900 && kept.nonEmpty) {
+      kept = kept.dropRight(1)
+      line = mkLine(kept)
     }
-    val wideBasis = firstPass
-      .filterNot { case (k, _) => stillDirty.contains(k) }
-      .map { case (k, ts) => k -> retakeTimes.getOrElse(k, ts) }
-    (results, wideBasis)
-  }
-
-  /** Parse a prior record's `"dirty":[...]` array — the entries
-    * whose numbers stayed load-contaminated after their retake; the
-    * regression parse must not baseline against them.
-    */
-  private[graft] def parseDirty(raw: String): Set[String] =
-    """"dirty":\[([^\]]*)\]""".r.findFirstMatchIn(raw)
-      .map(_.group(1).split(",").map(_.trim.stripPrefix("\"")
-        .stripSuffix("\"")).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-
-  /** Names of spark-&#42; / blockmgr-&#42; tmp dirs that existed BEFORE
-    * this bench's SparkSession started — other JVMs' local dirs,
-    * excluded from the jvmSnap walk. Captured once at main() start.
-    */
-  @volatile private[graft] var preSessionTmpDirs: Set[String] =
-    Set.empty
-
-  /** The spark-&#42; / blockmgr-&#42; tmp dirs THIS bench's session owns:
-    * the dirs that appeared between the pre-session capture and the
-    * post-warmup capture (Spark creates its driver-tmp and block-
-    * manager dirs at context init, so by the end of the warmup jobs
-    * the full set exists). When present, the jvmSnap walk reads
-    * EXACTLY this set — a neighbor JVM starting mid-bench can no
-    * longer land its spill in our diag columns (VERDICT r18 item 4;
-    * the pre-session exclusion alone only kept out neighbors that
-    * PRE-dated us). None = capture never ran (unit tests poking
-    * jvmSnap directly) — fall back to the pre-session exclusion.
-    */
-  @volatile private[graft] var ownedTmpDirs: Option[Set[String]] =
-    None
-
-  private[graft] def listSparkTmpDirs(): Set[String] = {
-    val tmp = new java.io.File(
-      System.getProperty("java.io.tmpdir", "/tmp"))
-    Option(tmp.listFiles())
-      .getOrElse(Array.empty)
-      .filter(d => d.getName.startsWith("blockmgr-") ||
-        d.getName.startsWith("spark-"))
-      .map(_.getName).toSet
-  }
-
-  private[graft] def capturePreSessionTmpDirs(): Unit =
-    preSessionTmpDirs = listSparkTmpDirs()
-
-  private[graft] def captureOwnedTmpDirs(): Unit =
-    ownedTmpDirs = Some(listSparkTmpDirs() -- preSessionTmpDirs)
-
-  private[graft] def jvmSnap(): JvmSnap = {
-    import scala.jdk.CollectionConverters._
-    import java.lang.management.ManagementFactory
-    val gc = ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(b => math.max(0L, b.getCollectionTime)).sum
-    val rt = Runtime.getRuntime
-    val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
-    def poolMb(pred: String => Boolean): Long = pools
-      .filter(p => pred(p.getName))
-      .map(p => Option(p.getUsage).map(_.getUsed).getOrElse(0L))
-      .sum / (1024 * 1024)
-    val (localMb, localFiles) = {
-      // blockmgr-*/spark-* dirs under the JVM's tmp dir: shuffle
-      // blocks, disk-spilled broadcast/cache, temp staging. Scoped
-      // to THIS app (ADVICE r17 + VERDICT r18 item 4): the walk
-      // reads exactly the dirs our own session created (captured
-      // between the pre-session and post-warmup snapshots), so
-      // neither a pre-existing neighbor NOR one starting mid-bench
-      // can land its spill in our diag IO column. Fallback when the
-      // owned capture never ran: exclude pre-existing dirs only.
-      val tmp = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"))
-      def walk(f: java.io.File): (Long, Long) =
-        if (f.isFile) (f.length(), 1L)
-        else Option(f.listFiles()).getOrElse(Array.empty)
-          .map(walk).foldLeft((0L, 0L)) { case ((b, n), (b2, n2)) =>
-            (b + b2, n + n2) }
-      val owned = ownedTmpDirs
-      val roots = Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(d => (d.getName.startsWith("blockmgr-") ||
-          d.getName.startsWith("spark-")) &&
-          owned.map(_.contains(d.getName))
-            .getOrElse(!preSessionTmpDirs.contains(d.getName)))
-      val sums = roots.map(walk)
-      (sums.map(_._1).sum / (1024 * 1024), sums.map(_._2).sum)
-    }
-    // cumulative cpu jiffies, system-wide busy + this process
-    // (Linux proc interface; −1 elsewhere → load-rule fallback).
-    // Sources are closed in finally (ADVICE r19): two leaked fds per
-    // snapshot across hundreds of windows otherwise wait on the GC's
-    // stream cleaners.
-    def readProc(path: String): Option[String] = try {
-      val src = scala.io.Source.fromFile(path)
-      try Some(src.mkString) finally src.close()
-    } catch { case _: Throwable => None }
-    val sysBusy = try {
-      val cols = readProc("/proc/stat").iterator
-        .flatMap(_.linesIterator)
-        .find(_.startsWith("cpu ")).map(_.trim.split("\\s+").tail
-          .map(_.toLong)).getOrElse(Array.empty[Long])
-      // user nice system idle iowait irq softirq steal — the
-      // standard busy-jiffies formula: skip idle(3) and iowait(4),
-      // and skip guest(8)/guest_nice(9) too (ADVICE r19): the kernel
-      // already folds guest time into user/nice, so summing the
-      // guest columns double-counts VM cpu and can trip the
-      // contamination trigger on a box running VMs
-      if (cols.length < 8) -1L
-      else cols.take(8).zipWithIndex
-        .collect { case (v, i) if i != 3 && i != 4 => v }.sum
-    } catch { case _: Throwable => -1L }
-    val selfBusy = try {
-      // /proc/self/stat: fields 14 (utime) + 15 (stime), counting
-      // from 1 past the parenthesised comm field (which may hold
-      // spaces — split after the closing paren)
-      val raw = readProc("/proc/self/stat").getOrElse(
-        throw new java.io.IOException("no /proc/self/stat"))
-      val rest = raw.substring(raw.lastIndexOf(')') + 2)
-        .trim.split("\\s+")
-      rest(11).toLong + rest(12).toLong
-    } catch { case _: Throwable => -1L }
-    JvmSnap(gc, (rt.totalMemory - rt.freeMemory) / (1024 * 1024),
-      poolMb(_.contains("CodeHeap")) + poolMb(_ == "CodeCache"),
-      poolMb(_ == "Metaspace"),
-      java.lang.management.ManagementFactory.getClassLoadingMXBean
-        .getTotalLoadedClassCount, localMb, localFiles,
-      System.currentTimeMillis(),
-      (math.max(0.0, ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage) * 100).toLong,
-      sysBusy, selfBusy)
+    line
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    capturePreSessionTmpDirs()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -479,6 +207,18 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Every `WindowExec: No Partition Defined` warning of the suite
+    // comes from four single-partition windows, each bounded by
+    // construction (OPTIMIZATION_r21.md, "no-partition-window audit").
+    // Repeated per iteration they filled the launcher's 2000-char tail
+    // ahead of the contract line; one line names them instead.
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
+    System.err.println("[bench] WindowExec no-partition warnings off: " +
+      "the four global windows are bounded - TextOps.vocabRankOf " +
+      "(limit VocabCap), TextOps.histPastDrop (value histogram), " +
+      "Relational.q27PositionalSlice (limit 20), t28SequencePack " +
+      "shard totals (one row per shard)")
 
     // JVM/codegen warmup so the first measured query isn't charged for
     // session bring-up: generic codegen, the JSON source, and the
@@ -494,11 +234,6 @@ object Bench {
           |'POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))'))) AS a""".stripMargin)
         .count()
     }
-    // the warmup jobs above forced the block manager + driver tmp
-    // dirs into existence — everything new since the pre-session
-    // capture is OURS; capture before warmIndexes so a neighbor
-    // starting during the (long) index build can't join the set
-    captureOwnedTmpDirs()
 
     // Stored-index artifacts build OUTSIDE the timed loop (see
     // SparkEntry.warmIndexes): serve-path queries time the serve, not
@@ -520,482 +255,79 @@ object Bench {
     // whose name starts with one of the comma-separated prefixes
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSeq).getOrElse(Seq.empty)
-    val diag = scala.collection.mutable.LinkedHashMap
-      .empty[String, (JvmSnap, JvmSnap)]
-    // entry N's end snapshot doubles as entry N+1's start (they are
-    // microseconds apart with nothing between) — halves the
-    // local-dir walks and keeps walk jitter out of the deltas
-    var lastSnap: Option[JvmSnap] = None
-    val allFns = (SparkEntry.queries ++ SparkEntry.benchOnly)
+    val results = (SparkEntry.queries ++ SparkEntry.benchOnly)
       .toSeq.sortBy(_._1)
       .filter(kv => only.isEmpty || only.exists(kv._1.startsWith))
-    def runIters(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Seq[Double] =
-      (1 to iters).map { _ =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            // A crashed iteration returns fast; letting it into min()
-            // would report the failure's elapsed time as the query's
-            // benchmark number. Infinity keeps min() over successes
-            // only, and an all-failed query surfaces as null below.
-            Double.PositiveInfinity
+      .map { case (name, fn) =>
+        name -> (1 to iters).map { _ =>
+          spark.catalog.clearCache()
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9
+          } catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              // A crashed iteration returns fast; letting it into min()
+              // would report the failure's elapsed time as the query's
+              // benchmark number. Infinity keeps min() over successes
+              // only, and an all-failed query surfaces as null.
+              Double.PositiveInfinity
+          }
         }
       }
-    val firstPass = allFns.map {
-      case (name, fn) =>
-        val snap0 = lastSnap.getOrElse(jvmSnap())
-        val times = runIters(name, fn)
-        val snap1 = jvmSnap()
-        lastSnap = Some(snap1)
-        diag += name -> (snap0, snap1)
-        name -> times
-    }
-    // bench start for the diag offset column — captured before any
-    // retake replaces the first entry's snapshots
-    val benchT0 = diag.headOption.map(_._2._1.wallMs)
-      .getOrElse(System.currentTimeMillis())
-    // SELF-HEALING UNDER BOX LOAD (VERDICT r17 item 4, recalibrated
-    // per r18 item 1): an entry is RETAKEN once, tail-appended after
-    // the suite, when EITHER its measurement window saw OS load
-    // beyond 0.75× the worker count OR its min diverges >2× from its
-    // committed isolated record (the load-immune trigger — r18's
-    // contention peaked below the old 1.5× bar yet inflated eight
-    // entries 2.5–6.6×). On an idle-again box the retake simply
-    // replaces the contaminated numbers. An entry still contaminated
-    // at its retake keeps the merged min (contention only inflates,
-    // so the min stays the best estimate) and lands in the "dirty"
-    // list on both output lines: this round's regression flags skip
-    // it, and the NEXT round's parse refuses to baseline against it
-    // — phantom flags like r17's s03 can no longer ship. Capped at
-    // the 24 worst windows so a fully-contended run cannot double
-    // its wall time.
-    // SPARK_GRAFT_LOAD_LIMIT100 overrides the threshold (load ×100)
-    // — an ops/test knob: set it to 1 to force every entry through
-    // the retake+dirty path and watch the machinery live, or raise
-    // it on a box whose steady-state load is legitimately high.
-    val loadLimit100 = sys.env.get("SPARK_GRAFT_LOAD_LIMIT100")
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(retakeLimit100(cpus.toInt))
-    // primary signal (r19): other-process cpu per window — immune
-    // to self-load (a back-to-back streaming family pushes the
-    // 1-min average to 47 on an otherwise idle 32-cpu box) and to
-    // our own runnable-queue inflation; the load bar remains the
-    // fallback where /proc is unreadable
-    val otherLimit100 = sys.env.get("SPARK_GRAFT_OTHER_LIMIT100")
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(retakeOtherLimit100(cpus.toInt))
-    val contaminated =
-      cpuContaminated(diag.toSeq, otherLimit100, loadLimit100)
-    // second, load-IMMUNE trigger (VERDICT r18 item 1): an entry
-    // whose min diverges >2× from its committed isolated record is
-    // re-measured even when the load bar saw nothing — r18's eight
-    // phantom flags were exactly this shape (contention real, peak
-    // 41.9 < the then-48 bar, dirty list empty)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/bench_out.json")
-    val recordDirs = Seq(
-      Option(new java.io.File(out).getAbsoluteFile.getParent),
-      Some(System.getProperty("user.dir", "."))).flatten.distinct
-    val isoRecords = isolatedRecords(recordDirs, sfDir)
-    val isoMins = isoRecords.map { case (k, r) => k -> r.min }
-    // the tree this bench run measures — stamped into the records it
-    // writes, and required of any isolated record that wants to
-    // refute a regression flag (ADVICE r19)
-    val benchTree = sourceTreeHash()
-    val divergent = isolatedDivergent(firstPass, isoMins)
-      .filterNot(contaminated.contains)
-    // third retake trigger (VERDICT r19 item 1): a wide-spread entry
-    // whose MIN is healthy never hit the other two triggers, so a
-    // 24× warm blowup (t06 2.0/47.4/26.1 s in the r19 driver record)
-    // shipped unattributed — ~53 s of suite total priced to self-
-    // context residue with no second window to confirm or clear it.
-    // The retake either reproduces the blowup (real — the wide flag
-    // then reads the retake and fires) or replaces it. Ordered LAST
-    // so the cap sheds these first: their mins are already sound.
-    val wideRetake = wideSpreadEntries(firstPass).map(_._1)
-      .filterNot(k => contaminated.contains(k) ||
-        divergent.contains(k))
-    val merged = contaminated ++ divergent ++ wideRetake
-    val toRetake = merged.take(24)
-    if (toRetake.nonEmpty)
-      System.err.println(s"[bench] ${contaminated.size} entries " +
-        s"other-cpu>${otherLimit100 / 100.0} cores (load fallback " +
-        s">${loadLimit100 / 100.0}), ${divergent.size} diverge " +
-        s">2x from isolated records, ${wideRetake.size} wide-spread" +
-        " - retaking: " + toRetake.mkString(","))
-    val fnByName = allFns.toMap
-    val stillDirty = scala.collection.mutable.LinkedHashSet[String]()
-    // entries past the retake cap never got a second pass: whether
-    // load-flagged or isolated-divergent, their numbers are
-    // uncertified — they must ship in the dirty list too, or their
-    // inflated mins would raise phantom flags now and poison the
-    // next round's baseline (review r18). Wide-spread entries are
-    // the exception: their MINS are sound (the blowup spares the
-    // min by definition), so past the cap they simply keep their
-    // first-pass numbers and the wide flag reads the first pass —
-    // the pre-r20 behavior.
-    merged.drop(24).filterNot(wideRetake.contains)
-      .foreach(stillDirty += _)
-    val retakeTimes = toRetake.map { k =>
-      val s0 = jvmSnap()
-      val ts = runIters(k, fnByName(k))
-      val s1 = jvmSnap()
-      diag(k) = (s0, s1)
-      if (retakeDirty(
-          windowContaminated(s0, s1, otherLimit100, loadLimit100),
-          ts))
-        stillDirty += k
-      k -> ts
-    }.toMap
-    // merge policy (see mergeRetakes doc): mins/totals over every
-    // iteration, the wide flag over the clean regime only
-    val (results, wideBasis) =
-      mergeRetakes(firstPass, retakeTimes, stillDirty.toSet)
-    def fmt(v: Double, digits: Int): String =
-      if (v.isInfinite) "null" else s"%.${digits}f".format(v)
-    val mins = results.map { case (k, ts) => k -> ts.min }
-    val ok = mins.filter(!_._2.isInfinite)
-    val failed = mins.collect { case (k, v) if v.isInfinite => k }
-    val total = ok.map(_._2).sum
-    // n_ok makes unequal query sets detectable across rounds: a round
-    // with failures sums fewer queries, and a naive total-vs-total
-    // compare would read that as a speedup (ADVICE r6).
-    val nOk = ok.size
-    val failedJson =
-      if (failed.isEmpty) ""
-      else failed.map("\"" + _ + "\"")
-        .mkString(""","failed":[""", ",", "]")
-    // a filtered run is self-identifying: its total/n_ok cover only the
-    // listed prefixes, so downstream drift tooling can never mistake a
-    // left-behind filtered bench_out.json for a full-suite record
-    val onlyJson =
-      if (only.isEmpty) ""
-      else only.map("\"" + _ + "\"").mkString(""","only":[""", ",", "]")
-    // Full-resolution line (long query names, 3 decimals) → file only:
-    // the launcher keeps just the LAST 2000 chars of stdout for parsing,
-    // and this line is ~2.6k chars — it can never fit (rounds 1–5 all
-    // recorded parsed:null). The file is the full record for humans.
-    val qsFull = mins.map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
-      .mkString("{", ",", "}")
-    // Per-iteration spreads (file only): bench drift is then
-    // self-diagnosing — a noisy min shows up as a wide spread, a real
-    // regression as a uniformly shifted one (VERDICT r6 item 1).
-    val itersJson = results.map { case (k, ts) =>
-      "\"" + k + "\":" + ts.map(fmt(_, 3)).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // Per-entry suite-state diagnostics (file only, review r16):
-    // [gc_ms spent during the entry, heap MB after, JIT code-cache
-    // MB after, metaspace MB after, total classes loaded, Spark
-    // local-dir MB, local-dir file count, seconds since bench
-    // start (entry end), OS 1-min load average ×100 (entry end)].
-    // A stable in-suite slowdown shows its mechanism as the
-    // monotone column; a load column far above our own worker
-    // count names co-located box load instead.
-    // 10th column (r19): other-process cpu over the window in
-    // centi-cores — the trigger's actual signal (−1: unavailable)
-    val diagJson = diag.map { case (k, (a, b)) =>
-      "\"" + k + "\":[" + Seq(b.gcMs - a.gcMs, b.heapMb,
-        b.codeCacheMb, b.metaMb, b.classes, b.localMb,
-        b.localFiles, (b.wallMs - benchT0) / 1000, b.load100,
-        otherCores100(a, b).getOrElse(-1L))
-        .mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val dirtyFullJson =
-      if (stillDirty.isEmpty) ""
-      else stillDirty.map("\"" + _ + "\"")
-        .mkString(""","dirty":[""", ",", "]")
-    // OS load + other-process cpu summaries (r17/r19): computed here
-    // so BOTH records carry them — a committed isolated record then
-    // states its own cleanliness (VERDICT r19 item 2b: an inflated
-    // isolated record silently weakens contextRefuted and the
-    // divergence trigger; the per-entry other-cpu column is in diag,
-    // the summary is what a reviewer reads first)
-    val loads = diag.values.map(_._2.load100).toSeq.sorted
-    val others = diag.values.toSeq
-      .flatMap { case (a, b) => otherCores100(a, b) }.sorted
-    val loadJson =
-      if (loads.isEmpty) ""
-      else f""","load":{"p50":${loads(loads.size / 2) / 100.0}%.1f,"max":${loads.last / 100.0}%.1f}""" +
-        (if (others.isEmpty) ""
-         else f""","other_cpu":{"p50":${others(others.size / 2) / 100.0}%.1f,"max":${others.last / 100.0}%.1f}""")
-    // the source-tree stamp: ties this record to the code it
-    // measured (ADVICE r19 — contextRefuted demands it of isolated
-    // records)
-    val treeJson = benchTree.map(t => s""","tree":"$t"""").getOrElse("")
-    val lineFull =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_ok":$nOk,"queries":$qsFull,"iters":$itersJson,"diag":$diagJson,"index_warm":$warmSec%.3f$failedJson$onlyJson$dirtyFullJson$loadJson$treeJson,"sf":"$sfDir"}"""
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), lineFull)
+
+    // Default is bench_out.json in the working directory, so a run
+    // from another checkout never overwrites this one's record.
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
+      fullLine(results, warmSec, only, sfDir))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
-    // Compact line → stdout, printed LAST so it lands inside the
-    // launcher's 2000-char tail window (sbt appends one ~80-char
-    // "[success]" line after us). The per-query map does NOT ride
-    // here (VERDICT r19 item 3: 193 entries are ~2.4k chars alone —
-    // the head of the line was truncated out of the driver record
-    // for 19 straight rounds and `parsed` never populated); the full
-    // map lives in bench_out.json, stdout carries per-FAMILY totals,
-    // the flagship seconds, and the flag maps. Keys in the flag maps
-    // are the unique id prefix of each query name
-    // ("t08_winnow_fingerprint" → "t08").
-    val prefixCounts = mins.groupBy(_._1.takeWhile(_ != '_')).map {
-      case (p, g) => p -> g.size
-    }
-    def shortKey(k: String): String = {
-      val p = k.takeWhile(_ != '_')
-      if (prefixCounts.getOrElse(p, 2) == 1) p else k
-    }
-    // per-family (first letter: g/m/q/s/t/v) second totals — the
-    // drift signal the full map carried, at 1/30th the chars
-    val famJson = ok.groupBy(_._1.take(1)).toSeq.sortBy(_._1)
-      .map { case (f, g) => "\"" + f + "\":" + fmt(g.map(_._2).sum, 1) }
-      .mkString("{", ",", "}")
-    // slowest-10 entries with their min seconds (VERDICT r20 item 2:
-    // per-query round-over-round visibility at the top of the cost
-    // ranking, without the full map that blew the tail window for 19
-    // rounds) — the complete per-query record is in bench_out.json,
-    // which is committed as the round's record
-    val topJson = ok.sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + shortKey(k) + "\":" + fmt(v, 2) }
-      .mkString(""","top":{""", ",", "}")
-    // the flagship rows the judge compares against BASELINE.md ride
-    // the compact line explicitly (they no longer have a map to
-    // live in)
-    val minsMap = mins.toMap
-    val flagshipJson = Seq("g06_alaska_cleaned_replay" -> "g06",
-      "g06b_cleaned_geometry" -> "g06b")
-      .flatMap { case (full, short) => minsMap.get(full)
-        .filter(!_.isInfinite).map(v => "\"" + short + "\":" + fmt(v, 3)) }
-      match {
-        case Nil => ""
-        case fs => fs.mkString(""","flagship":{""", ",", "}")
-      }
-    // Previous-round mins, for regression flagging (VERDICT r14 item
-    // 4): a sub-second entry that blows up 4× never reaches the
-    // slowest-8 spread, so its noise-vs-regression signature was
-    // invisible two rounds running (t24 in r13, t07 in r14).
-    // SPARK_GRAFT_BENCH_PREV names the prior compact line; default is
-    // the latest driver-recorded BENCH_r*.json next to the bench-out
-    // file, falling back to the working directory (NOT a hardcoded
-    // repo path — run from another checkout, flagging should still
-    // engage; review r15). The driver wraps the line as an escaped
-    // JSON string, so unescape before the regex scan.
-    val (prevMins: Map[String, Double], prevDirty: Set[String]) = {
-      val path = sys.env.get("SPARK_GRAFT_BENCH_PREV").orElse {
-        // An in-progress-round record must not be its own baseline
-        // (ADVICE r15): a rerun after the driver already recorded
-        // this round's file would compare against itself (ratios ~1)
-        // and miss every regression vs the genuinely prior round.
-        // SPARK_GRAFT_BENCH_ROUND names the current round to exclude.
-        val curRound = sys.env.get("SPARK_GRAFT_BENCH_ROUND")
-          .flatMap(r => scala.util.Try(r.toInt).toOption)
-        // the bench-out dir is authoritative; the working directory
-        // is only a fallback when the out dir has NO record at all —
-        // merging both could silently prefer a stale cwd leftover
-        recordDirs.iterator.map { d =>
-            Option(new java.io.File(d).listFiles())
-              .getOrElse(Array.empty).toSeq
-              .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-              .filterNot(f => curRound.contains(
-                f.getName.stripPrefix("BENCH_r")
-                  .stripSuffix(".json").toInt))
-              .sortBy(_.getName.stripPrefix("BENCH_r")
-                .stripSuffix(".json").toInt)
-              .lastOption.map(_.getAbsolutePath)
-          }
-          .collectFirst { case Some(p) => p }
-      }
-      path.foreach(p =>
-        System.err.println(s"[bench] regression baseline: $p"))
-      path.flatMap { p =>
-        try {
-          val raw = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(p)),
-            java.nio.charset.StandardCharsets.UTF_8)
-            .replace("\\\"", "\"")
-          // Scale guard: a prev record from a different SF would
-          // flood (or mask) the >2× flags with pure scale deltas.
-          // The "sf":"<dir>" field sits at the END of the compact
-          // line, so it survives the driver's tail truncation.
-          val prevSf = """"sf":"([^"]+)"""".r
-            .findFirstMatchIn(raw).map(_.group(1))
-          if (prevSf.exists(_ != sfDir)) {
-            System.err.println(s"[bench] prev bench $p is for " +
-              s"${prevSf.get}, current run is $sfDir — regression " +
-              "flagging disabled")
-            None
-          } else {
-            // The driver records only the LAST ~2000 stdout chars,
-            // so the '"queries":{' anchor — and any
-            // alphabetically-early keys — may be truncated away:
-            // coverage is partial for a truncated record (the
-            // guaranteed-visible summary line printed below shrinks
-            // this gap going forward). Scan all "key":number pairs
-            // up to the spread/regressed sections (whose values are
-            // not seconds) and drop the scalar metadata keys
-            // instead of anchoring.
-            val cut = Seq(raw.indexOf("\"spread\":"),
-              raw.indexOf("\"regressed\":"),
-              // suite_context holds RATIOS too (r19) — same leak
-              // guard as wide below
-              raw.indexOf("\"suite_context\":"),
-              // wide holds max/min RATIOS — without this anchor a
-              // truncated record whose spread anchor was cut would
-              // leak ratios into prevMins as bogus baseline seconds
-              raw.indexOf("\"wide\":"))
-              .filter(_ >= 0).sorted.headOption.getOrElse(raw.length)
-            val meta = Set("n", "rc", "cpus", "sf", "value", "n_ok",
-              "index_warm", "p50", "max")
-            val re = """"([A-Za-z0-9_]+)":([0-9.]+)""".r
-            // the prev record's own dirty list (load-contaminated
-            // entries that survived their retake): their mins are
-            // box-load numbers, not baselines — skip them below
-            Some((re.findAllMatchIn(raw.substring(0, cut))
-              .map(m => m.group(1) -> m.group(2).toDouble)
-              .filterNot(kv => meta.contains(kv._1)).toMap,
-              parseDirty(raw)))
-          }
-        } catch {
-          case e: Throwable =>
-            System.err.println(
-              s"[bench] could not parse prev bench $p: ${e.getMessage}")
-            None
+
+    // The regression baseline: SPARK_GRAFT_BENCH_PREV names the prior
+    // record; the default is the latest round record BENCH_r*.json
+    // next to the bench-out file, falling back to the working directory
+    // only when the out dir has NO record at all (merging both could
+    // silently prefer a stale cwd leftover). An in-progress round's
+    // record must not be its own baseline: a rerun after
+    // this round's file was recorded would compare against
+    // itself, so SPARK_GRAFT_BENCH_ROUND names the round to exclude.
+    val path = sys.env.get("SPARK_GRAFT_BENCH_PREV").orElse {
+      val curRound = sys.env.get("SPARK_GRAFT_BENCH_ROUND")
+        .flatMap(r => scala.util.Try(r.toInt).toOption)
+      def round(f: java.io.File): Int =
+        f.getName.stripPrefix("BENCH_r").stripSuffix(".json").toInt
+      Seq(Option(new java.io.File(out).getAbsoluteFile.getParent),
+          Some(System.getProperty("user.dir", "."))).flatten.distinct
+        .iterator.map { d =>
+          Option(new java.io.File(d).listFiles())
+            .getOrElse(Array.empty).toSeq
+            .filter(_.getName.matches("BENCH_r\\d+\\.json"))
+            .filterNot(f => curRound.contains(round(f)))
+            .sortBy(round).lastOption.map(_.getAbsolutePath)
         }
-      }.getOrElse((Map.empty[String, Double], Set.empty[String]))
+        .collectFirst { case Some(p) => p }
     }
-    // Entries whose min regressed >2× vs the previous round — these
-    // get a spread (and a ratio) on the stdout line REGARDLESS of
-    // absolute rank, making a sub-second 4× outlier self-evident in
-    // the driver record instead of needing bench_out.json forensics.
-    // Capped at the 12 worst ratios: an across-the-board contention
-    // round must not push the compact line past the launcher's
-    // 2000-char tail window (the full per-query record is in
-    // bench_out.json regardless).
-    val allFlags = results
-      .filter { case (_, ts) => !ts.min.isInfinite }
-      // self-healing skip list: neither a CURRENT entry still
-      // load-contaminated after its retake nor one whose PREV-round
-      // baseline was recorded dirty may raise a regression flag —
-      // both ratios price box load, not code
-      .filterNot { case (k, _) =>
-        stillDirty.contains(k) ||
-          prevDirty.contains(k) || prevDirty.contains(shortKey(k)) }
-      .flatMap { case (k, ts) =>
-        // shortKey collisions flip between prefix and full name as
-        // the query set changes across rounds (ADVICE r15) — look
-        // the prev min up under both names this query can have been
-        // recorded as. Deliberately NOT a bare-prefix fallback when
-        // the prefix collides NOW: the prior record's prefix entry
-        // belongs to exactly one of the colliding queries and
-        // matching it to the others would misattribute regressions
-        // (review r16) — the un-collide direction is covered by the
-        // full-name lookup.
-        // the baseline is the elementwise MIN of the prior driver
-        // record and the committed isolated record (VERDICT r18
-        // item 1d): contention only inflates, so the lowest
-        // committed measurement is the truest baseline — r18's
-        // driver record shipped entries inflated up to 6.6× with an
-        // empty dirty list, and flagging against those numbers
-        // would report phantom improvements and miss real
-        // regressions alike
-        prevMins.get(shortKey(k))
-          .orElse(prevMins.get(k))
-          .map(p => isoMins.get(k).fold(p)(math.min(p, _)))
-          .orElse(isoMins.get(k)) // iso-only entries stay covered
-          .collect {
-            case prev if prev > 0 && ts.min > 2 * prev =>
-              (k, ts, ts.min / prev,
-                contextRefuted(isoRecords.get(k), prev, benchTree))
-          }
+    path.foreach(p => System.err.println(s"[bench] regression baseline: $p"))
+    val prev = path.flatMap { p =>
+      try {
+        val parsed = prevMins(
+          java.nio.file.Files.readString(java.nio.file.Paths.get(p)), sfDir)
+        if (parsed.isEmpty)
+          System.err.println(s"[bench] prev bench $p is not for $sfDir" +
+            " - regression flagging disabled")
+        parsed
+      } catch {
+        case e: Throwable =>
+          System.err.println(
+            s"[bench] could not parse prev bench $p: ${e.getMessage}")
+          None
       }
-    // a >2× suite delta REFUTED by the committed isolated record is
-    // SUITE CONTEXT (GC/page-cache state left by prior entries,
-    // sub-trigger foreign cpu), not a code regression — the r19
-    // requirement that `regressed` contain only deltas that
-    // reproduce in the isolated records, enforced in the record
-    // itself rather than by after-the-fact forensics. Context
-    // deltas ship in their own map so the information survives.
-    val (ctxFlags, realFlags) = allFlags.partition(_._4)
-    val regressedEntries = realFlags
-      .map(f => (f._1, f._2, f._3)).sortBy(-_._3).take(8)
-    val suiteCtxEntries = ctxFlags
-      .map(f => (f._1, f._2, f._3)).sortBy(-_._3).take(8)
-    // Intra-run max/min outliers join the spread line too: a
-    // warm-slower-than-cold pathology can leave the MIN looking
-    // healthy while iterations 2..N blow up (t06 in r15) — neither
-    // the min-vs-min regression flag nor the slowest-8-by-min spread
-    // can see that shape by construction.
-    // capped like regressedEntries: an across-the-board contention
-    // round must not push the compact line past the launcher's
-    // 2000-char tail window
-    val wideEntries = wideSpreadEntries(wideBasis).take(8)
-    // Iteration spreads for the slowest entries OVERALL → the stdout
-    // line too (VERDICT r12 item 7, widened per r13 item 6: the
-    // round-13 contention cluster hit the t-family and was only
-    // diagnosable by opening bench_out.json). The driver-recorded
-    // line carries min AND spread for the slowest entries from ANY
-    // family — a wide spread reads as machine noise, a uniformly
-    // shifted one as a real regression. Bounded to the 8 slowest
-    // plus the >2×-regressed set so the line stays inside the
-    // launcher's 2000-char tail window.
-    // slowest-4 + flagged only (VERDICT r19 item 3: the former
-    // slowest-8 + up-to-36 flagged pushed the line past the
-    // launcher's window — everything else lives in bench_out.json)
-    val spreadEntries = (results
-      .filter { case (_, ts) => !ts.min.isInfinite }
-      .sortBy { case (_, ts) => -ts.min }
-      .take(4) ++ regressedEntries.map(r => (r._1, r._2)) ++
-      suiteCtxEntries.map(r => (r._1, r._2)) ++
-      wideEntries.map(r => (r._1, r._2)))
-      .distinctBy(_._1)
-    def spreadJson(entries: Seq[(String, Seq[Double])]): String =
-      entries.map { case (k, ts) =>
-        "\"" + shortKey(k) + "\":" +
-          ts.map(fmt(_, 1)).mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-    val regressedJson =
-      (if (regressedEntries.isEmpty) ""
-       else regressedEntries.map { case (k, _, r) =>
-         "\"" + shortKey(k) + "\":" + fmt(r, 1)
-       }.mkString(""","regressed":{""", ",", "}")) +
-        (if (suiteCtxEntries.isEmpty) ""
-         else suiteCtxEntries.map { case (k, _, r) =>
-           "\"" + shortKey(k) + "\":" + fmt(r, 1)
-         }.mkString(""","suite_context":{""", ",", "}"))
-    // intra-run max/min ratios > 4× (warm-side pathologies; the
-    // spreads themselves are in the spread map above)
-    val wideJson =
-      if (wideEntries.isEmpty) ""
-      else wideEntries.map { case (k, _, r) =>
-        "\"" + shortKey(k) + "\":" + fmt(r, 1)
-      }.mkString(""","wide":{""", ",", "}")
-    val dirtyJson =
-      if (stillDirty.isEmpty) ""
-      else stillDirty.map("\"" + shortKey(_) + "\"")
-        .mkString(""","dirty":[""", ",", "]")
-    // The WHOLE line must fit the launcher's 2000-char stdout tail
-    // window (minus sbt's ~80-char [success] trailer) or the
-    // driver's `parsed` field records null — which it did for 19
-    // straight rounds under the old full-map format (VERDICT r19
-    // item 3). Typical size is now ~700 chars; the guard below
-    // sheds spread entries (never the scalars or flag ratios) in
-    // the worst all-flagged case.
-    def mkShort(sp: Seq[(String, Seq[Double])]): String =
-      f"""{"metric":"total","fam":$famJson$flagshipJson$topJson,"spread":${spreadJson(sp)}$regressedJson$wideJson,"index_warm":$warmSec%.2f$failedJson$onlyJson,"value":$total%.3f,"unit":"sec","n_ok":$nOk$loadJson$treeJson$dirtyJson,"sf":"$sfDir"}"""
-    var spreadKept = spreadEntries
-    var lineShort = mkShort(spreadKept)
-    while (lineShort.length > 1900 && spreadKept.nonEmpty) {
-      spreadKept = spreadKept.dropRight(1)
-      lineShort = mkShort(spreadKept)
-    }
-    println(lineShort)
+    }.getOrElse(Map.empty[String, Double])
+
+    println(compactLine(results, prev, warmSec, only, sfDir))
     spark.stop()
   }
 }

@@ -2,11 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's intra-run spread flag (review r15): t06 ran iterations
-  * [2.14, 37.16, 30.19] s and was invisible to BOTH existing signals
-  * — the min-vs-min regression flag (the min looked healthy) and the
-  * slowest-8-by-min spread (2.14 s never ranks). The max/min ratio is
-  * the only statistic that sees a warm-slower-than-cold shape.
+/** The bench's two flags and its stdout contract line. The intra-run
+  * spread flag: t06 ran iterations [2.14, 37.16, 30.19] s
+  * and was invisible to BOTH other signals — the min-vs-min regression
+  * flag (the min looked healthy) and the slowest-8-by-min spread
+  * (2.14 s never ranks). The max/min ratio is the only statistic that
+  * sees a warm-slower-than-cold shape. The regression flag reads its
+  * baseline from the prior record's possibly truncated tail, and the
+  * compact line must fit the launcher's 2000-char tail window.
   */
 class BenchFlagSpec extends AnyFunSuite {
 
@@ -44,275 +47,101 @@ class BenchFlagSpec extends AnyFunSuite {
       Seq("severe", "mild"))
   }
 
-  // --- self-healing retake (VERDICT r17 item 4) ---
+  // --- the regression baseline: the prior record's parse ---
 
-  private def snap(load100: Long): Bench.JvmSnap =
-    Bench.JvmSnap(0, 0, 0, 0, 0, 0, 0, 0, load100)
+  /** A compact line shaped like BENCH_r21's (ratios under
+    * suite_context, wide, load and other_cpu included).
+    */
+  private val r21Line =
+    """{"metric":"total","fam":{"g":8.7,"s":178.7,"t":55.0},""" +
+      """"flagship":{"g06":0.677,"g06b":0.769},""" +
+      """"top":{"s14c":15.98,"s14b":11.10,"t11":3.30},""" +
+      """"spread":{"s14c":[19.8,16.0,17.4],"t11":[3.6,3.5,15.2]},""" +
+      """"suite_context":{"t11":2.1},"wide":{"t11":8.7,"s33":4.1},""" +
+      """"index_warm":2.79,"value":302.523,"unit":"sec","n_ok":197,""" +
+      """"load":{"p50":5.2,"max":20.7},"other_cpu":{"p50":0.0,""" +
+      """"max":3.5},"tree":"16f39a54","sf":"/data/sf0.1"}"""
 
-  test("loadContaminated flags windows whose EITHER end exceeds the " +
-      "limit, worst-first; clean windows pass") {
-    // 0.75x cpus (VERDICT r18 item 1: the 1.5x bar slept through
-    // peak load 41.9 on 32 cpus) -> 24.0 load -> 2400; the cases
-    // below use an explicit 4800 limit to keep their shape
-    assert(Bench.retakeLimit100(32) === 2400L)
-    val limit = 4800L
-    val entries = Seq(
-      "clean" -> (snap(900), snap(1200)),
-      "spike_end" -> (snap(1000), snap(6000)),
-      "spike_start" -> (snap(9000), snap(800)),
-      "at_limit" -> (snap(4800), snap(4800)))
-    assert(Bench.loadContaminated(entries, limit) ===
-      Seq("spike_start", "spike_end"))
+  /** A round record file: a header, then the stdout tail with the
+    * line embedded as an escaped JSON string.
+    */
+  private def record(tail: String, header: String =
+      "{\n  \"n\": 21,\n  \"rc\": 0,\n  \"cpus\": 32,\n  \"sf\": 0.1,\n"): String =
+    header + "  \"tail\": \"WARN some log line\\n" +
+      tail.replace("\"", "\\\"") + "\\n[success] Total time: 1751 s\"\n}"
+
+  private val r21Mins = Map("g" -> 8.7, "s" -> 178.7, "t" -> 55.0,
+    "g06" -> 0.677, "g06b" -> 0.769, "s14c" -> 15.98, "s14b" -> 11.10,
+    "t11" -> 3.30)
+
+  test("prevMins reads the seconds ahead of the flag sections; ratios " +
+      "and metadata never become baseline seconds") {
+    assert(Bench.prevMins(record(r21Line), "/data/sf0.1") ===
+      Some(r21Mins))
+    // a compact header: its scalars are metadata, not entries
+    assert(Bench.prevMins(record(r21Line,
+      """{"n":21,"rc":0,"cpus":32,"sf":0.1,"""), "/data/sf0.1") ===
+      Some(r21Mins))
+    // the line unescaped, as a bench_out-style file holds it
+    assert(Bench.prevMins(r21Line, "/data/sf0.1") === Some(r21Mins))
+    // a regressed map is cut too, even ahead of the spread
+    val reg = r21Line.replace(""""spread":""",
+      """"regressed":{"t07":4.2},"spread":""")
+    assert(Bench.prevMins(reg, "/data/sf0.1") === Some(r21Mins))
   }
 
-  private def cpuSnap(wallMs: Long, sysJf: Long, selfJf: Long,
-      load100: Long = 0L): Bench.JvmSnap =
-    Bench.JvmSnap(0, 0, 0, 0, 0, 0, 0, wallMs, load100, sysJf, selfJf)
-
-  test("otherCores100: other-process cpu is the window's sys-minus-" +
-      "self jiffy delta over wall time; missing counters give None") {
-    // 10 s window, system burned 40000 jiffies (40 cores' worth),
-    // we burned 37000 -> others used 3000 jf / 10 s = 300 jf/s
-    // = 3.0 cores = 300 centi-cores
-    val a = cpuSnap(0L, 100000L, 50000L)
-    val b = cpuSnap(10000L, 140000L, 87000L)
-    assert(Bench.otherCores100(a, b) === Some(300L))
-    // self-load only: every system jiffy is ours -> 0 other
-    val b2 = cpuSnap(10000L, 140000L, 90000L)
-    assert(Bench.otherCores100(a, b2) === Some(0L))
-    // counter goes backwards (shouldn't happen) -> clamped, not
-    // negative
-    val b3 = cpuSnap(10000L, 140000L, 95000L)
-    assert(Bench.otherCores100(a, b3) === Some(0L))
-    // unreadable proc on either end -> None
-    assert(Bench.otherCores100(cpuSnap(0, -1, 100), b) === None)
-    assert(Bench.otherCores100(a, cpuSnap(10000, 140000, -1)) ===
-      None)
-    // degenerate window -> None
-    assert(Bench.otherCores100(a, cpuSnap(0L, 140000L, 87000L)) ===
-      None)
+  test("prevMins: a record for another SF gives None; one without an " +
+      "SF stamp is read") {
+    assert(Bench.prevMins(record(r21Line), "/data/sf0.01").isEmpty)
+    val noSf = r21Line.replace(""","sf":"/data/sf0.1"""", "")
+    assert(Bench.prevMins(noSf, "/data/sf0.01") === Some(r21Mins))
   }
 
-  test("cpuContaminated: a self-saturated window (load 47, zero " +
-      "other cpu) is CLEAN; a window with heavy other-process cpu " +
-      "flags even at low load; counterless windows fall back to " +
-      "the load rule") {
-    assert(Bench.retakeOtherLimit100(32) === 800L)
-    val otherLimit = 800L; val loadLimit = 2400L
-    // the r19 isolated s-family shape: the box is ours alone, the
-    // 1-min average hits 47 from our own burst + runnable queue —
-    // under the load-only rule this entry could NEVER be clean
-    val selfSat = ("self_sat",
-      (cpuSnap(0L, 0L, 0L, 4700L),
-        cpuSnap(30000L, 96000L, 95500L, 4700L)))
-    // real contention: a neighbor burning ~12 cores while the load
-    // average still reads under the old bar
-    val contended = ("contended",
-      (cpuSnap(0L, 0L, 0L, 2000L),
-        cpuSnap(10000L, 44000L, 32000L, 2000L)))
-    // no counters, loaded window -> load fallback flags it
-    val legacyHot = ("legacy_hot", (snap(5000), snap(900)))
-    // no counters, calm window -> clean
-    val legacyCalm = ("legacy_calm", (snap(900), snap(1000)))
-    assert(Bench.cpuContaminated(
-      Seq(selfSat, contended, legacyHot, legacyCalm),
-      otherLimit, loadLimit) === Seq("legacy_hot", "contended"))
-    assert(Bench.windowContaminated(selfSat._2._1, selfSat._2._2,
-      otherLimit, loadLimit) === false)
-    assert(Bench.windowContaminated(contended._2._1,
-      contended._2._2, otherLimit, loadLimit) === true)
+  test("prevMins on a record with its head truncated keeps the keys " +
+      "that survive, and no ratio leaks past a lost spread anchor") {
+    // cut inside top: the tail of top survives
+    val inTop = r21Line.substring(r21Line.indexOf("\"s14b\""))
+    assert(Bench.prevMins(record(inTop), "/data/sf0.1") ===
+      Some(Map("s14b" -> 11.10, "t11" -> 3.30)))
+    // cut inside spread: the spread anchor is gone, so suite_context
+    // and wide must cut; load and other_cpu sit past the cut
+    val inSpread = r21Line.substring(r21Line.indexOf("\"t11\":[3.6"))
+    assert(Bench.prevMins(record(inSpread), "/data/sf0.1") ===
+      Some(Map.empty[String, Double]))
+    val noCtx = inSpread.replace(""""suite_context":{"t11":2.1},""", "")
+    assert(Bench.prevMins(record(noCtx), "/data/sf0.1") ===
+      Some(Map.empty[String, Double]))
   }
 
-  test("contextRefuted: an isolated record at baseline level from " +
-      "the SAME tree refutes a suite-context delta; an elevated, " +
-      "missing, stale-tree, or unstamped one lets the flag stand") {
-    val tree = Some("abc123")
-    def rec(min: Double, t: Option[String] = tree) =
-      Some(Bench.IsoRecord(min, t))
-    // iso == baseline (iso IS the min): classic suite-context shape
-    assert(Bench.contextRefuted(rec(1.9), 1.9, tree))
-    // iso mildly above baseline (prev was the min): still refuted
-    assert(Bench.contextRefuted(rec(2.6), 1.9, tree))
-    // iso itself elevated vs baseline: the code regressed — flag
-    assert(!Bench.contextRefuted(rec(4.0), 1.9, tree))
-    // no isolated record: cannot refute
-    assert(!Bench.contextRefuted(None, 1.9, tree))
-    // ADVICE r19: a record from a DIFFERENT tree never measured the
-    // benched code — it cannot witness "the code's price did not
-    // move", so the flag stands
-    assert(!Bench.contextRefuted(rec(1.9, Some("other")), 1.9, tree))
-    // pre-r20 records carry no stamp: conservative, flag stands
-    assert(!Bench.contextRefuted(rec(1.9, None), 1.9, tree))
-    // the bench run itself outside a checkout: no identity, no
-    // refutation
-    assert(!Bench.contextRefuted(rec(1.9), 1.9, None))
-    assert(!Bench.contextRefuted(rec(1.9, None), 1.9, None))
-  }
+  // --- the compact stdout line ---
 
-  test("sourceTreeHash: stable for an unchanged tree, moves when " +
-      "any source file's bytes move, None outside a checkout") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-tree").toFile
-    val src = new java.io.File(root, "src/main/scala/x")
-    src.mkdirs()
-    def put(name: String, body: String): Unit =
-      java.nio.file.Files.writeString(
-        new java.io.File(src, name).toPath, body)
-    try {
-      put("A.scala", "object A")
-      put("B.scala", "object B")
-      val h1 = Bench.sourceTreeHash(root.getAbsolutePath)
-      val h2 = Bench.sourceTreeHash(root.getAbsolutePath)
-      assert(h1.isDefined && h1 === h2, "same tree, same hash")
-      put("B.scala", "object B { val x = 1 }")
-      val h3 = Bench.sourceTreeHash(root.getAbsolutePath)
-      assert(h3.isDefined && h3 != h1, "edited tree, new hash")
-      assert(Bench.sourceTreeHash("/nonexistent-root").isEmpty)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(root)
+  test("compactLine: 197 entries all flagged regressed and wide still " +
+      "fit 1900 chars, parse as JSON and keep value, n_ok and sf") {
+    val results = (0 until 197).map { i =>
+      val base = 10.0 + i / 10.0
+      val fam = "gmqstv"(i % 6)
+      f"$fam$i%03d_synthetic_entry" ->
+        (base +: (1 to 15).map(j => base * (4.5 + j / 10.0)))
     }
-  }
-
-  test("mergeRetakes: mins merge first pass ++ retake " +
-      "unconditionally, so an all-failed retake degrades to the " +
-      "measured first-pass min instead of nulling the entry") {
-    val first = Seq(
-      "hot" -> Seq(5.0, 5.2),      // contaminated, retaken
-      "calm" -> Seq(1.0, 1.1))     // untouched
-    val retake = Map("hot" -> Seq(Double.PositiveInfinity,
-      Double.PositiveInfinity))    // retake failed outright
-    val (results, _) = Bench.mergeRetakes(first, retake, Set("hot"))
-    val mins = results.toMap.map { case (k, ts) => k -> ts.min }
-    assert(mins("hot") === 5.0,
-      "a failed retake must fall back to the first-pass min")
-    assert(mins("calm") === 1.0)
-    // and a SUCCESSFUL retake's faster iterations win the min
-    val (r2, _) = Bench.mergeRetakes(first,
-      Map("hot" -> Seq(2.0, 2.1)), Set.empty)
-    assert(r2.toMap.apply("hot").min === 2.0)
-  }
-
-  test("mergeRetakes: the wide flag reads the clean retake alone " +
-      "(never the cross-regime seam) and skips still-dirty entries") {
-    val first = Seq(
-      // looks wide ONLY across the seam: slow contaminated pass,
-      // fast clean retake — the flag must not see 10.0 vs 1.0
-      "retaken" -> Seq(10.0, 9.5),
-      "dirty" -> Seq(30.0, 2.0),   // genuinely wide but still dirty
-      "calm" -> Seq(1.0, 1.05))
-    val retake = Map("retaken" -> Seq(1.0, 1.1))
-    val (_, wideBasis) =
-      Bench.mergeRetakes(first, retake, Set("dirty"))
-    val basis = wideBasis.toMap
-    assert(basis("retaken") === Seq(1.0, 1.1),
-      "wide basis must be the clean retake, not the merged list")
-    assert(!basis.contains("dirty"),
-      "still-dirty entries must not feed the wide flag")
-    assert(Bench.wideSpreadEntries(wideBasis).isEmpty,
-      "no flag may fire off the retake seam or a dirty entry")
-  }
-
-  test("retakeDirty: a loaded retake window is dirty, a clean one " +
-      "is not — unless the retake measured nothing (all iterations " +
-      "failed), which cannot certify the contaminated first pass") {
-    assert(Bench.retakeDirty(loadExceeded = true, Seq(1.0, 1.1)))
-    assert(!Bench.retakeDirty(loadExceeded = false, Seq(1.0, 1.1)))
-    // partial failure still measured something: the surviving min
-    // stands, entry is clean
-    assert(!Bench.retakeDirty(loadExceeded = false,
-      Seq(Double.PositiveInfinity, 2.0)))
-    // all-failed clean-window retake: first-pass numbers remain
-    // uncertified -> dirty
-    assert(Bench.retakeDirty(loadExceeded = false,
-      Seq(Double.PositiveInfinity, Double.PositiveInfinity)))
-    assert(Bench.retakeDirty(loadExceeded = false, Seq.empty))
-  }
-
-  test("parseDirty reads the prev record's dirty list; records " +
-      "without one (every record before r18) parse empty") {
-    val raw = """...,"n_ok":183,"load":{"p50":26.0,"max":30.4},""" +
-      """"dirty":["s03","t08_winnow_fingerprint"],"sf":"/x"}"""
-    assert(Bench.parseDirty(raw) ===
-      Set("s03", "t08_winnow_fingerprint"))
-    assert(Bench.parseDirty("""{"queries":{},"sf":"/x"}""") ===
-      Set.empty[String])
-    assert(Bench.parseDirty(""","dirty":[],"sf":"/x"""") ===
-      Set.empty[String])
-  }
-
-  // --- isolated-record cross-check (VERDICT r18 item 1) ---
-
-  test("parseQueriesMap reads the full-resolution queries object " +
-      "and nothing past its closing brace") {
-    val raw = """{"metric":"total","value":47.267,"unit":"sec",""" +
-      """"queries":{"t01_token_counts":0.416,"t16_band_index":0.221},""" +
-      """"iters":{"t01_token_counts":[0.5,0.416,0.43]},"sf":"/x"}"""
-    assert(Bench.parseQueriesMap(raw) === Map(
-      "t01_token_counts" -> 0.416, "t16_band_index" -> 0.221))
-    assert(Bench.parseQueriesMap("""{"value":1.0}""") ===
-      Map.empty[String, Double])
-  }
-
-  test("isolatedMins merges family records later-round-wins and " +
-      "skips records for a different SF") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-iso").toFile
-    def write(name: String, body: String): Unit =
-      java.nio.file.Files.writeString(
-        new java.io.File(dir, name).toPath, body)
-    try {
-      write("bench_isolated_r17_t.json",
-        """{"queries":{"t16_band_index":0.300,"t12_tfidf":0.500},"sf":"/sf"}""")
-      write("bench_isolated_r18_t.json",
-        """{"queries":{"t16_band_index":0.221},"sf":"/sf"}""")
-      write("bench_isolated_r18_m.json",
-        """{"queries":{"m01_media_meta":0.400},"sf":"/sf"}""")
-      write("bench_isolated_r18_x.json",
-        """{"queries":{"t16_band_index":9.9},"sf":"/other"}""")
-      val iso = Bench.isolatedMins(
-        Seq(dir.getAbsolutePath, "/nonexistent"), "/sf")
-      assert(iso === Map(
-        "t16_band_index" -> 0.221, // r18 overrides r17
-        "t12_tfidf" -> 0.500,      // r17 survives where r18 silent
-        "m01_media_meta" -> 0.400))
-      // no record in the first dir with any -> empty for a bogus dir
-      assert(Bench.isolatedMins(Seq("/nonexistent"), "/sf").isEmpty)
-      // VERDICT r19 item 2b: an entry the record itself marked
-      // dirty (contaminated through its own retake) is refused;
-      // the record's tree stamp rides on every surviving entry
-      write("bench_isolated_r19_s.json",
-        """{"queries":{"s01_a":1.0,"s02_b":2.0},""" +
-          """"dirty":["s02_b"],"tree":"deadbeef","sf":"/sf"}""")
-      val recs = Bench.isolatedRecords(Seq(dir.getAbsolutePath), "/sf")
-      assert(recs("s01_a") === Bench.IsoRecord(1.0, Some("deadbeef")))
-      assert(!recs.contains("s02_b"),
-        "a dirty isolated entry must not anchor anything")
-      // unstamped (pre-r20) records parse with tree = None
-      assert(recs("t16_band_index").tree.isEmpty)
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete(); ()
-    }
-  }
-
-  test("isolatedDivergent: the load-immune trigger fires on >2x " +
-      "divergence from the isolated record, worst-first, and " +
-      "ignores entries without a record or without a finite min") {
-    val iso = Map("t16_band_index" -> 0.221, "t12_tfidf" -> 0.500,
-      "s03_stream" -> 4.0)
-    val firstPass = Seq(
-      // r18's actual phantom-flag shape: 0.221 isolated, 1.13 suite
-      "t16_band_index" -> Seq(1.13, 1.2),
-      "t12_tfidf" -> Seq(0.55, 0.52),            // healthy: no fire
-      "s03_stream" -> Seq(11.2, 58.3, 51.5),     // 2.8x: fires
-      "new_entry" -> Seq(9.0),                   // no record: skip
-      "dead" -> Seq(Double.PositiveInfinity))    // failed: skip
-    assert(Bench.isolatedDivergent(firstPass, iso) ===
-      Seq("t16_band_index", "s03_stream"))
-    assert(Bench.isolatedDivergent(firstPass,
-      Map.empty[String, Double]).isEmpty)
+    val prev = results.map { case (k, ts) =>
+      k.takeWhile(_ != '_') -> ts.min / 3 }.toMap
+    assert(results.forall { case (k, ts) =>
+      ts.max / ts.min > 4 && ts.min > 2 * prev(k.takeWhile(_ != '_')) })
+    val line = Bench.compactLine(results, prev, 2.5, Seq.empty, "/data/sf0.1")
+    assert(line.length <= 1900)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(line)
+    assert(json.get("n_ok").asInt === 197)
+    assert(math.abs(json.get("value").asDouble -
+      results.map(_._2.min).sum) < 0.001)
+    assert(json.get("sf").asText === "/data/sf0.1")
+    assert(json.get("metric").asText === "total")
+    // the flags keep their 8 worst ratios; the spread map is what
+    // gets shed, and only part of it
+    assert(json.get("regressed").size === 8)
+    assert(json.get("wide").size === 8)
+    assert(json.get("top").size === 10)
+    val spread = json.get("spread").size
+    assert(spread > 0 && spread < 20)
   }
 }
