@@ -83,17 +83,6 @@ object Bench {
     else kvs.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString(open, ",", "}")
 
-  /** The failed entries and the `only` filter, shared by both lines:
-    * a filtered run is self-identifying — its total/n_ok cover only
-    * the listed prefixes, so downstream drift tooling can never
-    * mistake a left-behind filtered bench_out.json for a full-suite
-    * record.
-    */
-  private def tagsJson(mins: Seq[(String, Double)],
-      only: Seq[String]): String =
-    listJson("failed", mins.collect { case (k, v) if v.isInfinite => k }) +
-      listJson("only", only)
-
   /** Full-resolution record (long query names, 3 decimals) for
     * `bench_out.json`: the launcher keeps just the LAST 2000 chars of
     * stdout, and this line is several thousand chars, so it is the
@@ -111,7 +100,14 @@ object Bench {
       "\"" + k + "\":" + ts.map(fmt(_, 3)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val total = ok.map(_._2).sum
-    val tags = tagsJson(mins, only)
+    // the failed entries in full (the compact line caps them) and the
+    // `only` filter: a filtered run is self-identifying — its
+    // total/n_ok cover only the listed prefixes, so downstream drift
+    // tooling can never mistake a left-behind filtered bench_out.json
+    // for a full-suite record
+    val tags = listJson("failed",
+      mins.collect { case (k, v) if v.isInfinite => k }) +
+      listJson("only", only)
     f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_ok":${ok.size},"queries":$qs,"iters":$iters,"index_warm":$warmSec%.3f$tags,"sf":"$sfDir"}"""
   }
 
@@ -133,6 +129,10 @@ object Bench {
     * field is null, as it was for 19 straight rounds under the old
     * full-map format. In the worst all-flagged case the loop at the end
     * sheds spread entries — never the scalars or the flag ratios.
+    * `failed` is a count plus the first 5 short keys
+    * (`"failed":{"n":197,"first":[...]}`): listed in full, a run whose
+    * every entry failed printed a 4,186-char line; [[fullLine]] keeps
+    * the full list.
     */
   private[graft] def compactLine(results: Seq[(String, Seq[Double])],
       prev: Map[String, Double], warmSec: Double, only: Seq[String],
@@ -178,7 +178,11 @@ object Bench {
     val flagsJson = ratios(""","regressed":{""", regressed) +
       ratios(""","wide":{""", wide)
     val total = ok.map(_._2).sum
-    val tags = tagsJson(mins, only)
+    val failed = mins.collect { case (k, v) if v.isInfinite => shortKey(k) }
+    val failedJson = if (failed.isEmpty) "" else
+      s""","failed":{"n":${failed.size}""" +
+        listJson("first", failed.take(5)) + "}"
+    val tags = failedJson + listJson("only", only)
     val spreadEntries = (finite.sortBy { case (_, ts) => -ts.min }.take(4) ++
       (regressed ++ wide).map(r => (r._1, r._2))).distinctBy(_._1)
     def mkLine(sp: Seq[(String, Seq[Double])]): String = {

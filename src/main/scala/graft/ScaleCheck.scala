@@ -715,8 +715,6 @@ object ScaleCheck {
         val work = java.nio.file.Files
           .createTempDirectory("graft-swidth").toFile
         try {
-          val src = new java.io.File(work, "incoming")
-          src.mkdirs()
           // k× replication with DISTINCT user ids per replica so the
           // state (users × hours) grows with the data, as a real
           // backlog's would
@@ -724,18 +722,8 @@ object ScaleCheck {
               .withColumn("user_id",
                 col("user_id") + lit(r.toLong * 1000000000L)))
             .reduce(_.unionByName(_))
-          (0 until 4).foreach { i =>
-            val stage = new java.io.File(work, s"stage$i")
-            rep.filter(pmod(col("event_id"), lit(4)) === i)
-              .coalesce(1).write.parquet(stage.getAbsolutePath)
-            val part = Option(stage.listFiles()).getOrElse(Array.empty)
-              .filter(_.getName.endsWith(".parquet")).head
-            val dst = new java.io.File(src, f"b$i%02d.parquet")
-            java.nio.file.Files.move(part.toPath, dst.toPath)
-            dst.setLastModified(
-              System.currentTimeMillis() - 3600000L + i * 60000L)
-            ()
-          }
+          val src = new java.io.File(EventStreams.stageSlices(rep,
+            pmod(col("event_id"), lit(4)), 4, work.getAbsolutePath))
           val bytes = EventStreams.stagedBytes(src.getAbsolutePath)
           val width = EventStreams.streamShufflePartitions(bytes)
           val commits = scala.collection.mutable.ArrayBuffer[Long]()

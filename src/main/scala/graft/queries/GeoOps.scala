@@ -136,14 +136,11 @@ object GeoOps {
     * unions enumerated), GoldenReplaySpec pins the g08 area rows —
     * and the full-scale geometry BUILD keeps its bench flagship slot
     * as the bench-only twin g06b_cleaned_geometry (BASELINE.md:
-    * 1.259 s single-threaded R).
+    * 1.259 s single-threaded R). Without the reference inputs the
+    * query fails at its first read, naming the missing path.
     */
   val g06AlaskaReplay: Q = (s, _) =>
-    if (graft.pipeline.AlaskaReplay.available)
-      graft.pipeline.AlaskaReplay.cleanedProperties(s)
-    else
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq.empty))
+    graft.pipeline.AlaskaReplay.cleanedProperties(s)
 
   /** g06b (bench-only) — the full-scale geometry build + scalar
     * summary that was the declared g06 through round 12: rebuilds the

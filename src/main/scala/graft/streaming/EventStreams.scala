@@ -272,28 +272,17 @@ object EventStreams {
   def replayAttributionPairsTight(spark: SparkSession, dir: String)
       : DataFrame = replayAttributionPairsTightWithStats(spark, dir)._1
 
-  /** Session-lifetime cache of staged time-ordered event batch files,
-    * keyed by (source dir, batch count): the staged input is a PURE
-    * deterministic function of the events table, so replay harnesses
-    * and bench iterations share it and re-measure the REPLAY, not
-    * input preparation (the warmIndexes rule — staging is the
-    * analogue of an index build, priced outside the serve path).
-    * Staged dirs live until JVM exit.
-    */
-  private val stagedEventsCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Session-lifetime memo for ANY staged replay input (r20
+  /** Session-lifetime memo for every staged replay input (r20
     * optimization, guide §1.4/§6): every replay harness used to
     * re-stage its micro-batch input files into a per-call temp dir,
     * so each bench iteration re-paid 4–10 filter+coalesce write jobs
     * of pure input preparation before the replay under measurement
     * even started. The staged input is a deterministic function of
-    * its `key` (source dir + slicing constants), so it gets the SAME
-    * treatment `stagedEventsCache` has had since r13: built once per
-    * JVM, shared across harnesses and iterations, deleted at exit.
-    * `build` stages into the passed work dir and returns the
-    * directory the stream should read.
+    * its `key` (source dir + slicing constants), so it is built once
+    * per JVM, shared across harnesses and iterations (the warmIndexes
+    * rule — staging is the analogue of an index build, priced outside
+    * the serve path) and deleted at exit. `build` stages into the
+    * passed work dir and returns the directory the stream should read.
     */
   private val stagedInputCache =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -495,6 +484,11 @@ object EventStreams {
     * applies the umask before it sets the permission, and only the way
     * it is set differs.
     *
+    * `confs` joins the same window after the derived keys: a caller's
+    * own start-time session confs (s14c's RocksDB state-store backend),
+    * captured by the stream's cloned session and restored with the
+    * rest.
+    *
     * The set → start → initialization → restore window holds
     * [[streamConfLock]], so two streams started at once on one session
     * each clone their own confs. The window still mutates the SHARED
@@ -505,7 +499,7 @@ object EventStreams {
   private[graft] def withStreamShuffle[T](spark: SparkSession,
       bytes: Long, udfHeavy: Boolean = false,
       sortHeavy: Boolean = false, aqeOff: Boolean = false,
-      fanout: Int = 1)(f: => T)
+      fanout: Int = 1, confs: Seq[(String, String)] = Nil)(f: => T)
       : T = streamConfLock.synchronized {
     val flagFloor =
       if (udfHeavy) spark.sparkContext.defaultParallelism
@@ -514,7 +508,7 @@ object EventStreams {
       else 1
     val floor = math.max(flagFloor,
       math.min(spark.sparkContext.defaultParallelism, fanout))
-    val confs = Seq(
+    val window = Seq(
       "spark.sql.shuffle.partitions" ->
         streamShufflePartitions(bytes, floor).toString,
       LocalCheckpointFileManager.confKey ->
@@ -526,9 +520,9 @@ object EventStreams {
       // scale `maxPartitionBytes` (128 MB) still bounds splits, so this
       // only stops the TINY-scan oversplit (guide §6 input split size)
       (if (aqeOff) Seq("spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.files.minPartitionNum" -> "1") else Nil)
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        "spark.sql.files.minPartitionNum" -> "1") else Nil) ++ confs
+    val prev = window.map { case (k, _) => k -> spark.conf.getOption(k) }
+    window.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val r = f
       r match {
@@ -579,58 +573,90 @@ object EventStreams {
         it.filter(!_.isNullAt(0)).map(_.getInt(0)).toSet))
       .fold(Set.empty[Int])(_ ++ _).toSeq.sorted
 
+  /** Stage `frame` as `n` single-file parquet batches under
+    * `base/incoming`: the rows whose `slice` is i land, in `frame`'s
+    * order, in `bNN.parquet` (NN = i) with mtime `t0 + i·60 s`, so a
+    * file-source replay with `maxFilesPerTrigger` 1 triggers them in
+    * slice order. ONE partitioned write stages every slice: a single
+    * task (`coalesce(1)`) whose partition-column sort is stable in
+    * memory, so each slice file keeps the rows of
+    * `frame.filter(slice === i)` in order. The write passes
+    * [[ForkFreeLocalFileSystem.confs]] as write options, which reach
+    * only its own job's Hadoop conf: the session's default `file:`
+    * FileSystem forks `chmod`s per write.
+    *
+    * The slice ↔ streaming-batch-id identity is load-bearing (s24/s26's
+    * as-of oracles equate "batch b" with "slice b"), so an empty slice
+    * lands a schema-only file, and a slice that would lose its batch
+    * id fails the staging loudly: a slice value outside `[0, n)`
+    * (null included) or a slice that lands other than one file.
+    */
+  private[graft] def stageSlices(frame: DataFrame, slice: Column,
+      n: Int, base: String): String = {
+    val src = new java.io.File(base, "incoming")
+    src.mkdirs()
+    val stage = new java.io.File(base, "stage")
+    val opts = ForkFreeLocalFileSystem.confs.toMap
+    val sliced = frame.withColumn("_slice", slice)
+    sliced.coalesce(1).write.options(opts)
+      .partitionBy("_slice").parquet(stage.getPath)
+    val dirs = stage.listFiles().filter(_.getName.startsWith("_slice="))
+      .map { d =>
+        val i = d.getName.stripPrefix("_slice=").toIntOption
+          .filter(i => i >= 0 && i < n).getOrElse(
+            throw new IllegalStateException(s"staged ${d.getName} lies " +
+              s"outside slices [0, $n): its rows would have no batch id"))
+        i -> d
+      }.toMap
+    val t0 = System.currentTimeMillis() - 3600L * 1000
+    (0 until n).foreach { i =>
+      val dir = dirs.getOrElse(i, {
+        val empty = new java.io.File(base, s"empty$i")
+        sliced.drop("_slice").limit(0).coalesce(1).write.options(opts)
+          .parquet(empty.getPath)
+        empty
+      })
+      val part = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+      if (part.length != 1) throw new IllegalStateException(
+        s"slice $i staged ${part.length} parquet files, not one — " +
+          "every later batch id would shift off its slice")
+      val dst = new java.io.File(src, f"b$i%02d.parquet")
+      java.nio.file.Files.move(part.head.toPath, dst.toPath)
+      dst.setLastModified(t0 + i * 60000L)
+    }
+    src.getPath
+  }
+
+  /** The events table cut into `n` ascending event-time spans: the
+    * staged-events projection and the span index of each row.
+    */
+  private[graft] def eventSlices(spark: SparkSession, dir: String,
+      n: Int): (DataFrame, Column) = {
+    val ev = graft.Tables.events(spark, dir)
+      .select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value"))
+      .filter(col("ts").isNotNull)
+    val sec = unix_timestamp(col("ts"))
+    val mm = ev.agg(min(sec), max(sec)).head()
+    val lo = mm.getLong(0); val hi = mm.getLong(1) + 1
+    val span = math.max(1L, (hi - lo + n - 1) / n)
+    (ev, ((sec - lo) / span).cast("int"))
+  }
+
   /** Stage the events table as `nBatches` single-file parquet batches
     * with ascending event-time spans and ascending mtimes: batch k's
     * rows all arrive after batch k−1's, so nothing is ever late for
     * a multi-hour watermark (span ≫ disorder) and the watermark
     * advances monotonically through a file-source replay — the
     * arrival shape a deployed ingest provides. Memoized; returns the
-    * directory containing `b00.parquet … b{n-1}.parquet`. The slice
-    * writes pass [[ForkFreeLocalFileSystem.confs]] as write options,
-    * which reach only their own job's Hadoop conf: the session's
-    * default `file:` FileSystem forks ~9 `chmod`s per slice write.
+    * directory containing `b00.parquet … b{n-1}.parquet`.
     */
   private[graft] def stagedEventBatches(spark: SparkSession,
       dir: String, nBatches: Int): String =
-    stagedEventsCache.getOrElseUpdate(s"$dir#$nBatches", {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft-staged-events").toFile
-      sys.addShutdownHook(deleteRecursively(work))
-      val srcDir = s"${work.getAbsolutePath}/incoming"
-      new java.io.File(srcDir).mkdirs()
-      val ev = graft.Tables.events(spark, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val mm = ev.agg(min(unix_timestamp(col("ts"))),
-        max(unix_timestamp(col("ts")))).head()
-      val lo = mm.getLong(0); val hi = mm.getLong(1) + 1
-      val span = math.max(1L, (hi - lo + nBatches - 1) / nBatches)
-      val t0 = System.currentTimeMillis() - 3600L * 1000
-      (0 until nBatches).foreach { i =>
-        val stage = s"${work.getAbsolutePath}/stage$i"
-        ev.filter(unix_timestamp(col("ts")) >= lo + i * span &&
-            unix_timestamp(col("ts")) < lo + (i + 1) * span)
-          .coalesce(1).write.options(ForkFreeLocalFileSystem.confs.toMap)
-          .parquet(stage)
-        // the slice ↔ streaming-batch-id identity is load-bearing:
-        // s24/s26's as-of oracles equate "batch b" with "event-time
-        // slice b", which holds because Spark writes a schema-only
-        // part file even for an EMPTY slice (measured; a skipped
-        // empty slice would silently shift every later batch id off
-        // its slice). If that write behavior ever changes, fail the
-        // staging loudly rather than desync the declared oracles.
-        val part = new java.io.File(stage).listFiles()
-          .filter(_.getName.endsWith(".parquet")).headOption
-          .getOrElse(throw new IllegalStateException(
-            s"slice $i staged no parquet file — the slice<->batch-id " +
-              "identity behind the s24/s26 as-of arithmetic would " +
-              "silently shift; stage empty slices explicitly"))
-        val dst = new java.io.File(srcDir, f"b$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(t0 + i * 60000L)
-      }
-      srcDir
-    })
+    memoizedStagedInput(s"events#$dir#$nBatches") { base =>
+      val (ev, slice) = eventSlices(spark, dir, nBatches)
+      stageSlices(ev, slice, nBatches, base)
+    }
 
   /** An empty frame with the staged-events schema — the readout
     * fallback when a replay drains zero non-empty batches (an empty
@@ -661,8 +687,9 @@ object EventStreams {
     * is an executor-memory bill the job cannot pay; RocksDB keeps
     * state off-heap with disk spill and bounds memory regardless of
     * window width. Identical query, watermarks, and trigger — only
-    * `spark.sql.streaming.stateStore.providerClass` differs
-    * (restored after the run) — so the bench pair prices exactly the
+    * `spark.sql.streaming.stateStore.providerClass` differs (set in
+    * the stream's [[withStreamShuffle]] window, restored after its
+    * start) — so the bench pair prices exactly the
     * backend swap. The emitted pair set is backend-independent
     * (StreamingSpec asserts equality with s14b).
     */
@@ -671,34 +698,20 @@ object EventStreams {
     replayAttributionPairsTightRocksWithStats(spark, dir)._1
 
   def replayAttributionPairsTightRocksWithStats(spark: SparkSession,
-      dir: String): (DataFrame, Long) = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // changelog checkpointing (r20): without it every batch uploads a
-    // FULL RocksDB snapshot per store at commit; with it the commit
-    // ships only the batch's changed keys and snapshots happen in
-    // background maintenance — the recommended production setting for
-    // frequent-commit RocksDB state at any scale, and exactly the
-    // cost this twin exists to price
-    val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(key)
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    spark.conf.set(clKey, "true")
-    try replayAttributionPairsTightWithStats(spark, dir,
-      qnSuffix = "_rocks", widthFloor = 2)
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None => spark.conf.unset(clKey)
-      }
-    }
-  }
+      dir: String): (DataFrame, Long) =
+    replayAttributionPairsTightWithStats(spark, dir,
+      qnSuffix = "_rocks", widthFloor = 2, confs = Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider"),
+        // changelog checkpointing (r20): without it every batch uploads
+        // a FULL RocksDB snapshot per store at commit; with it the
+        // commit ships only the batch's changed keys and snapshots
+        // happen in background maintenance — the recommended
+        // production setting for frequent-commit RocksDB state at any
+        // scale, and exactly the cost this twin exists to price
+        "spark.sql.streaming.stateStore.rocksdb." +
+          "changelogCheckpointing.enabled" -> "true"))
 
   def replayAttributionPairsTightWithStats(spark: SparkSession,
       dir: String, nBatches: Int = 10, qnSuffix: String = "",
@@ -709,7 +722,10 @@ object EventStreams {
       // (its commit fsync cost SCALES with partitions × stores, the
       // r20 C1 finding). Measured same-window on s14c: 10.5 s at
       // width 1, 9.3 at 2, 9.5 at 4, 10.4 at 8.
-      widthFloor: Int = 1)
+      widthFloor: Int = 1,
+      // extra session confs for the stream's start window (the RocksDB
+      // twin's state-store backend), see withStreamShuffle
+      confs: Seq[(String, String)] = Nil)
       : (DataFrame, Long) = {
     val srcDir = stagedEventBatches(spark, dir, nBatches)
     val staged = spark.readStream.schema(stagedEventSchema)
@@ -726,7 +742,7 @@ object EventStreams {
       .withWatermark("touch_ts", "25 hours")
     val qn = s"stream_attr_tight_${math.abs(dir.hashCode)}$qnSuffix"
     val q = withStreamShuffle(spark, stagedBytes(srcDir),
-      fanout = widthFloor) {
+      fanout = widthFloor, confs = confs) {
       conv.join(touch,
         expr("""c_uid = t_uid AND touch_ts < conv_ts
           AND touch_ts >= conv_ts - INTERVAL 24 HOURS"""))
@@ -2280,30 +2296,14 @@ object EventStreams {
       cols: Seq[(String, DataType)],
       nBatches: Int): String = {
     // session-memoized (r20): the staged input is a pure function of
-    // (dir, projected columns, batch count) — the stagedEventsCache
-    // rule; bench iterations re-measure the replay, not this staging
+    // (dir, projected columns, batch count) — see memoizedStagedInput;
+    // bench iterations re-measure the replay, not this staging
     val key = s"docs#$dir#${cols.map(c =>
       c._1 + ":" + c._2.simpleString).mkString(",")}#$nBatches"
     memoizedStagedInput(key) { base =>
-      val srcDir = s"$base/incoming"
-      new java.io.File(srcDir).mkdirs()
-      val all = graft.Tables.documents(spark, dir)
-        .select(cols.map(c => col(c._1)): _*)
-      val t0 = System.currentTimeMillis() - 3600L * 1000
-      (0 until nBatches).foreach { i =>
-        val stage = s"$base/stage$i"
-        all.filter(pmod(col("doc_id"), lit(nBatches)) === i)
-          .coalesce(1).write.parquet(stage)
-        new java.io.File(stage).listFiles()
-          .filter(_.getName.endsWith(".parquet")).headOption
-          .foreach { f =>
-            val dst = new java.io.File(srcDir, f"b$i%02d.parquet")
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(t0 + i * 60000L)
-            ()
-          }
-      }
-      srcDir
+      stageSlices(graft.Tables.documents(spark, dir)
+        .select(cols.map(c => col(c._1)): _*),
+        pmod(col("doc_id"), lit(nBatches)), nBatches, base)
     }
   }
 
@@ -2555,27 +2555,12 @@ object EventStreams {
       ttlMs: Long = 3600000L, nBatches: Int = 3): DataFrame = {
     import spark.implicits._
     // staged corpus shared across iterations/harnesses (r20: input
-    // preparation, the stagedEventsCache rule), one pmod span per
+    // preparation, see memoizedStagedInput), one pmod span per
     // single-file batch, ascending mtimes
     val srcDir = memoizedStagedInput(s"s03b#$dir#$nBatches") { work =>
-      val src = s"$work/incoming"
-      new java.io.File(src).mkdirs()
-      val docs = spark.read.schema(docSchema)
-        .parquet(s"$dir/documents*.parquet")
-      val t0 = System.currentTimeMillis() - 3600L * 1000
-      (0 until nBatches).foreach { i =>
-        val stage = s"$work/stage$i"
-        docs.filter(pmod(col("doc_id"), lit(nBatches)) === i)
-          .coalesce(1).write.parquet(stage)
-        new java.io.File(stage).listFiles()
-          .filter(_.getName.endsWith(".parquet")).headOption
-          .foreach { f =>
-            val dst = new java.io.File(src, f"b$i%02d.parquet")
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(t0 + i * 60000L)
-          }
-      }
-      src
+      stageSlices(spark.read.schema(docSchema)
+        .parquet(s"$dir/documents*.parquet"),
+        pmod(col("doc_id"), lit(nBatches)), nBatches, work)
     }
     val bandsUdf = udf { (text: String) =>
       graft.queries.TextOps.portableBandsKernel(text)
@@ -3846,50 +3831,22 @@ object EventStreams {
       "t15_corpus")
 
     // Land each ingest batch as ONE parquet file with ascending mtimes
-    // so the file source triggers them in order — staged in a SINGLE
-    // partitioned write (one documents scan for all spans, not one
-    // filtered scan per span). Empty spans still land a (schema-only)
-    // file so batchId i always equals span i. Session-memoized (r20:
-    // input preparation, the stagedEventsCache rule).
+    // so the file source triggers them in order (stageSlices: one
+    // partitioned write for all spans; an empty span still lands a
+    // schema-only file, so batchId i always equals span i).
+    // Session-memoized (r20: input preparation, see
+    // memoizedStagedInput).
     val bounds = TextOps.IngestBatchBounds
     val batchSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     val srcDir = memoizedStagedInput(
       s"s05#$dir#${bounds.mkString(",")}") { base =>
-      val src = s"$base/incoming"
-      new java.io.File(src).mkdirs()
-      val t0 = System.currentTimeMillis() - 3600L * 1000
       val spanCol = (1 until bounds.length).foldLeft(lit(0)) {
         (acc, i) =>
           when(col("doc_id") >= bounds(i), lit(i)).otherwise(acc)
       }
-      val stage = s"$base/stage"
-      staticDocs.filter(col("doc_id") >= bounds.head)
-        .withColumn("b", spanCol)
-        .repartition(col("b")) // one task → one file per span dir
-        .write.partitionBy("b").parquet(stage)
-      bounds.indices.foreach { i =>
-        val dst = new java.io.File(src, f"b$i%02d.parquet")
-        Option(new java.io.File(s"$stage/b=$i").listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .filter(_.getName.endsWith(".parquet")).headOption match {
-          case Some(f) =>
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            ()
-          case None => // empty span: schema-only file keeps batchId = i
-            val empty = s"$base/empty$i"
-            spark.createDataFrame(
-              java.util.Collections
-                .emptyList[org.apache.spark.sql.Row](),
-              batchSchema).coalesce(1).write.parquet(empty)
-            new java.io.File(empty).listFiles()
-              .filter(_.getName.endsWith(".parquet")).headOption
-              .foreach(f =>
-                java.nio.file.Files.move(f.toPath, dst.toPath))
-        }
-        dst.setLastModified(t0 + i * 60000L)
-      }
-      src
+      stageSlices(staticDocs.filter(col("doc_id") >= bounds.head),
+        spanCol, bounds.length, base)
     }
 
     val deltas = scala.collection.mutable.ListBuffer[String]()
@@ -4436,24 +4393,7 @@ object EventStreams {
         when(col("doc_id") >= (maxId + 1) * i / nSpans, lit(i))
           .otherwise(acc)
       }
-      val src = s"$base/incoming"
-      val stage = s"$base/stage"
-      new java.io.File(src).mkdirs()
-      staticDocs.withColumn("b", spanCol)
-        .repartition(col("b")) // one task → one file per span dir
-        .write.partitionBy("b").parquet(stage)
-      val t0 = System.currentTimeMillis() - 3600L * 1000
-      (0 until nSpans).foreach { i =>
-        val dst = new java.io.File(src, f"b$i%02d.parquet")
-        Option(new java.io.File(s"$stage/b=$i").listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .filter(_.getName.endsWith(".parquet")).headOption
-          .foreach { f =>
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(t0 + i * 60000L)
-          }
-      }
-      src
+      stageSlices(staticDocs, spanCol, nSpans, base)
     }
     val deltaDir = s"${work.getAbsolutePath}/index-delta"
     val contribDir = s"${work.getAbsolutePath}/contrib"

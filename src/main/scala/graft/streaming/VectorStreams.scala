@@ -35,29 +35,13 @@ object VectorStreams {
       nBatches: Int = 4): DataFrame = {
     val (model, _) = graft.queries.VectorOps.ensureIvfPqIndex(spark, dir)
     // staged corpus spans shared across iterations (r20: input
-    // preparation — the stagedEventsCache rule); single-file batches
+    // preparation, see memoizedStagedInput); single-file batches
     // with ascending mtimes
     val srcDir = EventStreams.memoizedStagedInput(
       s"s12#$dir#$nBatches") { work =>
-      val src = s"$work/incoming"
-      new java.io.File(src).mkdirs()
-      val all = spark.read.schema(embSchema)
-        .parquet(s"$dir/embeddings.parquet")
-      val t0 = System.currentTimeMillis() - 3600L * 1000
-      (0 until nBatches).foreach { i =>
-        val stage = s"$work/stage$i"
-        all.filter(pmod(col("vec_id"), lit(nBatches)) === i)
-          .coalesce(1).write.parquet(stage)
-        new java.io.File(stage).listFiles()
-          .filter(_.getName.endsWith(".parquet")).headOption
-          .foreach { f =>
-            val dst = new java.io.File(src, f"b$i%02d.parquet")
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(t0 + i * 60000L)
-            ()
-          }
-      }
-      src
+      EventStreams.stageSlices(spark.read.schema(embSchema)
+        .parquet(s"$dir/embeddings.parquet"),
+        pmod(col("vec_id"), lit(nBatches)), nBatches, work)
     }
     val stream = spark.readStream.schema(embSchema)
       .option("maxFilesPerTrigger", 1)
@@ -250,18 +234,16 @@ object VectorStreams {
       val cents = VectorOps.intCoarseModel(spark, dir)
       val k = VectorOps.knnGraphDegree
       // staged arrival spans shared across iterations/harnesses (r20:
-      // input preparation — the stagedEventsCache rule); the staging
+      // input preparation, see memoizedStagedInput); the staging
       // is a pure function of (dir, nBatches, arrival shape)
       val srcDir = EventStreams.memoizedStagedInput(
         s"s17#$dir#$nBatches#$cellGrouped") { stgBase =>
-        val src = s"$stgBase/incoming"
-        new java.io.File(src).mkdirs()
         val all = spark.read.schema(embSchema)
           .parquet(s"$dir/embeddings.parquet")
         // arrival shape: ascending vec_id spans (the append-only
         // ingest default), or cell-grouped spans for the incremental-
         // merge probe (batch i = cells [i·g, (i+1)·g) under the model)
-        val batchKeyed =
+        val (batches, slice) =
           if (cellGrouped) {
             val asgAll = VectorOps.assignIntCells(
               all.select(col("vec_id"),
@@ -269,32 +251,16 @@ object VectorStreams {
                   .as("v")), cents)
               .select(col("vec_id"), col("cell"))
             val g = (cents.length + nBatches - 1) / nBatches
-            all.join(asgAll, Seq("vec_id"))
-              .withColumn("bkey", floor(col("cell") / g).cast("int"))
+            (all.join(asgAll, Seq("vec_id"))
               .select(col("vec_id"), col("embedding"), col("label"),
-                col("bkey"))
+                floor(col("cell") / g).cast("int").as("_slice")),
+              col("_slice"))
           } else {
             val maxId = all.agg(max("vec_id")).head().getLong(0)
             val span = maxId / nBatches + 1
-            all.withColumn("bkey",
-              floor(col("vec_id") / span).cast("int"))
+            (all, floor(col("vec_id") / span).cast("int"))
           }
-        val t0 = System.currentTimeMillis() - 3600L * 1000
-        (0 until nBatches).foreach { i =>
-          val stage = s"$stgBase/stage$i"
-          batchKeyed.filter(col("bkey") === i)
-            .drop("bkey")
-            .coalesce(1).write.parquet(stage)
-          new java.io.File(stage).listFiles()
-            .filter(_.getName.endsWith(".parquet")).headOption
-            .foreach { f =>
-              val dst = new java.io.File(src, f"b$i%02d.parquet")
-              java.nio.file.Files.move(f.toPath, dst.toPath)
-              dst.setLastModified(t0 + i * 60000L)
-              ()
-            }
-        }
-        src
+        EventStreams.stageSlices(batches, slice, nBatches, stgBase)
       }
       val base = work.getAbsolutePath
       val asgPath = s"$base/asg"

@@ -144,4 +144,20 @@ class BenchFlagSpec extends AnyFunSuite {
     val spread = json.get("spread").size
     assert(spread > 0 && spread < 20)
   }
+
+  test("compactLine: every real entry failed still fits 1900 chars and " +
+      "parses, with failed as a count plus the first keys") {
+    val names = (SparkEntry.queries ++ SparkEntry.benchOnly).keys.toSeq.sorted
+    assert(names.size > 190)
+    val results = names.map(_ -> Seq.fill(3)(Double.PositiveInfinity))
+    val line = Bench.compactLine(results, Map.empty, 2.5, Seq.empty,
+      "/data/sf0.1")
+    assert(line.length <= 1900, s"${line.length} chars")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(line)
+    assert(json.get("n_ok").asInt === 0)
+    assert(json.get("failed").get("n").asInt === names.size)
+    assert(json.get("failed").get("first").size === 5)
+    assert(json.get("sf").asText === "/data/sf0.1")
+  }
 }

@@ -133,4 +133,13 @@ class FullReplaySpec extends SparkSpec {
     assert(merged169.getArea > raw169.getArea,
       "acquisitions must add area to AVEC")
   }
+
+  test("without the reference inputs g06 fails naming the missing path") {
+    assume(!graft.pipeline.AlaskaReplay.available)
+    val e = intercept[Exception](
+      graft.queries.GeoOps.g06AlaskaReplay(spark, sf).collect())
+    val refDir = new java.io.File(graft.pipeline.AlaskaReplay.RawPath)
+      .getParent + "/"
+    assert(e.getMessage.contains(refDir), e.getMessage)
+  }
 }

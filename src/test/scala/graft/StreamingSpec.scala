@@ -665,6 +665,78 @@ class StreamingSpec extends SparkSpec {
     } finally EventStreams.deleteRecursively(work)
   }
 
+  test("stageSlices: each staged event batch holds, in order, the rows " +
+      "of its event-time slice") {
+    val (ev, slice) = EventStreams.eventSlices(spark, sf, 10)
+    val dir = EventStreams.stagedEventBatches(spark, sf, 10)
+    (0 until 10).foreach { i =>
+      val got = spark.read.parquet(f"$dir/b$i%02d.parquet").collect().toSeq
+      assert(got === ev.filter(slice === i).collect().toSeq, s"slice $i")
+    }
+  }
+
+  test("stageSlices: an empty middle slice lands a schema-only file, " +
+      "and the mtimes ascend strictly") {
+    val work = java.nio.file.Files.createTempDirectory("graft-slices").toFile
+    try {
+      val frame = spark.range(30)
+        .filter(col("id") < 10 || col("id") >= 20)
+        .select(col("id"), (col("id") * 2).as("v"))
+      val dir = EventStreams.stageSlices(frame,
+        (col("id") / 10).cast("int"), 3, work.getAbsolutePath)
+      val files = (0 until 3).map(i => new java.io.File(dir, f"b$i%02d.parquet"))
+      assert(new java.io.File(dir).list().sorted.toSeq === files.map(_.getName))
+      val staged = files.map(f => spark.read.parquet(f.getPath))
+      assert(staged.map(_.count()) === Seq(10L, 0L, 10L))
+      assert(staged(1).schema.fieldNames.toSeq === Seq("id", "v"))
+      val mtimes = files.map(_.lastModified)
+      assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b },
+        s"mtimes $mtimes")
+    } finally EventStreams.deleteRecursively(work)
+  }
+
+  test("stageSlices: a slice value outside [0, n) fails the staging") {
+    val work = java.nio.file.Files.createTempDirectory("graft-slices").toFile
+    try {
+      val e = intercept[IllegalStateException](EventStreams.stageSlices(
+        spark.range(5).toDF(), (col("id") % 4).cast("int"), 3,
+        work.getAbsolutePath))
+      assert(e.getMessage.contains("_slice=3"), e.getMessage)
+    } finally EventStreams.deleteRecursively(work)
+  }
+
+  test("stagedEventBatches stages every slice in at most 4 jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "graft-stage-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some("graft-stage-marker") => marker.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // 7 slices is a count no other caller stages, so this call writes
+      sc.setJobGroup(group, "stagedEventBatches")
+      EventStreams.stagedEventBatches(spark, sf, 7)
+      // the bus delivers in order: once the marker job's start arrives,
+      // every staging job's start has been counted
+      sc.setJobGroup("graft-stage-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    info(s"${jobs.get} staging jobs")
+    assert(jobs.get > 0 && jobs.get <= 4, s"${jobs.get} staging jobs")
+  }
+
   test("streams fork no readlink and no chmod: the offset/commit logs, " +
       "the state store and the file-source/sink logs write through " +
       "LocalCheckpointFileManager, the file sink through " +
