@@ -32,6 +32,11 @@ object Tables {
     *  - TIMESTAMP(MICROS) (adjusted or NTZ): read natively; normalize
     *    to TimestampType (identity under the engine's UTC session tz)
     *    so every downstream plan sees one stable type.
+    *
+    * `spark.sql.legacy.parquet.nanosAsLong` is set on the caller's
+    * session and never restored: it is session-wide from the first
+    * call on. It cannot be scoped to this read, because the parquet
+    * scan reads it lazily, when the returned frame executes.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import graft.streaming.ForkFreeLocalFileSystem
 
 /** Targets-style cross-run memoization (SURVEY §4: the reference's
   * signature execution feature — content-hash skip in `_targets/meta`).
@@ -30,6 +31,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * up-to-date stage is served from its metadata without touching its
   * data. A hit therefore equals a fresh inferred read. A checkpoint
   * without the sidecar is a miss and is rebuilt once.
+  *
+  * A miss writes with [[ForkFreeLocalFileSystem.confs]] as write
+  * options, as `EventStreams.stageSlices` does: they reach only the
+  * write job's Hadoop conf, and the session's default `file:`
+  * FileSystem forks a `chmod` per file it creates.
   */
 class StageCache(spark: SparkSession, dir: String) {
 
@@ -69,6 +75,7 @@ class StageCache(spark: SparkSession, dir: String) {
         computeCount += 1
         val df = compute
         val w = df.write.mode("overwrite")
+          .options(ForkFreeLocalFileSystem.confs.toMap)
         val schema =
           if (partitionCols.isEmpty) {
             w.parquet(path)

@@ -254,8 +254,8 @@ object GeoOps {
     * nlist ∝ N rule applied to the spatial grid: per-cell population
     * — and with it the cell self-join's quadratic term — stays
     * ~constant as density grows, instead of growing linearly the way
-    * a fixed 30° literal would (the superlinear regime ScaleCheck
-    * pins for pinned nlist).
+    * a fixed 30° literal would (the superlinear regime measured for
+    * pinned nlist; receipts: scalecheck_r*.json).
     */
   private[graft] def gridCols(n: Long): Int = {
     var k = 12
@@ -293,9 +293,8 @@ object GeoOps {
     floor((c * 2 + 180) * k / 720).cast("int")
 
   /** The g09 core over an arbitrary (c_custkey, lon, lat) points
-    * frame with a k-column grid (square cells of 360/k degrees) —
-    * shared with ScaleCheck's spatial-grid density probe. Cell ids
-    * are exact: lon/lat are integer+0.5, so 2·lon+360 is an exact
+    * frame with a k-column grid (square cells of 360/k degrees).
+    * Cell ids are exact: lon/lat are integer+0.5, so 2·lon+360 is an exact
     * integer-valued double and floor((2·lon+360)·k/720) is the same
     * in both engines (k=12 reduces to the historical
     * floor((lon+180)/30)).

@@ -255,9 +255,9 @@ object TextOps {
        |ORDER BY d1, d2""".stripMargin
 
   /** DuckDB twin of the s05 streaming ingest-dedup loop
-    * ([[graft.streaming.EventStreams.replayIngestDedup]]). SEQUENTIAL
-    * multi-batch semantics are expressible as a fixed-depth CTE chain
-    * (no recursion): within a batch, ANY lower-id verified partner
+    * ([[graft.streaming.EventStreams.replayIngestDedupWithStats]]).
+    * SEQUENTIAL multi-batch semantics are expressible as a fixed-depth
+    * CTE chain (no recursion): within a batch, ANY lower-id verified partner
     * drops a doc (kept or not), so kept_i depends only on kept_{j<i}.
     * A batch-i doc is dropped iff a verified band-candidate pair links
     * it to the corpus (id < [[IncrementalCorpusMaxId]]), to a KEPT doc
@@ -3198,10 +3198,9 @@ object TextOps {
     * shuffle key into budget-sized keys refined in parallel —
     * per-task work linear in the cell, the blocking-scheme floor,
     * since an indistinguishable cell's pairs are genuine candidates
-    * that must be compared somewhere. ScaleCheck's fuzzy_skew /
-    * fuzzy_conc / fuzzy_conc4 probes measure every regime — flat,
-    * banded, key4-escalated, full-ladder — on a 30%-hot registry, a
-    * prefix-AND-length-concentrated one, and a 4-shared-leading-
+    * that must be compared somewhere. Every regime — flat, banded,
+    * key4-escalated, full-ladder — was priced on a 30%-hot registry,
+    * a prefix-AND-length-concentrated one, and a 4-shared-leading-
     * chars one (receipts: scalecheck_r17.json, scalecheck_r18.json).
     *
     * MAXIMAL-PREFIX RUNG (r19): the k=32/64 extension of the conc4
@@ -3220,8 +3219,8 @@ object TextOps {
   private[graft] def fuzzyResolveOf(clean: DataFrame,
       dirty: DataFrame, lengthBand: Boolean = true,
       hotBudget: Int = FuzzyHotBudget,
-      // probe-only regime switches (ScaleCheck prices each ladder
-      // rung; production and the oracle always run the full ladder)
+      // TextSpec's reference regimes (production and the oracle
+      // always run the full ladder)
       deepKey: Boolean = true, saltHot: Boolean = true,
       maxKey: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -3704,22 +3703,19 @@ object TextOps {
   /** Candidate grams surviving the broadcast Bloom gate — exposed so
     * the spec can receipt the map-side reduction (survivors ≈ true
     * overlap + fpp·rest, never the full candidate volume). The sketch
-    * is sized from `refItems` when the caller provides one — the
-    * 100 TB path, where the item count comes from table statistics
-    * rather than a counting pass (exercised by the ScaleCheck
-    * `bloom_decon` probe) — and falls back to one count pass over the
-    * reference occurrences otherwise (an upper bound on distinct
-    * grams either way, so realized fpp ≤ [[BloomFpp]]). No false
+    * is sized by one count pass over the reference occurrences (an
+    * upper bound on distinct grams, so realized fpp ≤ [[BloomFpp]]).
+    * At 100 TB the item count could come from table statistics
+    * instead of the counting pass. No false
     * negatives is the Bloom invariant the verify join's exactness
     * rests on — an UNDER-sized sketch would only raise fpp, never
     * drop a true positive.
     */
   private[graft] def bloomSurvivors(s: SparkSession,
       ref: org.apache.spark.sql.DataFrame,
-      cand: org.apache.spark.sql.DataFrame,
-      refItems: Option[Long] = None)
+      cand: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val nRef = refItems.getOrElse(ref.count())
+    val nRef = ref.count()
     val bf = ref.stat.bloomFilter("g", math.max(nRef, 1L), BloomFpp)
     val bfb = s.sparkContext.broadcast(bf)
     val mightContain =

@@ -949,11 +949,10 @@ object VectorOps {
     * a TakeOrderedAndProject top-n + a driver collect bounded at
     * [[IvfIntNlist]]·40 rows regardless of corpus size.
     */
-  private def intTrainSample(fe: DataFrame,
-      nlist: Int = IvfIntNlist): Array[Array[Long]] =
+  private def intTrainSample(fe: DataFrame): Array[Array[Long]] =
     fe.orderBy(graft.operators.Sampling.portableBucket(col("vec_id")),
         col("vec_id"))
-      .limit(nlist * 40)
+      .limit(IvfIntNlist * 40)
       .select("qv").collect().map(_.getSeq[Long](0).toArray)
 
   /** v12 — IVF with an integer-exact coarse quantizer: fixed-point
@@ -1420,24 +1419,10 @@ object VectorOps {
     * localCheckpoint lineage cut would otherwise hide. Caller owns the
     * returned `assigned` cache.
     */
-  /** The snapped-grid embedding frame (vec_id, qv) — exposed for the
-    * ScaleCheck probe, which builds k× replica corpora on the grid.
-    */
-  private[graft] def fixedEmbFrame(s: SparkSession, d: String): DataFrame =
-    fixedEmb(s, d)
-
   private[graft] def knnGraphRanked(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) =
-    knnGraphRankedOf(fixedEmb(s, d), IvfIntNlist, IvfIntIters)
-
-  /** v20's edge build parameterized by the snapped frame and the cell
-    * count — the ScaleCheck probe varies nlist with corpus size to
-    * demonstrate the constant-cell-width claim empirically.
-    */
-  private[graft] def knnGraphRankedOf(fe: DataFrame, nlist: Int,
-      iters: Int): (DataFrame, DataFrame) = {
-    val s = fe.sparkSession
-    val cents = intKmeansFit(intTrainSample(fe, nlist), nlist, iters)
+      : (DataFrame, DataFrame) = {
+    val fe = fixedEmb(s, d)
+    val cents = intKmeansFit(intTrainSample(fe), IvfIntNlist, IvfIntIters)
     val bc = s.sparkContext.broadcast(cents)
     val cellUdf = udf { (v: Seq[Long]) =>
       nearestCellInt(bc.value, v.toArray)

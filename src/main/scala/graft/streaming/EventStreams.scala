@@ -37,6 +37,11 @@ object EventStreams {
     * data scan) and adapts: raw INT64 nanos get the div-1000 shim;
     * native TIMESTAMP(MICROS) (tz'd or NTZ) streams as timestamp and is
     * normalized to TimestampType (identity under the UTC session tz).
+    *
+    * `spark.sql.legacy.parquet.nanosAsLong` is set on the caller's
+    * session and never restored, as in [[graft.Tables.events]]: the
+    * parquet scan reads it lazily, when each micro-batch executes, so
+    * it cannot be scoped to this call.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -83,8 +88,8 @@ object EventStreams {
     * scale path: Complete mode retains every window's state forever and
     * the memory sink holds the whole result on the driver — fine as an
     * oracle harness, wrong at 100× the window × key cardinality. The
-    * declared s01 path is [[replayHourlyAppend]] (watermark + append +
-    * eviction); no production caller may use this helper.
+    * declared s01 path is [[replayHourlyAppendWithStats]] (watermark +
+    * append + eviction); no production caller may use this helper.
     */
   private[graft] def replayHourlyComplete(spark: SparkSession,
       dir: String): DataFrame = {
@@ -109,11 +114,8 @@ object EventStreams {
     * and batch/oracle results. StreamingSpec asserts the equality AND
     * that eviction actually happened (final state rows ≪ emitted
     * windows).
-    */
-  def replayHourlyAppend(spark: SparkSession, dir: String): DataFrame =
-    replayHourlyAppendWithStats(spark, dir)._1
-
-  /** Append replay plus the state-store row count after the final
+    *
+    * Returns the readout plus the state-store row count after the final
     * micro-batch (for the eviction assertion).
     */
   def replayHourlyAppendWithStats(spark: SparkSession, dir: String)
@@ -177,12 +179,9 @@ object EventStreams {
     * transparent error. Not declared: the estimate is approximate by
     * design (s13's exact form carries the q45 oracle); StreamingSpec
     * asserts the state bound and the estimate's HLL-σ accuracy.
-    */
-  def replayRollingActivesSketch(spark: SparkSession, dir: String)
-      : DataFrame = replayRollingActivesSketchWithStats(spark, dir)._1
-
-  /** s13b plus the state-store row total after the final micro-batch
-    * (≤ open windows × registers — the eviction assertion).
+    *
+    * Returns the readout plus the state-store row total after the final
+    * micro-batch (≤ open windows × registers — the eviction assertion).
     */
   def replayRollingActivesSketchWithStats(spark: SparkSession,
       dir: String): (DataFrame, Long) = {
@@ -254,23 +253,6 @@ object EventStreams {
     drain(q)
     spark.table(qn).orderBy("conv_id", "touch_type", "touch_s")
   }
-
-  /** s14b — the deployment-watermark twin of s14 (bench-only): the
-    * same user-keyed 24 h interval join replayed with 25 H watermarks
-    * (the join band plus a 1 h disorder allowance) over a TIME-ORDERED
-    * staged arrival (ascending event-time file spans, one per
-    * micro-batch — production ingest order), so the engine provably
-    * EVICTS join state during the replay: a touch older than
-    * watermark − 24 h can never match a future conversion and its
-    * state row is dropped, keeping state O(events per ~2-day horizon)
-    * instead of s14's replay-wide retention. The interval-join
-    * watermark contract preserves EXACTNESS — no match is missed, the
-    * emitted pair set is identical to s14's (StreamingSpec asserts
-    * both the equality and the eviction) — this twin exists to PRICE
-    * the evicting configuration next to the unbounded-state one.
-    */
-  def replayAttributionPairsTight(spark: SparkSession, dir: String)
-      : DataFrame = replayAttributionPairsTightWithStats(spark, dir)._1
 
   /** Session-lifetime memo for every staged replay input (r20
     * optimization, guide §1.4/§6): every replay harness used to
@@ -677,9 +659,6 @@ object EventStreams {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  /** s14b plus the join-state row total after the final micro-batch
-    * (≪ conv+touch row count — the eviction assertion).
-    */
   /** s14c (bench-only) — s14b on the ROCKSDB state-store provider:
     * the backend this join actually deploys with at 100 TB. The
     * default HDFS-backed provider keeps every live state row ON-HEAP
@@ -691,12 +670,9 @@ object EventStreams {
     * the stream's [[withStreamShuffle]] window, restored after its
     * start) — so the bench pair prices exactly the
     * backend swap. The emitted pair set is backend-independent
-    * (StreamingSpec asserts equality with s14b).
+    * (StreamingSpec asserts equality with s14b). Returns what
+    * [[replayAttributionPairsTightWithStats]] returns.
     */
-  def replayAttributionPairsTightRocks(spark: SparkSession,
-      dir: String): DataFrame =
-    replayAttributionPairsTightRocksWithStats(spark, dir)._1
-
   def replayAttributionPairsTightRocksWithStats(spark: SparkSession,
       dir: String): (DataFrame, Long) =
     replayAttributionPairsTightWithStats(spark, dir,
@@ -713,6 +689,23 @@ object EventStreams {
         "spark.sql.streaming.stateStore.rocksdb." +
           "changelogCheckpointing.enabled" -> "true"))
 
+  /** s14b — the deployment-watermark twin of s14 (bench-only): the
+    * same user-keyed 24 h interval join replayed with 25 H watermarks
+    * (the join band plus a 1 h disorder allowance) over a TIME-ORDERED
+    * staged arrival (ascending event-time file spans, one per
+    * micro-batch — production ingest order), so the engine provably
+    * EVICTS join state during the replay: a touch older than
+    * watermark − 24 h can never match a future conversion and its
+    * state row is dropped, keeping state O(events per ~2-day horizon)
+    * instead of s14's replay-wide retention. The interval-join
+    * watermark contract preserves EXACTNESS — no match is missed, the
+    * emitted pair set is identical to s14's (StreamingSpec asserts
+    * both the equality and the eviction) — this twin exists to PRICE
+    * the evicting configuration next to the unbounded-state one.
+    *
+    * Returns the readout plus the join-state row total after the final
+    * micro-batch (≪ conv+touch row count — the eviction assertion).
+    */
   def replayAttributionPairsTightWithStats(spark: SparkSession,
       dir: String, nBatches: Int = 10, qnSuffix: String = "",
       // backend-based width floor (r21): the RocksDB twin passes 2 —
@@ -777,12 +770,9 @@ object EventStreams {
     * oracle. Output slices to sessions ending before the same
     * 2024-01-03 horizon s01 uses — all finalized under the replay's
     * watermark — so the append result is complete and deterministic.
-    */
-  def replaySessionWindows(spark: SparkSession, dir: String): DataFrame =
-    replaySessionWindowsWithStats(spark, dir)._1
-
-  /** s15 plus the state-store row count after the final micro-batch
-    * (open-session rows only — the eviction assertion).
+    *
+    * Returns the readout plus the state-store row count after the final
+    * micro-batch (open-session rows only — the eviction assertion).
     */
   def replaySessionWindowsWithStats(spark: SparkSession, dir: String)
       : (DataFrame, Long) = {
@@ -813,32 +803,6 @@ object EventStreams {
       .filter(col("session_end") < "2024-01-03 00:00:00")
       .orderBy("user_id", "session_start"), stateRows)
   }
-
-  /** s16 — STREAMING CHANGELOG COMPACTION (incremental materialized
-    * view maintenance, the streaming twin of batch q46): the events
-    * log replayed as time-ordered ingest batches through a
-    * `foreachBatch` MERGE loop that maintains a compacted
-    * current-state artifact — each batch is aggregated to one
-    * candidate row per touched key (struct-max latest + counters),
-    * then merged with the previous state by the SAME commutative
-    * aggregation, and the result replaces the TOUCHED user-bucket
-    * partitions of the artifact (staged write + manifest-journaled
-    * partition swap over a bucket-partitioned state — see
-    * runArtifactMergeLoop's bucketed mode).
-    * This is the lakehouse `MERGE INTO` maintenance shape:
-    * per-batch cost is O(|batch| + state[touched buckets]) with a
-    * keyed shuffle only — the log is never re-read, no window sort
-    * ever happens, untouched users are never read or rewritten, and
-    * the artifact stays key-cardinality-sized no matter how much log
-    * flows through. The streaming engine's own state store carries NOTHING
-    * (stateless foreachBatch) — the artifact IS the state, which is
-    * what makes the loop restartable from the last committed batch.
-    * Struct-max + count + sum all commute across any batch slicing,
-    * so the final artifact equals batch q46 exactly — q46's oracle
-    * verifies the whole loop.
-    */
-  def replayChangelogCompact(spark: SparkSession, dir: String)
-      : DataFrame = replayChangelogCompactWithStats(spark, dir)._1
 
   /** The s16/s24 compaction merge, folding (state ∪ batch-agg) per
     * user. The value sum rides through the loop as exact BIGINT
@@ -896,6 +860,29 @@ object EventStreams {
         "last_value", "n_events", "lifetime_value")
       .orderBy("user_id")
 
+  /** s16 — STREAMING CHANGELOG COMPACTION (incremental materialized
+    * view maintenance, the streaming twin of batch q46): the events
+    * log replayed as time-ordered ingest batches through a
+    * `foreachBatch` MERGE loop that maintains a compacted
+    * current-state artifact — each batch is aggregated to one
+    * candidate row per touched key (struct-max latest + counters),
+    * then merged with the previous state by the SAME commutative
+    * aggregation, and the result replaces the TOUCHED user-bucket
+    * partitions of the artifact (staged write + manifest-journaled
+    * partition swap over a bucket-partitioned state — see
+    * runArtifactMergeLoop's bucketed mode).
+    * This is the lakehouse `MERGE INTO` maintenance shape:
+    * per-batch cost is O(|batch| + state[touched buckets]) with a
+    * keyed shuffle only — the log is never re-read, no window sort
+    * ever happens, untouched users are never read or rewritten, and
+    * the artifact stays key-cardinality-sized no matter how much log
+    * flows through. The streaming engine's own state store carries NOTHING
+    * (stateless foreachBatch) — the artifact IS the state, which is
+    * what makes the loop restartable from the last committed batch.
+    * Struct-max + count + sum all commute across any batch slicing,
+    * so the final artifact equals batch q46 exactly — q46's oracle
+    * verifies the whole loop.
+    */
   def replayChangelogCompactWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 10): (DataFrame, Long) = {
     val work = java.nio.file.Files.createTempDirectory("graft-s16")
@@ -913,10 +900,10 @@ object EventStreams {
       // NOTE (r13 VERDICT item 7): at sf0.1 this costs MORE than the
       // chained full rewrite it replaced (~6.3 s vs ~3.7 s min-of-3) —
       // 8 buckets over ~150 users is pure partitioning overhead at toy
-      // scale. That trade is deliberate: the ScaleCheck probes show
-      // per-batch cost tracking touched buckets, which is the shape
-      // that survives key cardinality growing with the corpus. Do not
-      // "optimize" this back to the full rewrite on bench numbers.
+      // scale. That trade is deliberate: per-batch cost tracks the
+      // touched buckets (receipts: scalecheck_r*.json), which is the
+      // shape that survives key cardinality growing with the corpus.
+      // Do not "optimize" this back to the full rewrite on bench numbers.
       val (artifact, stateRows) =
         runUserStateLoop(spark, work.getAbsolutePath, srcDir)
       // empty-source fallback: the compaction of zero batches is the
@@ -953,13 +940,10 @@ object EventStreams {
     * generation leaf dirs under one basePath); what it buys at 100 TB
     * is audit/debug reads of "the state the last decision was made
     * on" while the artifact keeps updating, without any copy.
-    */
-  def replayTimeTravelCompact(spark: SparkSession, dir: String)
-      : DataFrame = replayTimeTravelCompactWithStats(spark, dir)._1
-
-  /** s24 plus the resolved as-of batch id for the StreamingSpec
-    * assertion (must be nBatches − 2: a genuinely SUPERSEDED
-    * snapshot, not the head).
+    *
+    * Returns the readout plus the resolved as-of batch id for the
+    * StreamingSpec assertion (must be nBatches − 2: a genuinely
+    * SUPERSEDED snapshot, not the head).
     */
   def replayTimeTravelCompactWithStats(spark: SparkSession,
       dir: String, nBatches: Int = 10): (DataFrame, Long) = {
@@ -1020,12 +1004,9 @@ object EventStreams {
     * the added/changed classification (n can only grow under the
     * merge, so changed ⟺ n_new > n_old; the compaction never
     * removes users, so there is no 'removed' class by construction).
-    */
-  def replayVersionDiff(spark: SparkSession, dir: String): DataFrame =
-    replayVersionDiffWithStats(spark, dir)._1
-
-  /** s26 plus (bOld, changed-partition count) for the StreamingSpec
-    * assertion.
+    *
+    * Returns the readout plus (bOld, changed-partition count) for the
+    * StreamingSpec assertion.
     */
   def replayVersionDiffWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 10): (DataFrame, (Long, Int)) = {
@@ -1106,12 +1087,10 @@ object EventStreams {
     * replacement makes composition exact by construction: applying
     * (b→b+1) then (b+1→b+2) lands on b+2's committed bytes, byte
     * for byte, regardless of how the merge re-aggregated inside.
-    */
-  def replayCdcCompose(spark: SparkSession, dir: String): DataFrame =
-    replayCdcComposeWithStats(spark, dir)._1
-
-  /** s29 plus (first reconstructed batch, per-step changed-bucket
-    * counts, total buckets) for the StreamingSpec assertions.
+    *
+    * Returns the readout plus (first reconstructed batch, per-step
+    * changed-bucket counts, total buckets) for the StreamingSpec
+    * assertions.
     */
   def replayCdcComposeWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 10): (DataFrame, (Long, Seq[Int], Int)) = {
@@ -1157,6 +1136,36 @@ object EventStreams {
     } finally deleteRecursively(work)
   }
 
+  /** Slice index (of 10) where the s30 redeploy happens: late enough
+    * that the PRE-deploy snapshot v(evoAt−1) is still inside the
+    * retention window for the spec's old-schema as-of assertion.
+    */
+  private[graft] val EvoSliceOfTen = 8
+
+  /** cents of one event — exact integer money (the s16 convention). */
+  private def eventCents = round(col("value") * 100).cast("long")
+
+  private def preAggEvoOld(df: DataFrame): DataFrame =
+    df.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_events"), sum(eventCents).as("cents"))
+
+  private val evoOldMerge = ArtifactMerge("user_id",
+    sum("n_events").as("n_events"), sum("cents").as("cents"))
+
+  private def preAggEvoNew(df: DataFrame): DataFrame =
+    df.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_events"), sum(eventCents).as("cents"),
+        max(eventCents).as("max_cents"))
+
+  /** The evolved merge: a pre-deploy `prev` (old stamp, no
+    * max_cents) enters the loop's union with the column null-filled
+    * — null is the identity of max, so old users pick up a max the
+    * first time a post-deploy event arrives and stay null otherwise.
+    */
+  private val evoNewMerge = ArtifactMerge("user_id",
+    sum("n_events").as("n_events"), sum("cents").as("cents"),
+    max("max_cents").as("max_cents"))
+
   /** s30 — SCHEMA EVOLUTION of the maintained artifact (the last
     * table-format read-family member after current / as-of / diff /
     * compose: "the pipeline was REDEPLOYED with new columns, without
@@ -1189,42 +1198,9 @@ object EventStreams {
     * null-fill end-to-end. The per-user max commutes across batches
     * and merges (max is associative; prev's null means "nothing
     * yet"), so the artifact equals the oracle under any slicing.
-    */
-  def replaySchemaEvolution(spark: SparkSession, dir: String)
-      : DataFrame = replaySchemaEvolutionWithStats(spark, dir)._1
-
-  /** Slice index (of 10) where the s30 redeploy happens: late enough
-    * that the PRE-deploy snapshot v(evoAt−1) is still inside the
-    * retention window for the spec's old-schema as-of assertion.
-    */
-  private[graft] val EvoSliceOfTen = 8
-
-  /** cents of one event — exact integer money (the s16 convention). */
-  private def eventCents = round(col("value") * 100).cast("long")
-
-  private def preAggEvoOld(df: DataFrame): DataFrame =
-    df.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(eventCents).as("cents"))
-
-  private val evoOldMerge = ArtifactMerge("user_id",
-    sum("n_events").as("n_events"), sum("cents").as("cents"))
-
-  private def preAggEvoNew(df: DataFrame): DataFrame =
-    df.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(eventCents).as("cents"),
-        max(eventCents).as("max_cents"))
-
-  /** The evolved merge: a pre-deploy `prev` (old stamp, no
-    * max_cents) enters the loop's union with the column null-filled
-    * — null is the identity of max, so old users pick up a max the
-    * first time a post-deploy event arrives and stay null otherwise.
-    */
-  private val evoNewMerge = ArtifactMerge("user_id",
-    sum("n_events").as("n_events"), sum("cents").as("cents"),
-    max("max_cents").as("max_cents"))
-
-  /** s30 plus (head artifact columns, as-of-pre-deploy columns) for
-    * the StreamingSpec schema assertions.
+    *
+    * Returns the readout plus (head artifact columns, as-of-pre-deploy
+    * columns) for the StreamingSpec schema assertions.
     */
   def replaySchemaEvolutionWithStats(spark: SparkSession,
       dir: String, nBatches: Int = 10)
@@ -1268,6 +1244,9 @@ object EventStreams {
     } finally deleteRecursively(work)
   }
 
+  /** Slice index (of 10) after which the s31 compaction runs. */
+  private[graft] val CompactSliceOfTen = 7
+
   /** s31 — COMPACTION IN A LIVE LIFECYCLE (the declared surface of
     * [[compactArtifact]]): the s16 changelog-compaction loop runs
     * through slice 7 of 10, the artifact is compacted — every
@@ -1285,20 +1264,13 @@ object EventStreams {
     * as-of reads resolving their ORIGINAL generations across a
     * compaction, the file/generation collapse, crash-mid-compaction
     * recovery — are StreamingSpec's, on purpose-built artifacts.
-    */
-  def replayCompaction(spark: SparkSession, dir: String): DataFrame =
-    replayCompactionWithStats(spark, dir)._1
-
-  /** Slice index (of 10) after which the s31 compaction runs. */
-  private[graft] val CompactSliceOfTen = 7
-
-  /** s31 plus (head batch when compaction ran, the compacted
-    * snapshot's distinct generation ids, head batch after the
+    *
+    * Returns the readout plus (head batch when compaction ran, the
+    * compacted snapshot's distinct generation ids, head batch after the
     * resumed deployment) for the StreamingSpec assertions: the
-    * generation set must be one id at-or-above
-    * [[CompactionGenFloor]], and the marker must sit at
-    * compactAt−1 / nBatches−1 respectively — compaction moves
-    * generations, never the batch clock.
+    * generation set must be one id at-or-above [[CompactionGenFloor]],
+    * and the marker must sit at compactAt−1 / nBatches−1 respectively —
+    * compaction moves generations, never the batch clock.
     */
   def replayCompactionWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 10): (DataFrame, (Long, Seq[Long], Long)) = {
@@ -1352,12 +1324,10 @@ object EventStreams {
     * spec-mismatch refusal, the old-layout as-of read, and the
     * shrink direction are StreamingSpec's, on purpose-built
     * artifacts.
-    */
-  def replayRebucket(spark: SparkSession, dir: String): DataFrame =
-    replayRebucketWithStats(spark, dir)._1
-
-  /** s32 plus ((spec, partition count) before, (spec, partition
-    * count) after the respec) for the StreamingSpec assertions.
+    *
+    * Returns the readout plus ((spec, partition count) before, (spec,
+    * partition count) after the respec) for the StreamingSpec
+    * assertions.
     */
   def replayRebucketWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 10)
@@ -1414,15 +1384,12 @@ object EventStreams {
     * carries a wrong footer count), and the footer statistics agree
     * with full recomputation (a count that double-reads superseded
     * generations breaks it).
-    */
-  def replayArtifactManifest(spark: SparkSession, dir: String)
-      : DataFrame = replayArtifactManifestWithStats(spark, dir)._1
-
-  /** s33 plus (retained snapshot ids, distinct footers opened) for
-    * the StreamingSpec assertions: the retained set must be exactly
-    * the last [[SnapshotHistoryRetention]] + 1 committed batches,
-    * and every footer-derived count must agree with the data-scan
-    * second leg ([[readCommittedAsOf]] count per snapshot).
+    *
+    * Returns the readout plus (retained snapshot ids, distinct footers
+    * opened) for the StreamingSpec assertions: the retained set must be
+    * exactly the last [[SnapshotHistoryRetention]] + 1 committed
+    * batches, and every footer-derived count must agree with the
+    * data-scan second leg ([[readCommittedAsOf]] count per snapshot).
     */
   def replayArtifactManifestWithStats(spark: SparkSession,
       dir: String, nBatches: Int = 10)
@@ -1441,8 +1408,8 @@ object EventStreams {
     } finally deleteRecursively(work)
   }
 
-  /** The manifest derivation [[replayArtifactManifest]] declares,
-    * reusable against any swap-managed artifact: resolve each
+  /** The manifest derivation [[replayArtifactManifestWithStats]]
+    * declares, reusable against any swap-managed artifact: resolve each
     * retained snapshot's pinned generation leaf dirs driver-side
     * (the same explicit-leaf resolution every reader of this format
     * does — the listing is manifest-sized, retained snapshots ×
@@ -1562,12 +1529,9 @@ object EventStreams {
     * applied to the quality cascade: verdicts are final at admission
     * time, admitted documents are never rescanned, the engine state
     * store carries nothing, and per-batch cost is t39-of-batch-size.
-    */
-  def replayQualityGate(spark: SparkSession, dir: String): DataFrame =
-    replayQualityGateWithStats(spark, dir)._1
-
-  /** s18 plus the engine state-store row total (must be 0) for the
-    * StreamingSpec assertion.
+    *
+    * Returns the readout plus the engine state-store row total (must be
+    * 0) for the StreamingSpec assertion.
     */
   def replayQualityGateWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 4): (DataFrame, Long) =
@@ -1587,12 +1551,9 @@ object EventStreams {
     * verifies the loop; the engine state store carries nothing and
     * per-batch cost is encode-of-batch-size (the token-id artifact a
     * loader reads is current after every batch, never recomputed).
-    */
-  def replayBpeEncode(spark: SparkSession, dir: String): DataFrame =
-    replayBpeEncodeWithStats(spark, dir)._1
-
-  /** s19 plus the engine state-store row total (must be 0) for the
-    * StreamingSpec assertion.
+    *
+    * Returns the readout plus the engine state-store row total (must be
+    * 0) for the StreamingSpec assertion.
     */
   def replayBpeEncodeWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 4): (DataFrame, Long) = {
@@ -1615,12 +1576,9 @@ object EventStreams {
     * verdicts are final at admission. Every rule is per-pair, so the
     * union over batches equals batch m18 EXACTLY and m18's oracle
     * verifies the loop; engine state store carries nothing.
-    */
-  def replayPairGate(spark: SparkSession, dir: String): DataFrame =
-    replayPairGateWithStats(spark, dir)._1
-
-  /** s20 plus the engine state-store row total (must be 0) for the
-    * StreamingSpec assertion.
+    *
+    * Returns the readout plus the engine state-store row total (must be
+    * 0) for the StreamingSpec assertion.
     */
   def replayPairGateWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 4): (DataFrame, Long) =
@@ -1641,12 +1599,9 @@ object EventStreams {
     * never rescanned, and the verdict artifact (counts + review
     * flag + fingerprint) is current after every batch. Engine state
     * store carries nothing; per-batch cost is t46-of-batch-size.
-    */
-  def replayPiiGate(spark: SparkSession, dir: String): DataFrame =
-    replayPiiGateWithStats(spark, dir)._1
-
-  /** s23 plus the engine state-store row total (must be 0) for the
-    * StreamingSpec assertion.
+    *
+    * Returns the readout plus the engine state-store row total (must be
+    * 0) for the StreamingSpec assertion.
     */
   def replayPiiGateWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 4): (DataFrame, Long) =
@@ -1671,12 +1626,9 @@ object EventStreams {
     * the engine state store carries nothing and per-batch cost is
     * score-of-batch-size. Documents under 2 tokens carry no bigram
     * evidence and sit out, the batch t48 boundary.
-    */
-  def replayDsirGate(spark: SparkSession, dir: String): DataFrame =
-    replayDsirGateWithStats(spark, dir)._1
-
-  /** s27 plus the engine state-store row total (must be 0) for the
-    * StreamingSpec assertion.
+    *
+    * Returns the readout plus the engine state-store row total (must be
+    * 0) for the StreamingSpec assertion.
     */
   def replayDsirGateWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 4): (DataFrame, Long) = {
@@ -1712,12 +1664,9 @@ object EventStreams {
     * and token frequencies are zipfian, so every batch touches
     * nearly every high-frequency token — a bucket-partitioned merge
     * would mark all buckets touched and prune nothing.
-    */
-  def replayVocabMaintain(spark: SparkSession, dir: String): DataFrame =
-    replayVocabMaintainWithStats(spark, dir)._1
-
-  /** s21 plus the engine state-store row total (must be 0) for the
-    * StreamingSpec assertion.
+    *
+    * Returns the readout plus the engine state-store row total (must be
+    * 0) for the StreamingSpec assertion.
     */
   def replayVocabMaintainWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 4): (DataFrame, Long) = {
@@ -1775,12 +1724,9 @@ object EventStreams {
     * loop; the engine state store carries nothing (stateless
     * projection), and partition pruning over the streamed directories
     * works exactly as over q51's batch staging.
-    */
-  def replayPartitionedIngest(spark: SparkSession, dir: String)
-      : DataFrame = replayPartitionedIngestWithStats(spark, dir)._1
-
-  /** s22 plus the engine state-store row total (must be 0) for the
-    * StreamingSpec assertion.
+    *
+    * Returns the readout plus the engine state-store row total (must be
+    * 0) for the StreamingSpec assertion.
     */
   def replayPartitionedIngestWithStats(spark: SparkSession,
       dir: String, nBatches: Int = 10): (DataFrame, Long) = {
@@ -2389,11 +2335,8 @@ object EventStreams {
     * satisfies that precondition; a production deployment sizes the
     * watermark to its real disorder bound. Memory sink only to collect
     * the verify dump.
-    */
-  def replayDedupAppend(spark: SparkSession, dir: String): DataFrame =
-    replayDedupAppendWithStats(spark, dir)._1
-
-  /** Dedup replay plus the state-store row count after the final
+    *
+    * Returns the readout plus the state-store row count after the final
     * micro-batch (for the StreamingSpec state assertion).
     */
   def replayDedupAppendWithStats(spark: SparkSession, dir: String)
@@ -2415,33 +2358,6 @@ object EventStreams {
       .filter(col("minute_start") < "2024-01-03 00:00:00")
       .orderBy("event_type", "minute_start"), stateRows)
   }
-
-  /** s03 — streaming NEAR-dup candidate detection: documents stream
-    * through the portable MinHash band kernel map-side (no pre-state
-    * aggregation — Structured Streaming allows one stateful operator
-    * here), then `flatMapGroupsWithState` keyed by (band, bucket) holds
-    * the doc ids seen per bucket and emits a candidate pair the moment
-    * a second doc lands in a bucket — the streaming half of the t15
-    * ingest loop (verify/drop stays a batch decision on the emitted
-    * candidates). STATE SIZE: one id-list per occupied bucket with
-    * NoTimeout — every doc contributes its id to each of its 8 band
-    * buckets forever, so total state is O(corpus) (≈ nBands rows per
-    * doc; each individual list is cluster-sized, but the number of
-    * occupied buckets grows with the corpus). At 100 TB this demands
-    * either a state TTL — available on [[nearDupPairs]] via
-    * `stateTtlMs` (evicts buckets idle past the dedup horizon; the
-    * replay keeps NoTimeout so its full-corpus pair set stays
-    * oracle-matched) — or the shape this engine declares as s05
-    * [[replayIngestDedup]]:
-    * keeping the band state in the persisted index instead of the
-    * state store, where per-batch cost is batch-sized and the state
-    * store stays empty. Deterministic as a SET: exactly the pairs of
-    * the batch band self-join, so the replay is oracled against the
-    * same bands CTE the t06/t16 oracles use (the final slice dedups
-    * multi-band repeats and orders).
-    */
-  def replayNearDupCandidates(spark: SparkSession, dir: String)
-      : DataFrame = replayNearDupCandidatesWithStats(spark, dir)._1
 
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType),
@@ -2525,6 +2441,30 @@ object EventStreams {
       out.iterator
   }
 
+  /** s03 — streaming NEAR-dup candidate detection: documents stream
+    * through the portable MinHash band kernel map-side (no pre-state
+    * aggregation — Structured Streaming allows one stateful operator
+    * here), then `flatMapGroupsWithState` keyed by (band, bucket) holds
+    * the doc ids seen per bucket and emits a candidate pair the moment
+    * a second doc lands in a bucket — the streaming half of the t15
+    * ingest loop (verify/drop stays a batch decision on the emitted
+    * candidates). STATE SIZE: one id-list per occupied bucket with
+    * NoTimeout — every doc contributes its id to each of its 8 band
+    * buckets forever, so total state is O(corpus) (≈ nBands rows per
+    * doc; each individual list is cluster-sized, but the number of
+    * occupied buckets grows with the corpus). At 100 TB this demands
+    * either a state TTL — available on [[nearDupPairs]] via
+    * `stateTtlMs` (evicts buckets idle past the dedup horizon; the
+    * replay keeps NoTimeout so its full-corpus pair set stays
+    * oracle-matched) — or the shape this engine declares as s05
+    * [[replayIngestDedupWithStats]]:
+    * keeping the band state in the persisted index instead of the
+    * state store, where per-batch cost is batch-sized and the state
+    * store stays empty. Deterministic as a SET: exactly the pairs of
+    * the batch band self-join, so the replay is oracled against the
+    * same bands CTE the t06/t16 oracles use (the final slice dedups
+    * multi-band repeats and orders).
+    */
   def replayNearDupCandidatesWithStats(spark: SparkSession, dir: String)
       : (DataFrame, Long) = {
     val qn = s"stream_neardup_${math.abs(dir.hashCode)}"
@@ -3800,18 +3740,14 @@ object EventStreams {
     * chain, so the WHOLE loop hash-verifies against DuckDB
     * ([[graft.queries.TextOps.ingestDedupOracleSql]]). Batches are the
     * doc-id spans of [[graft.queries.TextOps.IngestBatchBounds]].
-    */
-  def replayIngestDedup(spark: SparkSession, dir: String): DataFrame =
-    // the bench path skips the per-batch delta-count jobs — they are
-    // spec observability, not part of the ingest loop (r20)
-    replayIngestDedupWithStats(spark, dir, collectDeltaRows = false)._1
-
-  /** s05 plus observability for the StreamingSpec assertions: the
-    * state-store row total after the last micro-batch (must be 0 — the
-    * index, not the state store, carries the dedup state) and the
-    * per-batch delta row counts (must be ≤ nBands × batch size — the
-    * proof no batch rewrote the corpus index; skipped when
-    * `collectDeltaRows` is false — one count job per batch).
+    *
+    * Returns the readout plus observability for the StreamingSpec
+    * assertions: the state-store row total after the last micro-batch
+    * (must be 0 — the index, not the state store, carries the dedup
+    * state) and the per-batch delta row counts (must be ≤ nBands ×
+    * batch size — the proof no batch rewrote the corpus index; skipped
+    * when `collectDeltaRows` is false — three jobs per batch: the
+    * footer read and the count's map and result jobs).
     */
   def replayIngestDedupWithStats(spark: SparkSession, dir: String,
       collectDeltaRows: Boolean = true)
@@ -3952,15 +3888,12 @@ object EventStreams {
     * with a real source: per-batch partial counts are map-side, the
     * state update shuffles only sketch-keyed rows, and the quantile
     * walk reads ~5k state rows. StreamingSpec asserts the state bound.
-    */
-  def replayHistQuantiles(spark: SparkSession, dir: String): DataFrame =
-    replayHistQuantilesWithStats(spark, dir)._1
-
-  /** s06 plus the state-store row total after the final micro-batch
-    * (must stay ≤ groups × 1024 — the sketch-sized-state assertion)
-    * and the number of data micro-batches processed (must be > 1, or
-    * the replay degenerates into a single batch and proves nothing
-    * about incremental maintenance).
+    *
+    * Returns the readout plus the state-store row total after the final
+    * micro-batch (must stay ≤ groups × 1024 — the sketch-sized-state
+    * assertion) and the number of data micro-batches processed (must be
+    * > 1, or the replay degenerates into a single batch and proves
+    * nothing about incremental maintenance).
     */
   def replayHistQuantilesWithStats(spark: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
@@ -4024,12 +3957,10 @@ object EventStreams {
     * Scale shape: state is SKETCH-sized (≤ groups × 1024 registers)
     * regardless of input volume; per-batch register projection is
     * map-side; the state update shuffles only sketch-keyed rows.
-    */
-  def replayHllSketch(spark: SparkSession, dir: String): DataFrame =
-    replayHllSketchWithStats(spark, dir)._1
-
-  /** s07 plus the state-store row total (≤ groups × registers) and the
-    * data micro-batch count (> 1, or nothing incremental was proven).
+    *
+    * Returns the readout plus the state-store row total (≤ groups ×
+    * registers) and the data micro-batch count (> 1, or nothing
+    * incremental was proven).
     */
   def replayHllSketchWithStats(spark: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
@@ -4086,17 +4017,12 @@ object EventStreams {
     * This is the production shape of "maintain a held-out set over a
     * growing corpus": at 100 TB the per-batch work is one narrow
     * strata×k read + a batch-sized projection + a strata×k write.
-    */
-  def replayEvalSample(spark: SparkSession, dir: String): DataFrame =
-    // the bench path skips the per-batch sample-count jobs — spec
-    // observability, not part of the maintenance loop (r20)
-    replayEvalSampleWithStats(spark, dir,
-      collectSampleRows = false)._1
-
-  /** s08 plus the state-store row total (must be 0), the data-batch
-    * count (> 1), and the per-batch sample-table row counts (each ≤
-    * strata × k — the bounded-artifact proof; skipped when
-    * `collectSampleRows` is false — one count job per batch).
+    *
+    * Returns the readout plus the state-store row total (must be 0),
+    * the data-batch count (> 1), and the per-batch sample-table row
+    * counts (each ≤ strata × k — the bounded-artifact proof; skipped
+    * when `collectSampleRows` is false — three jobs per batch: the
+    * footer read and the count's map and result jobs).
     */
   def replayEvalSampleWithStats(spark: SparkSession, dir: String,
       collectSampleRows: Boolean = true)
@@ -4182,13 +4108,10 @@ object EventStreams {
     * At 100 TB this is the long-running shape: eval grams are
     * benchmark-sized regardless of corpus, each batch's cost is
     * batch-sized, and nothing ever rescans admitted documents.
-    */
-  def replayDecontaminate(spark: SparkSession, dir: String): DataFrame =
-    replayDecontaminateWithStats(spark, dir)._1
-
-  /** s09 plus the state-store row total (must be 0 — the artifact, not
-    * the state store, carries the memory) and the data-batch count
-    * (> 1, or nothing incremental was proven).
+    *
+    * Returns the readout plus the state-store row total (must be 0 —
+    * the artifact, not the state store, carries the memory) and the
+    * data-batch count (> 1, or nothing incremental was proven).
     */
   def replayDecontaminateWithStats(spark: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
@@ -4268,12 +4191,9 @@ object EventStreams {
     * Scale note: the replay's per-batch join keys the artifact scan by
     * doc_id; a production deployment buckets the fingerprint artifact
     * on doc_id (the q36 layout) so each batch shuffles only itself.
-    */
-  def replaySnapshotDiff(spark: SparkSession, dir: String): DataFrame =
-    replaySnapshotDiffWithStats(spark, dir)._1
-
-  /** s10 plus the state-store row total (must be 0) and the data-batch
-    * count (> 1, or nothing incremental was proven).
+    *
+    * Returns the readout plus the state-store row total (must be 0) and
+    * the data-batch count (> 1, or nothing incremental was proven).
     */
   def replaySnapshotDiffWithStats(spark: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
@@ -4363,12 +4283,9 @@ object EventStreams {
     * narrow band index with the batch bands broadcast into it + a
     * candidate-driven verify — nothing rescans admitted text, and the
     * matrix itself is |sources|² rows.
-    */
-  def replaySourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    replaySourceOverlapWithStats(spark, dir)._1
-
-  /** s11 plus the state-store row total (must be 0) and the data-batch
-    * count (> 1, or nothing incremental was proven).
+    *
+    * Returns the readout plus the state-store row total (must be 0) and
+    * the data-batch count (> 1, or nothing incremental was proven).
     */
   def replaySourceOverlapWithStats(spark: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {

@@ -102,16 +102,13 @@ object VectorStreams {
     *     replayed batch skips whichever swaps already committed.
     * Per-batch cost is O(batch × cell-mates + graph[touched cells]);
     * at 100 TB (nlist ∝ corpus, batch touches ≤ |batch| of them) the
-    * artifact rewrite no longer scales with corpus size. The
-    * ScaleCheck `knn_graph_incr` probe measures this: under
-    * cell-grouped arrival the per-batch rewritten-row count stays
-    * flat while the cumulative graph grows linearly.
-    */
-  def replayKnnGraphIngest(spark: SparkSession, dir: String)
-      : DataFrame = replayKnnGraphIngestWithStats(spark, dir)._1
-
-  /** s17 plus the engine state-store row total (must be 0) for the
-    * StreamingSpec assertion.
+    * artifact rewrite no longer scales with corpus size.
+    * StreamingSpec's "s17 read-side pruning" test pins this: under
+    * cell-grouped arrival the merge scan selects none of the prior
+    * graph's partitions (receipts at scale: scalecheck_r*.json).
+    *
+    * Returns the readout plus the engine state-store row total (must be
+    * 0) for the StreamingSpec assertion.
     */
   def replayKnnGraphIngestWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 4): (DataFrame, Long) = {
@@ -132,12 +129,10 @@ object VectorStreams {
     * quantizer CTEs. Same read-path price as the head read
     * (generation-pinned leaf-dir scan); together with s24 this makes
     * time travel a property of the artifact FORMAT, not of one loop.
-    */
-  def replayKnnGraphAsOf(spark: SparkSession, dir: String)
-      : DataFrame = replayKnnGraphAsOfWithStats(spark, dir)._1
-
-  /** s25 plus the resolved as-of batch id (must be nBatches − 2: a
-    * genuinely superseded snapshot) for the StreamingSpec assertion.
+    *
+    * Returns the readout plus the resolved as-of batch id (must be
+    * nBatches − 2: a genuinely superseded snapshot) for the
+    * StreamingSpec assertion.
     */
   def replayKnnGraphAsOfWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 4): (DataFrame, Long) = {
@@ -173,12 +168,9 @@ object VectorStreams {
     * re-derives the same classification. No 'removed' class by
     * construction: the corpus is append-only and a node's top-k only
     * refines.
-    */
-  def replayKnnGraphDiff(spark: SparkSession, dir: String)
-      : DataFrame = replayKnnGraphDiffWithStats(spark, dir)._1
-
-  /** s28 plus (bOld, changed-partition count, total partitions) for
-    * the StreamingSpec pruned-read assertion.
+    *
+    * Returns the readout plus (bOld, changed-partition count, total
+    * partitions) for the StreamingSpec pruned-read assertion.
     */
   def replayKnnGraphDiffWithStats(spark: SparkSession, dir: String,
       nBatches: Int = 4, cellGrouped: Boolean = false)
@@ -189,9 +181,10 @@ object VectorStreams {
     (r.df, r.diff.getOrElse((bOld, 0, 0)))
   }
 
-  /** Per-batch instrumentation row for the ScaleCheck incremental-
-    * merge probe: cells the batch touched, graph rows rewritten for
-    * them, the cumulative graph size after the merge, and — the
+  /** Per-batch instrumentation row for StreamingSpec's "s17
+    * read-side pruning" test: cells the batch touched, graph rows
+    * rewritten for them, the cumulative graph size after the merge,
+    * and — the
     * READ-side twin of rewrittenRows (r13 VERDICT item 2) — how many
     * partitions of the prior graph artifact the merge's scan
     * actually selected vs how many existed.
@@ -211,10 +204,11 @@ object VectorStreams {
     diff: Option[(Long, Int, Int)])
 
   /** s17 core. `cellGrouped=true` stages arrival so batch i carries
-    * the vectors of cell-group i (the ScaleCheck probe shape — makes
-    * the touched-cell set per batch small and disjoint);
-    * `collectStats=true` counts per-batch rewrite work (extra actions
-    * — probe only, never on the bench path); `asOfBatch` reads the
+    * the vectors of cell-group i (the shape of StreamingSpec's
+    * incremental-merge tests — makes the touched-cell set per batch
+    * small and disjoint); `collectStats=true` counts per-batch
+    * rewrite work (extra actions — spec only, never on the bench
+    * path); `asOfBatch` reads the
     * finished artifact as of that batch (s25); `diffFromBatch` reads
     * the node-level version diff from that batch to the head (s28 —
     * mutually exclusive with `asOfBatch`).
@@ -498,7 +492,7 @@ object VectorStreams {
             // pre-crash, store not) the graph-side counters
             // partitionsRead/partitionsTotal would report the
             // batch's own cells as prior partitions — either way
-            // misreporting the incremental shape to ScaleCheck
+            // misreporting the incremental shape to StreamingSpec
             // (review r14/r15).
             if (collectStats && graphSwapRan && storeSwapRan) {
               // both swaps just committed, so the snapshot exists

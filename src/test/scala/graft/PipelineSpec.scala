@@ -534,6 +534,38 @@ class PipelineSpec extends SparkSpec {
     assert(cache.computeCount === 2)
   }
 
+  test("a stage cache miss forks no chmod, unpartitioned or partitioned") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val rows = spark.range(12).select(col("id"),
+      (col("id") % 3).cast("string").as("cell"))
+    val cacheDir = Files.createTempDirectory("fork-free-cache")
+    val cache = new StageCache(spark, cacheDir.toString)
+    val out = Files.createTempFile("graft-stage-forks", ".jfr")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      // control: the recording sees a fork made on this thread
+      new ProcessBuilder("true").start().waitFor()
+      for (parts <- Seq(Nil, Seq("cell")))
+        cache.stage("rows", "v1", Nil, partitionCols = parts)(rows)
+      assert(cache.computeCount === 2, "both stages must miss")
+    } finally {
+      rec.stop()
+      rec.dump(out)
+      rec.close()
+    }
+    try {
+      val commands = RecordingFile.readAllEvents(out).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command").split(' ').head)
+      assert(commands.contains("true"), "the recording missed the control fork")
+      val chmods = commands.filter(_.endsWith("chmod"))
+      assert(chmods.isEmpty, s"${chmods.size} chmod forks")
+    } finally Files.deleteIfExists(out)
+  }
+
   test("the one-aggregate enrichment equals the window form") {
     import spark.implicits._
     def d(s: String): java.sql.Date = java.sql.Date.valueOf(s)

@@ -287,7 +287,7 @@ class StreamingSpec extends SparkSpec {
     val rocks = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted
     val default = graft.streaming.EventStreams
-      .replayAttributionPairsTight(spark, sf).collect()
+      .replayAttributionPairsTightWithStats(spark, sf)._1.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted
     assert(rocks.nonEmpty)
     assert(rocks.toSeq === default.toSeq,
@@ -472,9 +472,9 @@ class StreamingSpec extends SparkSpec {
           .mkString(" ")
       }
     val oldSig = sigs(graft.streaming.VectorStreams
-      .replayKnnGraphAsOf(spark, sf).collect())
+      .replayKnnGraphAsOfWithStats(spark, sf)._1.collect())
     val newSig = sigs(graft.streaming.VectorStreams
-      .replayKnnGraphIngest(spark, sf).collect())
+      .replayKnnGraphIngestWithStats(spark, sf)._1.collect())
     val want = newSig.toSeq.collect {
       case (v, s) if !oldSig.contains(v) => (v, "added", s)
       case (v, s) if oldSig(v) != s => (v, "changed", s)
@@ -757,9 +757,11 @@ class StreamingSpec extends SparkSpec {
       assert(new java.io.File(fresh).list().count(_.endsWith(".parquet"))
         === 9)
       // s15: offset/commit logs + the state store on executor threads
-      assert(EventStreams.replaySessionWindows(spark, sf).count() > 0)
+      assert(EventStreams.replaySessionWindowsWithStats(spark, sf)._1
+        .count() > 0)
       // s22: file-source and file-sink metadata logs
-      assert(EventStreams.replayPartitionedIngest(spark, sf).count() > 0)
+      assert(EventStreams.replayPartitionedIngestWithStats(spark, sf)._1
+        .count() > 0)
     } finally {
       rec.stop()
       rec.dump(out)
@@ -1162,6 +1164,60 @@ class StreamingSpec extends SparkSpec {
       assert(publishCount.get === 2, "second batch must republish")
       assert(published.get >= 1)
     } finally q.stop()
+  }
+
+  /** Spark jobs started while `f` runs, stream jobs included (a stream
+    * sets its own job group, so the window is bounded by two marker
+    * jobs instead: the bus delivers in order).
+    */
+  private def jobsDuring(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var counting = false
+    val (opened, closed) = (new CountDownLatch(1), new CountDownLatch(1))
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("graft-jobs-open") => counting = true; opened.countDown()
+          case Some("graft-jobs-close") => counting = false; closed.countDown()
+          case _ => if (counting) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    def marker(group: String, latch: CountDownLatch): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(latch.await(60, TimeUnit.SECONDS))
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("graft-jobs-open", opened)
+      f
+      marker("graft-jobs-close", closed)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("SparkEntry's s05 and s08 skip the spec path's per-batch count: " +
+      "three jobs fewer per data batch") {
+    // a first run stages the memoized inputs and the band index
+    val nS05 = EventStreams.replayIngestDedupWithStats(spark, sf)._3.length
+    val s05Entry =
+      jobsDuring(SparkEntry.queries("s05_stream_ingest_dedup")(spark, sf))
+    val s05Spec = jobsDuring(EventStreams.replayIngestDedupWithStats(spark, sf))
+    info(s"s05: $s05Entry entry jobs, $s05Spec spec jobs, $nS05 data batches")
+    val nS08 = EventStreams.replayEvalSampleWithStats(spark, sf)._3.toInt
+    val s08Entry =
+      jobsDuring(SparkEntry.queries("s08_stream_eval_sample")(spark, sf))
+    val s08Spec = jobsDuring(EventStreams.replayEvalSampleWithStats(spark, sf))
+    info(s"s08: $s08Entry entry jobs, $s08Spec spec jobs, $nS08 data batches")
+    // each count re-reads the batch's output: one footer-inference
+    // job, then the count's map and result jobs
+    assert(nS05 > 1)
+    assert(s05Spec - s05Entry === 3 * nS05)
+    assert(nS08 > 1)
+    assert(s08Spec - s08Entry === 3 * nS08)
   }
 
   test("s05 ingest loop: drops equal the sequential batch chain, the " +
