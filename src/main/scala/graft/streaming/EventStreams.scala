@@ -367,23 +367,14 @@ object EventStreams {
     * partition) the commit sum is ~0.3 s and the entry ~10.5 s warm —
     * same emitted pair set, state sized to the data. At 100 TB the
     * SAME rule yields wide state (ceil(bytes / 32 MB), capped at
-    * 65536 — e.g. ~3 000 partitions for a 100 GB backlog), and a
-    * deployment that knows its steady-state rate pins
-    * `SPARK_GRAFT_STREAM_SHUFFLE` explicitly (state partition count
-    * is frozen at first checkpoint, so production sizes it for the
-    * expected horizon, not the bootstrap backlog — documented in
-    * OPTIMIZATION_r20.md).
+    * 65536 — e.g. ~3 000 partitions for a 100 GB backlog).
     */
   private[graft] def streamShufflePartitions(bytes: Long,
-      floor: Int = 1): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
-      .flatMap(v => scala.util.Try(v.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse {
-        val target = 32L << 20
-        math.min(math.max(floor.toLong,
-          (bytes + target - 1) / target), 65536L).toInt
-      }
+      floor: Int = 1): Int = {
+    val target = 32L << 20
+    math.min(math.max(floor.toLong,
+      (bytes + target - 1) / target), 65536L).toInt
+  }
 
   /** Run `f` with `spark.sql.shuffle.partitions` set to the derived
     * streaming width, restoring the session default after. A
@@ -822,7 +813,7 @@ object EventStreams {
   private def runUserStateLoop(spark: SparkSession, base: String,
       src: String, nBuckets: Int = 8): (Option[DataFrame], Long) =
     runArtifactMergeLoop(spark, base, src, stagedEventSchema,
-      nBuckets = Some(nBuckets))(preAggUserState, userStateMerge)
+      nBuckets)(preAggUserState, userStateMerge)
 
   /** Copy the staged slices `r` of `all` into `src`, keeping their
     * mtimes (slice order) — how the redeploy replays (s30/s31/s32)
@@ -898,7 +889,7 @@ object EventStreams {
       // the compaction is key-local — so each batch rewrites only the
       // touched user-buckets of the artifact, never the whole state.
       // NOTE (r13 VERDICT item 7): at sf0.1 this costs MORE than the
-      // chained full rewrite it replaced (~6.3 s vs ~3.7 s min-of-3) —
+      // full rewrite it replaced (~6.3 s vs ~3.7 s min-of-3) —
       // 8 buckets over ~150 users is pure partitioning overhead at toy
       // scale. That trade is deliberate: per-batch cost tracks the
       // touched buckets (receipts: scalecheck_r*.json), which is the
@@ -1177,7 +1168,7 @@ object EventStreams {
     * single event seen since the deploy) to its aggregate and merge.
     *
     * The format makes this safe without any data rewrite
-    * ([[readSnapshotFull]]'s schema stamp): every commit stamps the
+    * ([[Snapshot]]'s schema stamp): every commit stamps the
     * batch's artifact schema into its snapshot, so (a) the HEAD read
     * plans under the evolved schema and generations written before
     * the deploy NULL-FILL the added column (Iceberg add-column
@@ -1217,12 +1208,12 @@ object EventStreams {
       new java.io.File(src).mkdirs()
       copySlices(all, src, 0 until evoAt)
       runArtifactMergeLoop(spark, work.getAbsolutePath, src,
-        stagedEventSchema, nBuckets = Some(8),
+        stagedEventSchema, nBuckets = 8,
         stampSchema = true)(preAggEvoOld, evoOldMerge)
       copySlices(all, src, evoAt until nBatches)
       val (artifact, _) = runArtifactMergeLoop(spark,
         work.getAbsolutePath, src, stagedEventSchema,
-        nBuckets = Some(8), stampSchema = true)(
+        nBuckets = 8, stampSchema = true)(
         preAggEvoNew, evoNewMerge)
       val stateDir = s"${work.getAbsolutePath}/state"
       val asOfCols: Seq[String] =
@@ -1291,7 +1282,7 @@ object EventStreams {
       compactArtifact(spark, stateDir,
         lockBase = Some(work.getAbsolutePath))
       val gensAfter = readSnapshot(stateDir)
-        .map(_._2.values.toSeq.distinct.sorted)
+        .map(_.entries.values.toSeq.distinct.sorted)
         .getOrElse(Seq.empty)
       copySlices(all, src, compactAt until nBatches)
       val (artifact, _) =
@@ -1343,8 +1334,8 @@ object EventStreams {
       runUserStateLoop(spark, work.getAbsolutePath, src)
       val stateDir = s"${work.getAbsolutePath}/state"
       def specAndParts(): (Option[Int], Int) =
-        (readSnapshotSpec(stateDir),
-          readSnapshot(stateDir).map(_._2.size).getOrElse(0))
+        (readSnapshot(stateDir).flatMap(_.spec),
+          readSnapshot(stateDir).map(_.entries.size).getOrElse(0))
       val before = specAndParts()
       rebucketArtifact(spark, stateDir, "user_id", 16,
         lockBase = Some(work.getAbsolutePath))
@@ -1432,17 +1423,16 @@ object EventStreams {
     */
   private[graft] def manifestFromFooters(spark: SparkSession,
       liveDir: String): (DataFrame, Seq[Long], Long) = {
-    val snaps: Seq[(Long, Map[String, Long])] =
-      snapshotHistoryFiles(liveDir)
-        .flatMap(h => parseSnapshotFile(h._2))
+    val snaps = snapshotHistoryFiles(liveDir)
+      .flatMap(h => parseSnapshot(h._2))
     // per-snapshot file lists, resolved driver-side. A retained
     // snapshot pinning a missing or file-less generation dir is the
-    // corruption class snapshotEntriesAsOf refuses loudly (review
+    // corruption class snapshotAsOf refuses loudly (review
     // r20): a silent zero here would serve a plausible-looking
     // undercount instead of the diagnosable failure every other
     // reader of this format gives.
     val filesOf: Seq[(Long, Seq[String])] = snaps.map {
-      case (b, entries) =>
+      case Snapshot(b, entries, _, _) =>
         b -> entries.toSeq.flatMap { case (part, gen) =>
           val leaf = new java.io.File(liveDir, s"$part/g$gen")
           val fs = Option(leaf.listFiles()).getOrElse(Array.empty)
@@ -1479,7 +1469,7 @@ object EventStreams {
       filesOf.map { case (b, fs) => (b, fs.map(countOf).sum) }
     import spark.implicits._
     (counts.toDF("snap_batch", "n_rows").orderBy("snap_batch"),
-      snaps.map(_._1), distinctPaths.size.toLong)
+      snaps.map(_.batch), distinctPaths.size.toLong)
   }
 
   /** s33's oracle, generated from the SAME retention constant the
@@ -1662,8 +1652,10 @@ object EventStreams {
     * here, not an s17-style pruning miss: the vocabulary is bounded
     * by construction (the token universe, further capped at read-out)
     * and token frequencies are zipfian, so every batch touches
-    * nearly every high-frequency token — a bucket-partitioned merge
-    * would mark all buckets touched and prune nothing.
+    * nearly every high-frequency token — more buckets would all be
+    * marked touched and prune nothing, so the loop runs with ONE
+    * bucket: each batch rewrites the whole artifact through the
+    * ordinary partition swap.
     *
     * Returns the readout plus the engine state-store row total (must be
     * 0) for the StreamingSpec assertion.
@@ -1682,7 +1674,7 @@ object EventStreams {
       val docSchema = StructType(
         cols.map { case (n, t) => StructField(n, t) })
       val (artifact, stateRows) = runArtifactMergeLoop(spark, base,
-        srcDir, docSchema)(
+        srcDir, docSchema, nBuckets = 1)(
         // the same encode+count stage as batch t42 over the batch
         // slice (per-batch counts sum exactly — each doc lives in
         // one batch)
@@ -1793,9 +1785,9 @@ object EventStreams {
     * compaction and s21's vocab maintenance): drive the staged files
     * through a stateless AvailableNow file stream, aggregate each
     * non-empty micro-batch with `batchAgg`, fold it into the parquet
-    * artifact with the one `merge` declaration, and return (artifact
-    * if any batch arrived, engine state-store rows — always 0, the
-    * artifact IS the state).
+    * artifact with the one `merge` declaration, and return (the
+    * committed artifact, None while nothing is committed; engine
+    * state-store rows — always 0, the artifact IS the state).
     *
     * CONTRACT: the returned DataFrame is a LAZY read over parquet
     * files living under the caller's `base` temp dir — callers MUST
@@ -1811,17 +1803,16 @@ object EventStreams {
     * each CALL is a fresh deployment; that is the harness's
     * lifecycle choice, not the loop's.
     *
-    * `nBuckets = Some(n)` turns on the CELL-PARTITIONED merge
-    * (s17's treatment, for artifacts whose key cardinality grows
-    * with the corpus — s16's per-user state): the artifact is
-    * partitioned by `bkt = pmod(xxhash64(merge.key), n)`; each
-    * batch collects its TOUCHED bucket set (≤ n, a bounded
-    * driver value), reads ONLY those partitions of the prior
-    * artifact via a static `bkt IN (...)` partition filter
-    * ([[pruneToPartitions]] — plan-gated in PlanSpec), and merges
-    * them with the batch aggregate — valid because the merge is
-    * KEY-LOCAL, so rows in untouched buckets cannot change. The
-    * merge is derived from the declaration as
+    * The artifact is CELL-PARTITIONED (s17's treatment, for
+    * artifacts whose key cardinality grows with the corpus — s16's
+    * per-user state): it is partitioned by `bkt = pmod(xxhash64(
+    * merge.key), nBuckets)`; each batch collects its TOUCHED bucket
+    * set (≤ nBuckets, a bounded driver value), reads ONLY those
+    * partitions of the prior artifact via a static `bkt IN (...)`
+    * partition filter ([[pruneToPartitions]] — plan-gated in
+    * PlanSpec), and merges them with the batch aggregate — valid
+    * because the merge is KEY-LOCAL, so rows in untouched buckets
+    * cannot change. The merge is derived from the declaration as
     * `groupBy(key, bkt).agg(aggs)` over `(prev ∪ batch-agg)
     * .repartition(bkt)`: the one Exchange already clusters by bkt
     * (bkt ⊆ group keys, and bkt is a function of the key, so the
@@ -1840,20 +1831,10 @@ object EventStreams {
     * merge the same batch twice (doubling every sum in it) —
     * exactly-once across restarts is the marker + skip, proven
     * end-to-end by StreamingSpec's crash-replay case. Per-batch cost
-    * is O(|batch| + artifact[touched
-    * buckets]), never O(|artifact|). `nBuckets = None` keeps the
-    * full chained rewrite, `prev.unionByName(agg).groupBy(key)
-    * .agg(aggs)`, for artifacts that are BOUNDED by
-    * construction and touched almost entirely by every batch (s21's
-    * vocabulary: zipfian tokens mean every batch carries most of the
-    * vocab, so pruning buys nothing and the artifact is vocab-sized
-    * regardless of corpus). Chained mode restarts cleanly too: the
-    * version chain re-seeds from the latest _SUCCESS-complete
-    * artifact, a torn per-batch write is redone, and a replayed
-    * completed write is registered rather than re-merged; once a
-    * version completes, its superseded predecessors are deleted
-    * ([[retainLatestChainVersion]]), so chained-mode storage stays
-    * one-artifact-sized instead of growing per deployment batch.
+    * is O(|batch| + artifact[touched buckets]), never O(|artifact|).
+    * An artifact that is BOUNDED by construction and touched almost
+    * entirely by every batch (s21's vocabulary) passes `nBuckets =
+    * 1`: every batch rewrites the one bucket, through the same swap.
     *
     * Lifecycle contract: the artifact base and the streaming
     * checkpoint MUST be created and deleted together, and BOTH
@@ -1871,12 +1852,11 @@ object EventStreams {
     */
   private[graft] def runArtifactMergeLoop(spark: SparkSession,
       base: String, srcDir: String, schema: StructType,
-      nBuckets: Option[Int] = None,
+      nBuckets: Int,
       onSwapApply: (Long, String) => Unit = (_, _) => (),
       stampSchema: Boolean = false)(
       batchAgg: DataFrame => DataFrame, merge: ArtifactMerge)
       : (Option[DataFrame], Long) = {
-    val states = scala.collection.mutable.ListBuffer[String]()
     val stateDir = s"$base/state"
     // the artifact's schema as THIS loop writes it (data columns +
     // bkt), captured from the first staged write's frame — later
@@ -1884,10 +1864,10 @@ object EventStreams {
     // read skips per-batch parquet footer inference (r21). A stamped
     // artifact (stampSchema) resolves its committed stamp instead.
     @volatile var artifactSchemaHint: Option[StructType] = None
-    // single-writer guard: the swap protocol and the version chain
-    // both assume exactly one loop per base (VERDICT r14 item 3) —
-    // a second concurrent loop fails fast here instead of corrupting
-    // the artifact. Held for the whole run, released in the finally.
+    // single-writer guard: the swap protocol assumes exactly one
+    // loop per base (VERDICT r14 item 3) — a second concurrent loop
+    // fails fast here instead of corrupting the artifact. Held for
+    // the whole run, released in the finally.
     val writerLock = acquireWriterLock(base)
     try {
     // heal a torn partition-swap commit from a crashed prior run
@@ -1900,21 +1880,17 @@ object EventStreams {
     // The sentinel beside the checkpoint records what state must
     // hold; recovery above has already rolled any torn commit
     // forward, so expected > committed can only mean state loss.
-    def committedMark(): Long = nBuckets match {
-      case Some(_) => lastCommittedBatch(stateDir)
-      case None => completeChainVersions(stateDir)
-        .lastOption.map(_.getName.stripPrefix("b").toLong)
-        .getOrElse(-1L)
-    }
     val expected = expectedCommit(base)
-    if (expected > committedMark()) throw new IllegalStateException(
-      s"artifact state $stateDir holds commits through batch " +
-        s"${committedMark()} but $ExpectedCommitName records batch " +
-        s"$expected: the state dir was reset against a live " +
-        "checkpoint — already-checkpointed batches will never " +
-        "replay, so the artifact would silently rebuild " +
-        "incomplete. Delete the base (state, checkpoint, sentinel) " +
-        "together, or restore the state dir")
+    val committed = lastCommittedBatch(stateDir)
+    if (expected > committed)
+      throw new IllegalStateException(
+        s"artifact state $stateDir holds commits through batch " +
+          s"$committed but $ExpectedCommitName " +
+          s"records batch $expected: the state dir was reset against " +
+          "a live checkpoint — already-checkpointed batches will " +
+          "never replay, so the artifact would silently rebuild " +
+          "incomplete. Delete the base (state, checkpoint, sentinel) " +
+          "together, or restore the state dir")
     // partition-spec guard (s32): a deployment whose nBuckets
     // differs from the layout the artifact was written under would
     // compute a DIFFERENT bucket for an existing key, prune its
@@ -1924,23 +1900,16 @@ object EventStreams {
     // [[rebucketArtifact]] is the sanctioned way to change layouts.
     // Pre-s32 artifacts carry no stamp (cannot validate — the first
     // commit of this run stamps them going forward).
-    nBuckets.foreach { want =>
-      readSnapshotSpec(stateDir).filter(_ != want).foreach { n =>
+    readSnapshot(stateDir).flatMap(_.spec).filter(_ != nBuckets)
+      .foreach { n =>
         throw new IllegalStateException(
           s"artifact $stateDir is laid out under partition spec " +
             s"bkt:$n but this deployment is configured with " +
-            s"nBuckets=$want — a mismatched spec would prune " +
+            s"nBuckets=$nBuckets — a mismatched spec would prune " +
             "merges to the wrong buckets and silently double-count " +
             s"keys; redeploy with nBuckets=$n, or migrate the " +
             "layout first (EventStreams.rebucketArtifact)")
       }
-    }
-    // chained-mode resume: seed the version chain with the latest
-    // COMPLETE prior artifact (a b<N> dir with _SUCCESS — a torn
-    // write has none and is redone by the replay)
-    if (nBuckets.isEmpty)
-      completeChainVersions(stateDir)
-        .lastOption.foreach(d => states += d.getAbsolutePath)
     // stream width derived from the staged input, not the session's
     // batch default (r20, guide §2: the foreachBatch jobs inherit the
     // cloned conf, so the merge/write shuffles size to the data);
@@ -1951,7 +1920,7 @@ object EventStreams {
     // go out in parallel tasks instead of one serial write task
     val q = withStreamShuffle(spark, stagedBytes(srcDir),
       aqeOff = true,
-      fanout = nBuckets.getOrElse(1)) {
+      fanout = nBuckets) {
       spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       // plain dir, not a b*.parquet glob (r21): the staged incoming
@@ -1975,7 +1944,7 @@ object EventStreams {
           // engine cannot have committed batch 1 before batch 0's
           // checkpoint), so mark > 0 at batchId 0 is always the
           // mismatch: fail loudly. Base, ckpt, and source staging
-          // must be deleted together. Checked BEFORE the isEmpty
+          // must be deleted together. Checked BEFORE the empty-batch
           // gate (review r15): an EMPTY first file would otherwise
           // bypass the guard, and no later batch carries id 0.
           // Known blind spot (review r15): a base that committed
@@ -1984,45 +1953,44 @@ object EventStreams {
           // offsets/0 present), so a reset at that exact point
           // passes as a replay — detection starts once any later
           // batch has committed.
-          if (batchId == 0L) {
-            val mark = committedMark()
-            if (mark > 0L) throw new IllegalStateException(
+          val mark = lastCommittedBatch(stateDir)
+          if (batchId == 0L && mark > 0L)
+            throw new IllegalStateException(
               s"artifact base $stateDir has committed through " +
                 s"batch $mark but the stream restarted at batch 0: " +
                 "the checkpoint was reset against a stale artifact " +
                 "base — delete the base and checkpoint together, " +
                 "or point the loop at a fresh base")
-          }
-        nBuckets match {
-            case Some(_)
-                if batchId <= lastCommittedBatch(stateDir) =>
-              // REPLAY of a batch whose swap already committed (a
-              // crash landed after the swap's COMMIT but before the
-              // engine checkpointed the batch): the merge is already
-              // in the artifact — merging again would double-count
-              if (states.isEmpty) states += stateDir
-            case Some(n) =>
-              val s = batch.sparkSession
-              val bkt = bucketOf(col(merge.key), n)
-              // the batch's TOUCHED bucket set, collected to the
-              // driver — BOUNDED by nBuckets (a config constant),
-              // never corpus-sized. The bounded collect is what buys
-              // STATIC partition pruning on the artifact read below:
-              // the collect-free broadcast-semi-join alternative was
-              // measured (r14) to leave the scan with
-              // PartitionFilters=[isnotnull(bkt)] — DPP does not fire
-              // when the build side carries no selective filter — so
-              // the "pruned" read was a full artifact scan per batch.
-              // The set derives from the RAW batch (same keys as the
-              // aggregate, since batchAgg groups by them), so this is
-              // one tiny batch-sized job, not a second merge run —
-              // and it doubles as the empty-batch probe (r20: an
-              // empty touched set ⟺ an empty batch, so the former
-              // separate `batch.isEmpty` job is gone; distinctInts
-              // keeps it ONE job where distinct().collect() ran 2–3
-              // AQE stage jobs).
-              val touched = distinctInts(batch.toDF(), bkt)
-              if (touched.nonEmpty) {
+          // a batch at-or-below the mark is the REPLAY of a batch
+          // whose swap already committed (a crash landed after the
+          // swap's COMMIT but before the engine checkpointed the
+          // batch): the merge is already in the artifact — merging
+          // again would double-count
+          if (batchId > mark) {
+            val s = batch.sparkSession
+            val bkt = bucketOf(col(merge.key), nBuckets)
+            // the batch's TOUCHED bucket set, collected to the
+            // driver — BOUNDED by nBuckets (a config constant),
+            // never corpus-sized. The bounded collect is what buys
+            // STATIC partition pruning on the artifact read below:
+            // the collect-free broadcast-semi-join alternative was
+            // measured (r14) to leave the scan with
+            // PartitionFilters=[isnotnull(bkt)] — DPP does not fire
+            // when the build side carries no selective filter — so
+            // the "pruned" read was a full artifact scan per batch.
+            // The set derives from the RAW batch (same keys as the
+            // aggregate, since batchAgg groups by them), so this is
+            // one tiny batch-sized job, not a second merge run —
+            // and it doubles as the empty-batch probe (r20: an
+            // empty touched set ⟺ an empty batch, so the former
+            // separate `batch.isEmpty` job is gone; distinctInts
+            // keeps it ONE job where distinct().collect() ran 2–3
+            // AQE stage jobs). With one bucket every non-empty batch
+            // touches it, so the probe needs no key — s21's key, the
+            // token, only exists after batchAgg.
+            val touched = distinctInts(batch.toDF(),
+              if (nBuckets == 1) lit(0) else bkt)
+            if (touched.nonEmpty) {
               val agg = batchAgg(batch.toDF())
               // snapshot-resolved read (review r15): the committed
               // partition list, not a live listing — and within it,
@@ -2057,49 +2025,9 @@ object EventStreams {
                 // resolve the schema from the snapshot they read
                 schemaDdl =
                   if (stampSchema) Some(merged.schema.toDDL) else None,
-                // s32: every bucketed commit declares its layout so
-                // a later mismatched deployment refuses loudly
-                specBuckets = nBuckets)
-              writeExpectedCommit(base, batchId)
-              if (states.isEmpty) states += stateDir
-              }
-            case None => if (!batch.isEmpty) {
-              val s = batch.sparkSession
-              val agg = batchAgg(batch.toDF())
-              val path = s"$stateDir/b$batchId"
-              val pf = new java.io.File(path)
-              if (pf.isDirectory &&
-                  new java.io.File(pf, "_SUCCESS").isFile) {
-                // REPLAY of a batch whose chained write completed
-                // before the crash: the version exists — register it,
-                // don't merge again
-                if (!states.contains(path)) states += path
-              } else {
-                // a dir without _SUCCESS is a torn write — redo it
-                if (pf.isDirectory) deleteRecursively(pf)
-                val merged = states.lastOption match {
-                  case Some(prev) => merge.of(
-                    s.read.parquet(prev).unionByName(agg),
-                    col(merge.key))
-                  case None => agg
-                }
-                merged.write.parquet(path)
-                states += path
-              }
-              // version retention (VERDICT r14 item 2): a complete
-              // b<N> supersedes every earlier complete version — the
-              // chain re-seeds from the LATEST only — so superseded
-              // versions are dropped once the new write's _SUCCESS
-              // exists. Without this, chained-mode storage grows by
-              // one full artifact per deployment batch; the
-              // content-hashed store the reference relies on never
-              // leaks that way. Runs AFTER the new version is
-              // complete, so a crash anywhere in between leaves a
-              // re-seedable chain (at worst one extra version, which
-              // the next batch's retention collects). A torn
-              // (no-_SUCCESS) dir is never touched here — the replay
-              // path redoes it.
-              retainLatestChainVersion(stateDir)
+                // s32: every commit declares its layout so a later
+                // mismatched deployment refuses loudly
+                specBuckets = Some(nBuckets))
               writeExpectedCommit(base, batchId)
             }
           }
@@ -2109,37 +2037,11 @@ object EventStreams {
     }
     val stateRows = drain(q)
     // the final artifact read resolves through the committed
-    // snapshot too (chained-mode version dirs have none and fall
-    // back to the plain read — they are immutable once complete)
-    (states.lastOption.flatMap(p =>
-      readCommitted(spark, p, schemaHint = artifactSchemaHint)
-        .map(_.drop("bkt"))), stateRows)
+    // snapshot too
+    (readCommitted(spark, stateDir, schemaHint = artifactSchemaHint)
+      .map(_.drop("bkt")), stateRows)
     } finally writerLock.close()
   }
-
-  /** The chained-mode version chain's COMPLETE entries, ascending by
-    * version number: `b<N>` dirs under `stateDir` carrying _SUCCESS.
-    * A torn write has no _SUCCESS and is excluded (the replay redoes
-    * it). Single-sourced for seeding, the batch-0 lifecycle guard,
-    * and version retention.
-    */
-  private def completeChainVersions(stateDir: String)
-      : Seq[java.io.File] =
-    Option(new java.io.File(stateDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("b") &&
-        new java.io.File(d, "_SUCCESS").isFile)
-      .sortBy(_.getName.stripPrefix("b").toLong).toSeq
-
-  /** Chained-mode version retention: delete every complete version
-    * except the highest-numbered one. Safe because batchIds only
-    * grow (the batch-0 guard rejects a reset checkpoint), so the
-    * highest complete version is always the chain's head and the
-    * only one resume ever seeds from.
-    */
-  private def retainLatestChainVersion(stateDir: String): Unit =
-    completeChainVersions(stateDir).dropRight(1)
-      .foreach(deleteRecursively)
 
   /** Name of the single-writer lock file under an artifact base. */
   private[graft] val WriterLockName = "_writer_lock"
@@ -2159,9 +2061,9 @@ object EventStreams {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Single-writer guard on an artifact base (VERDICT r14 item 3):
-    * the partition-swap protocol and the chained version chain both
-    * assume exactly one merge loop per base — two concurrent writers
-    * would interleave stage/apply/commit and corrupt the artifact.
+    * the partition-swap protocol assumes exactly one merge loop per
+    * base — two concurrent writers would interleave
+    * stage/apply/commit and corrupt the artifact.
     * Takes an OS-level advisory lock ([[java.nio.channels.FileLock]])
     * on `base/_writer_lock`; a second acquirer — same JVM (via the
     * [[heldWriterLocks]] registry, never a second channel) or another
@@ -2614,17 +2516,27 @@ object EventStreams {
     }
   }
 
-  private def writeCommitMarker(liveDir: String, batchId: Long)
+  /** The format's one small-file write: `body` goes to a `.tmp`
+    * sibling, which then atomically replaces `target`, so a reader
+    * sees the old or the new content, never a torn one. Every
+    * journal, marker and snapshot file goes through it.
+    */
+  private def writeAtomically(target: java.io.File, body: String)
       : Unit = {
-    val tmp = new java.io.File(liveDir, CommitMarkerName + ".tmp")
-    java.nio.file.Files.write(tmp.toPath, batchId.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(liveDir, CommitMarkerName).toPath,
+    val tmp = new java.io.File(target.getParentFile,
+      target.getName + ".tmp")
+    java.nio.file.Files.write(tmp.toPath,
+      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.move(tmp.toPath, target.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     ()
   }
+
+  private def writeCommitMarker(liveDir: String, batchId: Long)
+      : Unit =
+    writeAtomically(new java.io.File(liveDir, CommitMarkerName),
+      batchId.toString)
 
   /** Name of the expected-commit sentinel under an artifact BASE
     * (beside the checkpoint, OUTSIDE the state dir): the highest
@@ -2643,16 +2555,9 @@ object EventStreams {
     readBatchMarker(new java.io.File(base, ExpectedCommitName))
 
   private[graft] def writeExpectedCommit(base: String, batchId: Long)
-      : Unit = {
-    val tmp = new java.io.File(base, ExpectedCommitName + ".tmp")
-    java.nio.file.Files.write(tmp.toPath, batchId.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(base, ExpectedCommitName).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+      : Unit =
+    writeAtomically(new java.io.File(base, ExpectedCommitName),
+      batchId.toString)
 
   /** Name of the committed-snapshot manifest under a swap-managed
     * artifact: the COMMIT-time list of `partition → generation`
@@ -2681,57 +2586,44 @@ object EventStreams {
     * current one is always readable). */
   private[graft] val SnapshotHistoryRetention = 2
 
-  /** Parse the committed snapshot: (batchId, partition → gen), None
-    * when the artifact predates snapshots (or is empty). Corruption
+  /** One committed snapshot file (`_snapshot` or a
+    * `_snapshot_v<batchId>` history file): the batch that committed
+    * it and its `partition → generation` entries, plus two optional
+    * stamps.
+    *
+    * `schema` (s30 schema evolution): a `schema=<ddl>` line commits
+    * the artifact's read schema alongside its entries, so the schema
+    * is a snapshot-versioned fact — the head read serves the head
+    * stamp, an as-of read serves the stamp of ITS snapshot (history
+    * files carry their own line), and generations written before an
+    * evolution null-fill the added columns under the newer stamp.
+    * Absent on loops that don't opt in ([[runArtifactMergeLoop]]'s
+    * `stampSchema`): readers then fall back to parquet footer
+    * inference.
+    *
+    * `spec` (s32 partition-spec evolution): a `spec=<nBuckets>` line
+    * commits the bucket count the artifact's `bkt=` layout was
+    * written under. Without it, a redeployed merge loop whose
+    * `nBuckets` differs from the layout would compute a DIFFERENT
+    * bucket for an existing key, prune its artifact read to
+    * partitions that do not hold that key's rows, treat the key as
+    * new, and silently double-count — the stamp turns that into a
+    * loud loop-start refusal, and [[rebucketArtifact]] is the
+    * sanctioned way to change it. Absent on non-bucketed artifacts.
+    */
+  private[graft] final case class Snapshot(batch: Long,
+      entries: Map[String, Long], schema: Option[String],
+      spec: Option[Int])
+
+  /** The committed snapshot of `liveDir`, None when nothing has
+    * committed yet. */
+  private[graft] def readSnapshot(liveDir: String): Option[Snapshot] =
+    parseSnapshot(new java.io.File(liveDir, SnapshotName))
+
+  /** Parse one snapshot file, None when it does not exist. Corruption
     * fails diagnosably, like the other journal parses.
     */
-  private[graft] def readSnapshot(liveDir: String)
-      : Option[(Long, Map[String, Long])] =
-    parseSnapshotFile(new java.io.File(liveDir, SnapshotName))
-
-  /** The snapshot plus its SCHEMA STAMP (s30 schema evolution): an
-    * optional `schema=<ddl>` line commits the artifact's read schema
-    * alongside its partition → generation map, so the schema is a
-    * snapshot-versioned fact — the head read serves the head stamp,
-    * an as-of read serves the stamp of ITS snapshot (history files
-    * carry their own line), and generations written before an
-    * evolution null-fill the added columns under the newer stamp.
-    * Absent on pre-evolution artifacts and on loops that don't opt
-    * in ([[runArtifactMergeLoop]]'s `stampSchema`): readers then
-    * fall back to parquet footer inference, the pre-s30 behavior.
-    */
-  private[graft] def readSnapshotFull(liveDir: String)
-      : Option[(Long, Map[String, Long], Option[String])] =
-    parseSnapshotFileFull(new java.io.File(liveDir, SnapshotName))
-
-  private def parseSnapshotFile(f: java.io.File)
-      : Option[(Long, Map[String, Long])] =
-    parseSnapshotFileFull(f).map(t => (t._1, t._2))
-
-  /** The snapshot's PARTITION-SPEC STAMP (s32 partition-spec
-    * evolution): an optional `spec=<nBuckets>` line commits the
-    * bucket count the artifact's `bkt=` layout was written under.
-    * Without it, a redeployed merge loop whose `nBuckets` differs
-    * from the layout would compute a DIFFERENT bucket for an
-    * existing key, prune its artifact read to partitions that do
-    * not hold that key's rows, treat the key as new, and silently
-    * double-count — the stamp turns that into a loud loop-start
-    * refusal, and [[rebucketArtifact]] is the sanctioned way to
-    * change it. Absent on pre-s32 and non-bucketed artifacts.
-    */
-  private[graft] def readSnapshotSpec(liveDir: String): Option[Int] =
-    parseSnapshotSpec(new java.io.File(liveDir, SnapshotName))
-
-  private def parseSnapshotSpec(f: java.io.File): Option[Int] =
-    parseSnapshotRaw(f).flatMap(_._4)
-
-  private def parseSnapshotFileFull(f: java.io.File)
-      : Option[(Long, Map[String, Long], Option[String])] =
-    parseSnapshotRaw(f).map(t => (t._1, t._2, t._3))
-
-  private def parseSnapshotRaw(f: java.io.File)
-      : Option[(Long, Map[String, Long], Option[String],
-        Option[Int])] = {
+  private def parseSnapshot(f: java.io.File): Option[Snapshot] = {
     if (!f.isFile) return None
     val lines = new String(java.nio.file.Files.readAllBytes(f.toPath),
       java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq
@@ -2770,37 +2662,19 @@ object EventStreams {
           malformed(s"unparseable gen in '$l'") }
       cols(0).stripPrefix("part=") -> g
     }.toMap
-    Some((batch, entries,
+    Some(Snapshot(batch, entries,
       schemaLines.headOption.map(_.stripPrefix("schema=")), spec))
   }
 
-  private def writeSnapshotFile(target: java.io.File, batchId: Long,
-      entries: Map[String, Long],
-      schema: Option[String] = None,
-      spec: Option[Int] = None): Unit = {
-    val tmp = new java.io.File(target.getParentFile,
-      target.getName + ".tmp")
+  private def writeSnapshotFile(target: java.io.File, snap: Snapshot)
+      : Unit =
     // the stamps sit between the batch line and the entries; a DDL
     // is single-line by construction (StructType.toDDL)
-    val body = (Seq(s"batch=$batchId") ++
-      schema.map(s => s"schema=$s") ++
-      spec.map(n => s"spec=$n") ++
-      entries.toSeq.sortBy(_._1).map { case (n, g) =>
-        s"part=$n\tgen=$g" }).mkString("\n")
-    java.nio.file.Files.write(tmp.toPath,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  private def writeSnapshot(liveDir: String, batchId: Long,
-      entries: Map[String, Long],
-      schema: Option[String] = None,
-      spec: Option[Int] = None): Unit =
-    writeSnapshotFile(new java.io.File(liveDir, SnapshotName),
-      batchId, entries, schema, spec)
+    writeAtomically(target, (Seq(s"batch=${snap.batch}") ++
+      snap.schema.map(s => s"schema=$s") ++
+      snap.spec.map(n => s"spec=$n") ++
+      snap.entries.toSeq.sortBy(_._1).map { case (n, g) =>
+        s"part=$n\tgen=$g" }).mkString("\n"))
 
   /** The retained history files, ascending by batch id. */
   private def snapshotHistoryFiles(liveDir: String)
@@ -2821,9 +2695,9 @@ object EventStreams {
     */
   private def retainedGenerations(liveDir: String)
       : Map[String, Set[Long]] = {
-    val all = readSnapshot(liveDir).map(_._2).toSeq ++
+    val all = readSnapshot(liveDir).map(_.entries).toSeq ++
       snapshotHistoryFiles(liveDir)
-        .flatMap(h => parseSnapshotFile(h._2)).map(_._2)
+        .flatMap(h => parseSnapshot(h._2)).map(_.entries)
     all.flatten.groupBy(_._1)
       .map { case (n, gs) => n -> gs.map(_._2).toSet }
   }
@@ -2840,62 +2714,30 @@ object EventStreams {
       touched: Seq[(String, Boolean)], gen: Long,
       schemaDdl: Option[String] = None,
       specBuckets: Option[Int] = None): Unit = {
-    val full = readSnapshotFull(liveDir)
-    val prev = full.map(_._2).getOrElse(Map.empty[String, Long])
+    val cur = readSnapshot(liveDir)
+    val prev = cur.map(_.entries).getOrElse(Map.empty[String, Long])
     // schema stamp: a commit that declares one (an evolving writer)
     // re-stamps; one that doesn't PRESERVES the existing stamp — an
     // unevolved commit must not silently erase the artifact's
     // declared read schema (and recovery replays, which cannot know
     // the writer's schema, inherit the pre-crash stamp until the
     // next live commit re-stamps)
-    val stamp = schemaDdl.orElse(full.flatMap(_._3))
+    val stamp = schemaDdl.orElse(cur.flatMap(_.schema))
     // partition-spec stamp: same declare-or-preserve rule (s32) —
     // the bucketed merge loop declares its nBuckets every commit,
     // rebucketArtifact declares the new count, and every other
     // commit (compaction, recovery replays) inherits
-    val spec = specBuckets.orElse(readSnapshotSpec(liveDir))
-    val next = prev -- touched.map(_._1) ++
-      touched.collect { case (n, true) => n -> gen }
-    writeSnapshot(liveDir, batchId, next, stamp, spec)
+    val spec = specBuckets.orElse(cur.flatMap(_.spec))
+    val next = Snapshot(batchId, prev -- touched.map(_._1) ++
+      touched.collect { case (n, true) => n -> gen }, stamp, spec)
+    writeSnapshotFile(new java.io.File(liveDir, SnapshotName), next)
     if (batchId >= 0L) {
       writeSnapshotFile(new java.io.File(liveDir,
-        s"$SnapshotHistoryPrefix$batchId"), batchId, next, stamp,
-        spec)
+        s"$SnapshotHistoryPrefix$batchId"), next)
       snapshotHistoryFiles(liveDir)
         .dropRight(SnapshotHistoryRetention + 1)
         .foreach(h => java.nio.file.Files.deleteIfExists(h._2.toPath))
     }
-  }
-
-  /** Upgrade a pre-snapshot artifact in place: loose data files
-    * under each `k=v` dir move into a `g-1` generation dir (one
-    * rename per partition — no data rewrite), and the bootstrap
-    * snapshot naming every existing partition is written. Idempotent
-    * — a crash mid-migration leaves no snapshot, so the next swap
-    * resumes it. No-op once a snapshot exists or the tree is empty.
-    */
-  private def bootstrapSnapshot(liveDir: String): Unit = {
-    val live = new java.io.File(liveDir)
-    if (new java.io.File(live, SnapshotName).isFile) return
-    val parts = Option(live.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.contains("="))
-    if (parts.isEmpty) return
-    val entries = parts.flatMap { d =>
-      val loose = Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => !f.isDirectory)
-      if (loose.nonEmpty) {
-        val g = new java.io.File(d, "g-1")
-        java.nio.file.Files.createDirectories(g.toPath)
-        loose.foreach(f => java.nio.file.Files.move(f.toPath,
-          new java.io.File(g, f.getName).toPath))
-      }
-      // an empty partition dir (no data, no generations) must not
-      // enter the snapshot — readers would resolve a non-existent
-      // leaf path
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .flatMap(genOf).maxOption.map(d.getName -> _)
-    }.toMap
-    writeSnapshot(liveDir, -1L, entries)
   }
 
   /** Drop every generation dir no RETAINED snapshot (current or
@@ -2903,7 +2745,7 @@ object EventStreams {
     * orphans of removed partitions. Runs at loop start —
     * single-writer, and any reader of an UNRETAINED prior snapshot
     * is gone by restart (retained ones stay servable across
-    * restarts). No-op for pre-snapshot artifacts.
+    * restarts). No-op while nothing is committed.
     */
   private[graft] def gcUnreferencedGenerations(liveDir: String)
       : Unit = readSnapshot(liveDir).foreach { _ =>
@@ -2924,11 +2766,10 @@ object EventStreams {
   }
 
   /** Floor of the generation-id range COMPACTION rewrites allocate
-    * from (2⁴⁰ ≈ 1.1e12): streaming generations are batch ids and
-    * legacy swaps allocate max+1 from the same small range, so a
+    * from (2⁴⁰ ≈ 1.1e12): streaming generations are batch ids, so a
     * compacted generation living above the floor can never collide
-    * with a FUTURE streaming batch id — the collision the mixed-mode
-    * guard in [[swapPartitionDirs]] exists to refuse. Within the
+    * with a FUTURE streaming batch id (APPLY would otherwise clear a
+    * generation retained snapshots still reference). Within the
     * range, successive compactions count up from the floor.
     */
   private[graft] val CompactionGenFloor = 1L << 40
@@ -2992,10 +2833,9 @@ object EventStreams {
       // heal any torn prior commit (and run loop-start GC) before
       // staging at the same stage path
       recoverTornSwap(liveDir)
-      readSnapshotFull(liveDir) match {
-        case None => () // chained-mode / empty: nothing to compact
-        case Some((_, entries, _)) if entries.isEmpty => ()
-        case Some((_, entries, _)) =>
+      readSnapshot(liveDir).map(_.entries).filter(_.nonEmpty) match {
+        case None => () // nothing committed: nothing to compact
+        case Some(entries) =>
           val partCol = entries.keysIterator.next()
             .takeWhile(_ != '=')
           // the committed head, under its schema stamp (an evolved
@@ -3063,10 +2903,9 @@ object EventStreams {
     val lock = lockBase.map(acquireWriterLock)
     try {
       recoverTornSwap(liveDir)
-      readSnapshotFull(liveDir) match {
+      readSnapshot(liveDir).map(_.entries).filter(_.nonEmpty) match {
         case None => ()
-        case Some((_, entries, _)) if entries.isEmpty => ()
-        case Some((_, entries, _)) =>
+        case Some(entries) =>
           val cur = readCommitted(spark, liveDir).get
           cur.drop("bkt")
             .withColumn("bkt", bucketOf(col(key), newBuckets))
@@ -3091,24 +2930,11 @@ object EventStreams {
     * resolve sees the new version. The grace window is one further
     * swap of the same partition (then the superseded generation is
     * collected), which at one swap per micro-batch is far beyond any
-    * scan's lifetime. None when the artifact does not exist or its
-    * committed snapshot is empty; a snapshot-less CHAINED-MODE
-    * version dir (loose parquet files, no partition dirs) falls back
-    * to the ordinary listing read — immutable once written, so
-    * isolation is moot. A snapshot-less tree that DOES hold
-    * partition dirs is refused diagnosably (review r16, structural
-    * since r17): every swap-managed artifact is snapshot-carrying
-    * now — the merge loops' recovery ([[recoverTornSwap]]) runs the
-    * one-time bootstrap migration at loop start — so partitions
-    * without a snapshot mean either a never-upgraded legacy
-    * artifact (run its loop once, or recoverTornSwap, to migrate)
-    * or a torn pre-snapshot-era swap whose committed pre-crash data
-    * exists (run recovery); silently serving a listing would trust
-    * an immutability this reader cannot check, and silently
-    * returning None would present committed data as an empty
-    * artifact (ADVICE r16).
-    */
-  /** `schemaHint`: the artifact's known schema (data columns + the
+    * scan's lifetime. None when no snapshot exists — nothing has
+    * committed, which includes a fresh artifact whose first swap is
+    * mid-APPLY — or the committed snapshot is empty.
+    *
+    * `schemaHint`: the artifact's known schema (data columns + the
     * partition column), used ONLY when the snapshot carries no
     * schema stamp — a stamp is the committed read contract (s30
     * schema evolution) and always wins. The merge loops pass the
@@ -3119,70 +2945,9 @@ object EventStreams {
     */
   private[graft] def readCommitted(spark: SparkSession,
       liveDir: String,
-      schemaHint: Option[StructType] = None): Option[DataFrame] = {
-    if (!new java.io.File(liveDir).exists()) return None
-    readSnapshotFull(liveDir) match {
-      case None =>
-        val live = new java.io.File(liveDir)
-        // Observation order partitions → manifest → snapshot-LAST
-        // (ADVICE r17). The writer orders manifest-create → APPLY →
-        // snapshot-write → manifest-delete, so reading the manifest
-        // AFTER the partition listing and the snapshot AFTER the
-        // manifest makes the refusal below linearizable: a manifest
-        // observed absent after partitions were seen means it was
-        // either never created (genuine legacy tree — refuse) or
-        // already deleted (the commit landed, so the snapshot
-        // re-read below sees it and serves). Reading the manifest
-        // first — as pre-r18 code did — let a reader racing a fresh
-        // artifact's FIRST swap observe pre-PREPARE manifest-absent,
-        // post-APPLY partitions, pre-COMMIT no-snapshot, and throw
-        // the legacy refusal at a healthy artifact.
-        val files = Option(live.listFiles()).getOrElse(Array.empty)
-        val partDirs = files.filter(f =>
-          f.isDirectory && f.getName.contains("="))
-        def isData(f: java.io.File): Boolean = isDataFile(f)
-        // pre-snapshot-era partition payload: loose files directly
-        // under a k=v dir (the migrated layout holds only g<N> dirs)
-        val legacyData = partDirs.exists(d =>
-          Option(d.listFiles()).getOrElse(Array.empty).exists(isData))
-        val inFlight = new java.io.File(live, SwapManifestName)
-          .isFile
-        // snapshot re-read (review r17, ordering fixed r18): if a
-        // commit landed between the opening readSnapshot and the
-        // listings above, serve it; refusals below are only for
-        // trees still snapshot-less after partitions AND manifest
-        // AND this final snapshot read, in that order.
-        if (partDirs.nonEmpty) readSnapshotFull(liveDir) match {
-          case Some((_, entries, schema)) =>
-            return readEntries(spark, liveDir, entries, schema,
-              schemaHint)
-          case None => ()
-        }
-        if (legacyData || (partDirs.nonEmpty && !inFlight))
-          throw new IllegalStateException(
-            s"swap-managed artifact $liveDir has partition data but " +
-              "no committed snapshot — " +
-              (if (inFlight)
-                "a pre-snapshot-era swap tore mid-commit and its " +
-                  "pre-crash data is not servable in place; run " +
-                  "recoverTornSwap before reading"
-               else
-                 "a legacy pre-snapshot artifact (or torn bootstrap " +
-                   "migration); run its merge loop once or " +
-                   "recoverTornSwap to bootstrap-migrate it"))
-        else if (partDirs.nonEmpty)
-          // manifest present, partitions hold only generation dirs:
-          // a FRESH artifact's first swap is mid-APPLY — nothing
-          // committed yet
-          None
-        else if (!inFlight && files.exists(isData))
-          // chained-mode version dir: immutable listing read
-          Some(spark.read.parquet(liveDir))
-        else None
-      case Some((_, entries, schema)) =>
-        readEntries(spark, liveDir, entries, schema, schemaHint)
-    }
-  }
+      schemaHint: Option[StructType] = None): Option[DataFrame] =
+    readSnapshot(liveDir).flatMap(readEntries(spark, liveDir, _,
+      schemaHint))
 
   /** Generation-pinned scan of a resolved snapshot. When the
     * snapshot carries a schema stamp the scan reads under THAT
@@ -3194,17 +2959,16 @@ object EventStreams {
     * No stamp → footer inference, the pre-s30 behavior.
     */
   private def readEntries(spark: SparkSession, liveDir: String,
-      entries: Map[String, Long],
-      schemaDdl: Option[String] = None,
+      snap: Snapshot,
       schemaHint: Option[StructType] = None): Option[DataFrame] =
-    if (entries.isEmpty) None
+    if (snap.entries.isEmpty) None
     else {
-      val leafs = entries.toSeq.sortBy(_._1)
+      val leafs = snap.entries.toSeq.sortBy(_._1)
         .map { case (n, g) => s"$liveDir/$n/g$g" }
       val base = spark.read.option("basePath", liveDir)
       // precedence: the snapshot's committed schema stamp (s30), then
       // the caller's hint (r21, skips footer inference), then infer
-      val reader = schemaDdl
+      val reader = snap.schema
         .map(org.apache.spark.sql.types.StructType.fromDDL)
         .orElse(schemaHint)
         .fold(base)(st => base.schema(st))
@@ -3221,18 +2985,13 @@ object EventStreams {
     */
   private[graft] def readCommittedAsOf(spark: SparkSession,
       liveDir: String, batch: Long): Option[DataFrame] =
-    locally {
-      val (_, entries, schema) = snapshotEntriesAsOf(liveDir, batch)
-      readEntries(spark, liveDir, entries, schema)
-    }
+    readEntries(spark, liveDir, snapshotAsOf(liveDir, batch))
 
   /** The as-of resolve shared by [[readCommittedAsOf]] and
-    * [[readVersionDiff]]: the (batch, partition → generation) map of
-    * the latest retained snapshot ≤ `batch`, with the diagnosable
-    * retention refusals.
+    * [[readVersionDiff]]: the latest retained snapshot ≤ `batch`,
+    * with the diagnosable retention refusals.
     */
-  private def snapshotEntriesAsOf(liveDir: String, batch: Long)
-      : (Long, Map[String, Long], Option[String]) = {
+  private def snapshotAsOf(liveDir: String, batch: Long): Snapshot = {
     val hist = snapshotHistoryFiles(liveDir)
     if (hist.isEmpty) throw new IllegalStateException(
       s"artifact $liveDir retains no snapshot history — time-travel " +
@@ -3247,13 +3006,10 @@ object EventStreams {
         // the writer's retention prune can delete exactly this file
         // between the listing above and the parse — surface it as
         // the same diagnosable retention refusal, not an opaque get
-        parseSnapshotFileFull(f) match {
-          case Some((_, entries, schema)) => (b, entries, schema)
-          case None => throw new IllegalStateException(
-            s"snapshot history for batch $b of $liveDir was pruned " +
-              s"concurrently — batch $batch has left the retention " +
-              "window; re-resolve against a newer batch")
-        }
+        parseSnapshot(f).getOrElse(throw new IllegalStateException(
+          s"snapshot history for batch $b of $liveDir was pruned " +
+            s"concurrently — batch $batch has left the retention " +
+            "window; re-resolve against a newer batch"))
     }
   }
 
@@ -3273,26 +3029,18 @@ object EventStreams {
   private[graft] def readVersionDiff(spark: SparkSession,
       liveDir: String, bOld: Long, bNew: Long)
       : (Option[DataFrame], Option[DataFrame], Seq[String]) = {
-    val (_, eOld, sOld) = snapshotEntriesAsOf(liveDir, bOld)
-    val (_, eNew, sNew) = snapshotEntriesAsOf(liveDir, bNew)
-    val changed = (eOld.keySet ++ eNew.keySet)
-      .filter(p => eOld.get(p) != eNew.get(p)).toSeq.sorted
+    val sOld = snapshotAsOf(liveDir, bOld)
+    val sNew = snapshotAsOf(liveDir, bNew)
+    val changed = (sOld.entries.keySet ++ sNew.entries.keySet)
+      .filter(p => sOld.entries.get(p) != sNew.entries.get(p))
+      .toSeq.sorted
     // each side reads under ITS OWN snapshot's schema stamp (s30):
     // diffing across an evolution serves the old side without the
     // added columns and the new side with them, as the versions were
-    def readAt(entries: Map[String, Long],
-        schema: Option[String]): Option[DataFrame] = {
-      val parts = changed.filter(entries.contains)
-      if (parts.isEmpty) None
-      else {
-        val base = spark.read.option("basePath", liveDir)
-        val reader = schema.fold(base)(ddl => base.schema(
-          org.apache.spark.sql.types.StructType.fromDDL(ddl)))
-        Some(reader
-          .parquet(parts.map(p => s"$liveDir/$p/g${entries(p)}"): _*))
-      }
-    }
-    (readAt(eOld, sOld), readAt(eNew, sNew), changed)
+    def readAt(snap: Snapshot): Option[DataFrame] =
+      readEntries(spark, liveDir, snap.copy(entries =
+        snap.entries.filter { case (p, _) => changed.contains(p) }))
+    (readAt(sOld), readAt(sNew), changed)
   }
 
   /** Driver-side partition-swap commit for the bucket/cell-partitioned
@@ -3328,64 +3076,34 @@ object EventStreams {
     * marker — so the engine's REPLAY of the never-checkpointed batch
     * (Structured Streaming commits a batch only after foreachBatch
     * returns) sees `batchId ≤ lastCommittedBatch` and skips the
-    * re-merge instead of double-counting it. `touched` may be empty
-    * for legacy callers — the staged partition list is always
-    * unioned in; `batchId = -1` (non-streaming callers) writes no
-    * marker.
+    * re-merge instead of double-counting it. The staged partition
+    * list is always unioned into `touched`.
+    *
+    * The incoming generation is `g<batchId>` for a streaming swap:
+    * batch ids only grow (the batch-0 guard and the replay skip
+    * enforce it), so it never lands on a generation a retained
+    * snapshot references. A non-streaming swap (`batchId = -1`:
+    * compaction and rebucketing) writes no marker and no history
+    * file, and names its generation through `genOverride`, from the
+    * disjoint [[CompactionGenFloor]] range.
     *
     * `onPartitionApplied` is a test seam (StreamingSpec's torn-swap
     * cases inject a crash between partition applies); production
     * callers leave the default no-op.
     */
   private[graft] def swapPartitionDirs(stageDir: String,
-      liveDir: String, touched: Seq[String] = Seq.empty,
-      batchId: Long = -1L,
+      liveDir: String, touched: Seq[String],
+      batchId: Long,
       onPartitionApplied: String => Unit = _ => (),
       schemaDdl: Option[String] = None,
       genOverride: Option[Long] = None,
       specBuckets: Option[Int] = None): Unit = {
     val live = new java.io.File(liveDir)
     java.nio.file.Files.createDirectories(live.toPath)
-    // upgrade path: a pre-snapshot artifact (loose files directly
-    // under its k=v dirs, no _snapshot) is migrated in place and its
-    // bootstrap snapshot written BEFORE the journal — otherwise the
-    // COMMIT's snapshot edit would start from empty and silently
-    // drop every untouched partition from the committed view
-    bootstrapSnapshot(liveDir)
-    val committed = readSnapshot(liveDir).map(_._2)
-      .getOrElse(Map.empty[String, Long])
     val retained = retainedGenerations(liveDir)
-    // the incoming generation id: the batchId when streaming
-    // (strictly growing — the batch-0 guard and the replay skip
-    // enforce it), else one past EVERY retained generation (not just
-    // the current snapshot's — colliding with a history-referenced
-    // gen would overwrite a retained version in place, review r16).
-    // `genOverride` is the COMPACTION path (s31): its rewrites
-    // allocate from the disjoint [[CompactionGenFloor]] range so a
-    // later streaming batch id can never land on a retained
-    // compaction generation and trip the mixed-mode guard below.
-    val gen = genOverride.getOrElse(
-      if (batchId >= 0L) batchId
-      else (committed.values ++ retained.values.flatten)
-        .maxOption.getOrElse(-1L) + 1L)
-    // mixed-mode guard (ADVICE r16): a legacy (batchId = -1) swap
-    // allocates past every retained generation, so a LATER streaming
-    // swap whose batch id lands on a still-retained legacy gen would
-    // have APPLY overwrite a generation the current/history
-    // snapshots reference — breaking isolation for concurrent and
-    // time-travel readers. No production caller mixes modes on one
-    // artifact; refuse diagnosably rather than corrupt silently.
-    if (batchId >= 0L &&
-        (retained.values.exists(_.contains(gen)) ||
-          committed.values.exists(_ == gen)))
-      throw new IllegalStateException(
-        s"streaming swap of $liveDir: batch $batchId collides with " +
-          s"retained generation g$gen (allocated by an earlier " +
-          "legacy batchId=-1 swap) — applying would overwrite a " +
-          "generation committed snapshots still reference; do not " +
-          "mix legacy and streaming swaps on one artifact, or " +
-          "advance the stream's checkpoint past the retained " +
-          "generations")
+    val gen = genOverride.getOrElse(batchId)
+    require(gen >= 0L, s"swap of $liveDir: a non-streaming swap " +
+      "(batchId = -1) must name its generation through genOverride")
     val staged = Option(new java.io.File(stageDir).listFiles())
       .getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName.contains("="))
@@ -3393,19 +3111,13 @@ object EventStreams {
     val all = (touched ++ staged).distinct.sorted
     // PREPARE: journal the commit's full intent before any mutation
     val manifest = new java.io.File(live, SwapManifestName)
-    val tmp = new java.io.File(live, SwapManifestName + ".tmp")
-    val body = (Seq(s"stage=$stageDir", s"batch=$batchId",
-      s"gen=$gen") ++
+    writeAtomically(manifest, (Seq(s"stage=$stageDir",
+      s"batch=$batchId", s"gen=$gen") ++
       all.map { n =>
         val hasStage = new java.io.File(stageDir, n).isDirectory
         // staged=0: touched but nothing staged — a bare delete
         s"part=$n\tstaged=${if (hasStage) 1 else 0}"
-      }).mkString("\n")
-    java.nio.file.Files.write(tmp.toPath,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath, manifest.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }).mkString("\n"))
     // APPLY — never touches the generation the committed snapshot
     // references, so a reader that resolved the snapshot before (or
     // during) this loop keeps reading the pre-swap artifact
@@ -3468,7 +3180,10 @@ object EventStreams {
     * misread the new stage as the journaled one). No manifest → the
     * live artifact is consistent; any leftover `<liveDir>-stage` dir
     * (a crash between the COMMIT phase's two deletes, or a crashed
-    * staging write that never reached PREPARE) is discarded.
+    * staging write that never reached PREPARE) is discarded. A
+    * manifest journals `stage=`, `batch=`, `gen=` and one `part=`
+    * line per touched partition; one that cannot be parsed — a
+    * missing `gen=` line included — is refused before anything moves.
     */
   private[graft] def recoverTornSwap(liveDir: String): Unit = {
     val live = new java.io.File(liveDir)
@@ -3479,16 +3194,6 @@ object EventStreams {
     val manifest = new java.io.File(live, SwapManifestName)
     if (!manifest.isFile) {
       deleteRecursively(new java.io.File(stageDirFor(liveDir)))
-      // one-time legacy upgrade at loop start (structural since
-      // r17): a pre-snapshot artifact is bootstrap-migrated HERE —
-      // single-writer, before the loop's first committed read — so
-      // every swap-managed artifact a loop touches is
-      // snapshot-carrying from its first batch on, and
-      // [[readCommitted]] can refuse snapshot-less partition trees
-      // instead of trusting an immutability it cannot check.
-      // Idempotent no-op once a snapshot exists or the tree is
-      // empty/chained-mode.
-      bootstrapSnapshot(liveDir)
       // loop-start garbage collection: the grace generations kept
       // for the PREVIOUS run's concurrent readers are dead now
       gcUnreferencedGenerations(liveDir)
@@ -3525,10 +3230,6 @@ object EventStreams {
         }
       }
     val batchId = longLine("batch=").getOrElse(-1L)
-    // gen= is absent only in a pre-snapshot-era manifest; its applies
-    // were in-place (no generations), so max(batchId, 0) reproduces a
-    // unique-enough generation for the replay
-    val gen = longLine("gen=").getOrElse(math.max(batchId, 0L))
     val parts = lines.filter(_.startsWith("part=")).map { l =>
       val cols = l.split("\t")
       if (cols.length < 2 || !cols(1).startsWith("staged=") ||
@@ -3538,72 +3239,31 @@ object EventStreams {
       (cols(0).stripPrefix("part="),
         cols(1).stripPrefix("staged=") == "1")
     }
-    // A torn PRE-SNAPSHOT-ERA swap (old manifest, no _snapshot on
-    // disk — its applies were in-place) must be migrated BEFORE the
-    // replay, exactly as swapPartitionDirs bootstraps before its
-    // PREPARE: otherwise the commitSnapshot below would start from an
-    // empty snapshot, name only the partitions this replay re-applies,
-    // and the trailing GC would delete every untouched legacy
-    // partition (review r16). Whether a staged dir was already
-    // consumed must be read BEFORE the replay mutates anything — a
-    // consumed old-style apply left its NEW data as loose files, which
-    // the bootstrap migrates to g-1, and the snapshot must record THAT
-    // generation for it, not the never-created g<gen>.
-    val preSnapshotEra = readSnapshot(liveDir).isEmpty
-    if (preSnapshotEra) bootstrapSnapshot(liveDir)
-    val srcPresent = parts.map { case (name, _) =>
-      name -> new java.io.File(stageDir, name).isDirectory }.toMap
+    val gen = longLine("gen=").getOrElse(
+      malformed("no 'gen=<id>' line (every swap journals the " +
+        "generation it applies)"))
     // the snapshots on disk are the pre-swap ones (crash before the
     // COMMIT's snapshot write) or already the new ones (crash after)
     // — either way their referenced generations are exactly the ones
     // a reader may hold, so `keep` derives from them identically
     val retained = retainedGenerations(liveDir)
     parts.foreach { case (name, hasStage) =>
-      if (srcPresent(name) || !hasStage)
+      if (new java.io.File(stageDir, name).isDirectory || !hasStage)
         // not yet applied (staged dir still present), or a bare
         // delete — replaying delete(+move) is idempotent either way
         applyPartitionSwap(stageDir, liveDir, name, gen,
           retained.getOrElse(name, Set.empty))
       // else: staged dir consumed → the atomic move completed and
-      // the live dir already IS the new version — keep it
+      // g<gen> already IS the new version — keep it
     }
     // finish the torn COMMIT, marker included: the engine will
     // replay this batch (its checkpoint commit never happened), and
     // the marker is what turns that replay into a no-op
     if (batchId >= 0L) writeCommitMarker(liveDir, batchId)
-    commitSnapshot(liveDir, batchId, parts.map { case (n, hasStage) =>
-      // staged & replayed → the fresh g<gen>; staged & already
-      // consumed pre-snapshot → the bootstrap-migrated generation of
-      // its (new) loose data; staged=0 → out of the snapshot
-      val g = new java.io.File(liveDir, s"$n/g$gen").isDirectory
-      val applied = hasStage && !srcPresent(n) &&
-        new java.io.File(liveDir, n).isDirectory
-      n -> (g || applied)
-    }, gen)
-    // the consumed-pre-snapshot partitions sit at g-1, not g<gen> —
-    // point their snapshot entries at the generation that exists, in
-    // BOTH the current snapshot and the history file commitSnapshot
-    // just wrote (ADVICE r16: a history entry left at the
-    // never-created g<gen> would make readCommittedAsOf(batchId)
-    // resolve a nonexistent leaf and carry a phantom retained gen)
-    if (preSnapshotEra) {
-      val fixed = readSnapshot(liveDir).map(_._2)
-        .getOrElse(Map.empty).flatMap { case (n, g) =>
-          val d = new java.io.File(liveDir, s"$n/g$g")
-          if (d.isDirectory) Some(n -> g)
-          else Option(new java.io.File(liveDir, n).listFiles())
-            .getOrElse(Array.empty).flatMap(genOf).maxOption
-            .map(n -> _)
-        }
-      // re-write preserves the stamps commitSnapshot above carried
-      val stamp = readSnapshotFull(liveDir).flatMap(_._3)
-      val spec = readSnapshotSpec(liveDir)
-      writeSnapshot(liveDir, batchId, fixed, stamp, spec)
-      if (batchId >= 0L)
-        writeSnapshotFile(new java.io.File(liveDir,
-          s"$SnapshotHistoryPrefix$batchId"), batchId, fixed, stamp,
-          spec)
-    }
+    // staged (replayed or consumed) → g<gen>; staged=0 → out of the
+    // snapshot
+    commitSnapshot(liveDir, batchId, parts.map { case (n, _) =>
+      n -> new java.io.File(liveDir, s"$n/g$gen").isDirectory }, gen)
     java.nio.file.Files.deleteIfExists(manifest.toPath)
     deleteRecursively(new java.io.File(stageDir))
     gcUnreferencedGenerations(liveDir)
@@ -3787,12 +3447,6 @@ object EventStreams {
 
     val deltas = scala.collection.mutable.ListBuffer[String]()
     val deltaRows = scala.collection.mutable.ListBuffer[Long]()
-    // per-batch phase breakdown (round-8 verdict ask): stderr lines
-    // gated by SPARK_GRAFT_S05_TIMING so the bench contract is untouched
-    val timing = sys.env.contains("SPARK_GRAFT_S05_TIMING")
-    val tStart = System.nanoTime()
-    @volatile var lastBatchEnd = tStart
-    def secs(a: Long, b: Long): String = f"${(b - a) / 1e9}%.3f"
     val q = withStreamShuffle(spark, stagedBytes(srcDir)) {
       spark.readStream.schema(batchSchema)
       .option("maxFilesPerTrigger", 1)
@@ -3806,9 +3460,7 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
-        val tEnter = System.nanoTime()
         if (!batch.isEmpty) {
-          val tEmpty = System.nanoTime()
           val s = batch.sparkSession
           val index = deltas.foldLeft(corpusIndex)((df, p) =>
             df.unionByName(s.read.parquet(p)))
@@ -3829,7 +3481,6 @@ object EventStreams {
             .join(kept, Seq("doc_id"), "left_anti")
             .select(lit(batchId).cast("int").as("batch"), col("doc_id"))
             .write.parquet(dropPath)
-          val tDrops = System.nanoTime()
           val deltaPath = s"$deltaDir/b$batchId"
           newBands.join(
             broadcast(s.read.parquet(dropPath).select("doc_id")),
@@ -3837,26 +3488,13 @@ object EventStreams {
             .write.parquet(deltaPath)
           newBands.unpersist()
           deltas += deltaPath
-          val tDelta = System.nanoTime()
           if (collectDeltaRows)
             deltaRows += s.read.parquet(deltaPath).count()
-          val tEnd = System.nanoTime()
-          if (timing) System.err.println(
-            s"[s05-timing] b$batchId gap=${secs(lastBatchEnd, tEnter)}" +
-              s" empty=${secs(tEnter, tEmpty)}" +
-              s" dedup+drops=${secs(tEmpty, tDrops)}" +
-              s" delta=${secs(tDrops, tDelta)}" +
-              s" count=${secs(tDelta, tEnd)}")
-        } else if (timing) System.err.println(
-          s"[s05-timing] b$batchId gap=${secs(lastBatchEnd, tEnter)}" +
-            s" empty-batch=${secs(tEnter, System.nanoTime())}")
-        lastBatchEnd = System.nanoTime()
+        }
         ()
       }
       .start()
     }
-    if (timing) System.err.println(
-      s"[s05-timing] start-to-launch=${secs(tStart, System.nanoTime())}")
     val stateRows = drain(q)
     val dropDirs = Option(new java.io.File(dropsDir).listFiles())
       .getOrElse(Array.empty).map(_.getAbsolutePath).sorted

@@ -557,7 +557,7 @@ object VectorStreams {
         java.util.Arrays.asList(rows: _*), fin.schema), stateRows,
         stats.toList, diffStats)
       } finally writerLock.close()
-    } finally deleteRecursively(work)
+    } finally EventStreams.deleteRecursively(work)
   }
 
   /** s28's node-level classification over the two pruned snapshot
@@ -615,11 +615,5 @@ object VectorStreams {
             col("k_new"), col("sig_new"))
           .orderBy("vec_id")
     }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty)
-      .foreach(deleteRecursively)
-    f.delete(); ()
   }
 }

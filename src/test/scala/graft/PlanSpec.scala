@@ -1171,10 +1171,16 @@ class PlanSpec extends SparkSpec {
       .createTempDirectory("graft-prune").toFile
     try {
       val art = s"${dir.getAbsolutePath}/state"
+      val stage = graft.streaming.EventStreams.stageDirFor(art)
+      // the artifact as the merge loop leaves it: staged, then
+      // committed by the swap at batch 0 (one generation dir per
+      // partition, a _snapshot naming them)
       (0 until 1024).map(i => (i.toLong, i % 16))
         .toDF("k", "bkt")
         .repartition(col("bkt"))
-        .write.partitionBy("bkt").parquet(art)
+        .write.partitionBy("bkt").parquet(stage)
+      graft.streaming.EventStreams.swapPartitionDirs(stage, art,
+        Seq.empty, batchId = 0L)
       val touched = Seq(3, 7, 11)
       val pruned = graft.streaming.EventStreams.pruneToPartitions(
         spark.read.parquet(art), "bkt", touched)
@@ -1200,15 +1206,14 @@ class PlanSpec extends SparkSpec {
       assert(none.count() === 0L)
       // the SNAPSHOT-resolved read (review r15: readers resolve the
       // committed generation leaf dirs, not the live listing) must
-      // keep the same static pruning: swap one bucket — the artifact
-      // now carries a _snapshot and generation dirs — and the pruned
-      // committed read still selects only the touched partitions
-      val stage = graft.streaming.EventStreams.stageDirFor(art)
+      // keep the same static pruning: swap one bucket at batch 1 and
+      // the pruned committed read still selects only the touched
+      // partitions
       Seq((9999L, 3)).toDF("k", "bkt")
         .repartition(col("bkt"))
         .write.partitionBy("bkt").parquet(stage)
       graft.streaming.EventStreams.swapPartitionDirs(stage, art,
-        Seq("bkt=3"), batchId = 0L)
+        Seq("bkt=3"), batchId = 1L)
       val snapPruned = graft.streaming.EventStreams.pruneToPartitions(
         graft.streaming.EventStreams.readCommitted(spark, art).get,
         "bkt", touched)

@@ -1170,10 +1170,15 @@ class StreamingSpec extends SparkSpec {
     * sets its own job group, so the window is bounded by two marker
     * jobs instead: the bus delivers in order).
     */
-  private def jobsDuring(f: => Unit): Int = {
+  private def jobsDuring(f: => Unit): Int = jobPropertiesDuring(f).size
+
+  /** The local properties of every job [[jobsDuring]] counts. */
+  private def jobPropertiesDuring(f: => Unit)
+      : Seq[java.util.Properties] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import java.util.concurrent.{CountDownLatch, TimeUnit}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs =
+      new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
     @volatile var counting = false
     val (opened, closed) = (new CountDownLatch(1), new CountDownLatch(1))
     val listener = new SparkListener {
@@ -1181,7 +1186,8 @@ class StreamingSpec extends SparkSpec {
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
           case Some("graft-jobs-open") => counting = true; opened.countDown()
           case Some("graft-jobs-close") => counting = false; closed.countDown()
-          case _ => if (counting) jobs.incrementAndGet()
+          case _ => if (counting) jobs.add(
+            Option(e.properties).getOrElse(new java.util.Properties))
         }
     }
     val sc = spark.sparkContext
@@ -1196,7 +1202,7 @@ class StreamingSpec extends SparkSpec {
       f
       marker("graft-jobs-close", closed)
     } finally sc.removeSparkListener(listener)
-    jobs.get
+    scala.jdk.CollectionConverters.IterableHasAsScala(jobs).asScala.toSeq
   }
 
   test("SparkEntry's s05 and s08 skip the spec path's per-batch count: " +
@@ -1218,6 +1224,23 @@ class StreamingSpec extends SparkSpec {
     assert(s05Spec - s05Entry === 3 * nS05)
     assert(nS08 > 1)
     assert(s08Spec - s08Entry === 3 * nS08)
+  }
+
+  test("s21 runs at most two jobs per micro-batch: the one-bucket " +
+      "merge reads the committed artifact under the schema it wrote") {
+    // a first run stages the memoized doc slices and merge rules
+    EventStreams.replayVocabMaintainWithStats(spark, sf)
+    // a stream job carries its micro-batch id as a local property
+    val perBatch = jobPropertiesDuring(
+        EventStreams.replayVocabMaintainWithStats(spark, sf))
+      .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+      .groupBy(identity).map { case (b, js) => b.toLong -> js.size }
+    info(s"s21 jobs per micro-batch: ${perBatch.toSeq.sorted}")
+    assert(perBatch.size === 4)
+    // the touched-bucket probe and the staged write: the prior
+    // artifact is read under the schema the loop wrote, so no batch
+    // runs a footer-inference job
+    assert(perBatch.values.max <= 2, perBatch)
   }
 
   test("s05 ingest loop: drops equal the sequential batch chain, the " +
@@ -1325,6 +1348,19 @@ class StreamingSpec extends SparkSpec {
     } finally EventStreams.deleteRecursively(dir)
   }
 
+  /** Commit `df` (partitioned by `bkt`) as generation 0 of the
+    * swap-managed artifact `live`: staged, then swapped in as a
+    * non-streaming commit, so no batch marker and no history
+    * snapshot pins its generations.
+    */
+  private def seedGeneration0(df: org.apache.spark.sql.DataFrame,
+      live: String): Unit = {
+    val stage = EventStreams.stageDirFor(live)
+    df.repartition(col("bkt")).write.partitionBy("bkt").parquet(stage)
+    EventStreams.swapPartitionDirs(stage, live, Seq.empty,
+      batchId = -1L, genOverride = Some(0L))
+  }
+
   test("swapPartitionDirs: the full touched set is replaced — a " +
       "touched bucket whose merge result is EMPTY stages no dir and " +
       "its stale live partition must still go (ADVICE r13)") {
@@ -1335,16 +1371,15 @@ class StreamingSpec extends SparkSpec {
       val live = s"${dir.getAbsolutePath}/state"
       val stage = s"$live-stage"
       // live v1: buckets 0, 1, 2
-      Seq((10L, 0), (11L, 1), (12L, 2)).toDF("k", "bkt")
-        .repartition(col("bkt"))
-        .write.partitionBy("bkt").parquet(live)
+      seedGeneration0(Seq((10L, 0), (11L, 1), (12L, 2)).toDF("k", "bkt"),
+        live)
       // merge of a batch touching {0, 1, 2}: bucket 2's result is
       // empty (an evicting merge), so the stage holds only 0 and 1
       Seq((20L, 0), (21L, 1)).toDF("k", "bkt")
         .repartition(col("bkt"))
         .write.partitionBy("bkt").parquet(stage)
       EventStreams.swapPartitionDirs(stage, live,
-        Seq("bkt=0", "bkt=1", "bkt=2"))
+        Seq("bkt=0", "bkt=1", "bkt=2"), batchId = 1L)
       val got = EventStreams.readCommitted(spark, live).get
         .select("k").as[Long].collect().sorted.toSeq
       assert(got === Seq(20L, 21L),
@@ -1360,7 +1395,7 @@ class StreamingSpec extends SparkSpec {
       assert(new java.io.File(live, "bkt=2").isDirectory,
         "the evicted partition's grace generation must survive " +
           "the swap itself")
-      val snap = EventStreams.readSnapshot(live).get._2
+      val snap = EventStreams.readSnapshot(live).get.entries
       assert(snap.keySet === Set("bkt=0", "bkt=1"),
         s"committed snapshot must drop the evicted partition: $snap")
       // ...and loop-start GC collects them
@@ -1382,9 +1417,8 @@ class StreamingSpec extends SparkSpec {
     try {
       val live = s"${dir.getAbsolutePath}/state"
       val stage = s"$live-stage"
-      Seq((10L, 0), (11L, 1), (12L, 2)).toDF("k", "bkt")
-        .repartition(col("bkt"))
-        .write.partitionBy("bkt").parquet(live)
+      seedGeneration0(Seq((10L, 0), (11L, 1), (12L, 2)).toDF("k", "bkt"),
+        live)
       Seq((20L, 0), (21L, 1)).toDF("k", "bkt")
         .repartition(col("bkt"))
         .write.partitionBy("bkt").parquet(stage)
@@ -1393,7 +1427,7 @@ class StreamingSpec extends SparkSpec {
       // exactly the mixed-version artifact the manifest exists for
       val boom = intercept[RuntimeException] {
         EventStreams.swapPartitionDirs(stage, live,
-          Seq("bkt=0", "bkt=1", "bkt=2"),
+          Seq("bkt=0", "bkt=1", "bkt=2"), batchId = 1L,
           onPartitionApplied =
             n => if (n == "bkt=1") throw new RuntimeException("torn"))
       }
@@ -1476,7 +1510,7 @@ class StreamingSpec extends SparkSpec {
       val applied = new java.util.concurrent.atomic.AtomicInteger(0)
       val boom = intercept[Exception] {
         EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-          nBuckets = Some(4),
+          nBuckets = 4,
           onSwapApply = (bid, _) =>
             if (bid == 2L && applied.incrementAndGet() == 2)
               throw new RuntimeException("crash mid-swap"))(agg, merge)
@@ -1495,7 +1529,7 @@ class StreamingSpec extends SparkSpec {
       // the batch marker the replay re-merges batch 2 and every key
       // doubles its batch-2 contribution.
       val (artifact, _) = EventStreams.runArtifactMergeLoop(spark,
-        base, srcDir, schema, nBuckets = Some(4))(
+        base, srcDir, schema, nBuckets = 4)(
         agg, merge)
       val got = artifact.get.orderBy("k")
         .as[(Long, Long)].collect().toSeq
@@ -1536,7 +1570,7 @@ class StreamingSpec extends SparkSpec {
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
       val (artifact, _) = EventStreams.runArtifactMergeLoop(spark, base,
-        srcDir, schema, nBuckets = Some(4))(
+        srcDir, schema, nBuckets = 4)(
         agg, EventStreams.ArtifactMerge("k", sum("v").as("v")))
       val got = artifact.get.select("k", "v").orderBy("k")
         .as[(Long, Long)].collect().toSeq
@@ -1587,7 +1621,7 @@ class StreamingSpec extends SparkSpec {
       val midReads =
         scala.collection.mutable.ListBuffer[(Long, Seq[(Long, Long)])]()
       val (artifact, _) = EventStreams.runArtifactMergeLoop(spark,
-        base, srcDir, schema, nBuckets = Some(4),
+        base, srcDir, schema, nBuckets = 4,
         // the hook runs BETWEEN partition applies — the live tree is
         // half old, half new at this instant, exactly the state a
         // listing-based reader would see torn
@@ -1648,7 +1682,7 @@ class StreamingSpec extends SparkSpec {
         (0L until 8L).map(k =>
           (k, (j + 1) * 10 * k + (j + 1).toLong * (j + 2) / 2))
       EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-        nBuckets = Some(4))(agg, merge)
+        nBuckets = 4)(agg, merge)
       val state = s"$base/state"
       def asOf(b: Long): Seq[(Long, Long)] =
         EventStreams.readCommittedAsOf(spark, state, b).get
@@ -1824,11 +1858,11 @@ class StreamingSpec extends SparkSpec {
         max("vmax").as("vmax"))
       stage(0, 0 until 8); stage(1, 0 until 8)
       EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-        nBuckets = Some(4), stampSchema = true)(
+        nBuckets = 4, stampSchema = true)(
         aggOld, mergeOld)
       stage(2, 0 until 4); stage(3, 0 until 4)
       val (artifact, _) = EventStreams.runArtifactMergeLoop(spark,
-        base, srcDir, schema, nBuckets = Some(4),
+        base, srcDir, schema, nBuckets = 4,
         stampSchema = true)(aggNew, mergeNew)
       val stateDir = s"$base/state"
       // head: evolved schema, values exact, null-fill for keys with
@@ -1847,8 +1881,8 @@ class StreamingSpec extends SparkSpec {
       }
       assert(got === want)
       // the head snapshot carries the evolved stamp
-      val stamp = EventStreams.readSnapshotFull(stateDir)
-        .flatMap(_._3)
+      val stamp = EventStreams.readSnapshot(stateDir)
+        .flatMap(_.schema)
       assert(stamp.exists(_.contains("vmax")),
         s"head snapshot stamp missing the evolved column: $stamp")
       // time travel to the pre-deploy batch serves the OLD schema
@@ -2175,7 +2209,7 @@ class StreamingSpec extends SparkSpec {
       val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       def run(n: Int): Unit = {
         EventStreams.runArtifactMergeLoop(spark, base, srcDir,
-          schema, nBuckets = Some(n))(agg, merge)
+          schema, nBuckets = n)(agg, merge)
         ()
       }
       run(4)
@@ -2188,7 +2222,7 @@ class StreamingSpec extends SparkSpec {
       def through(j: Int): Seq[(Long, Long)] =
         (0L until 8L).map(k =>
           (k, (j + 1) * 10 * k + (j + 1).toLong * (j + 2) / 2))
-      assert(EventStreams.readSnapshotSpec(state) === Some(4),
+      assert(EventStreams.readSnapshot(state).flatMap(_.spec) === Some(4),
         "every bucketed commit must stamp its layout")
       val head0 = headRows()
       assert(head0 === through(2))
@@ -2202,7 +2236,7 @@ class StreamingSpec extends SparkSpec {
       // GROW 4 → 8
       EventStreams.rebucketArtifact(spark, state, "k", 8,
         lockBase = Some(base))
-      assert(EventStreams.readSnapshotSpec(state) === Some(8))
+      assert(EventStreams.readSnapshot(state).flatMap(_.spec) === Some(8))
       assert(headRows() === head0,
         "a respec moves rows, never changes them")
       histFiles.foreach(f => assert(
@@ -2227,7 +2261,7 @@ class StreamingSpec extends SparkSpec {
       // SHRINK 8 → 2: orphaned partitions leave the snapshot
       EventStreams.rebucketArtifact(spark, state, "k", 2,
         lockBase = Some(base))
-      assert(EventStreams.readSnapshotSpec(state) === Some(2))
+      assert(EventStreams.readSnapshot(state).flatMap(_.spec) === Some(2))
       val snapParts = readSnapshotEntries(state).keySet
       assert(snapParts.subsetOf(Set("bkt=0", "bkt=1")) &&
         snapParts.nonEmpty,
@@ -2358,7 +2392,7 @@ class StreamingSpec extends SparkSpec {
       def agg(df: DataFrame): DataFrame =
         df.groupBy("k").agg(sum("v").as("v"))
       EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-        nBuckets = Some(4))(
+        nBuckets = 4)(
         agg, EventStreams.ArtifactMerge("k", sum("v").as("v")))
       val state = s"$base/state"
       assert(EventStreams.lastCommittedBatch(state) === 3L)
@@ -2481,7 +2515,7 @@ class StreamingSpec extends SparkSpec {
       reader.start()
       try
         EventStreams.runArtifactMergeLoop(spark, base, srcDir,
-          schema, nBuckets = Some(4))(agg, merge)
+          schema, nBuckets = 4)(agg, merge)
       finally { running = false; reader.join() }
       readFailure.foreach(t => fail(
         s"concurrent reader failed: ${t.getMessage}", t))
@@ -2493,14 +2527,14 @@ class StreamingSpec extends SparkSpec {
     } finally EventStreams.deleteRecursively(dir)
   }
 
-  test("merge-loop chained-mode resume: a second invocation on the " +
-      "same base continues the version chain from the latest " +
-      "complete artifact instead of restarting the merge at zero") {
+  test("merge-loop resume: a second invocation on the same base " +
+      "continues from the committed artifact instead of restarting " +
+      "the merge at zero") {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-chain-resume").toFile
+      .createTempDirectory("graft-merge-resume").toFile
     try {
       val base = dir.getAbsolutePath
       val srcDir = s"$base/incoming"
@@ -2525,34 +2559,21 @@ class StreamingSpec extends SparkSpec {
         df.groupBy("k").agg(sum("v").as("v"))
       val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       (0 until 2).foreach(stageBatch)
+      // one bucket: every batch rewrites the whole artifact (s21's
+      // shape)
       val (a1, _) = EventStreams.runArtifactMergeLoop(spark, base,
-        srcDir, schema)(agg, merge)
+        srcDir, schema, nBuckets = 1)(agg, merge)
       assert(a1.get.orderBy("k").as[(Long, Long)].collect().toSeq ===
         (0L until 8L).map(k => (k, 20 * k + 3)))
-      // version retention (VERDICT r14 item 2): a completed batch
-      // supersedes every earlier complete version, so after the run
-      // exactly ONE b<N> dir remains — the chain's head — instead of
-      // one artifact per deployment batch
-      def versions(): Seq[String] =
-        Option(new java.io.File(s"$base/state").listFiles())
-          .getOrElse(Array.empty)
-          .filter(d => d.isDirectory && d.getName.startsWith("b"))
-          .map(_.getName).sorted.toSeq
-      assert(versions() === Seq("b1"),
-        s"retention must keep only the latest version, got ${versions()}")
-      // two more files arrive; the re-invoked loop must pick up the
-      // b1 artifact as its merge base (without the chain re-seed it
-      // would silently restart the state at batch 2's aggregate) —
-      // and seeding must still work when retention already deleted
-      // the earlier versions
+      // two more files arrive; the re-invoked loop must merge into
+      // the committed artifact (a restart at zero would leave only
+      // batches 2 and 3 in the state)
       (2 until 4).foreach(stageBatch)
       val (a2, _) = EventStreams.runArtifactMergeLoop(spark, base,
-        srcDir, schema)(agg, merge)
+        srcDir, schema, nBuckets = 1)(agg, merge)
       assert(a2.get.orderBy("k").as[(Long, Long)].collect().toSeq ===
         (0L until 8L).map(k => (k, 40 * k + 10)),
         "resumed chain must carry the first run's merges")
-      assert(versions() === Seq("b3"),
-        "retention must also collect the resumed run's predecessors")
     } finally EventStreams.deleteRecursively(dir)
   }
 
@@ -2589,7 +2610,7 @@ class StreamingSpec extends SparkSpec {
       val held = EventStreams.acquireWriterLock(base)
       val boom = intercept[IllegalStateException] {
         EventStreams.runArtifactMergeLoop(spark, base, srcDir,
-          schema)(agg, merge)
+          schema, nBuckets = 4)(agg, merge)
       }
       assert(boom.getMessage.contains("single-writer"),
         s"unexpected message: ${boom.getMessage}")
@@ -2601,7 +2622,7 @@ class StreamingSpec extends SparkSpec {
       // i.e. a finished (or crashed — the OS drops a dead process's
       // lock) run never blocks its successor
       val (artifact, _) = EventStreams.runArtifactMergeLoop(spark,
-        base, srcDir, schema)(agg, merge)
+        base, srcDir, schema, nBuckets = 4)(agg, merge)
       assert(artifact.get.orderBy("k").as[(Long, Long)]
         .collect().toSeq === (0L until 4L).map(k => (k, k + 1)))
     } finally EventStreams.deleteRecursively(dir)
@@ -2640,7 +2661,7 @@ class StreamingSpec extends SparkSpec {
       val merge = EventStreams.ArtifactMerge("k", sum("v").as("v"))
       // a clean 2-batch run commits the artifact through batch 1
       EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-        nBuckets = Some(4))(agg, merge)
+        nBuckets = 4)(agg, merge)
       assert(EventStreams.lastCommittedBatch(s"$base/state") === 1L)
       // the ckpt dir ALONE is deleted — batch ids restart at 0
       // against a marker that says batch 1 committed. Every replayed
@@ -2649,36 +2670,13 @@ class StreamingSpec extends SparkSpec {
       EventStreams.deleteRecursively(new java.io.File(s"$base/ckpt"))
       val boom = intercept[Exception] {
         EventStreams.runArtifactMergeLoop(spark, base, srcDir, schema,
-          nBuckets = Some(4))(agg, merge)
+          nBuckets = 4)(agg, merge)
       }
       val chain = Iterator.iterate(boom: Throwable)(_.getCause)
         .takeWhile(_ != null)
         .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
       assert(chain.contains("checkpoint was reset"),
         s"expected the lifecycle-mismatch failure, got:\n$chain")
-      // chained mode: same reset, same loud failure (the version
-      // chain is the marker there)
-      val base2 = s"$base/chained"
-      val src2 = s"$base2/incoming"
-      new java.io.File(src2).mkdirs()
-      (0 until 2).foreach { i =>
-        java.nio.file.Files.copy(
-          new java.io.File(srcDir, f"b$i%02d.parquet").toPath,
-          new java.io.File(src2, f"b$i%02d.parquet").toPath)
-        ()
-      }
-      EventStreams.runArtifactMergeLoop(spark, base2, src2, schema)(
-        agg, merge)
-      EventStreams.deleteRecursively(new java.io.File(s"$base2/ckpt"))
-      val boom2 = intercept[Exception] {
-        EventStreams.runArtifactMergeLoop(spark, base2, src2, schema)(
-          agg, merge)
-      }
-      val chain2 = Iterator.iterate(boom2: Throwable)(_.getCause)
-        .takeWhile(_ != null)
-        .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
-      assert(chain2.contains("checkpoint was reset"),
-        s"expected the lifecycle-mismatch failure, got:\n$chain2")
       // an EMPTY batch 0 must not slip past the guard (review r15:
       // the check used to sit inside the isEmpty gate, and no later
       // batch carries id 0)
@@ -2701,12 +2699,12 @@ class StreamingSpec extends SparkSpec {
             }
         }
       EventStreams.runArtifactMergeLoop(spark, base3, src3, schema,
-        nBuckets = Some(4))(agg, merge)
+        nBuckets = 4)(agg, merge)
       assert(EventStreams.lastCommittedBatch(s"$base3/state") === 1L)
       EventStreams.deleteRecursively(new java.io.File(s"$base3/ckpt"))
       val boom3 = intercept[Exception] {
         EventStreams.runArtifactMergeLoop(spark, base3, src3, schema,
-          nBuckets = Some(4))(agg, merge)
+          nBuckets = 4)(agg, merge)
       }
       val chain3 = Iterator.iterate(boom3: Throwable)(_.getCause)
         .takeWhile(_ != null)
@@ -2730,13 +2728,13 @@ class StreamingSpec extends SparkSpec {
         ()
       }
       EventStreams.runArtifactMergeLoop(spark, base4, src4, schema,
-        nBuckets = Some(4))(agg, merge)
+        nBuckets = 4)(agg, merge)
       assert(EventStreams.expectedCommit(base4) === 1L,
         "every commit must advance the sentinel")
       EventStreams.deleteRecursively(new java.io.File(s"$base4/state"))
       val boom4 = intercept[IllegalStateException] {
         EventStreams.runArtifactMergeLoop(spark, base4, src4, schema,
-          nBuckets = Some(4))(agg, merge)
+          nBuckets = 4)(agg, merge)
       }
       assert(boom4.getMessage.contains("reset against a live"),
         s"expected the state-loss failure, got: ${boom4.getMessage}")
@@ -2770,6 +2768,9 @@ class StreamingSpec extends SparkSpec {
       check("stage=/tmp/x\nbatch=1\npart=bkt=0", "part=bkt=0")
       check("stage=/tmp/x\nbatch=1\npart=bkt=0\tstaged=weird",
         "staged=weird")
+      // every swap journals its generation: a manifest without one
+      // is corrupted like any other
+      check("stage=/tmp/x\nbatch=1\npart=bkt=0\tstaged=1", "gen=")
       // the whole manifest is validated BEFORE the first apply: a
       // malformed line AFTER a valid one must leave the valid line's
       // live partition untouched (r15 review — apply-then-throw
@@ -2788,187 +2789,9 @@ class StreamingSpec extends SparkSpec {
     } finally EventStreams.deleteRecursively(dir)
   }
 
-  test("recoverTornSwap on a PRE-SNAPSHOT-ERA torn manifest (no gen " +
-      "line, no _snapshot, in-place applies) migrates before the " +
-      "replay and preserves every untouched legacy partition " +
-      "(review r16)") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-legacy-torn").toFile
-    def put(f: java.io.File, s: String): Unit = {
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath, s.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      ()
-    }
-    def read(f: java.io.File): String = new String(
-      java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    try {
-      val live = new java.io.File(root, "state").getAbsolutePath
-      // the old release's torn state: bkt=0's IN-PLACE apply already
-      // completed (its loose file IS the new version, staged dir
-      // consumed), bkt=1 still staged, bkt=2's bare delete pending,
-      // bkt=3 untouched by the swap — all loose files, no _snapshot,
-      // manifest WITHOUT a gen= line
-      put(new java.io.File(live, "bkt=0/d.parquet"), "new0")
-      put(new java.io.File(live, "bkt=1/d.parquet"), "old1")
-      put(new java.io.File(live, "bkt=2/d.parquet"), "old2")
-      put(new java.io.File(live, "bkt=3/d.parquet"), "old3")
-      put(new java.io.File(live, EventStreams.CommitMarkerName), "6")
-      val stage = EventStreams.stageDirFor(live)
-      put(new java.io.File(stage, "bkt=1/d.parquet"), "new1")
-      put(new java.io.File(live, EventStreams.SwapManifestName),
-        s"stage=$stage\nbatch=7\n" +
-          "part=bkt=0\tstaged=1\npart=bkt=1\tstaged=1\n" +
-          "part=bkt=2\tstaged=0")
-      EventStreams.recoverTornSwap(live)
-      val snap = EventStreams.readSnapshot(live).get._2
-      // the untouched legacy partition MUST survive recovery — a
-      // from-empty snapshot rebuild would have GC'd it
-      assert(snap.contains("bkt=3"), s"untouched partition lost: $snap")
-      assert(read(new java.io.File(live,
-        s"bkt=3/g${snap("bkt=3")}/d.parquet")) === "old3")
-      // the consumed in-place apply keeps its NEW data, at the
-      // generation its migration actually produced
-      assert(read(new java.io.File(live,
-        s"bkt=0/g${snap("bkt=0")}/d.parquet")) === "new0")
-      // the replayed apply lands at the manifest's generation
-      assert(read(new java.io.File(live,
-        s"bkt=1/g${snap("bkt=1")}/d.parquet")) === "new1")
-      assert(!snap.contains("bkt=2") &&
-        !new java.io.File(live, "bkt=2").exists(),
-        "the bare delete must still evict")
-      assert(EventStreams.lastCommittedBatch(live) === 7L)
-      // idempotent: nothing left to recover, nothing changes
-      EventStreams.recoverTornSwap(live)
-      assert(EventStreams.readSnapshot(live).get._2 === snap)
-    } finally EventStreams.deleteRecursively(root)
-  }
-
-  test("legacy (batchId=-1) swap generations avoid EVERY retained " +
-      "generation — a collision would overwrite a time-travel " +
-      "version in place (review r16)") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-gen-collide").toFile
-    def put(f: java.io.File, s: String): Unit = {
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath, s.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      ()
-    }
-    try {
-      val live = new java.io.File(root, "state").getAbsolutePath
-      // three streaming commits of the same partition → history
-      // files v0/v1/v2, retained gens {0,1,2}
-      (0 to 2).foreach { b =>
-        put(new java.io.File(EventStreams.stageDirFor(live),
-          "bkt=0/d.parquet"), s"v$b")
-        EventStreams.swapPartitionDirs(EventStreams.stageDirFor(live),
-          live, Seq("bkt=0"), batchId = b.toLong)
-      }
-      // a legacy swap now re-stages the same partition
-      put(new java.io.File(EventStreams.stageDirFor(live),
-        "bkt=0/d.parquet"), "legacy")
-      EventStreams.swapPartitionDirs(EventStreams.stageDirFor(live),
-        live, Seq("bkt=0"))
-      val snap = EventStreams.readSnapshot(live).get._2
-      assert(snap("bkt=0") === 3L,
-        s"legacy gen must be one past every retained gen: $snap")
-      // every history-referenced generation is still on disk intact
-      (0 to 2).foreach { b =>
-        assert(new java.io.File(live, s"bkt=0/g$b/d.parquet").isFile,
-          s"retained generation g$b destroyed by the legacy swap")
-      }
-    } finally EventStreams.deleteRecursively(root)
-  }
-
-  test("mixed-mode guard: a STREAMING swap whose batch id lands on a " +
-      "retained legacy generation refuses diagnosably instead of " +
-      "overwriting a committed version in place (ADVICE r16)") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-mixed-collide").toFile
-    def put(f: java.io.File, s: String): Unit = {
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath, s.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      ()
-    }
-    try {
-      val live = new java.io.File(root, "state").getAbsolutePath
-      // a legacy swap on an empty artifact allocates gen 0
-      put(new java.io.File(EventStreams.stageDirFor(live),
-        "bkt=0/d.parquet"), "legacy0")
-      EventStreams.swapPartitionDirs(EventStreams.stageDirFor(live),
-        live, Seq("bkt=0"))
-      assert(EventStreams.readSnapshot(live).get._2("bkt=0") === 0L)
-      // a later streaming swap of batch 0 would reuse g0 — APPLY
-      // would clear the generation the committed snapshot references
-      put(new java.io.File(EventStreams.stageDirFor(live),
-        "bkt=0/d.parquet"), "stream0")
-      val e = intercept[IllegalStateException] {
-        EventStreams.swapPartitionDirs(EventStreams.stageDirFor(live),
-          live, Seq("bkt=0"), batchId = 0L)
-      }
-      assert(e.getMessage.contains("collides with retained " +
-        "generation g0"), e.getMessage)
-      // the committed generation is untouched and still served
-      assert(new String(java.nio.file.Files.readAllBytes(
-        new java.io.File(live, "bkt=0/g0/d.parquet").toPath)) ===
-        "legacy0")
-      // a NON-colliding streaming batch still proceeds normally
-      put(new java.io.File(EventStreams.stageDirFor(live),
-        "bkt=0/d.parquet"), "stream5")
-      EventStreams.swapPartitionDirs(EventStreams.stageDirFor(live),
-        live, Seq("bkt=0"), batchId = 5L)
-      assert(EventStreams.readSnapshot(live).get._2("bkt=0") === 5L)
-    } finally EventStreams.deleteRecursively(root)
-  }
-
-  test("pre-snapshot-era torn recovery repairs the HISTORY file too: " +
-      "readCommittedAsOf(batch) serves the consumed in-place " +
-      "partitions at their migrated generation (ADVICE r16)") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-legacy-asof").toFile
-    def put(f: java.io.File, s: String): Unit = {
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath, s.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      ()
-    }
-    try {
-      val live = s"${root.getAbsolutePath}/state"
-      // old-release layout: loose parquet under the k=v dirs.
-      // bkt=0's in-place apply already CONSUMED its staged dir (the
-      // live loose file is the new version), bkt=1 is still staged.
-      Seq((100L, 0)).toDF("k", "bkt").repartition(col("bkt"))
-        .write.partitionBy("bkt").parquet(live)
-      val stage = EventStreams.stageDirFor(live)
-      Seq((11L, 1)).toDF("k", "bkt").repartition(col("bkt"))
-        .write.partitionBy("bkt").parquet(stage)
-      // drop top-level _SUCCESS markers parquet wrote; keep layout
-      new java.io.File(live, "_SUCCESS").delete()
-      put(new java.io.File(live, EventStreams.SwapManifestName),
-        s"stage=$stage\nbatch=7\n" +
-          "part=bkt=0\tstaged=1\npart=bkt=1\tstaged=1")
-      EventStreams.recoverTornSwap(live)
-      // the current snapshot and the v7 HISTORY file must agree:
-      // bkt=0 at its bootstrap-migrated g-1, bkt=1 at the replayed
-      // g7 — a history entry at the never-created g7 for bkt=0
-      // would resolve a nonexistent leaf path below
-      val snap = EventStreams.readSnapshot(live).get._2
-      assert(snap("bkt=0") === -1L && snap("bkt=1") === 7L, s"$snap")
-      val asOf = EventStreams.readCommittedAsOf(spark, live, 7L).get
-        .select("k").as[Long].collect().sorted.toSeq
-      assert(asOf === Seq(11L, 100L),
-        "the as-of read must serve the migrated generation")
-    } finally EventStreams.deleteRecursively(root)
-  }
-
-  test("readCommitted refuses a snapshot-less swap-managed tree " +
-      "diagnosably (structural r17), recoverTornSwap's loop-start " +
-      "bootstrap migrates it, and chained-mode version dirs keep " +
-      "the listing fallback") {
+  test("readCommitted on a fresh artifact whose first swap is " +
+      "mid-APPLY returns None: nothing is committed until the " +
+      "snapshot is") {
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft-structural").toFile
@@ -2979,40 +2802,8 @@ class StreamingSpec extends SparkSpec {
       ()
     }
     try {
-      // (a) legacy partitioned tree, no snapshot, no manifest: an
-      // external reader must get a pointer to the migration, not a
-      // listing read whose immutability nobody can check
-      val legacy = s"${root.getAbsolutePath}/legacy"
-      Seq((1L, 0), (2L, 1)).toDF("k", "bkt").repartition(col("bkt"))
-        .write.partitionBy("bkt").parquet(legacy)
-      val ea = intercept[IllegalStateException] {
-        EventStreams.readCommitted(spark, legacy)
-      }
-      assert(ea.getMessage.contains("no committed snapshot") &&
-        ea.getMessage.contains("bootstrap-migrate"), ea.getMessage)
-      // (c) the loop-start recovery migrates it; reads then serve
-      EventStreams.recoverTornSwap(legacy)
-      assert(EventStreams.readCommitted(spark, legacy).get
-        .select("k").as[Long].collect().sorted.toSeq ===
-        Seq(1L, 2L))
-      // (b) a torn PRE-SNAPSHOT-ERA swap (manifest + loose
-      // partition data, no snapshot): committed pre-crash data
-      // exists, so a silent None would present it as empty —
-      // refuse toward recovery instead (ADVICE r16)
-      val torn = s"${root.getAbsolutePath}/torn"
-      Seq((3L, 0)).toDF("k", "bkt").repartition(col("bkt"))
-        .write.partitionBy("bkt").parquet(torn)
-      put(new java.io.File(torn, EventStreams.SwapManifestName),
-        s"stage=${EventStreams.stageDirFor(torn)}\nbatch=4\n" +
-          "part=bkt=0\tstaged=1")
-      val eb = intercept[IllegalStateException] {
-        EventStreams.readCommitted(spark, torn)
-      }
-      assert(eb.getMessage.contains("recoverTornSwap"),
-        eb.getMessage)
-      // (d) a FRESH artifact's first swap mid-APPLY: manifest
-      // present, partitions hold only generation dirs — nothing
-      // committed yet, None (not an error) is the contract the
+      // manifest present, partitions hold only generation dirs, no
+      // snapshot yet — None (not an error) is the contract the
       // concurrent-reader stress test relies on
       val fresh = s"${root.getAbsolutePath}/fresh"
       Seq((9L, 0)).toDF("k", "bkt").repartition(col("bkt"))
@@ -3027,13 +2818,6 @@ class StreamingSpec extends SparkSpec {
         s"stage=${EventStreams.stageDirFor(fresh)}\nbatch=0\n" +
           "gen=0\npart=bkt=0\tstaged=1")
       assert(EventStreams.readCommitted(spark, fresh).isEmpty)
-      // (e) chained-mode version dir (loose files, no partitions):
-      // immutable once complete — the listing fallback stays
-      val chained = s"${root.getAbsolutePath}/chained"
-      Seq(5L, 6L).toDF("k").coalesce(1).write.parquet(chained)
-      assert(EventStreams.readCommitted(spark, chained).get
-        .select("k").as[Long].collect().sorted.toSeq ===
-        Seq(5L, 6L))
     } finally EventStreams.deleteRecursively(root)
   }
 
@@ -3058,12 +2842,17 @@ class StreamingSpec extends SparkSpec {
     // sweep runs as pure-FS cases.
     def setup(name: String): String = {
       val live = new java.io.File(root, s"$name/state")
-      Seq("0" -> "old0", "1" -> "old1", "2" -> "old2").foreach {
-        case (b, v) => put(new java.io.File(live, s"bkt=$b/d.parquet"), v)
-      }
-      put(new java.io.File(live, EventStreams.CommitMarkerName), "6")
       val stage = new java.io.File(EventStreams.stageDirFor(
         live.getAbsolutePath))
+      // the prior version, committed as generation 0 by a
+      // non-streaming swap (no history snapshot pins it)
+      Seq("0" -> "old0", "1" -> "old1", "2" -> "old2").foreach {
+        case (b, v) => put(new java.io.File(stage, s"bkt=$b/d.parquet"), v)
+      }
+      EventStreams.swapPartitionDirs(stage.getAbsolutePath,
+        live.getAbsolutePath, Seq.empty, batchId = -1L,
+        genOverride = Some(0L))
+      put(new java.io.File(live, EventStreams.CommitMarkerName), "6")
       put(new java.io.File(stage, "bkt=0/d.parquet"), "new0")
       put(new java.io.File(stage, "bkt=1/d.parquet"), "new1")
       live.getAbsolutePath
@@ -3072,7 +2861,7 @@ class StreamingSpec extends SparkSpec {
     // the committed snapshot's generation entry
     def committedFile(live: String, part: String): java.io.File = {
       val gen = EventStreams.readSnapshot(live)
-        .flatMap(_._2.get(part))
+        .flatMap(_.entries.get(part))
         .getOrElse(fail(s"$part missing from the snapshot of $live"))
       new java.io.File(live, s"$part/g$gen/d.parquet")
     }
@@ -3080,7 +2869,7 @@ class StreamingSpec extends SparkSpec {
       assert(read(committedFile(live, "bkt=0")) == "new0"
           && read(committedFile(live, "bkt=1")) == "new1",
         s"$label: replaced partitions must hold the new version")
-      assert(!EventStreams.readSnapshot(live).get._2
+      assert(!EventStreams.readSnapshot(live).get.entries
         .contains("bkt=2"),
         s"$label: the evicted partition must leave the snapshot")
       assert(!new java.io.File(live, "bkt=2").exists(),
@@ -3099,7 +2888,7 @@ class StreamingSpec extends SparkSpec {
       // journal (in its documented format) is on disk, nothing moved
       val live0 = setup("p0")
       put(new java.io.File(live0, EventStreams.SwapManifestName),
-        s"stage=${EventStreams.stageDirFor(live0)}\nbatch=7\n" +
+        s"stage=${EventStreams.stageDirFor(live0)}\nbatch=7\ngen=7\n" +
           "part=bkt=0\tstaged=1\npart=bkt=1\tstaged=1\n" +
           "part=bkt=2\tstaged=0")
       EventStreams.recoverTornSwap(live0)
@@ -3132,7 +2921,7 @@ class StreamingSpec extends SparkSpec {
       EventStreams.swapPartitionDirs(
         EventStreams.stageDirFor(live4), live4, touched, batchId = 7L)
       put(new java.io.File(live4, EventStreams.SwapManifestName),
-        s"stage=${EventStreams.stageDirFor(live4)}\nbatch=7\n" +
+        s"stage=${EventStreams.stageDirFor(live4)}\nbatch=7\ngen=7\n" +
           "part=bkt=0\tstaged=1\npart=bkt=1\tstaged=1\n" +
           "part=bkt=2\tstaged=0")
       EventStreams.recoverTornSwap(live4)
